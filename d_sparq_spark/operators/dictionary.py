@@ -30,22 +30,19 @@ from d_sparq_spark.localdata import local_df
 
 _IRI_RE = r"^[A-Za-z][A-Za-z0-9+.-]*:"
 
-# Gates for the DRIVER rank fast path (r11; the paths.py _vector_closure
-# precedent): a term stream at or below the gate (RAW rows, probed with a
-# short-circuiting limit so the big case never collects) is collected
-# once and ranked with a C-speed hash-dedup + sort — the distributed
-# scheme pays a range-partition sampling pass, a full exchange, and a
-# per-partition window for what is, at bench/metadata scale, tens of
-# thousands of strings (measured: the dictionary build was the single
-# largest phase of bulk_load after the r11 parse pin). Python string
-# comparison is code-point order, which equals Spark's unsigned UTF-8
-# byte comparison (a UTF-8 order-preservation property, the same fact
-# graph._driver_cc relies on), and NULL ranks first exactly like the
-# window's default NULLS FIRST — ids are bit-identical by construction.
-# Above the gate the distributed rank runs unchanged (the 100 TB path).
+# Gate for the DRIVER rank fast path: a term stream at or below the gate
+# (RAW rows, probed with a short-circuiting limit so the big case never
+# collects) is collected once and ranked with a C-speed hash-dedup + sort
+# — the distributed scheme pays a range-partition sampling pass, a full
+# exchange, and a per-partition window for what is, at bench/metadata
+# scale, tens of thousands of strings (measured: the dictionary build was
+# the single largest phase of bulk_load). Python string comparison is
+# code-point order, which equals Spark's unsigned UTF-8 byte comparison
+# (a UTF-8 order-preservation property, the same fact graph._driver_cc
+# relies on), and NULL ranks first exactly like the window's default
+# NULLS FIRST — ids are bit-identical by construction. Above the gate the
+# distributed rank runs unchanged (the 100 TB path).
 _DRIVER_RANK_MAX_ROWS = 2_000_000
-_DRIVER_RANK_MAX_ROWS_NO_ARROW = 200_000
-_DRIVER_RANK_ENABLED = True
 
 
 def assign_ids(terms: DataFrame, col: str = "term", num_partitions: int | None = None) -> DataFrame:
@@ -65,34 +62,24 @@ def assign_ids(terms: DataFrame, col: str = "term", num_partitions: int | None =
     gated driver rank above when the stream is metadata-scale."""
     src = terms.select(col)
     spark = src.sparkSession
-    if (
-        num_partitions is None
-        and _DRIVER_RANK_ENABLED
-        and dict(src.dtypes)[col] == "string"
-    ):
-        arrow = (
-            str(
-                spark.conf.get("spark.sql.execution.arrow.pyspark.enabled", "false")
-            ).lower()
-            == "true"
-        )
+    if num_partitions is None and dict(src.dtypes)[col] == "string":
         from d_sparq_spark.gates import gate as _g
 
-        gate = _g(_DRIVER_RANK_MAX_ROWS if arrow else _DRIVER_RANK_MAX_ROWS_NO_ARROW)
+        gate = _g(_DRIVER_RANK_MAX_ROWS)
         # limit(gate+1) short-circuits: at scale this collects at most
         # gate+1 rows and falls through; below it we hold ALL rows
-        pdf = src.limit(gate + 1).toPandas()
-        if len(pdf) <= gate:
+        tbl = src.limit(gate + 1).toArrow()
+        if tbl.num_rows <= gate:
             import numpy as np
-            import pandas as pd
             import pyarrow as pa
+            import pyarrow.compute as pc
 
             from d_sparq_spark.localdata import arrow_df
 
-            vals = pdf[col]
-            has_null = bool(vals.isnull().any())
+            vals = tbl.column(col)
+            has_null = vals.null_count > 0
             # hash-dedup first (C speed), THEN sort only the distincts
-            uniq = sorted(pd.unique(vals.dropna()))
+            uniq = sorted(pc.unique(vals.drop_null()).to_pylist())
             n_ids = len(uniq) + (1 if has_null else 0)
             term_col = pa.array(([None] if has_null else []) + uniq, pa.string())
             return arrow_df(

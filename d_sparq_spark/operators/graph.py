@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from d_sparq_spark.gates import gate as _gate
+
 
 def _driver_cc(nodes_arr, u, v):
     """Vectorized hash-min + pointer-jumping CC over a collected edge
@@ -67,32 +69,16 @@ def _driver_cc(nodes_arr, u, v):
         comp[tgt] = upd
 
 
-# Driver fast-path gates for connected_components / pagerank (r11; the
+# Driver fast-path gate for connected_components / pagerank (the
 # _driver_sssp precedent): an edge set at or below the gate is collected
 # once and iterated in vectorized numpy — zero per-round Spark jobs. The
 # distributed loops measured a ~0.4-0.8 s/round floor of job scheduling +
 # checkpointing even on metadata-scale graphs (q_pagerank: 10 rounds over
 # a 15k-edge graph = 4.4 s of almost pure round overhead). Above the gate,
 # or for nulls / non-orderable id types, the distributed path is unchanged
-# — the 100 TB shape is untouched. Without Arrow the collect itself is
-# row-pickled, hence the lower gate.
+# — the 100 TB shape is untouched.
 _DRIVER_GRAPH_MAX_EDGES = 4_000_000
-_DRIVER_GRAPH_MAX_EDGES_NO_ARROW = 300_000
 _DRIVER_ID_TYPES = ("tinyint", "smallint", "int", "bigint", "string")
-
-
-def _driver_graph_gate(spark) -> int:
-    from d_sparq_spark.gates import gate
-
-    arrow = (
-        str(
-            spark.conf.get("spark.sql.execution.arrow.pyspark.enabled", "false")
-        ).lower()
-        == "true"
-    )
-    return gate(
-        _DRIVER_GRAPH_MAX_EDGES if arrow else _DRIVER_GRAPH_MAX_EDGES_NO_ARROW
-    )
 
 
 def connected_components(
@@ -112,7 +98,7 @@ def connected_components(
     n_edges = e.count()
     types = dict(e.dtypes)
     spark = e.sparkSession
-    gate = _driver_graph_gate(spark)
+    gate = _gate(_DRIVER_GRAPH_MAX_EDGES)
     node_type = dict(nodes.select("node").dtypes)["node"]
     if (
         types.get("u") == types.get("v")
@@ -123,18 +109,16 @@ def connected_components(
             # the nodes side can be far bigger than the edge set (every
             # doc is a node, few are near-dups) — probe it with a bounded
             # collect instead of a count, and fall through when it blows
-            nd = nodes.select("node").distinct().limit(gate + 1).toPandas()
-            if len(nd) <= gate:
-                ep = e.toPandas()
-                if not (
-                    nd["node"].isnull().any()
-                    or ep["u"].isnull().any()
-                    or ep["v"].isnull().any()
-                ):
+            nd = nodes.select("node").distinct().limit(gate + 1).toArrow()
+            if nd.num_rows <= gate:
+                ep = e.toArrow()
+                if not any(c.null_count for c in [*nd.columns, *ep.columns]):
                     import pandas as pd
 
                     vals, comp = _driver_cc(
-                        nd["node"].to_numpy(), ep["u"].to_numpy(), ep["v"].to_numpy()
+                        nd.column("node").to_numpy(),
+                        ep.column("u").to_numpy(),
+                        ep.column("v").to_numpy(),
                     )
                     from pyspark.sql import types as T
 
@@ -274,14 +258,17 @@ def pagerank(
     if (
         types.get("src") == types.get("dst")
         and types.get("src") in _DRIVER_ID_TYPES
-        and n_edges <= _driver_graph_gate(spark)
+        and n_edges <= _gate(_DRIVER_GRAPH_MAX_EDGES)
     ):
-        pdf = proj.toPandas()
-        if not (pdf["src"].isnull().any() or pdf["dst"].isnull().any()):
+        tbl = proj.toArrow()
+        if not any(c.null_count for c in tbl.columns):
             import pandas as pd
 
             vals, r = _driver_pagerank(
-                pdf["src"].to_numpy(), pdf["dst"].to_numpy(), n_iter, damping_pct
+                tbl.column("src").to_numpy(),
+                tbl.column("dst").to_numpy(),
+                n_iter,
+                damping_pct,
             )
             from pyspark.sql import types as T
 
@@ -533,17 +520,15 @@ def triangle_counts_per_node(edges: DataFrame) -> DataFrame:
     return contribs.groupBy("node").agg(F.sum("w").alias("n_triangles"))
 
 
-# Driver fast-path gate for SSSP (r11; the paths.py _driver_closure
-# precedent): an edge set at or below this many rows is collected once and
-# relaxed with vectorized numpy — zero per-round Spark jobs. The
-# distributed loop measured a ~0.6 s/round floor (job scheduling + AQE
-# replanning + checkpoint) even with a 16-node frontier, so a 14-round
-# 20k-node graph paid ~9 s of pure round overhead. The driver arrays cost
-# ~24 bytes/edge (96 MB at the gate); above the gate, or for non-integral
-# ids/weights, the distributed frontier loop below is the path. Without
-# Arrow the collect itself is the bottleneck, hence the lower gate.
+# Driver fast-path gate for SSSP: an edge set at or below this many rows
+# is collected once and relaxed with vectorized numpy — zero per-round
+# Spark jobs. The distributed loop measured a ~0.6 s/round floor (job
+# scheduling + AQE replanning + checkpoint) even with a 16-node frontier,
+# so a 14-round 20k-node graph paid ~9 s of pure round overhead. The
+# driver arrays cost ~24 bytes/edge (96 MB at the gate); above the gate,
+# or for non-integral ids/weights, the distributed frontier loop below is
+# the path.
 _DRIVER_SSSP_MAX_EDGES = 4_000_000
-_DRIVER_SSSP_MAX_EDGES_NO_ARROW = 300_000
 
 
 def _driver_sssp(pdf, source, n_rounds: int, until_converged: bool):
@@ -636,22 +621,11 @@ def sssp_bellman_ford(
     types = dict(edges_w.dtypes)
     if all(types.get(c) in _INTEGRAL_TYPES for c in ("src", "dst", "w")):
         spark = edges_w.sparkSession
-        arrow = (
-            str(
-                spark.conf.get("spark.sql.execution.arrow.pyspark.enabled", "false")
-            ).lower()
-            == "true"
-        )
-        from d_sparq_spark.gates import gate as _g
-
-        gate = _g(
-            _DRIVER_SSSP_MAX_EDGES if arrow else _DRIVER_SSSP_MAX_EDGES_NO_ARROW
-        )
         proj = edges_w.select("src", "dst", "w")
         n_edges = proj.count()
-        if n_edges <= gate:
+        if n_edges <= _gate(_DRIVER_SSSP_MAX_EDGES):
             out = _driver_sssp(
-                proj.toPandas(), source, n_rounds, until_converged
+                proj.toArrow().to_pandas(), source, n_rounds, until_converged
             )
             from pyspark.sql import types as T
 

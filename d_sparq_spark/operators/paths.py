@@ -3,19 +3,29 @@ the reference never had and SURVEY flags as HARD).
 
 - sequence paths p/q: pure algebra — a join chain through a fresh
   intermediate variable (handled in the translator; nothing to do here),
-- transitive closure p+ : iterative frontier expansion to fixpoint.
+- transitive closure p+ : iterative expansion to fixpoint.
 
-Fixpoint shape, chosen for the 100 TB case:
+``transitive_closure`` has two routes and one gate. An edge set whose raw
+row count is within ``_VEC_CLOSURE_MAX_BASE`` (scaled by gates.gate) is
+collected once and closed by the DRIVER KERNEL: dense int codes from
+arrow ``dictionary_encode``, numpy semi-naive doubling, dictionary
+decode, one arrow upload. A larger edge set — or a kernel decline (a
+NULL anywhere, a blown pair/work budget, an ``ArrowInvalid``) — runs the
+DISTRIBUTED LOOP, the 100 TB path:
+
 - the driver loop only iterates (bounded by graph diameter, NOT data
   size); each iteration is one distributed join frontier x edges,
-- reached pairs accumulate with distinct() per round so the frontier
-  only carries NEW pairs — on a DAG this terminates in diameter rounds;
-  on cyclic graphs the distinct guarantees termination,
+- reached pairs are deduplicated per round so the frontier only carries
+  NEW pairs — on a DAG this terminates in diameter rounds; on cyclic
+  graphs the dedup guarantees termination,
 - localCheckpoint() every iteration truncates the lineage — without it
   the plan doubles per round and Catalyst analysis goes quadratic (the
   classic iterative-algorithm failure mode on Spark),
 - max_iter caps runaway graphs; hitting the cap raises rather than
   silently returning a partial closure.
+
+Both routes run the same algorithm (see transitive_closure), so round
+count, derivations and the fixpoint certificate are identical.
 """
 
 from __future__ import annotations
@@ -26,58 +36,31 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from d_sparq_spark.gates import gate as _gate
-from d_sparq_spark.localdata import local_df
 
 # Diagnostics from the LAST seeded_closure stride build on this driver —
 # written when the 8x|E| growth cap discards a composed hop relation.
 # Test/bench introspection only (not thread-safe, not part of the API).
 LAST_WALK_INFO: dict = {}
 
-# Size gates for the metadata-scale closure fast path (r8, VERDICT r7 #1:
-# the canonical-split loop's per-round plan weight is pure overhead when
-# the closure is tiny — the two small bench closures drifted 1.5x while
-# the 1.18M-edge heavies won 0.66-0.70x). An edge set at or below
-# _DRIVER_CLOSURE_MAX_BASE pairs is broadcast-scale by definition (the
-# distributed loop would broadcast it every round anyway), so it is
-# collected once and closed with a driver BFS — zero per-round Spark jobs.
-# The BFS abandons itself back to the distributed loop if the OUTPUT
-# outgrows _DRIVER_CLOSURE_MAX_PAIRS (a tiny edge set can still have a
-# quadratic closure) or the traversal outspends _DRIVER_CLOSURE_MAX_WORK
-# stack pops (dense graphs re-visit; per-source BFS is O(V*E) worst case)
-# — so the driver's exposure is bounded no matter the graph shape.
-_DRIVER_CLOSURE_MAX_BASE = 10_000
-_DRIVER_CLOSURE_MAX_PAIRS = 200_000
-_DRIVER_CLOSURE_MAX_WORK = 2_000_000
-
-# Gates for the VECTORIZED driver closure (r11; the graph.py _driver_sssp
-# precedent): an ungrouped INTEGER edge set at or below the gate is
-# collected once and closed with numpy — the same canonical-split
-# semi-naive doubling as the distributed loop below, on sorted int64
-# arrays instead of per-round Spark jobs (measured ~0.8 s/round of pure
-# job scheduling + AQE replanning + checkpoint overhead at a 1.18M-edge
-# base; the whole 6.6M-pair closure vectorizes in ~3 s single-core).
-# Budgets bound the driver's exposure exactly like _driver_closure's: the
-# output cap (~8 numpy int64 arrays alive at the cap ≈ 1.3 GB) and the
-# per-round candidate budget each abandon back to the distributed loop,
-# never a wrong answer or an OOM. Without Arrow both the collect and the
-# result re-upload are row-pickled, so the gates drop to sizes where
-# pickling stays cheap.
+# The driver-kernel gate and budgets, shared by transitive_closure and
+# seeded_closure. Per-round Spark jobs measured ~0.8 s of pure scheduling
+# + AQE replanning + checkpointing at a 1.18M-edge base, while the whole
+# 6.6M-pair closure vectorizes in ~3 s single-core. An edge set at or
+# below the gate is collected once; the output cap (~8 numpy int64 arrays
+# alive at the cap ≈ 1.3 GB) and the per-round candidate budget each
+# abandon back to the distributed route — never a wrong answer or an OOM.
 _VEC_CLOSURE_MAX_BASE = 4_000_000
-_VEC_CLOSURE_MAX_BASE_NO_ARROW = 300_000
 _VEC_CLOSURE_MAX_PAIRS = 20_000_000
-_VEC_CLOSURE_MAX_PAIRS_NO_ARROW = 600_000
 _VEC_CLOSURE_MAX_WORK = 100_000_000
 
-# Test/bench toggle for the string-vec driver path (r11): lets A/B and
-# equivalence tests force the encode route without touching the int gates.
-_STRING_VEC_ENABLED = True
-
-# Below this many (deduped) string edges, skip xxhash64 encoding: the
-# prep (terms distinct + injectivity aggregate) and the decode join pair
-# cost more than shuffling a few thousand short strings ever could. The
-# measured ~1.7x string tax the encoding removes is a BIG-graph effect
-# (BASELINE.md q_closure_big_int twin).
+# Below this many (deduped) string edges the distributed route skips
+# xxhash64 encoding: the prep (terms distinct + injectivity aggregate) and
+# the decode join pair cost more than shuffling a few thousand short
+# strings ever could. The measured ~1.7x string tax the encoding removes
+# is a BIG-graph effect (BASELINE.md q_closure_big_int twin).
 _ENCODE_MIN_EDGES = 50_000
+
+_INTEGRAL_TYPES = ("tinyint", "smallint", "int", "bigint")
 
 
 def transitive_closure(
@@ -86,42 +69,41 @@ def transitive_closure(
     """edges(src, dst) -> all (src, dst) pairs connected by a path of
     length >= 1. Columns must be named src/dst.
 
+    Routes: the raw edge set is pinned once (localCheckpoint + count).
+    Within ``_VEC_CLOSURE_MAX_BASE`` rows the driver kernel
+    (``_driver_closure``) closes it; otherwise, or when the kernel
+    declines, the edges are deduplicated, string ids at or above
+    ``_ENCODE_MIN_EDGES`` edges are hash-encoded, and the distributed
+    loop (``_closure_fixpoint``) runs.
+
     Path DOUBLING, not single-step expansion: round k covers all paths of
     length <= 2^k, so a diameter-d graph converges in ceil(log2 d) + 1
     rounds (a 10^6-hop chain is 21 rounds; single-stepping would be 10^6
     driver iterations — the difference between usable and not at scale).
-    Each round is one self-join of the closure; localCheckpoint truncates
-    lineage so Catalyst analysis stays O(1) per round. max_iter=48 covers
-    diameters beyond 2^47 — hitting it means runaway growth, so raise.
-
-    r7 rewrite (the r6 verdict's #1 — stop re-deriving known pairs every
-    round), two stacked changes, both measured on the 1.18M-edge bench
-    graph:
+    max_iter=48 covers diameters beyond 2^47 — hitting it means runaway
+    growth, so raise.
 
     1. CANONICAL-SPLIT semi-naive composition with exact min-distance
-       labels. The closure is kept as DISJOINT checkpointed delta parts,
-       each pair carrying its exact min-distance ``_d``; round k composes
-       only (pairs at min-distance EXACTLY 2^k) ⋈ closure — never
+       labels. The closure is kept as DISJOINT delta parts, each pair
+       carrying its exact min-distance ``_d``; round k composes only
+       (pairs at min-distance EXACTLY 2^k) ⋈ closure — never
        closure ⋈ closure. This is complete: a pair at min-distance
        L ∈ (2^k, 2^(k+1)] has, on any of its shortest paths, the node at
        position 2^k, whose prefix is itself shortest (else L was not
        minimal) — so (x,m) is at EXACTLY 2^k and (m,y) at L−2^k ≤ 2^k is
        in the closure. It also kills midpoint multiplicity: on unique-
-       shortest-path graphs every new pair is derived exactly once
-       (the old closure⋈closure derived each pair once per midpoint —
-       ~avg-distance/2 times, the dominant waste). Distance labels stay
-       exact (min over derivations; the canonical split realizes L), the
-       dedup-vs-known probe and the per-pair min fuse into ONE aggregation
-       (min over a (_new,_d) struct with known pairs as 0-sentinels), and
-       convergence is free: no pair at exactly 2^k ⇒ no pair beyond 2^k
-       (the prefix argument again), checked in the same count job that
-       materializes the round's lazy checkpoint — one Spark job per round.
+       shortest-path graphs every new pair is derived exactly once.
+       Distance labels stay exact (min over derivations; the canonical
+       split realizes L), the dedup-vs-known probe and the per-pair min
+       fuse into ONE aggregation (min over a (_new,_d) struct with known
+       pairs as 0-sentinels), and convergence is free: no pair at exactly
+       2^k ⇒ no pair beyond 2^k (the prefix argument again), checked in
+       the same count job that materializes the round's lazy checkpoint —
+       one Spark job per round.
 
-    2. HASH-ENCODED iteration for string node ids. The lexical engine's
-       closures shuffle string keys every round; the measured twin
-       (q_closure_big_int vs q_sparql_path_plus_big, BASELINE.md) puts the
-       string tax at ~1.7x. String src/dst are xxhash64-encoded ONCE,
-       injectivity is verified with one aggregate over the distinct terms
+    2. HASH-ENCODED iteration for big string edge sets on the distributed
+       route. String src/dst are xxhash64-encoded ONCE, injectivity is
+       verified with one aggregate over the distinct terms
        (count == count_distinct(hash); on a collision — probability
        ~n²/2^64 — we fall back to lexical iteration, never a wrong
        answer), the fixpoint runs on 8-byte keys, and one final join pair
@@ -129,218 +111,132 @@ def transitive_closure(
 
     ``group_col`` names an extra edge column that partitions the graph
     into independent subgraphs (GRAPH ?g: one closure per named graph).
-    Pairs only compose within a group, the group rides every join key,
-    and ALL groups converge in one shared fixpoint loop — a 10k-graph
-    store is still one plan per round, not 10k driver branches."""
+    Pairs only compose within a group. The distributed loop carries the
+    group on every join key, so ALL groups converge in one shared loop;
+    the driver kernel folds the group into the node code, so a grouped
+    closure is an ungrouped closure over group-qualified nodes."""
     keys = [group_col] if group_col else []
+    # pin the RAW edge set once: the driver kernel dedups for free, so the
+    # dedup exchange is only paid when it declines, and every later pass
+    # reads the checkpoint instead of re-running the upstream scan/filter
+    raw = edges.select(*keys, "src", "dst").localCheckpoint(eager=False)
+    if raw.count() <= _gate(_VEC_CLOSURE_MAX_BASE):
+        out = _driver_closure(raw, keys, max_iter)
+        if out is not None:
+            return out
+    edges = raw.distinct().localCheckpoint(eager=False)
     types = dict(edges.dtypes)
-    if types.get("src") == "string" and types.get("dst") == "string":
-        # pin the edge set ONCE — RAW, not distinct (r11): the vectorized
-        # driver path dedups for free (factorize + np.unique over packed
-        # pairs), so the dedup EXCHANGE over |E| strings is only paid when
-        # that path declines. terms/encode/fixpoint all derive from the
-        # checkpoint, so the upstream scan/filter never re-executes.
-        raw = edges.select(*keys, "src", "dst").localCheckpoint(eager=False)
-        # the count materializes the checkpoint and gates the encoding:
-        # below _ENCODE_MIN_EDGES the lexical loop (or the driver BFS) is
-        # cheaper than the encode prep + decode joins
-        n_edges = raw.count()
-        edges = raw
-        # r11: gated VECTORIZED driver path for ungrouped string closures,
-        # WITHOUT the hash encoding. The encode route pays a terms
-        # distinct + injectivity aggregate up front and, on the way out,
-        # TWO broadcast decode joins whose hashed relations are
-        # term-count-sized (measured ~2M terms -> two ~100MB+ broadcast
-        # builds per run for q_sparql_path_plus_big). When the edge set is
-        # within the vec gate anyway, collect the STRINGS once, factorize
-        # on the driver (pd.factorize, C-speed), close over the dense int
-        # codes with the same budget-capped _vector_closure, and emit the
-        # decoded pairs directly — no terms pass, no injectivity job, no
-        # decode joins, no collision fallback to reason about. Budget
-        # blows fall through to the encode path unchanged.
-        #
-        # r12 (VERDICT r11 #5): gate on _DRIVER_CLOSURE_MAX_BASE, not
-        # _ENCODE_MIN_EDGES — the old bound existed to decide when hash
-        # ENCODING pays off, but the vec path never encodes, and hub-shaped
-        # graphs (~20k edges, ~450k closure pairs at sf0.1) fell between
-        # the two bounds into the distributed string doubling loop. The
-        # pair/work budgets already bound driver exposure; edge sets at or
-        # below _DRIVER_CLOSURE_MAX_BASE keep the _driver_closure BFS path.
-        if (
-            not keys
-            and _STRING_VEC_ENABLED
-            and n_edges > _gate(_DRIVER_CLOSURE_MAX_BASE)
-        ):
-            spark = edges.sparkSession
-            arrow = (
-                str(
-                    spark.conf.get(
-                        "spark.sql.execution.arrow.pyspark.enabled", "false"
-                    )
-                ).lower()
-                == "true"
-            )
-            if n_edges <= _gate(
-                _VEC_CLOSURE_MAX_BASE if arrow else _VEC_CLOSURE_MAX_BASE_NO_ARROW
-            ):
-                import pandas as pd
-                import pyarrow as pa
-
-                # collect + factorize WITHOUT pandas object strings (r11):
-                # toPandas materializes 2|E| Python string objects and
-                # pd.factorize hashes each PyObject; toArrow keeps the
-                # strings in arrow buffers and dictionary_encode
-                # factorizes at C level over one contiguous array —
-                # identical first-appearance code assignment.
-                #
-                # try/except (ADVICE r11 #1): combine_chunks /
-                # dictionary_encode / the decode takes raise ArrowInvalid
-                # past 2 GB cumulative string bytes (int32 offsets) —
-                # reachable under the 4M-edge gate with long IRIs. Any
-                # fast-path decline must fall through to the distributed
-                # loop, never fail the query.
-                try:
-                    tbl = edges.select("src", "dst").toArrow()
-                    if (
-                        tbl.column("src").null_count == 0
-                        and tbl.column("dst").null_count == 0
-                    ):
-                        both = pa.chunked_array(
-                            [*tbl.column("src").chunks, *tbl.column("dst").chunks]
-                        ).combine_chunks()
-                        denc = both.dictionary_encode()
-                        codes = denc.indices.to_numpy(zero_copy_only=False).astype(
-                            "int64"
-                        )
-                        uniq_pa = denc.dictionary
-                        n_rows = tbl.num_rows
-                        ipdf = pd.DataFrame(
-                            {"src": codes[:n_rows], "dst": codes[n_rows:]}
-                        )
-                        out = _vector_closure(
-                            ipdf,
-                            max_iter,
-                            _gate(
-                                _VEC_CLOSURE_MAX_PAIRS
-                                if arrow
-                                else _VEC_CLOSURE_MAX_PAIRS_NO_ARROW
-                            ),
-                            _gate(_VEC_CLOSURE_MAX_WORK),
-                        )
-                        if out is not None:
-                            # decode + upload arrow-native: C-level dictionary
-                            # takes and a Table upload (see localdata.arrow_df
-                            # — the pandas object-take + createDataFrame route
-                            # measured ~3x the cost at 6.6M pairs)
-                            from d_sparq_spark.localdata import arrow_df
-
-                            return arrow_df(
-                                spark,
-                                {
-                                    "src": uniq_pa.take(
-                                        pa.array(out["src"].to_numpy())
-                                    ),
-                                    "dst": uniq_pa.take(
-                                        pa.array(out["dst"].to_numpy())
-                                    ),
-                                },
-                                edges.select("src", "dst").schema,
-                            )
-                except pa.ArrowInvalid:
-                    pass  # offset overflow: decline to the distributed path
-        # fast path declined (or disabled): the encode/lexical routes below
-        # require a DEDUPED edge set — distinct over the checkpointed raw
-        # rows (the generator does not re-run), recount for the gates
-        edges = raw.select(*keys, "src", "dst").distinct().localCheckpoint(
-            eager=False
+    if (
+        types["src"] == types["dst"] == "string"
+        and edges.count() >= _ENCODE_MIN_EDGES
+    ):
+        terms = (
+            edges.select(F.col("src").alias("term"))
+            .unionByName(edges.select(F.col("dst").alias("term")))
+            .distinct()
+            .localCheckpoint(eager=False)
         )
-        n_edges = edges.count()
-        if n_edges >= _ENCODE_MIN_EDGES:
-            terms = (
-                edges.select(F.col("src").alias("term"))
-                .unionByName(edges.select(F.col("dst").alias("term")))
-                .distinct()
-                .localCheckpoint(eager=False)
+        st = terms.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.count_distinct(F.xxhash64("term")).alias("h"),
+        ).first()
+        if st["n"] == st["h"]:  # hash is injective on this node set
+            # the edges are deduped and the hash is injective, so the
+            # encoded set is distinct too; pin it so rounds never rehash
+            enc = edges.select(
+                *keys,
+                F.xxhash64("src").alias("src"),
+                F.xxhash64("dst").alias("dst"),
+            ).localCheckpoint(eager=False)
+            pairs = _closure_fixpoint(enc, max_iter, keys)
+            m_src = terms.select(
+                F.xxhash64("term").alias("src"), F.col("term").alias("_t_src")
             )
-            st = terms.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.count_distinct(F.xxhash64("term")).alias("h"),
-            ).first()
-            if st["n"] == st["h"]:  # hash is injective on this node set
-                enc = edges.select(
+            m_dst = terms.select(
+                F.xxhash64("term").alias("dst"), F.col("term").alias("_t_dst")
+            )
+            if st["n"] <= 2_000_000:
+                m_src, m_dst = F.broadcast(m_src), F.broadcast(m_dst)
+            return (
+                pairs.join(m_src, "src")
+                .join(m_dst, "dst")
+                .select(
                     *keys,
-                    F.xxhash64("src").alias("src"),
-                    F.xxhash64("dst").alias("dst"),
+                    F.col("_t_src").alias("src"),
+                    F.col("_t_dst").alias("dst"),
                 )
-                # edges were deduped above and the hash is injective here,
-                # so enc is already distinct — skip the fixpoint's dedup
-                pairs = _closure_fixpoint(
-                    enc, max_iter, keys, deduped=True, n_base=n_edges
-                )
-                m_src = terms.select(
-                    F.xxhash64("term").alias("src"), F.col("term").alias("_t_src")
-                )
-                m_dst = terms.select(
-                    F.xxhash64("term").alias("dst"), F.col("term").alias("_t_dst")
-                )
-                if st["n"] <= 2_000_000:
-                    m_src, m_dst = F.broadcast(m_src), F.broadcast(m_dst)
-                return (
-                    pairs.join(m_src, "src")
-                    .join(m_dst, "dst")
-                    .select(
-                        *keys,
-                        F.col("_t_src").alias("src"),
-                        F.col("_t_dst").alias("dst"),
-                    )
-                )
-        # small string edge set, or a hash collision (never observed):
-        # iterate lexically on the ALREADY-DEDUPED, already-counted set
-        return _closure_fixpoint(edges, max_iter, keys, deduped=True, n_base=n_edges)
-    return _closure_fixpoint(
-        edges.select(*keys, "src", "dst"), max_iter, keys, deduped=False
-    )
+            )
+    # non-string ids, a small string edge set, or a hash collision (never
+    # observed): iterate on the deduped ids as they are
+    return _closure_fixpoint(edges, max_iter, keys)
 
 
-def _driver_closure(rows, n_keys: int):
-    """Transitive closure of a METADATA-SCALE edge list, on the driver.
-    ``rows``: Row(*group_keys, src, dst). Per-source BFS within each group.
-    Returns the closure as a list of tuples in (*keys, src, dst) order, or
-    None when either budget blows — the caller falls back to the
-    distributed loop, so a bad gate costs bounded driver time, never a
-    wrong answer or an OOM."""
-    adj: dict = {}
-    for row in rows:
-        adj.setdefault((row[:n_keys], row[n_keys]), set()).add(row[n_keys + 1])
-    out: list[tuple] = []
-    work = 0
-    # read the (env-scalable) budgets once, not per stack pop
-    work_cap = _gate(_DRIVER_CLOSURE_MAX_WORK)
-    pair_cap = _gate(_DRIVER_CLOSURE_MAX_PAIRS)
-    for (g, s), first in adj.items():
-        seen: set = set()
-        stack = list(first)
-        while stack:
-            work += 1
-            if work > work_cap:
-                return None
-            d = stack.pop()
-            if d in seen:
-                continue
-            seen.add(d)
-            nbrs = adj.get((g, d))
-            if nbrs:
-                stack.extend(nbrs)
-        out.extend((*g, s, d) for d in seen)
-        if len(out) > pair_cap:
+def _factorize(*cols):
+    """Joint dense int64 codes for same-typed arrow columns, computed at C
+    level by ``dictionary_encode`` (no Python objects per value). Returns
+    (one code array per column, the dictionary) — decode with
+    ``dictionary.take``."""
+    import numpy as np
+    import pyarrow as pa
+
+    joined = pa.chunked_array(
+        [ch for c in cols for ch in c.chunks], type=cols[0].type
+    ).combine_chunks()
+    denc = joined.dictionary_encode()
+    codes = denc.indices.to_numpy(zero_copy_only=False).astype(np.int64)
+    return np.split(codes, np.cumsum([len(c) for c in cols[:-1]])), denc.dictionary
+
+
+def _driver_closure(raw: DataFrame, keys: list[str], max_iter: int):
+    """The driver kernel of transitive_closure: ``raw`` (*keys, src, dst),
+    pinned and within the base gate, is collected once with toArrow,
+    factorized, closed by ``_vector_closure`` and uploaded with arrow_df.
+    A group column is packed into the node code (g * V + node), so pairs
+    compose only within their group. Returns None — the caller runs the
+    distributed loop — for id types other than same-typed strings or
+    integers, a NULL in any column (the loop's joins never match NULL, so
+    the kernel must not compose through one), a blown budget, or an
+    ``ArrowInvalid`` (string offsets past 2 GB in combine_chunks /
+    dictionary_encode / take)."""
+    import pyarrow as pa
+
+    from d_sparq_spark.localdata import arrow_df
+
+    types = dict(raw.dtypes)
+    if types["src"] != types["dst"] or any(
+        t != "string" and t not in _INTEGRAL_TYPES for t in types.values()
+    ):
+        return None
+    try:
+        tbl = raw.toArrow()
+        if any(c.null_count for c in tbl.columns):
             return None
-    return out
+        (src, dst), nodes = _factorize(tbl.column("src"), tbl.column("dst"))
+        V = max(len(nodes), 1)
+        if keys:
+            (g,), groups = _factorize(tbl.column(keys[0]))
+            src, dst = g * V + src, g * V + dst
+        out = _vector_closure(
+            src,
+            dst,
+            max_iter,
+            _gate(_VEC_CLOSURE_MAX_PAIRS),
+            _gate(_VEC_CLOSURE_MAX_WORK),
+        )
+        if out is None:
+            return None
+        cols = {keys[0]: groups.take(pa.array(out[0] // V))} if keys else {}
+        cols["src"] = nodes.take(pa.array(out[0] % V))
+        cols["dst"] = nodes.take(pa.array(out[1] % V))
+        return arrow_df(raw.sparkSession, cols, raw.schema)
+    except pa.ArrowInvalid:
+        return None
 
 
-def _vector_closure(pdf, max_iter: int, pair_cap: int, work_cap: int):
-    """Transitive closure of a collected INTEGER edge list, vectorized on
-    the driver. ``pdf``: pandas DataFrame (src, dst). Returns a pandas
-    DataFrame of all closure pairs, or None when a budget blows (the
+def _vector_closure(src, dst, max_iter: int, pair_cap: int, work_cap: int):
+    """Transitive closure of an INTEGER edge list, vectorized on the
+    driver. ``src``/``dst``: int64 numpy arrays. Returns the closure as a
+    (src, dst) pair of numpy arrays, or None when a budget blows (the
     caller falls back to the distributed loop).
 
     Same algorithm as the distributed loop below — canonical-split
@@ -352,16 +248,13 @@ def _vector_closure(pdf, max_iter: int, pair_cap: int, work_cap: int):
     the substrate differs (sorted int64 arrays, searchsorted joins,
     lexsort min-d dedup, linear merges into the sorted known set)."""
     import numpy as np
-    import pandas as pd
 
-    src = pdf["src"].to_numpy(dtype=np.int64)
-    dst = pdf["dst"].to_numpy(dtype=np.int64)
-    # factorize to 0..V-1 so a pair packs into one int64 key (hash-encoded
-    # ids span the full 64-bit range; V <= 2|E| keeps src*V+dst < 2^63)
+    # factorize to 0..V-1 so a pair packs into one int64 key (group-packed
+    # codes span up to G*V; V <= 2|E| keeps src*V+dst < 2^63)
     nodes, inv = np.unique(np.concatenate([src, dst]), return_inverse=True)
     V = len(nodes)
     if V == 0:
-        return pd.DataFrame({"src": nodes, "dst": nodes})
+        return nodes, nodes
     base_key = np.unique(inv[: len(src)].astype(np.int64) * V + inv[len(src):])
     # disjoint parts: keys + min-distances; part_src[k] = part k's keys
     # re-sorted by src (the compose probe side), built once per part
@@ -388,7 +281,7 @@ def _vector_closure(pdf, max_iter: int, pair_cap: int, work_cap: int):
         ex_src = ek // V
         ex_dst = ek % V
         # probe in dst order: the parts are probed by binary search, and
-        # hash-encoded node ids visit them in random order — sorting the
+        # first-appearance node codes visit them in random order — sorting the
         # probe side makes consecutive searches touch the same cache lines
         # (measured 5.5 s -> 0.7 s of probe time on the 1.18M-edge
         # xxhash64-encoded closure; candidate order is irrelevant, the
@@ -450,48 +343,30 @@ def _vector_closure(pdf, max_iter: int, pair_cap: int, work_cap: int):
             f"transitive_closure: no fixpoint within {max_iter} doubling rounds"
         )
     out = np.concatenate(part_keys)
-    return pd.DataFrame({"src": nodes[out // V], "dst": nodes[out % V]})
+    return nodes[out // V], nodes[out % V]
 
 
 def _vector_seeded(e_src, e_dst, seed_vals, pair_cap: int, work_cap: int):
-    """Vectorized seeded reachability over collected arrays (int64 or
-    object/str; seeds and endpoints share one value space). Multi-source
-    BFS on packed (seed_idx * V + node) int64 keys — single-step rounds
-    are ~ms on the driver, so no stride machinery is needed. Returns a
-    (src_vals, dst_vals) pair of numpy arrays (seed value, reachable node
-    at >= 1 hop — the same pair set the distributed walk accumulates), or
-    None when a budget blows (caller falls back to the distributed walk)."""
+    """Vectorized seeded reachability over collected integer arrays (seeds
+    and endpoints share one value space). Multi-source BFS on packed
+    (seed_idx * V + node) int64 keys — single-step rounds are ~ms on the
+    driver, so no stride machinery is needed. Returns a (src_vals,
+    dst_vals) pair of numpy arrays (seed value, reachable node at >= 1
+    hop — the same pair set the distributed walk accumulates), or None
+    when a budget blows (caller falls back to the distributed walk)."""
     import numpy as np
 
-    # node codes: hash-factorize strings (C-speed; np.unique would
-    # object-compare-sort 2|E| strings — measured seconds at 1M edges),
-    # sort-unique integers. Codes need only be CONSISTENT here, not
-    # value-ordered — unlike _driver_cc's min-decodes.
-    if getattr(e_src.dtype, "kind", None) == "O":
-        import pandas as pd
-
-        codes, uniq = pd.factorize(np.concatenate([e_src, e_dst]))
-        vals = np.asarray(uniq)
-        si = codes[: len(e_src)].astype(np.int64)
-        di = codes[len(e_src):].astype(np.int64)
-        sv = pd.unique(seed_vals)
-        seed_idx = pd.Index(uniq).get_indexer(sv)
-        present = seed_idx >= 0
-        seed_codes = seed_idx[present].astype(np.int64)
-    else:
-        vals = np.unique(np.concatenate([e_src, e_dst]))
-        if len(vals) == 0:
-            return vals, vals
-        si = np.searchsorted(vals, e_src)
-        di = np.searchsorted(vals, e_dst)
-        sv = np.unique(seed_vals)
-        pos = np.searchsorted(vals, sv)
-        pos_c = np.minimum(pos, len(vals) - 1)
-        present = vals[pos_c] == sv
-        seed_codes = pos_c[present]
-    V = len(vals)
-    if V == 0:
+    vals = np.unique(np.concatenate([e_src, e_dst]))
+    if len(vals) == 0:
         return vals, vals
+    si = np.searchsorted(vals, e_src)
+    di = np.searchsorted(vals, e_dst)
+    sv = np.unique(seed_vals)
+    pos = np.searchsorted(vals, sv)
+    pos_c = np.minimum(pos, len(vals) - 1)
+    present = vals[pos_c] == sv
+    seed_codes = pos_c[present]
+    V = len(vals)
     order = np.argsort(si, kind="stable")
     csr_src = si[order]
     csr_dst = di[order]
@@ -540,147 +415,16 @@ def _vector_seeded(e_src, e_dst, seed_vals, pair_cap: int, work_cap: int):
     return sv_present[reached // V], vals[reached % V]
 
 
-_INTEGRAL_TYPES = ("tinyint", "smallint", "int", "bigint")
-
-
-def _closure_fixpoint(
-    edges: DataFrame,
-    max_iter: int,
-    keys: list[str],
-    deduped: bool = False,
-    n_base: int | None = None,
-) -> DataFrame:
-    """The canonical-split doubling loop behind transitive_closure (see
-    its docstring for the algorithm and the completeness argument).
-    ``deduped`` skips the base distinct when the caller already
-    deduplicated the edge set (review r7: the hash-encoded path paid a
-    second full exchange over |E| rows for nothing); ``n_base`` passes a
-    base pair count the caller already paid for, saving the first
-    counting job."""
+def _closure_fixpoint(edges: DataFrame, max_iter: int, keys: list[str]) -> DataFrame:
+    """The distributed canonical-split doubling loop behind
+    transitive_closure (see its docstring for the algorithm and the
+    completeness argument). ``edges`` must be DISTINCT and pinned
+    (checkpointed): the base part is a projection of it, re-read every
+    round."""
     pair_cols = keys + ["src", "dst"]
-    base = edges.select(*pair_cols)
-    types0 = dict(base.dtypes)
-    if not deduped:
-        # r11: defer the dedup EXCHANGE when the vectorized driver path is
-        # in play — _vector_closure's base np.unique dedups for free, so
-        # gate on the raw (checkpointed, no-shuffle) row count and only
-        # pay the distinct if the fast path declines. Grouped or
-        # non-integer closures keep the old order.
-        vec_shape = (
-            not keys
-            and types0.get("src") in _INTEGRAL_TYPES
-            and types0.get("dst") in _INTEGRAL_TYPES
-        )
-        if vec_shape and n_base is None:
-            spark = edges.sparkSession
-            arrow = (
-                str(
-                    spark.conf.get(
-                        "spark.sql.execution.arrow.pyspark.enabled", "false"
-                    )
-                ).lower()
-                == "true"
-            )
-            gate = _gate(
-                _VEC_CLOSURE_MAX_BASE if arrow else _VEC_CLOSURE_MAX_BASE_NO_ARROW
-            )
-            raw = base.localCheckpoint(eager=False)
-            n_raw = raw.count()
-            if _gate(_DRIVER_CLOSURE_MAX_BASE) < n_raw <= gate:
-                out = _vector_closure(
-                    raw.toPandas(),
-                    max_iter,
-                    _gate(
-                        _VEC_CLOSURE_MAX_PAIRS
-                        if arrow
-                        else _VEC_CLOSURE_MAX_PAIRS_NO_ARROW
-                    ),
-                    _gate(_VEC_CLOSURE_MAX_WORK),
-                )
-                if out is not None:
-                    from pyspark.sql import types as T
-
-                    from d_sparq_spark.localdata import arrow_df
-
-                    np_t = {"bigint": "int64", "int": "int32",
-                            "smallint": "int16", "tinyint": "int8"}
-                    return arrow_df(
-                        spark,
-                        {c: out[c].to_numpy().astype(np_t[types0[c]])
-                         for c in ("src", "dst")},
-                        T.StructType(
-                            [
-                                T.StructField("src", base.schema["src"].dataType),
-                                T.StructField("dst", base.schema["dst"].dataType),
-                            ]
-                        ),
-                    )
-            # fast path declined: dedup the CHECKPOINTED raw rows (the
-            # upstream generator does not re-run) and continue below
-            base = raw
-        base = base.distinct()
-    base = base.withColumn("_d", F.lit(1)).localCheckpoint(eager=False)
-    if n_base is None:
-        # one job: materialize the checkpoint + the base pair count
-        n_base = base.count()
-    if n_base <= _gate(_DRIVER_CLOSURE_MAX_BASE):
-        # metadata-scale fast path: a base this small is what the loop
-        # below would broadcast EVERY round — collect it once instead and
-        # close on the driver (zero per-round jobs; the tiny bench
-        # closures were pure round overhead). Falls through on budget blow.
-        spark = edges.sparkSession
-        out = _driver_closure(base.select(*pair_cols).collect(), len(keys))
-        if out is not None:
-            return local_df(spark, out, base.select(*pair_cols).schema)
-    types = dict(base.dtypes)
-    if (
-        not keys
-        and types.get("src") in _INTEGRAL_TYPES
-        and types.get("dst") in _INTEGRAL_TYPES
-    ):
-        # vectorized driver fast path (gates + budgets documented above):
-        # integer ungrouped closures below the gate skip the per-round
-        # Spark jobs entirely; a budget blow falls through to the loop
-        spark = edges.sparkSession
-        arrow = (
-            str(
-                spark.conf.get("spark.sql.execution.arrow.pyspark.enabled", "false")
-            ).lower()
-            == "true"
-        )
-        gate = _gate(
-            _VEC_CLOSURE_MAX_BASE if arrow else _VEC_CLOSURE_MAX_BASE_NO_ARROW
-        )
-        if n_base <= gate:
-            out = _vector_closure(
-                base.select("src", "dst").toPandas(),
-                max_iter,
-                _gate(
-                    _VEC_CLOSURE_MAX_PAIRS
-                    if arrow
-                    else _VEC_CLOSURE_MAX_PAIRS_NO_ARROW
-                ),
-                _gate(_VEC_CLOSURE_MAX_WORK),
-            )
-            if out is not None:
-                from pyspark.sql import types as T
-
-                from d_sparq_spark.localdata import arrow_df
-
-                schema = T.StructType(
-                    [
-                        T.StructField("src", base.schema["src"].dataType),
-                        T.StructField("dst", base.schema["dst"].dataType),
-                    ]
-                )
-                np_t = {"bigint": "int64", "int": "int32",
-                        "smallint": "int16", "tinyint": "int8"}
-                return arrow_df(
-                    spark,
-                    {c: out[c].to_numpy().astype(np_t[types[c]])
-                     for c in ("src", "dst")},
-                    schema,
-                )
+    base = edges.select(*pair_cols, F.lit(1).alias("_d"))
+    # one job: materialize the pinned edges + the base pair count
+    n_base = base.count()
     n_exact = n_base
     parts = [base]  # disjoint checkpointed deltas; union = closure
     delta, step = base, 1
@@ -701,7 +445,7 @@ def _closure_fixpoint(
             F.col("_d").alias("_r_d"),
         )
         # checkpointed deltas carry no Catalyst stats, so a shrinking
-        # late-round exact side would never auto-broadcast (r4 lesson)
+        # late-round exact side would never auto-broadcast
         lhs = F.broadcast(exact) if n_exact <= 100_000 else exact
         cand = lhs.join(
             rhs,
@@ -766,7 +510,7 @@ def seeded_closure(
     against the raw edges BEFORE the strided relation is built, so a
     seed set that touches nothing costs one join, not three self-joins.
 
-    The stride build itself is LAZY (r4 fix): on a big edge set with a
+    The stride build itself is LAZY: on a big edge set with a
     small seed frontier, pre-doubling the WHOLE edge relation costs more
     than the entire BFS (measured 20 s of a 22 s query on the ~786k-edge
     synthetic graph as first benched) — so when the edges outnumber a
@@ -799,8 +543,8 @@ def seeded_closure(
         F.col("src").alias("_esrc"),
         F.col("dst").alias("_edst"),
     )
-    # Ungrouped walks pin the edge set RAW, not distinct (r11, the §17
-    # transitive_closure device): the vectorized driver BFS below dedups
+    # Ungrouped walks pin the edge set RAW, not distinct (as
+    # transitive_closure does): the vectorized driver BFS below dedups
     # for free (np.unique per round), so the dedup EXCHANGE over |E|
     # rows is deferred until the fast path declines. Grouped walks keep
     # the dedup-first order (they never take the driver path).
@@ -809,7 +553,7 @@ def seeded_closure(
         edges = edges.distinct()
     edges = edges.localCheckpoint(eager=False)
     # the count materializes the checkpoint (the walk needs base_n anyway)
-    # and gates the r11 driver fast path below
+    # and gates the driver fast path below
     base_n = edges.count()
     seed_keyed = group_col is not None and group_col in seeds.columns
     if seed_keyed:
@@ -824,23 +568,14 @@ def seeded_closure(
     else:
         seeds = seeds.select(F.col(seeds.columns[0]).alias("n")).distinct()
         seed_cond = [F.col("n") == F.col("_esrc")]
-    # r11 driver fast path (the _vector_closure/_driver_sssp precedent):
-    # an ungrouped edge set within the vec gate is collected once and the
-    # whole walk runs as a vectorized multi-source BFS — removing the
-    # ~0.5 s/round job floor AND the per-round broadcast ships. Seeds are
-    # collected BOUNDED (limit gate+1); nulls, oversized seed sets, or a
-    # blown pair/work budget fall through to the distributed walk.
+    # driver fast path: an ungrouped edge set within the kernel gate is
+    # collected once and the whole walk runs as a vectorized multi-source
+    # BFS — removing the ~0.5 s/round job floor AND the per-round
+    # broadcast ships. Seeds are collected BOUNDED (limit gate+1); nulls,
+    # oversized seed sets, a blown pair/work budget or an ArrowInvalid
+    # (string offsets past 2 GB) fall through to the distributed walk.
     if not keys:
-        spark = edges.sparkSession
-        arrow = (
-            str(
-                spark.conf.get("spark.sql.execution.arrow.pyspark.enabled", "false")
-            ).lower()
-            == "true"
-        )
-        gate = _gate(
-            _VEC_CLOSURE_MAX_BASE if arrow else _VEC_CLOSURE_MAX_BASE_NO_ARROW
-        )
+        gate = _gate(_VEC_CLOSURE_MAX_BASE)
         etypes = dict(edges.dtypes)
         same_type = (
             etypes["_esrc"] == etypes["_edst"]
@@ -851,99 +586,58 @@ def seeded_closure(
             )
         )
         if same_type and base_n <= gate:
-            sp = seeds.limit(gate + 1).toPandas()
-            if len(sp) <= gate and not sp["n"].isnull().any():
+            sp = seeds.limit(gate + 1).toArrow().column("n")
+            if len(sp) <= gate and sp.null_count == 0:
                 import pyarrow as pa
                 import pyarrow.compute as pc
 
-                # collect via toArrow (r11, the transitive_closure device):
-                # toPandas materializes 2|E| Python string objects before
-                # the factorize; arrow buffers + dictionary_encode keep
-                # the whole prep at C level. Strings are factorized HERE
-                # (identical first-appearance codes) and the BFS runs on
-                # the dense int64 codes; seed values map into the same
+                from d_sparq_spark.localdata import arrow_df
+
+                # strings are factorized HERE and the BFS runs on the
+                # dense int64 codes; seed values map into the same
                 # dictionary with index_in (absent seeds drop — they can
-                # reach nothing, matching the old present-mask).
-                # try/except (ADVICE r11 #1): >2 GB cumulative string bytes
-                # raise ArrowInvalid in combine_chunks/dictionary_encode/
-                # take — a fast-path decline, not a query failure
+                # reach nothing)
                 try:
                     tbl = edges.select("_esrc", "_edst").toArrow()
-                    pair_cap = _gate(
-                        _VEC_CLOSURE_MAX_PAIRS
-                        if arrow
-                        else _VEC_CLOSURE_MAX_PAIRS_NO_ARROW
-                    )
                     if (
                         tbl.column("_esrc").null_count == 0
                         and tbl.column("_edst").null_count == 0
                     ):
                         uniq_pa = None
                         if etypes["_esrc"] == "string":
-                            both = pa.chunked_array(
-                                [
-                                    *tbl.column("_esrc").chunks,
-                                    *tbl.column("_edst").chunks,
-                                ]
-                            ).combine_chunks()
-                            denc = both.dictionary_encode()
-                            uniq_pa = denc.dictionary
-                            codes = denc.indices.to_numpy(
-                                zero_copy_only=False
-                            ).astype("int64")
-                            n_rows = tbl.num_rows
-                            e_src_v = codes[:n_rows]
-                            e_dst_v = codes[n_rows:]
+                            (e_src_v, e_dst_v), uniq_pa = _factorize(
+                                tbl.column("_esrc"), tbl.column("_edst")
+                            )
                             sidx = pc.index_in(
-                                pa.array(sp["n"]).cast(uniq_pa.type),
-                                value_set=uniq_pa,
+                                sp.cast(uniq_pa.type), value_set=uniq_pa
                             )
                             seed_vals = (
                                 sidx.filter(pc.is_valid(sidx))
-                                .to_numpy(zero_copy_only=False)
+                                .to_numpy()
                                 .astype("int64")
                             )
                         else:
-                            e_src_v = tbl.column("_esrc").combine_chunks().to_numpy(
-                                zero_copy_only=False
-                            )
-                            e_dst_v = tbl.column("_edst").combine_chunks().to_numpy(
-                                zero_copy_only=False
-                            )
-                            seed_vals = sp["n"].to_numpy()
+                            e_src_v = tbl.column("_esrc").to_numpy()
+                            e_dst_v = tbl.column("_edst").to_numpy()
+                            seed_vals = sp.to_numpy()
                         out = _vector_seeded(
                             e_src_v,
                             e_dst_v,
                             seed_vals,
-                            pair_cap,
+                            _gate(_VEC_CLOSURE_MAX_PAIRS),
                             _gate(_VEC_CLOSURE_MAX_WORK),
                         )
                         if out is not None:
-                            from pyspark.sql import types as T
-
-                            from d_sparq_spark.localdata import arrow_df
-
-                            dt = edges.schema["_esrc"].dataType
-                            cols = (
-                                {
-                                    "src": uniq_pa.take(pa.array(out[0])),
-                                    "dst": uniq_pa.take(pa.array(out[1])),
-                                }
-                                if uniq_pa is not None
-                                else {"src": out[0], "dst": out[1]}
-                            )
+                            if uniq_pa is not None:
+                                out = [uniq_pa.take(pa.array(v)) for v in out]
+                            dt = edges.schema["_esrc"].dataType.simpleString()
                             return arrow_df(
-                                spark,
-                                cols,
-                                T.StructType(
-                                    [
-                                        T.StructField("src", dt),
-                                        T.StructField("dst", dt),
-                                    ]
-                                ),
+                                edges.sparkSession,
+                                {"src": out[0], "dst": out[1]},
+                                f"src {dt}, dst {dt}",
                             )
                 except pa.ArrowInvalid:
-                    pass  # offset overflow: decline to the distributed walk
+                    pass  # decline to the distributed walk
     if not deduped:
         # driver path declined: the distributed walk wants DISTINCT edges
         # (duplicates multiply every per-round join before the frontier
@@ -1028,7 +722,7 @@ def seeded_closure(
         # scheduler latency locally, while a genuinely big edge set keeps
         # its parallelism. (No session-conf toggles here: flipping AQE
         # around the loop measured as noise and races concurrent queries
-        # on a shared session — review r4.)
+        # on a shared session.)
         want = max(8, (base_n + 99_999) // 100_000)
         if edges.rdd.getNumPartitions() > want:
             edges = edges.coalesce(int(want))

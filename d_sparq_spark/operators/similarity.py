@@ -519,7 +519,6 @@ def _driver_kmeans_exact_int(ids, V, k: int, n_iter: int):
 # collected size gate: n_rows * dim int64 cells (the (n, k, dim) distance
 # buffer is the peak: n * k * dim * 8 bytes per assign)
 _DRIVER_KMEANS_MAX_CELLS = 40_000_000
-_DRIVER_KMEANS_MAX_CELLS_NO_ARROW = 2_000_000
 
 
 def kmeans_exact_int(
@@ -562,23 +561,15 @@ def kmeans_exact_int(
     # Spark, so no driver rounding-mode question) and Lloyd's runs in
     # int64 numpy with identical arithmetic (see _driver_kmeans_exact_int).
     spark = embeddings.sparkSession
-    arrow = (
-        str(
-            spark.conf.get("spark.sql.execution.arrow.pyspark.enabled", "false")
-        ).lower()
-        == "true"
-    )
     from d_sparq_spark.gates import gate as _g
 
-    cap = _g(
-        _DRIVER_KMEANS_MAX_CELLS if arrow else _DRIVER_KMEANS_MAX_CELLS_NO_ARROW
-    )
+    cap = _g(_DRIVER_KMEANS_MAX_CELLS)
     n_pts = embeddings.count()
     dim = _infer_dim(embeddings, vec_col)
     if dim and n_pts * dim * max(k, 1) <= cap:
         import numpy as np
 
-        pdf = pts.toPandas()
+        pdf = pts.toArrow().to_pandas()
         lens = pdf["v"].map(len).to_numpy() if len(pdf) else np.zeros(0)
         eligible = (
             len(pdf) > 0

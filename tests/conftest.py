@@ -4,6 +4,7 @@ import pytest
 
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_ORACLE = os.environ.get("TEST_ORACLE_SF_DIR", "/root/testdata/sf0.001")
+_SLOW_SKIP_REASON = "slow-profile lap: D_SPARQ_FULL_TESTS=1 or -m slow runs it"
 
 
 def pytest_collection_modifyitems(config, items):
@@ -19,12 +20,25 @@ def pytest_collection_modifyitems(config, items):
         return
     if config.getoption("-m"):
         return  # explicit marker expression: the user chose, respect it
-    skip = pytest.mark.skip(
-        reason="slow-profile lap: D_SPARQ_FULL_TESTS=1 or -m slow runs it"
-    )
+    skip = pytest.mark.skip(reason=_SLOW_SKIP_REASON)
     for item in items:
         if "slow" in item.keywords:
             item.add_marker(skip)
+
+
+def pytest_terminal_summary(terminalreporter):
+    """Say how many slow tests the fast profile skipped, so a green run
+    cannot hide that the heavyweight laps did not run."""
+    n = sum(
+        1
+        for rep in terminalreporter.stats.get("skipped", [])
+        if isinstance(rep.longrepr, tuple) and _SLOW_SKIP_REASON in rep.longrepr[2]
+    )
+    if n:
+        terminalreporter.write_line(
+            f"fast profile: skipped {n} slow tests; run them with "
+            "D_SPARQ_FULL_TESTS=1 (everything) or -m slow (just these)"
+        )
 
 
 @pytest.fixture(scope="session")

@@ -47,19 +47,21 @@ def test_scale_zero_forces_distributed_pagerank(spark, monkeypatch):
 
 
 def test_scale_up_routes_into_vec_closure(spark, monkeypatch):
-    """Raising the scale is the other override direction: shrink the
-    _DRIVER_CLOSURE_MAX_BASE lower bound (by scaling it down) so a tiny
-    string edge set that normally takes the python BFS rides the
-    VECTORIZED string path instead — same pairs either way."""
+    """Raising the scale is the other override direction: an edge set just
+    above the closure kernel's gate runs the distributed loop at scale 1
+    and rides the driver kernel (a local relation) at scale 2 — same
+    pairs either way."""
     from d_sparq_spark.operators import paths
 
     edges = spark.createDataFrame(
         [(f"n{i}", f"n{i + 1}") for i in range(60)], "src string, dst string"
     )
+    monkeypatch.setattr(paths, "_VEC_CLOSURE_MAX_BASE", 50)
     monkeypatch.delenv("D_SPARQ_DRIVER_GATE_SCALE", raising=False)
-    base = sorted(map(tuple, paths.transitive_closure(edges).collect()))
-    # scale 0.001: lower bound 10_000 -> 10, so 60 edges > 10 engages the
-    # string-vec branch (its own upper gate scales to 4_000 >= 60)
-    monkeypatch.setenv("D_SPARQ_DRIVER_GATE_SCALE", "0.001")
-    vec = sorted(map(tuple, paths.transitive_closure(edges).collect()))
-    assert base == vec
+    dist = paths.transitive_closure(edges)
+    assert "LocalTableScan" not in _plan(dist)
+    # scale 2: the gate 50 -> 100 >= 60 edges engages the driver kernel
+    monkeypatch.setenv("D_SPARQ_DRIVER_GATE_SCALE", "2")
+    vec = paths.transitive_closure(edges)
+    assert "LocalTableScan" in _plan(vec)
+    assert sorted(map(tuple, dist.collect())) == sorted(map(tuple, vec.collect()))

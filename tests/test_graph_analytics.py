@@ -174,7 +174,6 @@ def test_sssp_driver_and_distributed_paths_agree(spark, monkeypatch):
     driver_fixed = run(n_rounds=5)
     driver_conv = run(n_rounds=64, until_converged=True)
     monkeypatch.setattr(G, "_DRIVER_SSSP_MAX_EDGES", 0)
-    monkeypatch.setattr(G, "_DRIVER_SSSP_MAX_EDGES_NO_ARROW", 0)
     assert run(n_rounds=5) == driver_fixed
     assert run(n_rounds=64, until_converged=True) == driver_conv
 
@@ -205,7 +204,6 @@ def test_cc_driver_and_distributed_paths_agree(spark, monkeypatch):
     ]:
         fast = run(nodes, edges, ns, es)
         monkeypatch.setattr(G, "_DRIVER_GRAPH_MAX_EDGES", -1)
-        monkeypatch.setattr(G, "_DRIVER_GRAPH_MAX_EDGES_NO_ARROW", -1)
         slow = run(nodes, edges, ns, es)
         monkeypatch.undo()
         assert fast == slow
@@ -235,7 +233,6 @@ def test_pagerank_driver_and_distributed_paths_agree(spark, monkeypatch):
     ]:
         fast = run(rows, es)
         monkeypatch.setattr(G, "_DRIVER_GRAPH_MAX_EDGES", -1)
-        monkeypatch.setattr(G, "_DRIVER_GRAPH_MAX_EDGES_NO_ARROW", -1)
         slow = run(rows, es)
         monkeypatch.undo()
         assert fast == slow

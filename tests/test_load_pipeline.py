@@ -94,14 +94,13 @@ def test_assign_ids_no_single_partition_stage(spark, monkeypatch):
     SinglePartition window (the classic row_number-over-everything scale
     killer). assign_ids range-partitions, ranks per partition, and adds
     driver-computed offsets — the plan's only window partitions by _pid.
-    r11: the gated driver rank would absorb a stream this small, so the
+    The gated driver rank would absorb a stream this small, so the
     DISTRIBUTED scheme (whose plan this test pins — the 100 TB path) is
-    forced by disabling the fast path."""
-    from d_sparq_spark.operators import dictionary as D
+    forced by scaling the driver gates to zero."""
     from d_sparq_spark.operators.dictionary import assign_ids
     from d_sparq_spark.sources.derived_rdf import derive_triples
 
-    monkeypatch.setattr(D, "_DRIVER_RANK_ENABLED", False)
+    monkeypatch.setenv("D_SPARQ_DRIVER_GATE_SCALE", "0")
     t = derive_triples(spark, "/root/testdata/sf0.001")
     ids = assign_ids(t.select(F.col("s").alias("term")))
     plan = ids._jdf.queryExecution().executedPlan().toString()
@@ -114,7 +113,7 @@ def test_assign_ids_no_single_partition_stage(spark, monkeypatch):
 
 
 def test_assign_ids_driver_and_distributed_paths_agree(spark, monkeypatch):
-    """r11: the gated driver rank must be BIT-IDENTICAL to the
+    """The gated driver rank must be BIT-IDENTICAL to the
     distributed range-partitioned rank — including NULL terms (a quad
     default graph ranks FIRST, the window's NULLS FIRST), duplicates,
     and non-ASCII terms (Python code-point order == Spark's unsigned
@@ -128,13 +127,12 @@ def test_assign_ids_driver_and_distributed_paths_agree(spark, monkeypatch):
     terms = spark.createDataFrame(rows, "term string")
 
     fast = {(r["id"], r["term"]) for r in assign_ids(terms).collect()}
-    monkeypatch.setattr(D, "_DRIVER_RANK_ENABLED", False)
-    slow = {(r["id"], r["term"]) for r in assign_ids(terms).collect()}
+    # an explicit partition count requests the distributed scheme
+    slow = {(r["id"], r["term"])
+            for r in assign_ids(terms, num_partitions=3).collect()}
     assert fast == slow
     # and the declined-gate escape hatch still returns the same ids
-    monkeypatch.setattr(D, "_DRIVER_RANK_ENABLED", True)
     monkeypatch.setattr(D, "_DRIVER_RANK_MAX_ROWS", 2)
-    monkeypatch.setattr(D, "_DRIVER_RANK_MAX_ROWS_NO_ARROW", 2)
     declined = {(r["id"], r["term"]) for r in assign_ids(terms).collect()}
     assert declined == slow
 

@@ -340,16 +340,11 @@ _HINTED = [
 
 @pytest.mark.parametrize("name,min_bcast", [(n, m) for n, m in _HINTED])
 def test_hinted_joins_survive_broadcast_blackout(spark, name, min_bcast, monkeypatch):
-    # force the DISTRIBUTED plans (r11): below their size gates the driver
+    # force the DISTRIBUTED plans: below their size gates the driver
     # fast paths (kmeans/ivf centroids, dictionary rank) return local
     # relations with no joins at all — this lap guards the hinted
-    # broadcasts of the at-scale plans, so pin those paths off.
-    import d_sparq_spark.operators.dictionary as D
-    import d_sparq_spark.operators.similarity as S
-
-    monkeypatch.setattr(S, "_DRIVER_KMEANS_MAX_CELLS", -1)
-    monkeypatch.setattr(S, "_DRIVER_KMEANS_MAX_CELLS_NO_ARROW", -1)
-    monkeypatch.setattr(D, "_DRIVER_RANK_ENABLED", False)
+    # broadcasts of the at-scale plans, so scale every driver gate to 0.
+    monkeypatch.setenv("D_SPARQ_DRIVER_GATE_SCALE", "0")
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:

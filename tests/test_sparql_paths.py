@@ -522,17 +522,16 @@ def test_hub_graph_growth_cap_engages_and_stays_correct(spark, monkeypatch):
     """r5 (VERDICT r4 #4): on the hub graph the FIRST stride composition
     exceeds 8x|E| (every in-spoke x out-spoke pair materializes at
     distance 2) — the guard must discard it and the walk must still
-    return the exact seeded closure. r11: the gated driver BFS would
+    return the exact seeded closure. The gated driver BFS would
     otherwise absorb a graph this small, so the distributed walk (whose
-    guard this test pins) is forced by zeroing the vec gates."""
+    guard this test pins) is forced by zeroing the gate scale."""
     from pyspark.sql import functions as F
 
     from d_sparq_spark.operators import paths
     from d_sparq_spark.operators.paths import seeded_closure
     from d_sparq_spark.sources.synth_graph import BLOCKH, S_MAX, synth_hub_edges_int
 
-    monkeypatch.setattr(paths, "_VEC_CLOSURE_MAX_BASE", -1)
-    monkeypatch.setattr(paths, "_VEC_CLOSURE_MAX_BASE_NO_ARROW", -1)
+    monkeypatch.setenv("D_SPARQ_DRIVER_GATE_SCALE", "0")
     e = synth_hub_edges_int(spark, 16).select(
         F.col("src").cast("string").alias("src"),
         F.col("dst").cast("string").alias("dst"),
@@ -555,11 +554,37 @@ def test_hub_graph_growth_cap_engages_and_stays_correct(spark, monkeypatch):
     assert len(degs) >= 3 and max(degs) == S_MAX
 
 
+def _closure(paths, e, **kw):
+    return sorted(map(tuple, paths.transitive_closure(e, **kw).collect()), key=str)
+
+
+def _dist_closure(paths, e, monkeypatch, **kw):
+    """The distributed loop's answer: every driver gate scaled to zero."""
+    with monkeypatch.context() as m:
+        m.setenv("D_SPARQ_DRIVER_GATE_SCALE", "0")
+        return _closure(paths, e, **kw)
+
+
+def _kernel_spy(paths, monkeypatch):
+    """Record, per transitive_closure call, whether the driver kernel ran
+    and produced the answer (True) or blew a budget (False)."""
+    calls = []
+    real = paths._vector_closure
+
+    def spy(*a, **kw):
+        out = real(*a, **kw)
+        calls.append(out is not None)
+        return out
+
+    monkeypatch.setattr(paths, "_vector_closure", spy)
+    return calls
+
+
 def test_driver_closure_fast_path_matches_distributed(spark, monkeypatch):
-    """r8 (VERDICT r7 #1): a base at or below _DRIVER_CLOSURE_MAX_BASE
-    pairs closes on the driver (zero per-round Spark jobs). Same answer
-    as the distributed loop on a random cyclic graph, with and without a
-    group column."""
+    """A base within the kernel gate closes on the driver (zero per-round
+    Spark jobs) with the same answer as the distributed loop, on a random
+    cyclic graph, with and without a group column, string and integer
+    ids."""
     import random
 
     from d_sparq_spark.operators import paths
@@ -567,52 +592,56 @@ def test_driver_closure_fast_path_matches_distributed(spark, monkeypatch):
     random.seed(81)
     rows = list(
         {
-            (f"g{random.randrange(3)}", f"v{random.randrange(25)}",
-             f"v{random.randrange(25)}")
+            (random.randrange(3), random.randrange(25), random.randrange(25))
             for _ in range(140)
         }
     )
-    e = spark.createDataFrame(rows, "g string, src string, dst string")
-    fast = sorted(map(tuple, paths.transitive_closure(e, group_col="g").collect()))
-    monkeypatch.setattr(paths, "_DRIVER_CLOSURE_MAX_BASE", 0)
-    slow = sorted(map(tuple, paths.transitive_closure(e, group_col="g").collect()))
-    assert fast == slow and len(fast) > len(rows)
-    # ungrouped too
-    e2 = spark.createDataFrame(
-        [(s, d) for _, s, d in rows], "src string, dst string"
-    ).distinct()
-    monkeypatch.undo()
-    fast2 = sorted(map(tuple, paths.transitive_closure(e2).collect()))
-    monkeypatch.setattr(paths, "_DRIVER_CLOSURE_MAX_BASE", 0)
-    slow2 = sorted(map(tuple, paths.transitive_closure(e2).collect()))
-    assert fast2 == slow2
+    grouped_long = spark.createDataFrame(rows, "g long, src long, dst long")
+    grouped_string = spark.createDataFrame(
+        [(f"g{g}", f"v{s}", f"v{d}") for g, s, d in rows],
+        "g string, src string, dst string",
+    )
+    ungrouped_string = grouped_string.select("src", "dst").distinct()
+    calls = _kernel_spy(paths, monkeypatch)
+    for e, kw in (
+        (grouped_string, {"group_col": "g"}),
+        (ungrouped_string, {}),
+        (grouped_long, {"group_col": "g"}),
+    ):
+        calls.clear()
+        fast = _closure(paths, e, **kw)
+        assert calls == [True]
+        assert fast == _dist_closure(paths, e, monkeypatch, **kw)
+        assert len(fast) > e.count()
 
 
 def test_driver_closure_escape_hatches(spark, monkeypatch):
-    """The driver BFS must abandon itself to the distributed loop — same
-    answer — when (a) the output outgrows the pair cap (tiny edge set,
-    quadratic closure) or (b) the traversal outspends the work budget."""
+    """The driver kernel must abandon itself to the distributed loop —
+    same answer — when (a) the output outgrows the pair budget (tiny edge
+    set, quadratic closure) or (b) the traversal outspends the work
+    budget."""
     from d_sparq_spark.operators import paths
 
     e = spark.createDataFrame(
         [(i, i + 1) for i in range(40)], "src long, dst long"
     )
-    want = sorted(map(tuple, paths.transitive_closure(e).collect()))
-    assert len(want) == 40 * 41 // 2
-    monkeypatch.setattr(paths, "_DRIVER_CLOSURE_MAX_PAIRS", 10)
-    assert sorted(map(tuple, paths.transitive_closure(e).collect())) == want
-    monkeypatch.undo()
-    monkeypatch.setattr(paths, "_DRIVER_CLOSURE_MAX_WORK", 3)
-    assert sorted(map(tuple, paths.transitive_closure(e).collect())) == want
+    calls = _kernel_spy(paths, monkeypatch)
+    want = _closure(paths, e)
+    assert calls == [True] and len(want) == 40 * 41 // 2
+    for budget in ("_VEC_CLOSURE_MAX_PAIRS", "_VEC_CLOSURE_MAX_WORK"):
+        calls.clear()
+        with monkeypatch.context() as m:
+            m.setattr(paths, budget, 10)
+            assert _closure(paths, e) == want
+        assert calls == [False], budget
 
 
 def test_vector_closure_matches_distributed(spark, monkeypatch):
-    """r11: the gated VECTORIZED driver closure (numpy semi-naive
-    doubling over an ungrouped integer edge set) must produce the exact
-    pair set of the distributed loop — on a random cyclic graph (cycles,
-    multiple shortest paths) and on a long chain (many doubling rounds) —
-    and must abandon to the distributed loop, same answer, when either
-    budget blows."""
+    """The driver kernel (numpy semi-naive doubling) must produce the
+    exact pair set of the distributed loop on ungrouped integer edges — a
+    random cyclic graph (cycles, multiple shortest paths) and a long
+    chain (many doubling rounds) — and decline to the distributed loop,
+    same answer, when either budget blows."""
     import random
 
     from d_sparq_spark.operators import paths
@@ -622,48 +651,95 @@ def test_vector_closure_matches_distributed(spark, monkeypatch):
                  for _ in range(400)})
     e = spark.createDataFrame(rows, "src long, dst long")
     chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(70)], "src long, dst long"
+        [(i, i + 1) for i in range(70)], "src int, dst int"
     )
-    # disable the row-driver fast path so the integer gate decides
-    monkeypatch.setattr(paths, "_DRIVER_CLOSURE_MAX_BASE", 0)
-    vec = sorted(map(tuple, paths.transitive_closure(e).collect()))
-    vec_chain = sorted(map(tuple, paths.transitive_closure(chain).collect()))
-    monkeypatch.setattr(paths, "_VEC_CLOSURE_MAX_BASE", 0)
-    monkeypatch.setattr(paths, "_VEC_CLOSURE_MAX_BASE_NO_ARROW", 0)
-    assert sorted(map(tuple, paths.transitive_closure(e).collect())) == vec
-    assert (
-        sorted(map(tuple, paths.transitive_closure(chain).collect()))
-        == vec_chain
-    )
+    calls = _kernel_spy(paths, monkeypatch)
+    vec = _closure(paths, e)
+    vec_chain = _closure(paths, chain)
+    assert calls == [True, True]
+    assert vec == _dist_closure(paths, e, monkeypatch)
+    assert vec_chain == _dist_closure(paths, chain, monkeypatch)
     assert len(vec_chain) == 70 * 71 // 2
-    # budget escape hatches: blown pair cap / work cap fall through to
-    # the distributed loop with the identical answer
-    monkeypatch.undo()
-    monkeypatch.setattr(paths, "_DRIVER_CLOSURE_MAX_BASE", 0)
-    monkeypatch.setattr(paths, "_VEC_CLOSURE_MAX_PAIRS", 10)
-    monkeypatch.setattr(paths, "_VEC_CLOSURE_MAX_PAIRS_NO_ARROW", 10)
-    assert sorted(map(tuple, paths.transitive_closure(e).collect())) == vec
-    monkeypatch.undo()
-    monkeypatch.setattr(paths, "_DRIVER_CLOSURE_MAX_BASE", 0)
-    monkeypatch.setattr(paths, "_VEC_CLOSURE_MAX_WORK", 3)
-    assert sorted(map(tuple, paths.transitive_closure(e).collect())) == vec
+    assert paths.transitive_closure(chain).dtypes == chain.dtypes
+    calls.clear()
+    with monkeypatch.context() as m:
+        m.setattr(paths, "_VEC_CLOSURE_MAX_PAIRS", 10)
+        assert _closure(paths, e) == vec
+    with monkeypatch.context() as m:
+        m.setattr(paths, "_VEC_CLOSURE_MAX_WORK", 3)
+        assert _closure(paths, e) == vec
+    assert calls == [False, False]
+
+
+@pytest.mark.parametrize(
+    "schema,group_col,rows",
+    [
+        (
+            "g string, src string, dst string",
+            "g",
+            [(None, "a", "b"), (None, "b", "c"), ("g1", "a", "b"),
+             ("g1", "b", "c"), ("g1", None, "a"), ("g2", "c", "a")],
+        ),
+        (
+            "src long, dst long",
+            None,
+            [(1, 2), (2, None), (None, 3), (3, 4)],
+        ),
+    ],
+    ids=["grouped_string", "ungrouped_long"],
+)
+def test_closure_nulls_do_not_change_the_answer(spark, monkeypatch, schema, group_col, rows):
+    """A NULL group or endpoint must give the same closure on every route.
+    The distributed loop's equi-joins never match NULL, so nothing
+    composes through a NULL node or inside the NULL group; the driver
+    kernel declines on any NULL instead of composing through one (or,
+    for integer ids, emitting NULL as -2**63)."""
+    from d_sparq_spark.operators import paths
+
+    e = spark.createDataFrame(rows, schema)
+    kw = {"group_col": group_col} if group_col else {}
+    got = _closure(paths, e, **kw)
+    assert got == _dist_closure(paths, e, monkeypatch, **kw)
+    assert all(v != -(2**63) for row in got for v in row)
+    if group_col:
+        assert (None, "a", "c") not in got and ("g1", "a", "c") in got
+
+
+def test_closure_kernel_arrow_invalid_declines(spark, monkeypatch):
+    """An ArrowInvalid inside the driver kernel (string offsets past 2 GB
+    in combine_chunks / dictionary_encode / take) is a decline, not a
+    query failure: the distributed loop answers."""
+    import pyarrow as pa
+
+    from d_sparq_spark.operators import paths
+
+    rows = [(f"g{i % 2}", f"n{i}", f"n{i + 1}") for i in range(30)]
+    e = spark.createDataFrame(rows, "g string, src string, dst string")
+    want = _dist_closure(paths, e, monkeypatch, group_col="g")
+
+    def overflow(*a, **kw):
+        raise pa.ArrowInvalid("offset overflow while concatenating arrays")
+
+    monkeypatch.setattr(paths, "_vector_closure", overflow)
+    assert _closure(paths, e, group_col="g") == want
 
 
 def test_small_string_closure_skips_hash_encoding(spark, monkeypatch):
     """Below _ENCODE_MIN_EDGES the string path must NOT pay the encode
     prep (terms distinct + injectivity aggregate + decode joins): with the
-    driver gate forced off, the distributed plan for a small string graph
-    must contain no xxhash64 — and the answer must match the encoded
-    loop's (gate forced on)."""
+    driver gate scaled to zero, the distributed plan for a small string
+    graph must contain no xxhash64 — and the answer must match the
+    encoded loop's (encode gate forced on)."""
     from d_sparq_spark.operators import paths
 
     rows = [(f"n{i}", f"n{i+1}") for i in range(30)]
     e = spark.createDataFrame(rows, "src string, dst string")
-    monkeypatch.setattr(paths, "_DRIVER_CLOSURE_MAX_BASE", 0)
+    monkeypatch.setenv("D_SPARQ_DRIVER_GATE_SCALE", "0")
     lex = paths.transitive_closure(e)
     assert "xxhash64" not in lex._jdf.queryExecution().executedPlan().toString()
     monkeypatch.setattr(paths, "_ENCODE_MIN_EDGES", 1)
     enc = paths.transitive_closure(e)
+    assert "xxhash64" in enc._jdf.queryExecution().executedPlan().toString()
     assert sorted(map(tuple, lex.collect())) == sorted(map(tuple, enc.collect()))
 
 
@@ -696,11 +772,10 @@ def test_closed_form_closure_oracles_match_recursive(spark):
 
 
 def test_string_vec_closure_matches_encode_and_lexical(spark, monkeypatch):
-    """r11: the gated string-vec driver closure (collect strings,
-    factorize, numpy doubling, decode on the driver) must produce the
-    exact pair set of BOTH the hash-encode route and the lexical loop,
-    and must fall through to the encode route — same answer — when a
-    budget blows."""
+    """The driver kernel on string ids (collect, dictionary_encode, numpy
+    doubling, dictionary decode) must produce the exact pair set of BOTH
+    distributed string routes — hash-encoded and lexical — and must fall
+    through to the encode route, same answer, when a budget blows."""
     import random
 
     from d_sparq_spark.operators import paths
@@ -709,51 +784,47 @@ def test_string_vec_closure_matches_encode_and_lexical(spark, monkeypatch):
     rows = list({(f"n{random.randrange(120):03d}", f"n{random.randrange(120):03d}")
                  for _ in range(300)})
     e = spark.createDataFrame(rows, "src string, dst string")
-    # the branch only engages at encode scale; force it for the small graph
+    vec = _closure(paths, e)
+    lex = _dist_closure(paths, e, monkeypatch)
+    # force the encode route for the small graph
     monkeypatch.setattr(paths, "_ENCODE_MIN_EDGES", 1)
-    monkeypatch.setattr(paths, "_DRIVER_CLOSURE_MAX_BASE", 0)
-    vec = sorted(map(tuple, paths.transitive_closure(e).collect()))
-    monkeypatch.setattr(paths, "_STRING_VEC_ENABLED", False)
-    enc = sorted(map(tuple, paths.transitive_closure(e).collect()))
-    monkeypatch.setattr(paths, "_ENCODE_MIN_EDGES", 10**9)
-    lex = sorted(map(tuple, paths.transitive_closure(e).collect()))
+    enc = _dist_closure(paths, e, monkeypatch)
     assert vec == enc == lex and len(vec) > len(rows)
-    # budget escape hatch: a blown pair cap falls through to the encode
-    # route with the identical answer
-    monkeypatch.setattr(paths, "_STRING_VEC_ENABLED", True)
-    monkeypatch.setattr(paths, "_ENCODE_MIN_EDGES", 1)
+    # budget escape hatch: a blown pair budget falls through to the
+    # encode route with the identical answer
     monkeypatch.setattr(paths, "_VEC_CLOSURE_MAX_PAIRS", 10)
-    monkeypatch.setattr(paths, "_VEC_CLOSURE_MAX_PAIRS_NO_ARROW", 10)
-    assert sorted(map(tuple, paths.transitive_closure(e).collect())) == vec
+    out = paths.transitive_closure(e)
+    assert "xxhash64" in out._jdf.queryExecution().executedPlan().toString()
+    assert sorted(map(tuple, out.collect()), key=str) == vec
 
 
 def test_seeded_vector_driver_matches_distributed(spark, monkeypatch):
-    """r11: the gated driver multi-source BFS (paths._vector_seeded) and
-    the distributed seeded walk must produce the identical pair set —
-    string and long ids, cyclic graph, seeds absent from the graph — and
-    a blown pair budget must fall through to the distributed walk."""
+    """The gated driver multi-source BFS (paths._vector_seeded) and the
+    distributed seeded walk must produce the identical pair set — string
+    and long ids, cyclic graph, seeds absent from the graph — and a blown
+    pair budget must fall through to the distributed walk."""
     import random
 
     from d_sparq_spark.operators import paths
 
     random.seed(71)
-    rows = list({(f"n{random.randrange(90):02d}", f"n{random.randrange(90):02d}")
-                 for _ in range(260)})
-    e = spark.createDataFrame(rows, "src string, dst string")
-    s = spark.createDataFrame(
-        [(x,) for x in sorted({r[0] for r in rows[:6]} | {"zz-absent"})],
-        "n string",
-    )
+    ids = list({(random.randrange(90), random.randrange(90)) for _ in range(260)})
+    seeds = sorted({u for u, _ in ids[:6]})
+    for fmt, typ in ((lambda i: f"n{i:02d}", "string"), (lambda i: i, "long")):
+        e = spark.createDataFrame(
+            [(fmt(u), fmt(v)) for u, v in ids], f"src {typ}, dst {typ}"
+        )
+        absent = fmt(10**6)
+        s = spark.createDataFrame([(fmt(x),) for x in seeds] + [(absent,)], f"n {typ}")
 
-    def run():
-        return sorted(map(tuple, paths.seeded_closure(e, s).collect()))
+        def run():
+            return sorted(map(tuple, paths.seeded_closure(e, s).collect()))
 
-    fast = run()
-    monkeypatch.setattr(paths, "_VEC_CLOSURE_MAX_BASE", -1)
-    monkeypatch.setattr(paths, "_VEC_CLOSURE_MAX_BASE_NO_ARROW", -1)
-    assert run() == fast
-    monkeypatch.undo()
-    monkeypatch.setattr(paths, "_VEC_CLOSURE_MAX_PAIRS", 5)
-    monkeypatch.setattr(paths, "_VEC_CLOSURE_MAX_PAIRS_NO_ARROW", 5)
-    assert run() == fast
-    assert len(fast) > 0
+        fast = run()
+        with monkeypatch.context() as m:
+            m.setenv("D_SPARQ_DRIVER_GATE_SCALE", "0")
+            assert run() == fast
+        with monkeypatch.context() as m:
+            m.setattr(paths, "_VEC_CLOSURE_MAX_PAIRS", 5)
+            assert run() == fast
+        assert len(fast) > 0

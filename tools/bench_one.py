@@ -6,9 +6,10 @@ Usage:
         [--explain-dir plans/r11 --explain-suffix before]
 
 Same methodology as bench.py (noop sink, warm session, min-of-N), plus:
-- spark.sparkContext.setJobDescription per query (guide §1.5),
+- one Spark job group per run; the job count comes from
+  statusTracker().getJobIdsForGroup and belongs to the best (reported) run,
 - optional .explain("formatted") dump per query (guide §7.2).
-Timing output is one JSON line: {"queries": {...}, "runs": N}.
+Timing output is one JSON line: {"queries": {...}, "jobs": {...}, "runs": N}.
 """
 
 from __future__ import annotations
@@ -59,9 +60,17 @@ def main() -> None:
     planning_stats_cached(spark, sf_dir)
     encoded_planning_stats_cached(spark, sf_dir)
 
-    def njobs() -> int:
-        v = spark._jsc.sc().dagScheduler().nextJobId()
-        return v if isinstance(v, int) else v.get()
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def group_jobs(group: str) -> int:
+        """Jobs run under ``group`` (public statusTracker API). The status
+        store is fed asynchronously, so wait for active jobs to drain."""
+        deadline = time.monotonic() + 10.0
+        while tracker.getActiveJobsIds() and time.monotonic() < deadline:
+            time.sleep(0.05)
+        time.sleep(0.2)
+        return len(tracker.getJobIdsForGroup(group))
 
     timings: dict[str, float] = {}
     jobs: dict[str, int] = {}
@@ -84,16 +93,20 @@ def main() -> None:
                 f.write(buf.getvalue())
         if args.no_time:
             continue
-        best = float("inf")
-        for _ in range(args.runs):
-            spark.sparkContext.setJobDescription(f"bench_one: {name}")
-            j0 = njobs()
+        best, best_group = float("inf"), None
+        for i in range(args.runs):
+            group = f"bench_one-{os.getpid()}-{name}-{i}"
+            sc.setJobGroup(group, f"bench_one: {name}")
             t0 = time.perf_counter()
             all_q[name].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            best = min(best, time.perf_counter() - t0)
-            jobs[name] = njobs() - j0  # jobs of one full invocation
-            spark.sparkContext.setJobDescription(None)
+            dt = time.perf_counter() - t0
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setJobDescription(None)
+            if dt < best:
+                best, best_group = dt, group
         timings[name] = round(best, 4)
+        # jobs of one full invocation: the same run as the reported time
+        jobs[name] = group_jobs(best_group)
 
     print(json.dumps({"queries": timings, "jobs": jobs, "runs": args.runs}))
     spark.stop()
