@@ -393,6 +393,7 @@ class EncodedSparqlEngine:
         # engine-lifetime pin cache shared by every per-query translator
         # (a per-translator list would never reach its eviction cap)
         self._qpins: list = []
+        self._empty_store: DataFrame | None = None  # see _empty_lex
         self.catalog = catalog
         self.services = services or {}
         # a precomputed stats dict skips the per-engine aggregation (r8;
@@ -764,7 +765,7 @@ class EncodedSparqlEngine:
             decoded = self._decode(
                 bound, [c for c in bound.columns if c not in tr.bind_cols]
             )
-            lex = _empty_lex(bound.sparkSession)
+            lex = self._empty_lex()
             for w in reversed(wrappers):  # innermost (OrderBy) first
                 decoded = _eval_with_precomputed(
                     lex, _shallow_with_child(w, _Precomputed(decoded))
@@ -792,7 +793,7 @@ class EncodedSparqlEngine:
         structural = self._rewrite(structural, ids)
         tr = self._translator()
         bound = tr.eval(structural)
-        lex = _empty_lex(bound.sparkSession)
+        lex = self._empty_lex()
 
         # Decode as LATE as possible: wrappers that are ID-safe run over the
         # encoded longs first, so the decode join touches the smallest
@@ -878,6 +879,20 @@ class EncodedSparqlEngine:
             ),
         )
 
+    def _empty_lex(self) -> Translator:
+        """A FRESH lexical Translator over an empty store — used to
+        re-apply peeled value-level wrappers and CONSTRUCT templates over
+        already-decoded bindings (the store relation is never touched).
+        The empty DataFrame is built once per engine (createDataFrame is
+        ~35 Py4J calls) and is immutable, so concurrent queries share it;
+        the Translator is not shared, because _eval_with_precomputed
+        patches its eval for the duration of one call."""
+        if self._empty_store is None:
+            self._empty_store = self.triples.sparkSession.createDataFrame(
+                [], "s string, p string, o string"
+            )
+        return Translator(self._empty_store)
+
     def _dict_value_order_safe(self) -> bool:
         """True when NO dictionary term is a numeric typed literal —
         then value order == lexical order == id rank order, and the
@@ -931,13 +946,6 @@ class EncodedSparqlEngine:
         return decode_columns(
             df, self.dict, id_cols, broadcast_dict=self._dict_fits_broadcast()
         )
-
-
-def _empty_lex(spark) -> Translator:
-    """A lexical Translator over an empty store — used to re-apply peeled
-    value-level wrappers and CONSTRUCT templates over already-decoded
-    bindings (the store relation is never touched)."""
-    return Translator(spark.createDataFrame([], "s string, p string, o string"))
 
 
 class _Precomputed:

@@ -975,7 +975,7 @@ def open_store(
         if reasoning
         else store_triples(spark, store_path)
     )
-    dictionary = spark.read.parquet(os.path.join(store_path, "dict"))
+    dictionary = _read_dict(spark, store_path)
     catalog = None
     from d_sparq_spark.plans.catalog import StoreCatalog
 
@@ -1014,6 +1014,15 @@ def open_store(
         for r in _read_stats_rows(spark, store_path)
     }
     return engine
+
+
+def _read_dict(spark: SparkSession, store_path: str) -> DataFrame:
+    """The store's dictionary with its declared schema (the columns
+    _write_dict_bucketed writes), so reading it runs no schema-inference
+    job."""
+    return spark.read.schema("id long, term string, kind string").parquet(
+        os.path.join(store_path, "dict")
+    )
 
 
 def store_triples(spark: SparkSession, store_path: str) -> DataFrame:
@@ -1127,7 +1136,7 @@ def _lookup_terms(spark: SparkSession, store_path: str, terms: list) -> dict:
     """term -> id for a METADATA-SCALE term list (ontology vocabulary):
     broadcast semi-join against the dictionary, collect only the hits.
     Terms absent from the dictionary are absent from the result."""
-    full = spark.read.parquet(os.path.join(store_path, "dict"))
+    full = _read_dict(spark, store_path)
     tdf = local_df(spark, [(t,) for t in sorted(set(terms))], "term string")
     return {
         r["term"]: r["id"]
@@ -1213,8 +1222,8 @@ def _ontology_ids(
 
 def entailed_triples(spark: SparkSession, store_path: str) -> DataFrame:
     """The derived-only layer (empty, schema-stable, when the ontology
-    derives nothing — an empty partitioned write leaves no readable
-    footer, so absence of data is normalized here)."""
+    derives nothing: read_vp's declared schema reads a partition-less
+    layer as empty, and a layer never written is normalized here)."""
     from pyspark.errors import AnalysisException
 
     from d_sparq_spark.sources.triple_store import read_vp
@@ -1223,8 +1232,7 @@ def entailed_triples(spark: SparkSession, store_path: str) -> DataFrame:
         return read_vp(spark, os.path.join(store_path, "entailed")).select("s", "p", "o")
     except AnalysisException as e:
         msg = str(e)
-        if ("PATH_NOT_FOUND" in msg or "Path does not exist" in msg
-                or "UNABLE_TO_INFER_SCHEMA" in msg or "Unable to infer schema" in msg):
+        if "PATH_NOT_FOUND" in msg or "Path does not exist" in msg:
             return spark.createDataFrame([], "s long, p long, o long")
         raise
 
@@ -1254,7 +1262,7 @@ def _canonicalize_by_term(
     each component's representative as the member whose term is minimal
     (min_by over a dict join — O(map) rows, id-keyed), then keep only
     non-identity rows. Deterministic: terms are a bijection."""
-    d = spark.read.parquet(os.path.join(store_path, "dict")).select(
+    d = _read_dict(spark, store_path).select(
         F.col("id").alias("node"), "term"
     )
     reps = (

@@ -272,19 +272,9 @@ def decode_triples(
     LEFT joins (review r4): an inner join against a stale or partial
     dictionary silently DROPPED every triple with an unmapped id — data
     loss with no error. Unmapped ids now surface as NULL terms, the same
-    contract as decode_columns."""
-    d = dictionary.select("id", "term")
-    if broadcast_dict:
-        d = F.broadcast(d)
+    contract as decode_columns, which does the decoding."""
     cols = _positions(enc)
-    dec = enc
-    for pos in cols:
-        dec = (
-            dec.join(d, dec[pos] == d.id, "left")
-            .drop(pos, "id")
-            .withColumnRenamed("term", pos)
-        )
-    return dec.select(*cols)
+    return decode_columns(enc, dictionary, cols, broadcast_dict).select(*cols)
 
 
 def numeric_typed_literal(col):
@@ -317,11 +307,14 @@ def decode_columns(
     shadow decode (review r4: the engine had two drifted copies; the
     broadcast gate had to be patched in both). out_names maps a column
     to a DIFFERENT output name, in which case the encoded source column
-    is KEPT alongside the decoded one (the shadow-column contract)."""
+    is KEPT alongside the decoded one (the shadow-column contract).
+
+    One join per column, then ONE final projection: every DataFrame
+    operation re-analyzes the growing plan over Py4J, so the output is
+    built in a single select instead of a drop/rename chain per column."""
+    names = out_names or {}
     out = df
-    added: list[str] = []
     for c in columns:
-        dst = (out_names or {}).get(c, c)
         # per-column prefixed dict columns: a binding named 'term' or 'id'
         # must not collide with the dictionary's own column names
         d = dictionary.select(
@@ -329,10 +322,9 @@ def decode_columns(
         )
         if broadcast_dict:
             d = F.broadcast(d)
-        out = out.join(d, out[c] == F.col(f"__did_{c}"), "left").drop(f"__did_{c}")
-        if dst == c:
-            out = out.drop(c)
-        else:
-            added.append(dst)
-        out = out.withColumnRenamed(f"__term_{c}", dst)
-    return out.select(*df.columns, *added)
+        out = out.join(d, F.col(c) == F.col(f"__did_{c}"), "left")
+    in_place = {c for c in columns if names.get(c, c) == c}
+    return out.select(
+        *(F.col(f"__term_{c}").alias(c) if c in in_place else F.col(c) for c in df.columns),
+        *(F.col(f"__term_{c}").alias(names[c]) for c in columns if c not in in_place),
+    )

@@ -623,10 +623,11 @@ def sssp_bellman_ford(
         spark = edges_w.sparkSession
         proj = edges_w.select("src", "dst", "w")
         n_edges = proj.count()
-        if n_edges <= _gate(_DRIVER_SSSP_MAX_EDGES):
-            out = _driver_sssp(
-                proj.toArrow().to_pandas(), source, n_rounds, until_converged
-            )
+        tbl = proj.toArrow() if n_edges <= _gate(_DRIVER_SSSP_MAX_EDGES) else None
+        # a NULL id or weight declines to the distributed loop (its joins
+        # never match NULL); the kernel's int64 view would read it as -2^63
+        if tbl is not None and not any(c.null_count for c in tbl.columns):
+            out = _driver_sssp(tbl.to_pandas(), source, n_rounds, until_converged)
             from pyspark.sql import types as T
 
             schema = T.StructType(

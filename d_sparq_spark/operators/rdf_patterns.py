@@ -294,16 +294,23 @@ def property_table(triples: DataFrame, predicates: list) -> DataFrame:
 
 
 def star_over_property_table(
-    pt: DataFrame, bindings: dict, subject_var: str = "s"
+    pt: DataFrame, bindings: dict, subject_var: str = "s", subject_const=None
 ) -> DataFrame:
     """Answer a subject star from a property table: `bindings` maps
-    predicate column -> '?var' (project) or constant (filter)."""
-    out = pt
-    cols = [F.col("s").alias(subject_var)]
+    predicate column -> '?var' (project) or constant (filter). With
+    `subject_const` the star's subject is bound: only that subject's row
+    is kept and only the object variables are projected (`subject_var`
+    is unused). All conditions go into ONE filter: each DataFrame
+    operation is a Py4J round trip that re-analyzes the plan."""
+    if subject_const is None:
+        cols, conds = [F.col("s").alias(subject_var)], []
+    else:
+        cols, conds = [], [F.col("s") == F.lit(subject_const)]
     for pred, target in bindings.items():
         if isinstance(target, str) and target.startswith("?"):
             cols.append(F.col(pred).alias(target[1:]))
-            out = out.filter(F.col(pred).isNotNull())
+            conds.append(F.col(pred).isNotNull())
         else:
-            out = out.filter(F.col(pred) == F.lit(target))
+            conds.append(F.col(pred) == F.lit(target))
+    out = pt.filter(reduce(lambda a, b: a & b, conds)) if conds else pt
     return out.select(*cols)

@@ -16,7 +16,8 @@ Routing rules (correctness first, each guarded by tests):
   *functional in the data* (single-valued per subject — a pivot keeps one
   value, so multi-valued predicates would silently drop bindings), and
   the subject/objects are plain distinct variables or constants. Result:
-  ZERO joins for the star — one scan + filters.
+  ZERO joins for the star — one scan + filters (a bound subject is one
+  filtered row).
 - ExtVP: a pattern with constant predicate p1 scans the smallest
   applicable reduction instead of the full store:
     SS(p1,p2) when a same-star peer pattern has constant predicate p2
@@ -35,6 +36,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from d_sparq_spark.operators.rdf_patterns import (
     _is_var,
@@ -116,10 +118,19 @@ class StoreCatalog:
 
     def load_property_table(self, spark: SparkSession, store_path: str) -> "StoreCatalog":
         """Reopen a persisted PT: the star route then scans parquet
-        directly — pushdown-able filters, no re-pivot, no cache warmup."""
+        directly — pushdown-able filters, no re-pivot, no cache warmup.
+        The schema is declared from the manifest (no schema-inference
+        job): s plus one column per predicate, all BIGINT on an encoded
+        store (integer predicate ids), all STRING on a lexical one."""
         with open(os.path.join(store_path, "ptable", "manifest.json")) as f:
             preds = json.load(f)
-        self.ptable = spark.read.parquet(os.path.join(store_path, "ptable", "data"))
+        term = LongType() if all(isinstance(p, int) for p in preds) else StringType()
+        schema = StructType(
+            [StructField("s", term)] + [StructField(str(p), term) for p in preds]
+        )
+        self.ptable = spark.read.schema(schema).parquet(
+            os.path.join(store_path, "ptable", "data")
+        )
         self.pt_preds = frozenset(preds)
         return self
 
@@ -145,27 +156,34 @@ class StoreCatalog:
         self, star: list[TriplePattern], graph_var: str | None
     ) -> DataFrame | None:
         """The PT route for one subject star, or None if it doesn't
-        qualify. Single-pattern stars are excluded — there is nothing to
-        save over the (partition-pruned) VP slice scan."""
+        qualify: every predicate constant, distinct and in the PT, no
+        object variable repeated (nor equal to the subject variable —
+        that needs the join form's equality), no GRAPH, and at least two
+        patterns (a single pattern saves nothing over its partition-pruned
+        VP slice). A variable subject scans the whole PT and binds it; a
+        BOUND subject filters the PT to that one row (pushed down as
+        ``s = const`` on the parquet scan) and projects only the object
+        variables — one lookup instead of one VP scan and join per
+        pattern."""
         if self.ptable is None or graph_var is not None or len(star) < 2:
             return None
         subj = star[0].s
-        if not _is_var(subj):
-            return None
         preds = [tp.p for tp in star]
         if any(_is_var(p) for p in preds) or len(set(preds)) != len(preds):
             return None
         if not set(preds) <= self.pt_preds:
             return None
         bindings: dict = {}
-        seen_vars = {subj}
+        seen_vars = {subj} if _is_var(subj) else set()
         for tp in star:
             if _is_var(tp.o):
                 if tp.o in seen_vars:  # repeated var: needs the join form
                     return None
                 seen_vars.add(tp.o)
             bindings[str(tp.p)] = tp.o
-        return star_over_property_table(self.ptable, bindings, subj[1:])
+        if _is_var(subj):
+            return star_over_property_table(self.ptable, bindings, subj[1:])
+        return star_over_property_table(self.ptable, bindings, subject_const=subj)
 
     def pattern_source(
         self,

@@ -24,6 +24,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+# the by_p contract: data columns s, o, then the partition column p
+VP_SCHEMA = "s long, o long, p long"
+
 
 def write_vp(
     triples_enc: DataFrame,
@@ -39,7 +42,14 @@ def write_vp(
     partitions present in ``triples_enc`` — a per-writer option, so the
     session-level partitionOverwriteMode is never mutated. Callers must
     handle partitions that became EMPTY themselves (no rows for p ⇒ the
-    old directory is left untouched by a dynamic overwrite)."""
+    old directory is left untouched by a dynamic overwrite).
+
+    The input must have exactly the columns s, p, o: read_vp declares
+    that schema, so an extra column would be written and never read."""
+    if sorted(triples_enc.columns) != ["o", "p", "s"]:
+        raise ValueError(
+            f"write_vp: expected columns s, p, o, got {triples_enc.columns}"
+        )
     w = triples_enc.write.mode(mode)
     if dynamic:
         w = w.option("partitionOverwriteMode", "dynamic")
@@ -47,16 +57,14 @@ def write_vp(
 
 
 def read_vp(spark: SparkSession, base_path: str) -> DataFrame:
-    """Read the VP layout back with the store's BIGINT contract on p:
-    partition-directory type inference returns INT for id ranges under
-    2^31, and the encoded engine's decode step (bigint-columns-only)
-    would then silently leak raw integer predicate ids (review r4 — the
-    cast used to live only in load_pipeline.store_triples, leaving this
-    public reader broken)."""
-    from pyspark.sql import functions as F
-
-    df = spark.read.parquet(f"{base_path}/by_p")
-    return df.withColumn("p", F.col("p").cast("long"))
+    """Read the VP layout back with the store's declared schema: s, o
+    and the partition column p are all BIGINT. Declaring it skips the
+    Spark job that schema inference runs over the parquet footers, and
+    types p directly (partition-directory inference would return INT for
+    id ranges under 2^31, and the encoded engine's bigint-only decode
+    would then leak raw integer predicate ids). An existing layout with
+    no partitions reads as empty."""
+    return spark.read.schema(VP_SCHEMA).parquet(f"{base_path}/by_p")
 
 
 def write_bucketed(triples_enc: DataFrame, table: str, buckets: int = 32) -> None:

@@ -53,3 +53,31 @@ def spark(tmp_path_factory):
     )
     yield s
     s.stop()
+
+
+@pytest.fixture
+def jobs_fired(spark):
+    """``jobs_fired(fn) -> (fn(), n)``: run fn under its own Spark job
+    group and count the jobs it fired (public statusTracker API; the
+    status store is fed asynchronously, so wait for active jobs to
+    drain before reading it)."""
+    import time
+    import uuid
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def run(fn):
+        group = f"jobs-fired-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, "test job count")
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        deadline = time.monotonic() + 10.0
+        while tracker.getActiveJobsIds() and time.monotonic() < deadline:
+            time.sleep(0.05)
+        time.sleep(0.2)
+        return out, len(tracker.getJobIdsForGroup(group))
+
+    return run

@@ -9,7 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from d_sparq_spark.engine import SparqlEngine
-from d_sparq_spark.operators.rdf_patterns import TriplePattern
+from d_sparq_spark.operators.rdf_patterns import TriplePattern, star_join
 from d_sparq_spark.plans.catalog import StoreCatalog
 from d_sparq_spark.sources.derived_rdf import derive_triples_cached
 
@@ -229,3 +229,55 @@ def test_catalog_refused_on_quad_store(spark, pt_catalog):
         "ex:region ?r } }"
     )
     assert len(_rows(out)) == 25
+
+
+# ---------------- bound-subject stars ----------------
+
+BOUND_STAR = (
+    "SELECT ?name ?bal ?seg WHERE { c:1 foaf:name ?name ; ex:acctbal ?bal ; "
+    "ex:mktsegment ?seg }"
+)
+
+
+@pytest.mark.parametrize("subject, n", [("c:1", 1), ("c:999999", 0)])
+def test_pt_bound_subject_star_equivalent(spark, triples, pt_catalog, subject, n):
+    # A constant subject routes to ONE filtered PT row; only the object
+    # variables are projected. Present and absent subjects both equal the
+    # catalog-less join chain.
+    q = BOUND_STAR.replace("c:1", subject)
+    routed = SparqlEngine(triples, collect_stats=False, catalog=pt_catalog).query(q)
+    plan = _plan(routed).split("InMemoryRelation")[0]
+    assert "InMemoryTableScan" in plan and "Join" not in plan, plan[:1500]
+    base = SparqlEngine(triples, collect_stats=False).query(q)
+    assert routed.columns == base.columns == ["name", "bal", "seg"]
+    assert _rows(routed) == _rows(base)
+    assert len(_rows(routed)) == n
+
+
+def test_pt_bound_subject_all_constant_objects(spark, triples, pt_catalog):
+    # No variable at all: the PT row either matches (one empty solution)
+    # or not (none), exactly as the join chain of constant patterns.
+    name, _, seg = _rows(SparqlEngine(triples, collect_stats=False).query(BOUND_STAR))[0]
+    for objs, n in [((name, seg), 1), ((name, "NO-SUCH-SEGMENT"), 0)]:
+        star = [
+            TriplePattern("c:1", "foaf:name", objs[0]),
+            TriplePattern("c:1", "ex:mktsegment", objs[1]),
+        ]
+        via_pt = pt_catalog.star_from_property_table(star, None)
+        assert via_pt is not None and via_pt.columns == []
+        assert via_pt.count() == star_join(triples, star).count() == n
+        q = f'ASK {{ c:1 foaf:name "{objs[0]}" ; ex:mktsegment "{objs[1]}" }}'
+        routed = SparqlEngine(triples, collect_stats=False, catalog=pt_catalog).query(q)
+        base = SparqlEngine(triples, collect_stats=False).query(q)
+        assert _rows(routed) == _rows(base)
+
+
+def test_pt_bound_subject_rejects_repeated_object_var(triples, pt_catalog):
+    star = [
+        TriplePattern("c:1", "foaf:name", "?x"),
+        TriplePattern("c:1", "ex:mktsegment", "?x"),
+    ]
+    assert pt_catalog.star_from_property_table(star, None) is None
+    q = "SELECT ?x WHERE { c:1 foaf:name ?x ; ex:mktsegment ?x }"
+    routed = SparqlEngine(triples, collect_stats=False, catalog=pt_catalog).query(q)
+    assert _rows(routed) == _rows(SparqlEngine(triples, collect_stats=False).query(q)) == []

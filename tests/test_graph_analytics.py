@@ -178,6 +178,24 @@ def test_sssp_driver_and_distributed_paths_agree(spark, monkeypatch):
     assert run(n_rounds=64, until_converged=True) == driver_conv
 
 
+def test_sssp_nulls_decline_to_distributed_loop(spark, monkeypatch):
+    """A NULL src, dst or weight must not reach the driver kernel, whose
+    int64 view reads it as -2^63 (a phantom node, or a huge negative
+    distance): the default route equals the gates-off distributed loop."""
+    rows = [(1, 2, 3), (2, 3, 4), (1, None, 1), (None, 3, 1), (2, 4, None),
+            (3, 4, 2)]
+    ew = spark.createDataFrame(rows, "src long, dst long, w long")
+
+    def run(**kw):
+        return sorted(map(tuple, G.sssp_bellman_ford(ew, 1, **kw).collect()))
+
+    got = [run(n_rounds=4), run(n_rounds=16, until_converged=True)]
+    monkeypatch.setenv("D_SPARQ_DRIVER_GATE_SCALE", "0")
+    assert got == [run(n_rounds=4), run(n_rounds=16, until_converged=True)]
+    assert got[1] == [(1, 0), (2, 3), (3, 7), (4, 9)]
+    assert all(-(2**62) < v < 2**62 for r in got for t in r for v in t)
+
+
 def test_cc_driver_and_distributed_paths_agree(spark, monkeypatch):
     """r11: the gated driver fast path (vectorized hash-min CC) and the
     distributed pointer-jumping loop must produce identical labelings —

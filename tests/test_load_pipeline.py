@@ -527,3 +527,46 @@ def test_append_extvp_refresh_matches_full_rematerialization(spark, tmp_path):
     materialize_extvp(store_triples(spark, store), full_store)
     assert incremental == entries(full_store)
     assert len(incremental) > 0
+
+
+def test_open_store_no_jobs_and_bound_subject_star_scans_ptable(
+    spark, tmp_path, jobs_fired
+):
+    """open_store reads by_p, dict and ptable with declared schemas, so
+    reopening a store fires no Spark job; a star with a BOUND subject
+    answers from the persisted property table (one filtered row) instead
+    of one VP scan and join per pattern, equal to the lexical engine."""
+    triples = derive_triples(spark, SF)
+    nt_dir = str(tmp_path / "nt")
+    format_ntriples(triples).write.mode("overwrite").text(nt_dir)
+    store = str(tmp_path / "store")
+    bulk_load(spark, nt_dir, store, materialize=("ptable",))
+
+    engine, n = jobs_fired(lambda: open_store(spark, store))
+    assert n == 0
+    assert engine.catalog is not None and engine.catalog.ptable is not None
+    q = ("SELECT ?name ?bal ?n WHERE { c:7 foaf:name ?name ; ex:acctbal ?bal ; "
+         "ex:nation ?n }")
+    got = engine.query(q)
+    spark.conf.set("spark.sql.maxMetadataStringLength", "1000")
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    spark.conf.unset("spark.sql.maxMetadataStringLength")
+    assert "ptable/data" in plan, f"PT parquet not scanned:\n{plan[:1500]}"
+    assert "by_p" not in plan, f"bound star still scans VP:\n{plan[:1500]}"
+    want = sorted(
+        tuple(r)
+        for r in SparqlEngine(triples, collect_stats=False).query(q).collect()
+    )
+    assert sorted(tuple(r) for r in got.collect()) == want and len(want) == 1
+
+
+def test_write_vp_requires_exactly_spo(spark, tmp_path):
+    # read_vp declares (s, o, p): an extra column would be written and
+    # silently never read back, so the writer refuses it
+    import pytest
+
+    from d_sparq_spark.sources.triple_store import write_vp
+
+    df = spark.createDataFrame([(1, 2, 3, 4)], "s long, p long, o long, g long")
+    with pytest.raises(ValueError, match="s, p, o"):
+        write_vp(df, str(tmp_path / "vp"))

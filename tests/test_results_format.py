@@ -229,3 +229,28 @@ def test_iter_results_equal_collect_forms_multibatch(spark):
         got_csv = open(f"{d}/out.csv", newline="").read()
         want_csv = results_csv(df)
         assert got_csv == want_csv, (got_csv[:200], want_csv[:200])
+
+
+def test_collect_forms_fire_one_job(spark, jobs_fired):
+    """results_json / results_csv serialize from ONE collect: one Spark job
+    on a shuffle-free frame of 3 partitions, where the streaming forms'
+    toLocalIterator runs one job per partition. Same bytes either way."""
+    from pyspark.sql import functions as F
+
+    from d_sparq_spark.results import iter_results_csv, iter_results_json
+
+    df = spark.range(0, 30, 1, 3).select(
+        F.concat(F.lit("ex:s"), F.col("id")).alias("s"),
+        F.when(F.col("id") % 4 == 0, F.lit(None))
+        .otherwise(F.col("id") * 0.5)
+        .alias("x"),
+    )
+    doc, n = jobs_fired(lambda: results_json(df))
+    assert n == 1
+    assert doc == "".join(iter_results_json(df))
+    assert len(json.loads(doc)["results"]["bindings"]) == 30
+    text, n = jobs_fired(lambda: results_csv(df))
+    assert n == 1
+    assert text == "".join(iter_results_csv(df))
+    _, n = jobs_fired(lambda: "".join(iter_results_json(df)))
+    assert n == 3
