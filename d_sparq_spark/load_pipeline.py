@@ -36,7 +36,13 @@ from pyspark.sql import functions as F
 
 from d_sparq_spark.encoded_engine import EncodedSparqlEngine
 from d_sparq_spark.localdata import local_df
-from d_sparq_spark.operators.dictionary import build_dictionary, encode_triples
+from d_sparq_spark.operators.dictionary import (
+    build_dictionary,
+    distinct_terms,
+    encode_triples,
+    extend_dictionary,
+    numeric_typed_literal,
+)
 from d_sparq_spark.operators.rdf_patterns import predicate_stats
 from d_sparq_spark.sources.ntriples import parse_ntriples
 
@@ -128,10 +134,9 @@ def bulk_load(
             "and attach a StoreCatalog in-session instead"
         )
     raw = spark.read.text(nt_path)
-    # pin the parse ONCE (r11, guide §2.4): the dictionary build, the
-    # encode, and the by_p write all consume `triples` — un-pinned, the
-    # N-Triples text was re-scanned and re-regexed per consumer (7 passes
-    # measured; append_load has pinned its delta parse since r7). The
+    # pin the parse ONCE: the dictionary build, the encode, and the by_p
+    # write all consume `triples` — un-pinned, the N-Triples text is
+    # re-scanned and re-regexed per consumer (7 passes measured). The
     # repartition spreads the regex across the session's parallelism —
     # a text dump packs into few 128 MB splits, so the parse otherwise
     # runs ~4-way whatever the core count.
@@ -140,30 +145,23 @@ def bulk_load(
     if not triples.take(1):
         # fail BEFORE any write: an all-malformed/empty dump would
         # otherwise leave a half-written store and crash later with an
-        # opaque empty-parquet schema-inference error (review r7). The
-        # probe rides the already-materialized checkpoint (r11: a
-        # separate pre-checkpoint take(1) was a second full-text parse
-        # job on the malformed case and a split-sized one on the good
-        # case); no store bytes have been touched either way.
+        # opaque empty-parquet schema-inference error. The probe rides
+        # the already-materialized checkpoint (a separate pre-checkpoint
+        # take(1) would be a second full-text parse job on the malformed
+        # case and a split-sized one on the good case); no store bytes
+        # have been touched either way.
         raise ValueError(f"bulk_load: no triples parsed from {nt_path!r}")
     dictionary = build_dictionary(triples).persist()
     # size-conditional broadcast: the dictionary is data-sized (one row
     # per distinct term) — at 100 TB it cannot collect to the driver, so
     # only hint the broadcast under ~10M terms and let AQE pick the
-    # strategy above that (review r4: the hint used to be unconditional).
-    # The typed-literal plainness flag rides the SAME aggregate (r12,
-    # VERDICT r11 #3): one job records what every later open_store engine
-    # would otherwise re-probe with its own dictionary scan.
-    from d_sparq_spark.operators.dictionary import numeric_typed_literal
+    # strategy above that. The plainness flag rides the same aggregate:
+    # one job records what every later open_store engine would otherwise
+    # re-probe with its own dictionary scan.
+    n_terms, typed = _count_and_typed(dictionary)
+    dict_plain = not typed
 
-    _dstat = dictionary.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.max(numeric_typed_literal("term")).alias("typed"),
-    ).first()
-    n_terms = _dstat["n"]
-    dict_plain = not bool(_dstat["typed"])
-
-    # INVALIDATE the manifest before clobbering dict/ (review r7): a
+    # INVALIDATE the manifest before clobbering dict/: a
     # rebuild over a previously-appended store that crashes mid-dict-write
     # would otherwise leave the OLD watermark next to a NEW dictionary,
     # and the next append would allocate colliding ids. max_id=None makes
@@ -171,15 +169,15 @@ def bulk_load(
     # the same discipline append_load documents. dict_buckets=None too:
     # recording the NEW bucket count before the files exist would register
     # old/partial files under the wrong CLUSTERED BY spec and let the
-    # bucketed anti-join miss existing terms (review r7 round 2) — None
+    # bucketed anti-join miss existing terms — None
     # forces the safe plain-parquet dictionary path until the post-write
     # manifest lands.
     _write_meta(spark, store_path, rank_ordered=False, n_terms=None, max_id=None,
                 dict_buckets=None)
     # stale materialized layouts go NOW, not after the data writes: a
     # crash mid-rebuild would otherwise leave a cleanly-opening store
-    # whose catalog still routes to pre-rebuild ptable/extvp artifacts
-    # (review r7 round 2). Requested layouts re-materialize below.
+    # whose catalog still routes to pre-rebuild ptable/extvp artifacts.
+    # Requested layouts re-materialize below.
     if "://" not in store_path:
         import shutil
 
@@ -197,7 +195,7 @@ def bulk_load(
     _write_dict_bucketed(dictionary, store_path, dict_buckets, mode="overwrite")
     dictionary.unpersist()
     # saveAsTable just registered the table with the same bucket spec —
-    # a plain lookup suffices (review r6: DROP+CREATE here was churn)
+    # a plain lookup suffices
     dict_table = spark.table(_dict_table_name(store_path))
     # ids are DENSE 1..n ranks here, so the id watermark == n_terms.
     _write_meta(
@@ -219,14 +217,10 @@ def bulk_load(
     stats.write.mode("overwrite").parquet(os.path.join(store_path, "stats"))
 
     if "ptable" in materialize:
-        from d_sparq_spark.plans.catalog import StoreCatalog
-
-        cat = StoreCatalog().add_property_table(enc)
-        if cat.ptable is not None:
-            cat.save_property_table(store_path)
         # no functional predicate -> nothing to materialize; the optional
         # layout is skipped, never a failed load after dict/by_p were
         # already written
+        _save_property_table(enc, store_path, candidates=None)
     if "extvp" in materialize:
         from d_sparq_spark.operators.extvp import materialize_extvp
 
@@ -235,7 +229,6 @@ def bulk_load(
     # the triple count comes from the JUST-WRITTEN stats parquet — summing
     # the live `stats` lineage would re-run the whole predicate_stats
     # aggregation (two exact countDistincts over the store) a second time
-    # (review r4)
     return {
         "n_terms": int(n_terms),
         "n_triples": _count_store_triples(spark, store_path),
@@ -334,53 +327,19 @@ def _write_meta(
     open(os.path.join(meta_dir, "_SUCCESS"), "w").close()
 
 
-def _read_meta(spark: SparkSession, store_path: str) -> dict:
-    """Store manifest with legacy defaults. Stores loaded before the meta/
-    manifest existed were always full bulk_load rebuilds, so a MISSING
-    manifest means rank-ordered — but only path-not-found may default:
-    any other read failure (corrupt footer, permissions) must propagate
-    rather than fail OPEN into the order-dependent MIN/MAX peel on a
-    possibly append-ordered store (review r5). Manifests written before
-    the counter fields existed surface them as None (callers fall back to
-    scanning)."""
-    meta_dir = os.path.join(store_path, "meta")
-    if "://" not in store_path:
-        # driver-side read of the (metadata-scale) manifest — no Spark job
-        # (r11; the write above mirrors the layout, and Spark-written
-        # legacy manifests read identically). Only a MISSING meta/ may
-        # default; a present-but-unreadable one propagates, same contract
-        # as the Spark route below.
-        if not os.path.isdir(meta_dir):
-            return {"rank_ordered": True, "n_terms": None, "max_id": None,
-                    "dict_buckets": None, "dict_plain": None}
-        import pyarrow.parquet as pq
+# The manifest of a store loaded before meta/ existed: those stores were
+# always full bulk_load rebuilds, so rank-ordered, with no counters.
+_LEGACY_META = {"rank_ordered": True, "n_terms": None, "max_id": None,
+                "dict_buckets": None, "dict_plain": None}
 
-        rows = pq.read_table(meta_dir).to_pylist()
-        row = rows[0] if rows else {}
-        return {
-            "rank_ordered": bool(rows and row["rank_ordered"]),
-            "n_terms": row.get("n_terms"),
-            "max_id": row.get("max_id"),
-            "dict_buckets": row.get("dict_buckets"),
-            "dict_plain": row.get("dict_plain"),
-        }
-    from pyspark.errors import AnalysisException
 
-    try:
-        df = spark.read.parquet(meta_dir)
-        rows = df.collect()
-    except AnalysisException as e:
-        msg = str(e)
-        if "PATH_NOT_FOUND" in msg or "Path does not exist" in msg:
-            return {"rank_ordered": True, "n_terms": None, "max_id": None,
-                    "dict_buckets": None, "dict_plain": None}
-        raise
-    # FAIL CLOSED on a present-but-damaged manifest (review r6): a
-    # zero-row meta or one missing the flag column means the store's
-    # history is unknown — treating it as rank-ordered would re-enable
-    # the MIN/MAX id peel on a possibly append-ordered dictionary
-    # (silently wrong aggregates). Only path-not-found may default True.
-    row = rows[0].asDict() if rows else {}
+def _meta_from_rows(rows: list) -> dict:
+    """The manifest dict from meta/'s rows (as dicts). FAIL CLOSED on a
+    present-but-damaged manifest: a zero-row meta or one missing the flag
+    column means the store's history is unknown — treating it as
+    rank-ordered would re-enable the MIN/MAX id peel on a possibly
+    append-ordered dictionary (silently wrong aggregates)."""
+    row = rows[0] if rows else {}
     return {
         "rank_ordered": bool(rows and row["rank_ordered"]),
         "n_terms": row.get("n_terms"),
@@ -390,36 +349,181 @@ def _read_meta(spark: SparkSession, store_path: str) -> dict:
     }
 
 
-def _read_meta_rank_ordered(spark: SparkSession, store_path: str) -> bool:
-    return _read_meta(spark, store_path)["rank_ordered"]
+def _read_meta(spark: SparkSession, store_path: str) -> dict:
+    """Store manifest with legacy defaults. Only a MISSING manifest may
+    default (_LEGACY_META): any other read failure (corrupt footer,
+    permissions) must propagate rather than fail OPEN into the
+    order-dependent MIN/MAX peel on a possibly append-ordered store.
+    Manifests written before the counter fields existed surface them as
+    None (callers fall back to scanning)."""
+    meta_dir = os.path.join(store_path, "meta")
+    if "://" not in store_path:
+        # driver-side read of the (metadata-scale) manifest — no Spark
+        # job; Spark-written legacy manifests read identically
+        if not os.path.isdir(meta_dir):
+            return dict(_LEGACY_META)
+        import pyarrow.parquet as pq
+
+        return _meta_from_rows(pq.read_table(meta_dir).to_pylist())
+    from pyspark.errors import AnalysisException
+
+    try:
+        rows = spark.read.parquet(meta_dir).collect()
+    except AnalysisException as e:
+        msg = str(e)
+        if "PATH_NOT_FOUND" in msg or "Path does not exist" in msg:
+            return dict(_LEGACY_META)
+        raise
+    return _meta_from_rows([r.asDict() for r in rows])
+
+
+def _count_and_typed(dict_rows: DataFrame) -> tuple:
+    """(row count, whether any term is a numeric typed literal) of
+    dictionary rows in ONE aggregate job — the n_terms counter and the
+    input of the manifest's dict_plain flag."""
+    r = dict_rows.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.max(numeric_typed_literal("term")).alias("typed"),
+    ).first()
+    return int(r["n"]), bool(r["typed"])
+
+
+def _open_dict(spark: SparkSession, store_path: str, buckets: int | None) -> DataFrame:
+    """The store dictionary, opened for a write: a term-bucketed store
+    (re-)registers its table, which both the bucketed anti-join and a
+    later saveAsTable append need; a legacy store (``buckets`` None)
+    reads its plain-parquet dict/."""
+    if buckets:
+        return _register_dict_table(spark, store_path, buckets)
+    return _read_dict(spark, store_path)
+
+
+def _extend_store_dict(
+    spark: SparkSession, store_path: str, meta: dict, store_dict: DataFrame,
+    terms: DataFrame,
+) -> tuple:
+    """Add the ``terms`` the dictionary lacks, reserve-then-write — the one
+    dictionary extension (append_load's delta terms, _ensure_terms'
+    ontology vocabulary). ``store_dict`` is the _open_dict result and
+    ``meta`` the manifest read before it. New ids land above the id
+    watermark, so no max(id) scan runs on a store with counters.
+
+    meta/ flips rank_ordered=false AND advances the watermark BEFORE the
+    dict/ append: flipping the flag late could leave an append-ordered
+    dictionary marked rank-ordered after a crash (silently wrong MIN/MAX
+    peels), and advancing the watermark late could hand a retry's next
+    delta the same id range twice (collision). Reserving first is safe in
+    both directions — worst case a rank-ordered store loses the peel and
+    the id space gains a gap; the dictionary stays a bijection.
+
+    Returns (dictionary including the new rows, n_terms, n_new_terms)."""
+    buckets = meta["dict_buckets"]
+    watermark = meta["max_id"]
+    n_terms_old = meta["n_terms"]
+    if watermark is None:  # legacy manifest: pay the scans once; the meta
+        # write below records the counters for every later write
+        watermark = int(
+            store_dict.agg(F.max("id").alias("m")).collect()[0]["m"] or 0
+        )
+    if n_terms_old is None:
+        n_terms_old = store_dict.count()
+    # localCheckpoint before the self-referencing append: the new rows
+    # anti-join against dict/ and are then written INTO dict/ — truncate
+    # the lineage so the write cannot observe its own output files.
+    delta = extend_dictionary(store_dict, terms, base_id=watermark).localCheckpoint()
+    # dict_plain stays exact: plain iff it was plain AND no new term is a
+    # numeric typed literal; unknown (legacy) stays unknown, engines then
+    # probe lazily
+    n_new, typed = _count_and_typed(delta)
+    dict_plain = meta["dict_plain"]
+    if dict_plain is not None and n_new:
+        dict_plain = bool(dict_plain) and not typed
+    n_terms = int(n_terms_old) + n_new
+    if n_new:
+        _write_meta(
+            spark, store_path, rank_ordered=False,
+            n_terms=n_terms, max_id=int(watermark) + n_new,
+            dict_buckets=buckets, dict_plain=dict_plain,
+        )
+        if buckets:
+            _write_dict_bucketed(delta, store_path, buckets, mode="append")
+            # saveAsTable(append) writes through the catalog and drops its
+            # file listing, so a fresh name lookup sees the appended files
+            store_dict = spark.table(_dict_table_name(store_path))
+        else:
+            delta.write.mode("append").parquet(os.path.join(store_path, "dict"))
+            store_dict = _read_dict(spark, store_path)
+    elif meta["max_id"] is None:
+        # legacy store, no new terms: still record the counters (and the
+        # existing rank order) so the next write skips the scans
+        _write_meta(
+            spark, store_path, rank_ordered=meta["rank_ordered"],
+            n_terms=n_terms, max_id=int(watermark), dict_buckets=buckets,
+            dict_plain=dict_plain,
+        )
+    return store_dict, n_terms, n_new
+
+
+def _encode_delta(
+    spark: SparkSession, store_path: str, nt_path: str, extend: bool
+) -> tuple:
+    """Parse a delta N-Triples file and encode it against the store
+    dictionary — the front half append_load (``extend=True``) and
+    delete_load share. With ``extend`` the delta's new terms are first
+    added (_extend_store_dict); without it a triple naming a term absent
+    from the dictionary cannot be stored and drops out of the inner-join
+    encode.
+
+    The encode joins a dictionary slice REDUCED to the delta's own terms
+    by a semi-join, so they broadcast at most 3|delta| distinct terms
+    instead of the full store dictionary (measured 20.9 s -> the slice
+    scan for a 0.15M-triple delta against a 6M-term dict); on a bucketed
+    store the semi-join, like the extension's anti-join, shuffles only
+    the delta side. Returns (unpinned encoded delta, counters): the
+    counters are {"n_terms", "n_new_terms"} with ``extend``, else {}."""
+    # pin the delta parse: it feeds the term set, the dictionary extension
+    # and the encode — without the pin the N-Triples text is re-read and
+    # re-regexed per consumer
+    triples = parse_ntriples(spark.read.text(nt_path)).localCheckpoint(eager=False)
+    meta = _read_meta(spark, store_path)
+    store_dict = _open_dict(spark, store_path, meta["dict_buckets"])
+    # one union+distinct over the delta, shared by the extension and the
+    # slice reduction
+    delta_terms = distinct_terms(triples).localCheckpoint(eager=False)
+    n_delta_terms = delta_terms.count()
+    counters: dict = {}
+    if extend:
+        store_dict, n_terms, n_new = _extend_store_dict(
+            spark, store_path, meta, store_dict, delta_terms
+        )
+        counters = {"n_terms": n_terms, "n_new_terms": n_new}
+    enc = encode_triples(
+        triples,
+        store_dict.join(delta_terms, "term", "semi"),
+        broadcast_dict=n_delta_terms <= 10_000_000,
+    )
+    return enc, counters
 
 
 def append_load(spark: SparkSession, nt_path: str, store_path: str) -> dict:
     """Incremental load: parse a DELTA N-Triples file into an EXISTING
     store without re-ranking the dictionary or rewriting the stored
-    triples. Work is O(|delta|) for dictionary + triples plus a
-    partition-pruned stats refresh of only the predicates the delta
-    touched:
+    triples. Work is O(|delta|) plus partition-pruned refreshes of only
+    the predicates the delta changed:
 
-    - new terms get ids above the manifest's id WATERMARK via append_ids
-      (delta anti-join, deterministic rank among themselves) — the
-      watermark read is O(1), not a max(id) scan of the dictionary,
-    - the anti-join and the encode's dictionary-slice semi-join run
-      against the term-BUCKETED dict table, so the dictionary side never
-      shuffles — per-append exchange volume is O(|delta|),
-    - the delta dictionary rows and encoded delta triples are APPENDED
-      (dict/ bucketed-table append; by_p/ partitionBy(p) append — new
-      predicates create new directories, existing ones gain files),
-    - meta/ flips rank_ordered=false AND advances the watermark BEFORE
-      the dict append (reserve-then-write): a crash between the two
-      leaves an id GAP, never a collision — the dictionary stays a
-      bijection under retries. open_store passes the flag to the engine
-      so the MIN/MAX id peel degrades to decode-before-agg instead of
-      silently returning wrong terms,
-    - stats/ merges: untouched predicates keep their old rows verbatim;
-      only the delta's predicates are recomputed, over a partition-
-      pruned read of exactly those by_p directories — stats cost scales
-      with the touched slice, not the store.
+    - _encode_delta(extend=True) gives new terms ids above the manifest's
+      id watermark, reserve-then-write (_extend_store_dict), and encodes
+      the delta against a dictionary slice of its own terms;
+    - the new rows are APPENDED to by_p/ (new predicates create new
+      directories, existing ones gain files);
+    - _refresh_after_vp_write merges stats/ and refreshes the base
+      ptable/extvp layouts for the changed predicates only;
+    - a committed reasoning layer is maintained in O(Δ)
+      (_maintain_reasoning).
+
+    The manifest now says rank_ordered=false; open_store passes the flag
+    to the engine so the MIN/MAX id peel degrades to decode-before-agg
+    instead of silently returning wrong terms.
 
     Not concurrent-writer-safe (same as bulk_load): one loader at a time.
     Re-delivered or overlapping deltas are NO-OPS: the encoded delta
@@ -428,111 +532,19 @@ def append_load(spark: SparkSession, nt_path: str, store_path: str) -> dict:
     un-acked success appends nothing. A crash mid-append can still leave
     orphan part-files from the interrupted WRITE itself — production
     would stage to a temp dir and commit by rename."""
-    # pin the delta parse: it feeds the dictionary extension, the term
-    # reduction, and the encode — without the pin the N-Triples text is
-    # re-read and re-regexed per consumer (review r7)
-    triples = parse_ntriples(spark.read.text(nt_path)).localCheckpoint(eager=False)
-    meta = _read_meta(spark, store_path)
-    buckets = meta["dict_buckets"]
-    if buckets:
-        existing_dict = _register_dict_table(spark, store_path, buckets)
-    else:  # legacy plain-parquet dictionary (pre-bucketing store)
-        existing_dict = spark.read.parquet(os.path.join(store_path, "dict"))
-    watermark = meta["max_id"]
-    n_terms_old = meta["n_terms"]
-    if watermark is None:  # legacy manifest: pay the scans once; the meta
-        # write below records the counters for every later append
-        watermark = int(
-            existing_dict.agg(F.max("id").alias("m")).collect()[0]["m"] or 0
-        )
-    if n_terms_old is None:
-        n_terms_old = existing_dict.count()
-    from d_sparq_spark.operators.dictionary import distinct_terms, extend_dictionary
-
-    # one union+distinct over the delta, shared by the dictionary
-    # extension AND the encode-slice reduction below (review r7: each
-    # recomputed it)
-    delta_terms = distinct_terms(triples).localCheckpoint(eager=False)
-    n_delta_terms = delta_terms.count()
-    # localCheckpoint before the self-referencing append: the delta rows
-    # anti-join against dict/ and are then written INTO dict/ — truncate
-    # the lineage so the write cannot observe its own output files.
-    delta_dict = extend_dictionary(
-        existing_dict, triples, base_id=watermark, terms=delta_terms
-    ).localCheckpoint()
-    # count + delta plainness in ONE aggregate (r12): the manifest's
-    # dict_plain stays exact across appends — plain iff it was plain AND
-    # no new term is a numeric typed literal; unknown (legacy) stays
-    # unknown, engines then probe lazily.
-    from d_sparq_spark.operators.dictionary import numeric_typed_literal
-
-    _dstat = delta_dict.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.max(numeric_typed_literal("term")).alias("typed"),
-    ).first()
-    n_new_terms = _dstat["n"]
-    dict_plain = meta["dict_plain"]
-    if dict_plain is not None and n_new_terms:
-        dict_plain = bool(dict_plain) and not bool(_dstat["typed"])
-    n_terms = int(n_terms_old) + int(n_new_terms)
-    if n_new_terms:
-        # reserve BEFORE the dict append (review r5 + r6): flipping the
-        # flag late could leave an append-ordered dictionary marked
-        # rank-ordered after a crash (silently wrong MIN/MAX peels), and
-        # advancing the watermark late could hand a retry's NEXT delta the
-        # same id range twice (collision). Reserving first is safe in both
-        # directions — worst case a rank-ordered store loses the peel and
-        # the id space gains a gap.
-        _write_meta(
-            spark, store_path, rank_ordered=False,
-            n_terms=n_terms, max_id=int(watermark) + int(n_new_terms),
-            dict_buckets=buckets, dict_plain=dict_plain,
-        )
-        if buckets:
-            _write_dict_bucketed(delta_dict, store_path, buckets, mode="append")
-        else:
-            delta_dict.write.mode("append").parquet(os.path.join(store_path, "dict"))
-    elif meta["max_id"] is None:
-        # legacy store, no new terms: still record the counters (and the
-        # existing rank order) so the next append skips the scans
-        _write_meta(
-            spark, store_path, rank_ordered=meta["rank_ordered"],
-            n_terms=n_terms, max_id=int(watermark), dict_buckets=buckets,
-            dict_plain=dict_plain,
-        )
-
-    # encode against the COMBINED dictionary read back from the store (the
-    # just-appended files included), REDUCED to the delta's own terms by a
-    # semi-join first: the encode joins then broadcast a dictionary slice
-    # bounded by 3|delta| distinct terms instead of the full store
-    # dictionary (measured 20.9 s -> the slice scan for a 0.15M-triple
-    # delta against a 6M-term dict; the bucketed table makes the slice's
-    # semi-join exchange O(|delta|) too). Inner joins stay safe — every
-    # delta term is present by construction after the append above.
-    # the table is already registered above; saveAsTable(append) writes
-    # through the catalog and invalidates its file-listing cache, so a
-    # fresh name lookup sees the appended files (review r6: re-running
-    # DROP+CREATE here was churn)
-    full_dict = (
-        spark.table(_dict_table_name(store_path))
-        if buckets
-        else spark.read.parquet(os.path.join(store_path, "dict"))
-    )
-    reduced_dict = full_dict.join(delta_terms, "term", "semi")
+    enc, counters = _encode_delta(spark, store_path, nt_path, extend=True)
     # persist: the encoded delta feeds the dedup anti-join, the by_p
     # write, AND the touched-predicate list below — without it the 3-way
     # dict encode re-runs per consumer
-    enc = encode_triples(
-        triples, reduced_dict, broadcast_dict=n_delta_terms <= 10_000_000
-    ).persist()
+    enc = enc.persist()
     touched = [r["p"] for r in enc.select("p").distinct().collect()]
     # an RDF graph is a SET of triples: a re-delivered delta (retry after
     # an un-acked success) or one restating stored triples must be a
     # no-op, not a duplicate-row append — duplicates double counts and
     # demote genuinely functional predicates out of the property-table
-    # layout (review r7). Dedup within the delta, then anti-join the
-    # PRE-APPEND store slice, partition-pruned to the touched predicates
-    # (O(touched slice), the same bound the stats merge documents).
+    # layout. Dedup within the delta, then anti-join the PRE-APPEND store
+    # slice, partition-pruned to the touched predicates (O(touched
+    # slice), the same bound the stats merge documents).
     pre_slice = store_triples(spark, store_path).filter(F.col("p").isin(touched))
     maintain_reasoning = _has_reasoning(store_path)
     delta_set = enc.dropDuplicates(["s", "p", "o"])
@@ -552,67 +564,11 @@ def append_load(spark: SparkSession, nt_path: str, store_path: str) -> dict:
     write_vp(new_rows, store_path, mode="append")
     # the predicate list that actually CHANGED: from the post-dedup rows,
     # not the raw delta — a fully-redundant re-delivered delta appends
-    # nothing, so stats/layouts must not be recomputed for it (review r7
-    # round 2; the pre-dedup `touched` above is only the anti-join prune)
+    # nothing, so stats/layouts must not be recomputed for it (the
+    # pre-dedup `touched` above is only the anti-join prune)
     touched_new = [r["p"] for r in new_rows.select("p").distinct().collect()]
-
-    store = store_triples(spark, store_path)
     if touched_new:
-        # Stats merge FIRST, O(touched), not O(store): a predicate the
-        # delta never changed keeps its old row verbatim; only the changed
-        # predicates recompute, over a partition-pruned read of exactly
-        # those by_p/p=<id> directories. The layout refreshes below then
-        # REUSE the fresh per-predicate counts instead of re-aggregating
-        # the store (review r7 round 2). The touched list is metadata-
-        # scale (distinct predicates are bounded in any RDF store) — a
-        # driver-side list is the A7 contract. The kept rows come from a
-        # DRIVER-side stats read (r11): metadata-scale, and a local
-        # relation needs no eager checkpoint to be safe against the
-        # overwrite of the directory it came from (the Spark read +
-        # checkpoint paid two jobs per append for ~a dozen rows).
-        tset = set(touched_new)
-        kept = local_df(
-            spark,
-            [
-                (r["p"], r["cnt"], r["ndv_s"], r["ndv_o"])
-                for r in _read_stats_rows(spark, store_path)
-                if r["p"] not in tset
-            ],
-            "p long, cnt long, ndv_s long, ndv_o long",
-        )
-        recomputed = predicate_stats(store.filter(F.col("p").isin(touched_new)))
-        kept.unionByName(recomputed).write.mode("overwrite").parquet(
-            os.path.join(store_path, "stats")
-        )
-        # materialized layouts are DERIVED from the triple set — an append
-        # would leave them stale and the catalog would route qualifying
-        # stars to artifacts missing the delta (silent wrong results).
-        # (Layout manifests are local-FS by bulk_load contract.)
-        _old_pt = _ptable_manifest_preds(store_path)
-        if _old_pt is not None:
-            # candidate pruning (r10): old PT predicates ∪ the delta's —
-            # exact for appends (new rows can only DEMOTE a predicate out
-            # of functionality, never promote one in — a demote leaves an
-            # empty manifest so a later delete can promote back), so the
-            # rebuild scans only those by_p directories, not the store
-            _refresh_ptable_layout(
-                spark, store, store_path,
-                candidates=sorted(set(_old_pt) | set(touched_new)),
-            )
-        if os.path.exists(os.path.join(store_path, "extvp", "manifest.json")):
-            from d_sparq_spark.operators.extvp import refresh_extvp
-
-            # incremental: only SS/OS pairs involving a changed predicate
-            # can differ — untouched pairs keep their files and manifest
-            # entries (review r7: the full rebuild made append cost
-            # degenerate to bulk cost whenever extvp was materialized).
-            # Sizes and the predicate universe come from the just-merged
-            # stats parquet — metadata cost, no store re-aggregation.
-            fresh = _read_stats_rows(spark, store_path)
-            refresh_extvp(
-                store, store_path, touched_new,
-                sizes={r["p"]: r["cnt"] for r in fresh},
-            )
+        _refresh_after_vp_write(spark, store_path, touched_new)
     if maintain_reasoning:
         # AFTER the by_p append: maintenance derives from the full deduped
         # delta, not new_rows — a re-delivered delta then SELF-HEALS a
@@ -620,12 +576,89 @@ def append_load(spark: SparkSession, nt_path: str, store_path: str) -> dict:
         # anti-joins inside make it idempotent either way), and the
         # anti-join against the post-append store correctly excludes
         # derived rows that restate just-appended base rows.
-        _maintain_reasoning(spark, store_path, delta_set, touched=touched)
-    return {
-        "n_terms": int(n_terms),
-        "n_new_terms": int(n_new_terms),
-        "n_triples": _count_store_triples(spark, store_path),
-    }
+        _maintain_reasoning(spark, store_path, delta_set, touched)
+    return {**counters, "n_triples": _count_store_triples(spark, store_path)}
+
+
+def _refresh_after_vp_write(
+    spark: SparkSession, store_path: str, changed: list
+) -> None:
+    """Bring stats/ and the base layouts up to date after a by_p write
+    changed the ``changed`` predicates — the shared tail of append_load
+    and delete_load.
+
+    Stats merge FIRST, O(changed), not O(store): a predicate the write
+    never changed keeps its old row verbatim; only the changed predicates
+    recompute, over a partition-pruned read of exactly those by_p/p=<id>
+    directories. The layout refresh then REUSES the fresh per-predicate
+    counts instead of re-aggregating the store. The changed list is
+    metadata-scale (distinct predicates are bounded in any RDF store) — a
+    driver-side list is the A7 contract. The kept rows come from a
+    DRIVER-side stats read: metadata-scale, and a local relation needs no
+    eager checkpoint to be safe against the overwrite of the directory it
+    came from."""
+    changed_set = set(changed)
+    kept_rows = [
+        (r["p"], r["cnt"], r["ndv_s"], r["ndv_o"])
+        for r in _read_stats_rows(spark, store_path)
+        if r["p"] not in changed_set
+    ]
+    kept = local_df(spark, kept_rows, "p long, cnt long, ndv_s long, ndv_o long")
+    recomputed = predicate_stats(
+        store_triples(spark, store_path).filter(F.col("p").isin(changed))
+    )
+    kept.unionByName(recomputed).write.mode("overwrite").parquet(
+        os.path.join(store_path, "stats")
+    )
+    # materialized layouts are DERIVED from the triple set — a write would
+    # leave them stale and the catalog would route qualifying stars to
+    # artifacts missing (or still serving) the changed rows
+    _refresh_layouts(spark, store_path, changed, reasoned=False)
+
+
+def _refresh_layouts(
+    spark: SparkSession, store_path: str, changed: list, reasoned: bool
+) -> None:
+    """Refresh the ptable/ and extvp/ layouts materialized for the base
+    store (under the store root) or, ``reasoned``, for its closure (under
+    reasoning_layouts/, over base ∪ entailed), after the ``changed``
+    predicates changed. A layout that was never materialized is skipped.
+    Layout manifests are local-FS by bulk_load's contract.
+
+    - Property table: candidates are the old PT predicates ∪ ``changed``,
+      so the rebuild scans only those by_p directories. That is exact
+      both ways: new rows can only DEMOTE a predicate out of
+      functionality, deleted rows can only PROMOTE a changed one in, and
+      an unchanged non-PT predicate cannot change.
+    - ExtVP: only SS/OS pairs involving a changed predicate can differ;
+      untouched pairs keep their files and manifest entries
+      (refresh_extvp). Sizes and the predicate universe come from the
+      merged stats/ parquet, plus one aggregation over the entailed layer
+      for the closure — base and layer are DISJOINT by the layer's
+      anti-join invariant, so counts add. No store re-aggregation."""
+    from d_sparq_spark.operators.extvp import refresh_extvp
+
+    root = os.path.join(store_path, "reasoning_layouts") if reasoned else store_path
+    old_pt = _ptable_manifest_preds(root)
+    has_extvp = os.path.exists(os.path.join(root, "extvp", "manifest.json"))
+    if old_pt is None and not has_extvp:
+        return
+    rel = (
+        reasoned_triples(spark, store_path)
+        if reasoned
+        else store_triples(spark, store_path)
+    )
+    if old_pt is not None:
+        _refresh_ptable_layout(rel, root, sorted(set(old_pt) | set(changed)))
+    if has_extvp:
+        sizes = {r["p"]: r["cnt"] for r in _read_stats_rows(spark, store_path)}
+        if reasoned:
+            for r in (
+                entailed_triples(spark, store_path)
+                .groupBy("p").agg(F.count(F.lit(1)).alias("n")).collect()
+            ):
+                sizes[r["p"]] = sizes.get(r["p"], 0) + r["n"]
+        refresh_extvp(rel, root, changed, sizes=sizes)
 
 
 def _fs_delete(spark: SparkSession, path: str) -> None:
@@ -665,8 +698,8 @@ def _ptable_manifest_preds(layout_root: str):
     """The ptable layout's predicate list, or None when no layout exists.
     An EMPTY list is a live layout with currently no functional predicate
     — kept (rather than rmtree'd) so a later delete can PROMOTE a
-    predicate back in (r10 review #7: a demoted-then-deleted store could
-    otherwise never regain its zero-join star route)."""
+    predicate back in (a demoted-then-deleted store could otherwise never
+    regain its zero-join star route)."""
     path = os.path.join(layout_root, "ptable", "manifest.json")
     if not os.path.exists(path):
         return None
@@ -676,13 +709,28 @@ def _ptable_manifest_preds(layout_root: str):
         return _json.load(f)
 
 
-def _refresh_ptable_layout(
-    spark: SparkSession, rel: DataFrame, layout_root: str, candidates
-) -> None:
-    """THE ptable refresh primitive (r10 review #5 deduplicated the three
-    drifting copies in append_load / delete_load / the reasoned twin):
-    rebuild the property table of ``rel`` restricted to ``candidates``
-    (None = all predicates, the initial materialization), persist under
+def _save_property_table(rel: DataFrame, layout_root: str, candidates) -> bool:
+    """Build the property table of ``rel`` over its functional predicates
+    among ``candidates`` (None = all) and persist it under
+    ``layout_root``; False when no candidate is functional (nothing
+    written). add_property_table caches the pivot for in-session
+    catalogs; a persisted layout is read back from parquet, so the cached
+    copy is released once written instead of staying registered in the
+    session's cache manager."""
+    from d_sparq_spark.plans.catalog import StoreCatalog
+
+    cat = StoreCatalog().add_property_table(rel, predicates=candidates)
+    if cat.ptable is None:
+        return False
+    cat.save_property_table(layout_root)
+    cat.ptable.unpersist()
+    return True
+
+
+def _refresh_ptable_layout(rel: DataFrame, layout_root: str, candidates) -> None:
+    """THE ptable refresh primitive (base and closure layouts): rebuild
+    the property table of ``rel`` restricted to ``candidates`` (None = all
+    predicates, the initial materialization), persist under
     ``layout_root``. When no candidate is functional the DATA is removed
     but an empty manifest stays — the layout remains 'desired', so later
     refreshes keep probing and a deletion that restores functionality
@@ -690,12 +738,7 @@ def _refresh_ptable_layout(
     import json as _json
     import shutil
 
-    from d_sparq_spark.plans.catalog import StoreCatalog
-
-    cat = StoreCatalog().add_property_table(rel, predicates=candidates)
-    if cat.ptable is not None:
-        cat.save_property_table(layout_root)
-    else:
+    if not _save_property_table(rel, layout_root, candidates):
         shutil.rmtree(
             os.path.join(layout_root, "ptable", "data"), ignore_errors=True
         )
@@ -708,55 +751,36 @@ def delete_load(
     spark: SparkSession, nt_path: str, store_path: str,
     plan_sink: list | None = None,
 ) -> dict:
-    """Retraction (r10, VERDICT r9 #2): parse a DELETE delta N-Triples
-    file and remove those triples from an existing store, maintaining
-    stats/, the materialized layouts, and — when a reasoning layer is
-    committed — the entailed/ and sameas/ layers under DRed semantics
-    (rho-df under deletion is non-monotone: an entailment whose every
-    derivation chain is rooted at a deleted row must go; a DELETED base
-    row that other rows still entail must MOVE into the layer). The
-    100 TB lifecycle driver is takedown obligations: deletes arrive as
-    small deltas against a huge store, so every instance-scale scan here
-    is partition-pruned to the touched / premise / derivable predicate
-    directories — O(touched slice), never a store rescan.
+    """Retraction: parse a DELETE delta N-Triples file and remove those
+    triples from an existing store, maintaining stats/, the materialized
+    layouts, and — when a reasoning layer is committed — the entailed/
+    and sameas/ layers under DRed semantics (rho-df under deletion is
+    non-monotone: an entailment whose every derivation chain is rooted at
+    a deleted row must go; a DELETED base row that other rows still
+    entail must MOVE into the layer). The 100 TB lifecycle driver is
+    takedown obligations: deletes arrive as small deltas against a huge
+    store, so every instance-scale scan here is partition-pruned to the
+    touched / premise / derivable predicate directories — O(touched
+    slice), never a store rescan.
 
-    Work: encode the delta against a dictionary slice bounded by the
-    delta's own terms (triples naming unknown terms cannot be stored and
-    drop out of the inner-join encode); rewrite only the touched by_p
-    partitions via dynamic partition overwrite; merge stats as in
-    append_load (untouched predicates keep their rows verbatim; emptied
-    predicates lose their row AND their directory); refresh ptable/extvp
-    over candidate-pruned scans (deletion can PROMOTE a predicate into
-    functionality, so the PT candidates are old ∪ touched). Dictionary
-    ids are never reclaimed — the id space stays a bijection and may
-    gain unused terms (documented garbage; a rebuild compacts).
+    Work: _encode_delta(extend=False) encodes the delta against a
+    dictionary slice bounded by its own terms; only the touched by_p
+    partitions are rewritten, via dynamic partition overwrite
+    (_rewrite_vp_partitions; emptied predicates lose their directory);
+    _refresh_after_vp_write then merges stats/ and refreshes ptable/extvp
+    as for an append (deletion can PROMOTE a predicate into
+    functionality, which the refresh's candidate set covers). Dictionary
+    ids are never reclaimed — the id space stays a bijection and may gain
+    unused terms (documented garbage; a rebuild compacts).
 
     Idempotent and self-healing like append_load: re-delivering a delete
-    delta removes nothing new but re-runs the reasoning maintenance from
-    the full delta, repairing a crash that rewrote by_p but lost the
-    layer updates. ``plan_sink``, when given, receives every
+    delta removes nothing new but re-runs the refreshes and the reasoning
+    maintenance from the full delta, repairing a crash that rewrote by_p
+    but lost them. ``plan_sink``, when given, receives every
     instance-scale plan the operation executes so tests can assert the
     O(touched-slice) shape on the REAL plans."""
-    from d_sparq_spark.operators.dictionary import distinct_terms, encode_triples
-
-    triples = parse_ntriples(spark.read.text(nt_path)).localCheckpoint(eager=False)
-    meta = _read_meta(spark, store_path)
-    buckets = meta["dict_buckets"]
-    full_dict = (
-        _register_dict_table(spark, store_path, buckets)
-        if buckets
-        else spark.read.parquet(os.path.join(store_path, "dict"))
-    )
-    delta_terms = distinct_terms(triples).localCheckpoint(eager=False)
-    n_delta_terms = delta_terms.count()
-    reduced_dict = full_dict.join(delta_terms, "term", "semi")
-    # inner-join encode: a triple naming a term absent from the dictionary
-    # cannot exist in the store — it drops out here by construction
-    enc = (
-        encode_triples(triples, reduced_dict, broadcast_dict=n_delta_terms <= 10_000_000)
-        .dropDuplicates(["s", "p", "o"])
-        .localCheckpoint()
-    )
+    enc, _ = _encode_delta(spark, store_path, nt_path, extend=False)
+    enc = enc.dropDuplicates(["s", "p", "o"]).localCheckpoint()
     touched = [r["p"] for r in enc.select("p").distinct().collect()]
     n_deleted = 0
     touched_del: list = []
@@ -779,46 +803,14 @@ def delete_load(
             )
         _rewrite_vp_partitions(spark, store_path, remaining, touched_del)
     if touched:
-        # stats + layout refresh gated on TOUCHED, not touched_del (r10
-        # review #1): a re-delivered delete after a crash that rewrote
-        # by_p but lost these refreshes finds touched_del empty — the
-        # refreshes must still run, from the full delta's predicate set,
-        # to repair overcounted stats and stale ptable/extvp artifacts
-        # that would otherwise keep serving RETRACTED rows. Idempotent:
-        # recomputation over an already-consistent store is a no-op.
-        store_post = store_triples(spark, store_path)
-        # driver-side kept rows, same rationale as append_load's merge
-        _tset = set(touched)
-        kept = local_df(
-            spark,
-            [
-                (r["p"], r["cnt"], r["ndv_s"], r["ndv_o"])
-                for r in _read_stats_rows(spark, store_path)
-                if r["p"] not in _tset
-            ],
-            "p long, cnt long, ndv_s long, ndv_o long",
-        )
-        recomputed = predicate_stats(store_post.filter(F.col("p").isin(touched)))
-        kept.unionByName(recomputed).write.mode("overwrite").parquet(
-            os.path.join(store_path, "stats")
-        )
-        old_pt = _ptable_manifest_preds(store_path)
-        if old_pt is not None:
-            # deletes can PROMOTE a touched predicate into functionality,
-            # so candidates = old PT ∪ touched (untouched non-PT
-            # predicates cannot change either way)
-            _refresh_ptable_layout(
-                spark, store_post, store_path,
-                candidates=sorted(set(old_pt) | set(touched)),
-            )
-        if os.path.exists(os.path.join(store_path, "extvp", "manifest.json")):
-            from d_sparq_spark.operators.extvp import refresh_extvp
-
-            fresh = _read_stats_rows(spark, store_path)
-            refresh_extvp(
-                store_post, store_path, touched,
-                sizes={r["p"]: r["cnt"] for r in fresh},
-            )
+        # refreshes gated on TOUCHED, not touched_del: a re-delivered
+        # delete after a crash that rewrote by_p but lost these refreshes
+        # finds touched_del empty — the refreshes must still run, from the
+        # full delta's predicate set, to repair overcounted stats and stale
+        # ptable/extvp artifacts that would otherwise keep serving
+        # RETRACTED rows. Idempotent: recomputation over an
+        # already-consistent store is a no-op.
+        _refresh_after_vp_write(spark, store_path, touched)
     if _has_reasoning(store_path):
         # seeded from the FULL encoded delta (not just the rows that were
         # present): a re-delivered delete then self-heals a crash that
@@ -1145,57 +1137,33 @@ def _lookup_terms(spark: SparkSession, store_path: str, terms: list) -> dict:
 
 
 def _ensure_terms(
-    spark: SparkSession, store_path: str, terms: list, lookup_extra: tuple = ()
+    spark: SparkSession, store_path: str, terms: list, lookup_extra: tuple
 ) -> dict:
     """Extend the store dictionary with any of ``terms`` it lacks (the
     ontology vocabulary — class/property names that may never occur in
-    instance data) under the same reserve-then-write watermark discipline
-    as append_load, then return term -> id for all of them. New ids land
-    above the watermark, so rank_ordered flips false when anything is
-    added (honest: the MIN/MAX peel degrades, ids stay a bijection).
+    instance data) through _extend_store_dict, then return term -> id for
+    all of them. New ids land above the watermark, so rank_ordered flips
+    false when anything is added (honest: the MIN/MAX peel degrades, ids
+    stay a bijection).
 
-    ``lookup_extra`` terms ride the FINAL lookup only (r11: the caller's
-    separate sameAs-predicate probe was a whole extra dict-scan job) —
-    they are never added to the dictionary, and absent ones are simply
-    absent from the result."""
-    from d_sparq_spark.operators.dictionary import extend_dictionary
-
+    ``lookup_extra`` terms ride the FINAL lookup only (a separate probe
+    would be a whole extra dict-scan job) — they are never added to the
+    dictionary, and absent ones are simply absent from the result."""
     meta = _read_meta(spark, store_path)
-    buckets = meta["dict_buckets"]
-    existing = spark.read.parquet(os.path.join(store_path, "dict"))
-    watermark = meta["max_id"]
-    if watermark is None:  # legacy manifest: pay the scan once
-        watermark = int(existing.agg(F.max("id").alias("m")).collect()[0]["m"] or 0)
-    n_terms_old = meta["n_terms"]
-    if n_terms_old is None:
-        n_terms_old = existing.count()
-    tdf = local_df(spark, [(t,) for t in sorted(set(terms))], "term string")
-    delta = extend_dictionary(
-        existing, None, base_id=watermark, terms=tdf
-    ).localCheckpoint()
-    from d_sparq_spark.operators.dictionary import numeric_typed_literal
-
-    _dstat = delta.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.max(numeric_typed_literal("term")).alias("typed"),
-    ).first()
-    n_new = _dstat["n"]
-    if n_new:
-        dict_plain = meta["dict_plain"]
-        if dict_plain is not None:
-            dict_plain = bool(dict_plain) and not bool(_dstat["typed"])
-        _write_meta(
-            spark, store_path, rank_ordered=False,
-            n_terms=int(n_terms_old) + int(n_new),
-            max_id=int(watermark) + int(n_new), dict_buckets=buckets,
-            dict_plain=dict_plain,
-        )
-        if buckets:
-            _register_dict_table(spark, store_path, buckets)
-            _write_dict_bucketed(delta, store_path, buckets, mode="append")
-        else:
-            delta.write.mode("append").parquet(os.path.join(store_path, "dict"))
+    _extend_store_dict(
+        spark, store_path, meta,
+        _open_dict(spark, store_path, meta["dict_buckets"]),
+        local_df(spark, [(t,) for t in sorted(set(terms))], "term string"),
+    )
     return _lookup_terms(spark, store_path, list(terms) + list(lookup_extra))
+
+
+def _ontology_vocab(ontology: list) -> list:
+    """The terms a layer needs ids for: rdf:type plus every schema-triple
+    subject and object."""
+    from d_sparq_spark.operators import reasoning as R
+
+    return sorted({R.TYPE} | {t for s, _, o in ontology for t in (s, o)})
 
 
 def _ontology_ids(
@@ -1206,9 +1174,7 @@ def _ontology_ids(
     tampered with — raise rather than silently drop a rule.
     ``lookup_extra``: best-effort extra lookups riding the same dict-scan
     job (absent ones are absent from the result, no error)."""
-    from d_sparq_spark.operators import reasoning as R
-
-    needed = sorted({R.TYPE} | {t for s, _, o in ontology for t in (s, o)})
+    needed = _ontology_vocab(ontology)
     ids = _lookup_terms(spark, store_path, needed + list(lookup_extra))
     missing = [t for t in needed if t not in ids]
     if missing:
@@ -1218,6 +1184,16 @@ def _ontology_ids(
             "dictionary or manifest has been modified out-of-band"
         )
     return ids
+
+
+def _encode_ontology(ids: dict, ontology: list) -> tuple:
+    """(id-encoded ontology, rdf:type id, derivable predicate ids) from
+    the vocabulary's term -> id map."""
+    from d_sparq_spark.operators import reasoning as R
+
+    enc_ont = [(ids[s], p, ids[o]) for s, p, o in ontology]
+    tid = ids[R.TYPE]
+    return enc_ont, tid, R.derived_predicates(enc_ont, type_term=tid)
 
 
 def entailed_triples(spark: SparkSession, store_path: str) -> DataFrame:
@@ -1302,27 +1278,30 @@ def materialize_reasoning(
     the rho-df entailments of the CURRENT triples under ``ontology`` (a
     list of lexical (s, p, o) rdfs:* schema triples) into entailed/, and
     the owl:sameAs canonical map into sameas/map. From then on every
-    append_load maintains both incrementally in O(Δ). Returns layer
-    sizes. The ontology vocabulary is added to the dictionary if absent
-    (reserve-then-write watermark, same as append_load).
+    append_load maintains both incrementally in O(Δ) (_maintain_reasoning)
+    and every delete_load under DRed (_maintain_reasoning_delete). Returns
+    layer sizes. The ontology vocabulary is added to the dictionary if
+    absent (_ensure_terms, the same reserve-then-write extension
+    append_load uses).
 
-    Ontology routing (r10, VERDICT r9 #1): ontologies that pass
-    validate_ontology materialize with the ONE-PASS fixpoint; meta-schema
-    ontologies (rdfs vocabulary in schema positions — the shapes the
-    single pass must reject) route through rdfs_derive_iterative's
-    semi-naive delta rounds instead. The manifest records which mode the
-    layer was built in, and append maintenance iterates the same way —
-    the persisted layer hosts every ontology the batch operators accept.
+    Ontology routing: ontologies that pass validate_ontology materialize
+    with the ONE-PASS fixpoint; meta-schema ontologies (rdfs vocabulary
+    in schema positions — the shapes the single pass must reject) route
+    through rdfs_derive_iterative's semi-naive delta rounds instead. The
+    manifest records which mode the layer was built in, and append
+    maintenance iterates the same way — the persisted layer hosts every
+    ontology the batch operators accept.
 
-    ``materialize=('ptable',)`` (r10, VERDICT r9 #5) additionally builds a
-    property table over the CLOSURE (base ∪ entailed) under
-    reasoning_layouts/ — open_store(reasoning=True) routes qualifying
-    stars through it, restoring the zero-join star wins on reasoned
-    engines (the base ptable/ is derived from the base set only and would
-    silently drop entailed rows, which is why reasoned engines skip it).
-    ``'extvp'`` does the same for the SS/OS semi-join reductions.
-    append_load/delete_load refresh both over scans pruned to the
-    layout's own predicates plus the delta's and the derivable set."""
+    ``materialize=('ptable',)`` additionally builds a property table over
+    the CLOSURE (base ∪ entailed) under reasoning_layouts/ —
+    open_store(reasoning=True) routes qualifying stars through it,
+    restoring the zero-join star wins on reasoned engines (the base
+    ptable/ is derived from the base set only and would silently drop
+    entailed rows, which is why reasoned engines skip it). ``'extvp'``
+    does the same for the SS/OS semi-join reductions. Both maintenance
+    paths refresh them through _refresh_layouts(reasoned=True), over
+    scans pruned to the layout's own predicates plus the delta's and the
+    derivable set."""
     from d_sparq_spark.operators import reasoning as R
     from d_sparq_spark.operators.graph import connected_components
     from d_sparq_spark.sources.triple_store import write_vp
@@ -1337,11 +1316,11 @@ def materialize_reasoning(
     try:
         R.validate_ontology(ontology)
     except R.MetaSchemaOntologyError:
-        # ONLY the documented meta-schema rejection selects iterative mode
-        # (ADVICE r10 #1): a malformed ontology (non-3-tuples etc.) raises
+        # ONLY the documented meta-schema rejection selects iterative
+        # mode: a malformed ontology (non-3-tuples etc.) raises
         # its own error here instead of being silently routed onward.
         mode = "iterative"
-    # re-materialization over an existing store (r10 review #3): layouts a
+    # re-materialization over an existing store: layouts a
     # PREVIOUS materialize_reasoning built but this call does not request
     # would go stale against the new ontology's closure — and open_store
     # would silently route through them. Drop them up front; requested
@@ -1358,23 +1337,20 @@ def materialize_reasoning(
     sid = None
     sid_known = False
     if ontology:
+        # the sameAs predicate rides the vocabulary lookup: a separate
+        # probe would be a whole extra dict-scan job per materialize
         ids = _ensure_terms(
-            spark, store_path,
-            sorted({R.TYPE} | {t for s, _, o in ontology for t in (s, o)}),
+            spark, store_path, _ontology_vocab(ontology),
             lookup_extra=(sameas_pred,),
         )
-        # the sameAs predicate rides the vocabulary lookup (r11): its
-        # separate probe was a whole extra dict-scan job per materialize
         sid = ids.get(sameas_pred)
         sid_known = True
-        enc_ont = [(ids[s], p, ids[o]) for s, p, o in ontology]
-        tid = ids[R.TYPE]
+        enc_ont, tid, dpreds = _encode_ontology(ids, ontology)
         if mode == "iterative":
             # derived-only semi-naive closure; already anti-joined against
             # the (pruned) base inside the loop
             layer = R.rdfs_derive_iterative(store, enc_ont, type_term=tid)
         else:
-            dpreds = R.derived_predicates(enc_ont, type_term=tid)
             derived = R.rdfs_derive(store, enc_ont, type_term=tid)
             base_slice = store.filter(F.col("p").isin(dpreds))
             layer = derived.join(base_slice, ["s", "p", "o"], "left_anti")
@@ -1402,10 +1378,14 @@ def materialize_reasoning(
         # REASONED relation — a derived second value for a subject must
         # demote the predicate); lives under reasoning_layouts/ so the
         # base ptable/ keeps serving non-reasoning engines
-        _refresh_reasoned_ptable(spark, store_path, candidates=None)
+        _refresh_ptable_layout(
+            reasoned_triples(spark, store_path),
+            os.path.join(store_path, "reasoning_layouts"),
+            candidates=None,
+        )
     if "extvp" in materialize:
-        # closure-derived ExtVP semi-join reductions (r10, VERDICT r9
-        # residual #3): computed over base ∪ entailed so routing a
+        # closure-derived ExtVP semi-join reductions: computed over
+        # base ∪ entailed so routing a
         # reasoned star/path through them never drops entailed rows
         from d_sparq_spark.operators.extvp import materialize_extvp
 
@@ -1421,66 +1401,6 @@ def materialize_reasoning(
         "n_entailed": entailed_triples(spark, store_path).count(),
         "n_sameas_mapped": sameas_map(spark, store_path).count(),
     }
-
-
-def _reasoned_ptable_manifest(store_path: str) -> str:
-    return os.path.join(store_path, "reasoning_layouts", "ptable", "manifest.json")
-
-
-def _reasoned_extvp_manifest(store_path: str) -> str:
-    return os.path.join(store_path, "reasoning_layouts", "extvp", "manifest.json")
-
-
-def _reasoned_sizes(spark: SparkSession, store_path: str) -> dict:
-    """Per-predicate row counts of the CLOSURE (base ∪ entailed) — the
-    ratio denominators for the reasoned-ExtVP refresh. Base counts come
-    from the already-merged stats/ parquet (no store scan); the entailed
-    layer adds one aggregation over its own (small) partitions. The two
-    are DISJOINT by the layer's anti-join invariant, so counts add."""
-    sizes = {
-        r["p"]: r["cnt"] for r in _read_stats_rows(spark, store_path)
-    }
-    for r in (
-        entailed_triples(spark, store_path)
-        .groupBy("p").agg(F.count(F.lit(1)).alias("n")).collect()
-    ):
-        sizes[r["p"]] = sizes.get(r["p"], 0) + r["n"]
-    return sizes
-
-
-def _refresh_reasoned_extvp(
-    spark: SparkSession, store_path: str, touched: list
-) -> None:
-    """Incremental refresh of the closure-derived ExtVP after maintenance:
-    only pairs involving a touched (delta or derivable) predicate
-    recompute, over the reasoned relation, with sizes from stats +
-    entailed counts — same contract as the base refresh_extvp path."""
-    from d_sparq_spark.operators.extvp import refresh_extvp
-
-    refresh_extvp(
-        reasoned_triples(spark, store_path),
-        os.path.join(store_path, "reasoning_layouts"),
-        touched,
-        sizes=_reasoned_sizes(spark, store_path),
-    )
-
-
-def _refresh_reasoned_ptable(
-    spark: SparkSession, store_path: str, candidates: list | None
-) -> None:
-    """(Re)build the closure-derived property table under
-    reasoning_layouts/. ``candidates=None`` (initial materialization)
-    checks every predicate; a maintenance refresh passes the layout's old
-    predicates ∪ the delta's ∪ the derivable set — exact both ways
-    (appends only demote; deletes only promote touched), so the scan
-    stays partition-pruned to those by_p directories instead of
-    re-reading the store."""
-    _refresh_ptable_layout(
-        spark,
-        reasoned_triples(spark, store_path),
-        os.path.join(store_path, "reasoning_layouts"),
-        candidates,
-    )
 
 
 def _entailment_delta(
@@ -1507,9 +1427,7 @@ def _entailment_delta(
 
     if ids is None:  # callers on the maintenance hot path pass them in
         ids = _ontology_ids(spark, store_path, ontology)
-    enc_ont = [(ids[s], p, ids[o]) for s, p, o in ontology]
-    tid = ids[R.TYPE]
-    dpreds = R.derived_predicates(enc_ont, type_term=tid)
+    enc_ont, tid, dpreds = _encode_ontology(ids, ontology)
     base_slice = store_triples(spark, store_path).filter(F.col("p").isin(dpreds))
     # layer rows are all within dpreds by construction; the filter keeps
     # the scan partition-pruned even so (uniform O(Δ)-shape plan)
@@ -1520,8 +1438,7 @@ def _entailment_delta(
             known=base_slice.unionByName(ent), plan_sink=plan_sink,
         )
     derived = R.rdfs_derive(delta_set, enc_ont, type_term=tid)
-    # ONE anti-join against (base ∪ layer) instead of two (r12, guide
-    # §2.4): same row set — not-in-base AND not-in-layer == not in their
+    # ONE anti-join against (base ∪ layer) instead of two: same row set — not-in-base AND not-in-layer == not in their
     # union — with one join build/probe pass instead of two
     out = derived.join(
         base_slice.unionByName(ent), ["s", "p", "o"], "left_anti"
@@ -1532,39 +1449,29 @@ def _entailment_delta(
 
 
 def _maintain_reasoning(
-    spark: SparkSession, store_path: str, delta_set: DataFrame,
-    touched: list | None = None,
+    spark: SparkSession, store_path: str, delta_set: DataFrame, touched: list
 ) -> None:
     """O(Δ) maintenance of both persisted layers after an append (called
     by append_load once the delta is in by_p). ``touched`` = the delta's
     predicate ids (metadata-scale, already collected by append_load) —
-    feeds the reasoned-ptable refresh's candidate pruning."""
+    with the derivable set, the changed predicates of the closure layouts
+    (_refresh_layouts)."""
     from d_sparq_spark.operators.graph import connected_components
     from d_sparq_spark.sources.triple_store import write_vp
 
     ontology, sameas_pred, mode = _read_reasoning_manifest(spark, store_path)
     dpreds: list = []
-    if touched is None and (
-        ontology
-        or os.path.exists(_reasoned_ptable_manifest(store_path))
-        or os.path.exists(_reasoned_extvp_manifest(store_path))
-    ):
-        touched = [r["p"] for r in delta_set.select("p").distinct().collect()]
     sid = None
     sid_known = False
     if ontology:
-        from d_sparq_spark.operators import reasoning as R
-
-        # the sameAs predicate rides the same dict-scan job (r11)
+        # the sameAs predicate rides the same dict-scan job
         ids = _ontology_ids(
             spark, store_path, ontology, lookup_extra=(sameas_pred,)
         )
         sid = ids.get(sameas_pred)
         sid_known = True
-        dpreds = R.derived_predicates(
-            [(ids[s], p, ids[o]) for s, p, o in ontology], type_term=ids[R.TYPE]
-        )
-        # base/entailed DISJOINTNESS under re-assertion (r10 review #2):
+        _, _, dpreds = _encode_ontology(ids, ontology)
+        # base/entailed DISJOINTNESS under re-assertion:
         # a delta row that restates an ENTAILED triple just landed in
         # by_p, so its copy must LEAVE the layer — otherwise the closure
         # union double-counts it (duplicate SPARQL bindings, spurious
@@ -1592,19 +1499,9 @@ def _maintain_reasoning(
         ).localCheckpoint()  # pin: written INTO the layer it reads
         if new_ent.take(1):
             write_vp(new_ent, os.path.join(store_path, "entailed"), mode="append")
-    if os.path.exists(_reasoned_ptable_manifest(store_path)):
-        import json as _json
-
-        with open(_reasoned_ptable_manifest(store_path)) as f:
-            old_preds = _json.load(f)
-        _refresh_reasoned_ptable(
-            spark, store_path,
-            candidates=sorted(set(old_preds) | set(touched) | set(dpreds)),
-        )
-    if os.path.exists(_reasoned_extvp_manifest(store_path)):
-        _refresh_reasoned_extvp(
-            spark, store_path, sorted(set(touched) | set(dpreds))
-        )
+    _refresh_layouts(
+        spark, store_path, sorted(set(touched) | set(dpreds)), reasoned=True
+    )
     if not sid_known:
         sid = _lookup_terms(spark, store_path, [sameas_pred]).get(sameas_pred)
     if sid is None:
@@ -1635,8 +1532,8 @@ def _maintain_reasoning_delete(
     spark: SparkSession, store_path: str, deleted: DataFrame, touched: list,
     plan_sink: list | None = None,
 ) -> None:
-    """DRed maintenance of both persisted layers after a delete_load
-    (r10, VERDICT r9 #2). ``deleted`` is the full encoded delete delta
+    """DRed maintenance of both persisted layers after a delete_load.
+    ``deleted`` is the full encoded delete delta
     (deduped); ``touched`` its predicate ids.
 
     Entailed layer — delete/re-derive, sound by rule UNARITY: every
@@ -1667,10 +1564,9 @@ def _maintain_reasoning_delete(
     dpreds: list = []
     deleted = deleted.select("s", "p", "o")
     if ontology:
-        ids = _ontology_ids(spark, store_path, ontology)
-        enc_ont = [(ids[s], p, ids[o]) for s, p, o in ontology]
-        tid = ids[R.TYPE]
-        dpreds = R.derived_predicates(enc_ont, type_term=tid)
+        enc_ont, tid, dpreds = _encode_ontology(
+            _ontology_ids(spark, store_path, ontology), ontology
+        )
         ppreds = R.premise_predicates(enc_ont, type_term=tid)
         derive = (
             (lambda df: R.rdfs_derive_iterative(df, enc_ont, type_term=tid))
@@ -1728,19 +1624,9 @@ def _maintain_reasoning_delete(
             _rewrite_vp_partitions(
                 spark, os.path.join(store_path, "entailed"), new_slice, cand_preds
             )
-    if os.path.exists(_reasoned_ptable_manifest(store_path)):
-        import json as _json
-
-        with open(_reasoned_ptable_manifest(store_path)) as f:
-            old_preds = _json.load(f)
-        _refresh_reasoned_ptable(
-            spark, store_path,
-            candidates=sorted(set(old_preds) | set(touched) | set(dpreds)),
-        )
-    if os.path.exists(_reasoned_extvp_manifest(store_path)):
-        _refresh_reasoned_extvp(
-            spark, store_path, sorted(set(touched) | set(dpreds))
-        )
+    _refresh_layouts(
+        spark, store_path, sorted(set(touched) | set(dpreds)), reasoned=True
+    )
 
     sid = _lookup_terms(spark, store_path, [sameas_pred]).get(sameas_pred)
     if sid is None:

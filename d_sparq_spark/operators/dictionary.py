@@ -188,8 +188,8 @@ def append_ids(
 
 def distinct_terms(triples: DataFrame) -> DataFrame:
     """One-column (term) relation of the DISTINCT terms across a triple/
-    quad frame's s/p/o(/g) — the shared front half of build_dictionary,
-    extend_dictionary, and append_load's dictionary-slice reduction."""
+    quad frame's s/p/o(/g): the delta term set the store loaders extend
+    the dictionary with and reduce it to before an encode."""
     cols = _positions(triples)
     # single pass (r11): explode(array(s,p,o[,g])) reads the source once,
     # where the per-position union re-scanned it len(cols) times
@@ -201,21 +201,14 @@ def distinct_terms(triples: DataFrame) -> DataFrame:
 
 def extend_dictionary(
     dictionary: DataFrame,
-    triples: DataFrame,
+    terms: DataFrame,
     base_id: int | None = None,
-    terms: DataFrame | None = None,
 ) -> DataFrame:
-    """Delta dictionary rows (id, term, kind) for the terms of ``triples``
-    that the existing dictionary lacks — build_dictionary's incremental
-    sibling (same kind classification). ``base_id`` as in append_ids.
-    ``terms`` lets a caller that already computed distinct_terms(triples)
-    (append_load pins it for the dictionary-slice reduction too) pass it
-    in instead of paying the union+distinct shuffle twice (review r7)."""
-    delta = append_ids(
-        dictionary,
-        terms if terms is not None else distinct_terms(triples),
-        base_id=base_id,
-    )
+    """Delta dictionary rows (id, term, kind) for the ``terms`` (a one-
+    column term relation, e.g. distinct_terms of a delta) that the
+    existing dictionary lacks — build_dictionary's incremental sibling
+    (same kind classification). ``base_id`` as in append_ids."""
+    delta = append_ids(dictionary, terms, base_id=base_id)
     return delta.withColumn(
         "kind", F.when(F.col("term").rlike(_IRI_RE), "iri").otherwise("literal")
     )

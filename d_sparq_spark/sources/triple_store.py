@@ -1,23 +1,21 @@
-"""Triple-store layouts at rest (SURVEY §2.A A9/A10, §1.2).
+"""Triple-store layout at rest (SURVEY §2.A A9/A10, §1.2).
 
 The reference bulk-loads subject-grouped documents into per-node MongoDB
 collections placed by METIS partition, with boundary triples replicated so
-star/path joins are node-local. Spark replaces all of that with two
-columnar Parquet layouts:
+star/path joins are node-local. Spark replaces all of that with one
+columnar Parquet layout:
 
 - ``by_p/``  — partitionBy('p'): vertical partitioning (one directory per
   predicate, the S2RDF "VP" layout). A pattern with a bound predicate
   prunes to one directory — Catalyst partition pruning IS the predicate
   index.
-- ``by_s``   — bucketBy(n, 's') sorted by s: star joins (self-joins on s)
-  become co-partitioned joins with NO shuffle, the analogue of MongoDB's
-  subject grouping + METIS placement. Bucketed tables need the session
-  catalog (saveAsTable), so this layout lives in the warehouse.
+
+Placement is left to broadcast joins and AQE; subject-grouped stars are
+served by the optional property table (plans/catalog.py).
 
 At 100 TB: by_p holds ~|P| directories (RDF predicate counts are small,
 typically < 10k); within each, row-group min/max on s gives secondary
-pruning. Bucket count should be sized so each bucket*predicate slice fits
-an executor (e.g. 4096 buckets for 100 TB).
+pruning.
 """
 
 from __future__ import annotations
@@ -66,17 +64,3 @@ def read_vp(spark: SparkSession, base_path: str) -> DataFrame:
     no partitions reads as empty."""
     return spark.read.schema(VP_SCHEMA).parquet(f"{base_path}/by_p")
 
-
-def write_bucketed(triples_enc: DataFrame, table: str, buckets: int = 32) -> None:
-    """Subject-bucketed catalog table for shuffle-free star self-joins."""
-    (
-        triples_enc.write.mode("overwrite")
-        .bucketBy(buckets, "s")
-        .sortBy("s")
-        .format("parquet")
-        .saveAsTable(table)
-    )
-
-
-def read_bucketed(spark: SparkSession, table: str) -> DataFrame:
-    return spark.table(table)

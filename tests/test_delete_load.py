@@ -341,3 +341,53 @@ def test_ptable_demote_then_delete_promotes_back(spark, tmp_path):
     ids = {v: k for k, v in _terms(spark, store).items()}
     with open(mpath) as f:
         assert ids["p:one"] in json.load(f)  # promoted back in
+
+
+def test_delete_layout_refresh_matches_full_rematerialization(spark, tmp_path):
+    """The delete side of the shared stats/layout refresh: after a delete
+    that touches one predicate (it promotes p:y into functionality and
+    changes the ratio of the OS(p:y, p:z) reduction), the ExtVP manifest,
+    the ptable manifest and the stats/ rows equal fresh builds over the
+    post-delete store."""
+    from d_sparq_spark.operators.extvp import materialize_extvp
+    from d_sparq_spark.operators.rdf_patterns import predicate_stats
+    from d_sparq_spark.plans.catalog import StoreCatalog
+
+    base = _nt(tmp_path / "b.nt", [
+        "<s:a> <p:x> <s:b>", "<s:d> <p:x> <s:e>",
+        "<s:b> <p:y> <s:c>", "<s:e> <p:y> <s:f>", "<s:e> <p:y> <s:g>",
+        "<s:c> <p:z> <s:a>",
+    ])
+    store = str(tmp_path / "s")
+    bulk_load(spark, base, store, materialize=("ptable", "extvp"))
+    delete_load(spark, _nt(tmp_path / "x.nt", ["<s:e> <p:y> <s:g>"]), store)
+    after = store_triples(spark, store)
+
+    def extvp_entries(root):
+        with open(os.path.join(root, "extvp", "manifest.json")) as f:
+            return sorted(
+                (e["kind"], e["p1"], e["p2"], e["ratio"]) for e in json.load(f)
+            )
+
+    full_store = str(tmp_path / "full")
+    materialize_extvp(after, full_store)
+    assert extvp_entries(store) == extvp_entries(full_store)
+    assert len(extvp_entries(store)) > 0
+
+    cat = StoreCatalog().add_property_table(after)
+    want_pt = sorted(cat.pt_preds, key=str)
+    cat.ptable.unpersist()
+    with open(os.path.join(store, "ptable", "manifest.json")) as f:
+        got_pt = json.load(f)
+    ids = {v: k for k, v in _terms(spark, store).items()}
+    assert got_pt == want_pt and ids["p:y"] in got_pt
+
+    stats = sorted(
+        tuple(r) for r in spark.read.parquet(os.path.join(store, "stats"))
+        .select("p", "cnt", "ndv_s", "ndv_o").collect()
+    )
+    want_stats = sorted(
+        tuple(r) for r in predicate_stats(after)
+        .select("p", "cnt", "ndv_s", "ndv_o").collect()
+    )
+    assert stats == want_stats

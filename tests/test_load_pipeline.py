@@ -529,6 +529,31 @@ def test_append_extvp_refresh_matches_full_rematerialization(spark, tmp_path):
     assert len(incremental) > 0
 
 
+def test_persisted_ptable_leaves_no_cached_dataframe(spark, tmp_path):
+    """A persisted property table is read back from parquet, so building
+    it must not leave its cached pivot registered in the session: the
+    cache manager stays empty through bulk_load, append_load and
+    delete_load on a ptable store (a leftover entry is recached by path
+    on every later by_p write and checked against every query plan)."""
+    import os
+
+    from d_sparq_spark.load_pipeline import append_load, delete_load
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    base = _nt(tmp_path / "cb.nt", [
+        '<s:a> <p:name> "A"', '<s:b> <p:name> "B"', '<s:a> <p:age> "1"',
+    ])
+    store = str(tmp_path / "store_cache")
+    bulk_load(spark, base, store, materialize=("ptable",))
+    assert os.path.exists(os.path.join(store, "ptable", "data"))
+    assert cache.isEmpty(), "bulk_load left a cached DataFrame"
+    append_load(spark, _nt(tmp_path / "ca.nt", ['<s:c> <p:name> "C"']), store)
+    assert cache.isEmpty(), "append_load left a cached DataFrame"
+    delete_load(spark, _nt(tmp_path / "cd.nt", ['<s:a> <p:age> "1"']), store)
+    assert cache.isEmpty(), "delete_load left a cached DataFrame"
+
+
 def test_open_store_no_jobs_and_bound_subject_star_scans_ptable(
     spark, tmp_path, jobs_fired
 ):
