@@ -26,10 +26,17 @@ over a BGP) therefore never touch a string until the final decode.
 
 from __future__ import annotations
 
+from dataclasses import replace
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from d_sparq_spark.operators.rdf_patterns import TriplePattern, _is_var
+from d_sparq_spark.operators.rdf_patterns import (
+    TriplePattern,
+    _is_var,
+    _stats_dict,
+    planning_stats,
+)
 from d_sparq_spark.plans import ast as A
 from d_sparq_spark.plans.parser import parse_sparql
 from d_sparq_spark.plans.translate import Translator
@@ -42,22 +49,26 @@ _STRUCTURAL = (A.BGP, A.Join, A.LeftJoin, A.Union, A.Minus, A.Values, A.Graph)
 def _subst_expr_vars(e, mapping: dict):
     """Rewrite Var(v) -> Var(mapping[v]) throughout an expression tree
     (frozen dataclasses: rebuilds the changed spine)."""
-    if isinstance(e, A.Var):
-        return A.Var(mapping.get(e.name, e.name)) if e.name in mapping else e
-    if isinstance(e, A.BinOp):
-        right = (
-            [_subst_expr_vars(i, mapping) for i in e.right]
-            if isinstance(e.right, (list, tuple))
-            else _subst_expr_vars(e.right, mapping)
-        )
-        return A.BinOp(e.op, _subst_expr_vars(e.left, mapping), right)
-    if isinstance(e, A.UnOp):
-        return A.UnOp(e.op, _subst_expr_vars(e.operand, mapping))
-    if isinstance(e, A.FuncCall):
-        return A.FuncCall(e.name, tuple(_subst_expr_vars(a, mapping) for a in e.args))
-    if isinstance(e, A.Aggregate) and e.arg is not None:
-        return A.Aggregate(e.func, _subst_expr_vars(e.arg, mapping), e.distinct, e.separator)
-    return e
+
+    def sub(e):
+        if isinstance(e, A.Var):
+            return A.Var(mapping[e.name]) if e.name in mapping else e
+        if isinstance(e, A.BinOp):
+            right = (
+                [sub(i) for i in e.right]
+                if isinstance(e.right, (list, tuple))
+                else sub(e.right)
+            )
+            return A.BinOp(e.op, sub(e.left), right)
+        if isinstance(e, A.UnOp):
+            return A.UnOp(e.op, sub(e.operand))
+        if isinstance(e, A.FuncCall):
+            return A.FuncCall(e.name, tuple(sub(a) for a in e.args))
+        if isinstance(e, A.Aggregate) and e.arg is not None:
+            return replace(e, arg=sub(e.arg))
+        return e
+
+    return sub(e)
 
 
 class _EncodedTranslator(Translator):
@@ -110,38 +121,21 @@ class _EncodedTranslator(Translator):
         )
 
     def eval(self, node) -> DataFrame:
-        if isinstance(node, _Precomputed):
-            # already-computed child (the nested-aggregate Group rebuild
-            # below) — returned here so super().eval's _group dispatch
-            # can consume it without the instance-level eval hook
-            return node.df
         if isinstance(node, A.Bind):
-            # nested BIND via shadow columns (r7, VERDICT r6 #7): decode
-            # only the referenced encoded variables, compute the value
-            # over the lexical shadows, drop the shadows — the bindings
-            # stay encoded for every surrounding join. Only reachable for
-            # binds _check_structural proved never feed an ID join.
+            # nested BIND via shadow columns: the value is computed over
+            # lexical shadows, the bindings stay encoded for every
+            # surrounding join. Only reachable for binds _check_structural
+            # proved never feed an ID join.
             child = self.eval(node.child)
-            dtypes = dict(child.dtypes)
-            enc = sorted(
-                v
-                for v in A.expr_vars(node.expr)
-                if dtypes.get(v) == "bigint" and v not in self.bind_cols
-            )
-            if enc:
-                shadowed = self._decode_shadow(child, enc)
-                e = _subst_expr_vars(node.expr, {v: f"__lex__{v}" for v in enc})
-                out = shadowed.withColumn(node.var, self.expr(e, shadowed)).select(
-                    *child.columns, node.var
-                )
-            else:
-                out = child.withColumn(node.var, self.expr(node.expr, child))
+            src, (e,) = self._shadowed(child, [node.expr])
+            out = src.withColumn(node.var, self.expr(e, src))
+            if src is not child:
+                out = out.select(*child.columns, node.var)
             self.bind_cols.add(node.var)
             return out
         if isinstance(node, A.Group):
-            # Nested aggregates over the encoded store (r8, VERDICT r7 #3
-            # — r7 shipped COUNT only). Per aggregate, the cheapest sound
-            # route:
+            # Nested aggregates over the encoded store. Per aggregate, the
+            # cheapest sound route:
             # - COUNT(*/var): ids preserve multiplicity and boundness —
             #   runs over ids, output a plain long (bind_cols).
             # - MIN/MAX(var) over an id column when the engine's
@@ -152,91 +146,54 @@ class _EncodedTranslator(Translator):
             #   with the other bindings).
             # - everything else (SUM/AVG/GROUP_CONCAT/SAMPLE, expression
             #   args, MIN/MAX without the order guarantee): the shadow-
-            #   decode device proven on nested BIND/FILTER — decode ONLY
-            #   the referenced id columns, aggregate the lexical shadows
-            #   with the base translator's value semantics, output is a
-            #   lexical value (bind_cols). Grouping keys stay ids either
-            #   way (the dictionary is a bijection, so groups and
-            #   multiplicities are identical).
+            #   decode device of nested BIND/FILTER — aggregate the
+            #   lexical shadows with the base translator's value
+            #   semantics, output is a lexical value (bind_cols).
+            #   Grouping keys stay ids either way (the dictionary is a
+            #   bijection, so groups and multiplicities are identical).
             child = self.eval(node.child)
             dtypes = dict(child.dtypes)
 
             def _is_id(v: str) -> bool:
                 return dtypes.get(v) == "bigint" and v not in self.bind_cols
 
-            shadow_vars: set = set()
-            new_aggs: list = []
+            aggs = list(node.aggs)
+            lexical: list = []  # indices of aggregates over lexical shadows
             id_outputs: set = set()
             reencode: set = set()
-            for name, a in node.aggs:
+            for i, (name, a) in enumerate(aggs):
                 if a.func == "count" and (
                     a.arg is None or isinstance(a.arg, A.Var)
                 ):
-                    new_aggs.append((name, a))
                     continue
-                if (
+                over_id = (
                     a.func in ("min", "max", "sample")
                     and isinstance(a.arg, A.Var)
                     and _is_id(a.arg.name)
-                    and self.value_order_safe()
-                ):
+                )
+                if over_id and self.value_order_safe():
                     # (sample == F.min: under the value-order guarantee,
                     # min(id) decodes to the lexically-min term — the same
                     # deterministic SAMPLE the lexical engine returns)
-                    new_aggs.append((name, a))
                     id_outputs.add(name)
                     continue
-                if (
-                    a.func in ("min", "max", "sample")
-                    and isinstance(a.arg, A.Var)
-                    and _is_id(a.arg.name)
-                ):
-                    # shadow aggregate, then RE-ENCODE (r9, VERDICT r8 #5):
-                    # min_by/max_by/sample return one of their INPUT terms,
-                    # so the output is guaranteed a dictionary term — the
-                    # term->id join is TOTAL and the output is a genuine id
-                    # again (it may feed later ID joins; the decode-early
-                    # fallback for this shape is gone). NULL input (all-
-                    # OPTIONAL-unbound group) stays NULL = unbound, exactly
-                    # the lexical engine's semantics.
-                    shadow_vars.add(a.arg.name)
-                    new_aggs.append((
-                        name,
-                        A.Aggregate(
-                            a.func, A.Var(f"__lex__{a.arg.name}"),
-                            a.distinct, a.separator,
-                        ),
-                    ))
+                if over_id:
+                    # shadow aggregate, then RE-ENCODE: min_by/max_by/
+                    # sample return one of their INPUT terms, so the
+                    # output is guaranteed a dictionary term — the
+                    # term->id join is TOTAL and the output is a genuine
+                    # id again (it may feed later ID joins). NULL input
+                    # (all-OPTIONAL-unbound group) stays NULL = unbound,
+                    # exactly the lexical engine's semantics.
                     reencode.add(name)
-                    continue
-                vs = sorted(
-                    v
-                    for v in (A.expr_vars(a.arg) if a.arg is not None else ())
-                    if _is_id(v)
-                )
-                shadow_vars.update(vs)
-                new_aggs.append(
-                    (
-                        name,
-                        A.Aggregate(
-                            a.func,
-                            _subst_expr_vars(
-                                a.arg, {v: f"__lex__{v}" for v in vs}
-                            )
-                            if a.arg is not None
-                            else None,
-                            a.distinct,
-                            a.separator,
-                        ),
-                    )
-                )
-            src = (
-                self._decode_shadow(child, sorted(shadow_vars))
-                if shadow_vars
-                else child
-            )
-            g = _shallow_with_child(node, _Precomputed(src))
-            g.aggs = new_aggs
+                if a.arg is not None:
+                    lexical.append(i)
+            src, args = self._shadowed(child, [aggs[i][1].arg for i in lexical])
+            for i, arg in zip(lexical, args):
+                name, a = aggs[i]
+                aggs[i] = (name, replace(a, arg=arg))
+            g = _shallow_with_child(node, A.Precomputed(src))
+            g.aggs = aggs
             # super(), not self: dispatching the rebuilt Group through
             # this method again would re-enter this branch forever
             out = super().eval(g)
@@ -263,12 +220,37 @@ class _EncodedTranslator(Translator):
             bn = F.broadcast(bn)
         return result.select(F.col("o").alias("n")).join(bn, "n", "left_semi")
 
+    def _shadowed(self, df: DataFrame, exprs: list) -> tuple[DataFrame, list]:
+        """The shadow-decode device for value expressions over encoded
+        bindings: ``df`` plus a lexical shadow column ``__lex__v`` for
+        every encoded variable the expressions read, and the expressions
+        rewritten to read the shadows (_decode_shadow). A bind_cols
+        column is skipped: a numeric nested-BIND output is bigint but
+        holds a VALUE, not a dictionary id, and decoding it would null it
+        out. With nothing to shadow, ``df`` is returned as is: each
+        DataFrame operation is a Py4J round trip."""
+        dtypes = dict(df.dtypes)
+        enc = sorted(
+            {
+                v
+                for e in exprs
+                for v in A.expr_vars(e)
+                if dtypes.get(v) == "bigint" and v not in self.bind_cols
+            }
+        )
+        if not enc:
+            return df, list(exprs)
+        names = {v: f"__lex__{v}" for v in enc}
+        return (
+            self._decode_shadow(df, enc),
+            [_subst_expr_vars(e, names) for e in exprs],
+        )
+
     def _decode_shadow(self, df: DataFrame, variables: list[str]) -> DataFrame:
         """One dictionary join per referenced encoded column — never the
         store, never unreferenced columns; broadcast only when the
         engine's size gate allows. Delegates to decode_columns' shadow
-        mode (review r4: this was the second drifted copy of the same
-        per-column prefixed join)."""
+        mode."""
         from d_sparq_spark.operators.dictionary import decode_columns
 
         return decode_columns(
@@ -300,42 +282,20 @@ class _EncodedTranslator(Translator):
         return df
 
     def _apply_leftjoin_condition(self, j: DataFrame, cond) -> DataFrame:
-        """OPTIONAL's LeftJoin condition over encoded bindings: same
-        shadow-decode device as _filter — the referenced id columns get
-        lexical shadows, the expression runs over them, the shadows drop
-        (r6: the condition used to compare raw dictionary ids)."""
-        dtypes = dict(j.dtypes)
-        # bind_cols: a numeric nested-BIND output is bigint but holds a
-        # VALUE, not a dictionary id — shadow-decoding it would null it
-        # out (review r7); it is used directly, like any lexical column
-        enc = sorted(
-            v
-            for v in A.expr_vars(cond)
-            if dtypes.get(v) == "bigint" and v not in self.bind_cols
-        )
-        if not enc:
-            return super()._apply_leftjoin_condition(j, cond)
-        shadowed = self._decode_shadow(j, enc)
-        e = _subst_expr_vars(cond, {v: f"__lex__{v}" for v in enc})
-        # delegate the filter body to the base class so the error-to-false
-        # semantics live in ONE place (drifted-copy prevention, r6)
-        return super()._apply_leftjoin_condition(shadowed, e).select(*j.columns)
+        """OPTIONAL's LeftJoin condition over encoded bindings, through
+        the shadow-decode device; the filter body stays in the base class
+        so the error-to-false semantics live in one place."""
+        src, (e,) = self._shadowed(j, [cond])
+        out = super()._apply_leftjoin_condition(src, e)
+        return out if src is j else out.select(*j.columns)
 
     def _filter(self, node: A.Filter) -> DataFrame:
         if isinstance(node.expr, A.ExistsExpr):
             return super()._filter(node)
         child = self.eval(node.child)
-        dtypes = dict(child.dtypes)
-        enc = sorted(
-            v
-            for v in A.expr_vars(node.expr)
-            if dtypes.get(v) == "bigint" and v not in self.bind_cols
-        )
-        if not enc:
-            return child.filter(self.expr(node.expr, child))
-        shadowed = self._decode_shadow(child, enc)
-        e = _subst_expr_vars(node.expr, {v: f"__lex__{v}" for v in enc})
-        return shadowed.filter(self.expr(e, shadowed)).select(*child.columns)
+        src, (e,) = self._shadowed(child, [node.expr])
+        out = src.filter(self.expr(e, src))
+        return out if src is child else out.select(*child.columns)
 
 
 class EncodedSparqlEngine:
@@ -357,7 +317,7 @@ class EncodedSparqlEngine:
         breaks it) — the MIN/MAX group peel relies on decode(min(id)) ==
         min(term); a hash- or append-ordered dictionary would silently
         return the wrong term there while decode/COUNT/DISTINCT
-        (bijection-only) keep working (review r4). With the flag False
+        (bijection-only) keep working. With the flag False
         the peel keeps only COUNT aggregates encoded and decodes before
         MIN/MAX instead — correct at the cost of a bigger decode join.
         open_store reads the flag from the store's meta/ parquet, so an
@@ -379,13 +339,13 @@ class EncodedSparqlEngine:
         self.triples = triples_enc
         self.dict_rank_ordered = dict_rank_ordered
         self.dict = dictionary.select("id", "term")
-        # load-time dictionary metadata (r12, VERDICT r11 #3): the
-        # broadcast-size gate and the typed-literal plainness probe are
-        # engine-CONSTRUCTION costs re-paid per query because the driver
-        # contract builds a fresh engine each call — when the caller
-        # already knows them (store manifest, load stats, a shared
-        # session cache), seed them here and both probe jobs disappear.
-        # None = compute lazily on first use, exactly as before.
+        # load-time dictionary metadata: the broadcast-size gate and the
+        # typed-literal plainness probe are engine-CONSTRUCTION costs
+        # re-paid per query because the query harness builds a fresh
+        # engine each call — when the caller already knows them (store
+        # manifest, load stats, a shared session cache), seed them here
+        # and both probe jobs disappear. None = compute lazily on first
+        # use.
         self._dict_small: bool | None = (
             None if dict_n_terms is None else dict_n_terms <= 10_000_000
         )
@@ -393,69 +353,46 @@ class EncodedSparqlEngine:
         # engine-lifetime pin cache shared by every per-query translator
         # (a per-translator list would never reach its eviction cap)
         self._qpins: list = []
-        self._empty_store: DataFrame | None = None  # see _empty_lex
+        self._lex: Translator | None = None  # see _empty_lex
         self.catalog = catalog
         self.services = services or {}
-        # a precomputed stats dict skips the per-engine aggregation (r8;
-        # same rationale as SparqlEngine)
+        # a precomputed stats dict skips the per-engine aggregation (same
+        # rationale as SparqlEngine)
         if stats is None and collect_stats:
-            stats = {  # count + approx ndv, same single scan as SparqlEngine
-                r["p"]: (r["cnt"], r["ndv_s"], r["ndv_o"])
-                for r in triples_enc.groupBy("p")
-                .agg(
-                    F.count(F.lit(1)).alias("cnt"),
-                    F.approx_count_distinct("s").alias("ndv_s"),
-                    F.approx_count_distinct("o").alias("ndv_o"),
-                )
-                .collect()
-            }
+            stats = _stats_dict(planning_stats(triples_enc))
         self._stats = stats
 
     # -- term -> id rewriting ------------------------------------------------
 
-    def _collect_constants(self, node, out: set) -> None:
-        if isinstance(node, A.BGP):
-            for tp in node.patterns:
-                if isinstance(tp, A.PropSetPattern):
-                    terms = (tp.s, *tp.preds, *tp.inv_preds, tp.o)
-                elif isinstance(tp, A.AltPath):
-                    terms = (tp.s, tp.o)
-                    for br in tp.branches:
-                        self._collect_constants(A.BGP(list(br)), out)
-                elif isinstance(tp, A.ClosurePattern):
-                    terms = (tp.s, tp.o)
-                    self._collect_constants(A.BGP(list(tp.patterns)), out)
-                else:
-                    terms = (tp.s, tp.p, tp.o)
-                for t in terms:
-                    if not _is_var(t):
-                        out.add(t)
-        if isinstance(node, A.Values):
-            for row in node.rows:
-                out.update(v for v in row if v is not None)
-        if isinstance(node, A.Graph) and not _is_var(node.term):
-            out.add(node.term)
-        if isinstance(node, A.Describe):
-            out.update(t for t in node.terms if not _is_var(t))
-        if isinstance(node, A.Service):
-            raise NotImplementedError(
-                "EncodedSparqlEngine: SERVICE federates lexical stores — "
-                "endpoint stores have their own dictionaries (decode-early "
-                "fallback handles this internally)"
-            )
-        for sub in A.subnodes(node):
-            self._collect_constants(sub, out)
+    @staticmethod
+    def _collect_constants(node, out: set) -> None:
+        for n in A.walk(node):
+            if isinstance(n, A.BGP):
+                for tp in n.patterns:
+                    out.update(t for t in A.pattern_terms(tp) if not _is_var(t))
+            if isinstance(n, A.Values):
+                for row in n.rows:
+                    out.update(v for v in row if v is not None)
+            if isinstance(n, A.Graph) and not _is_var(n.term):
+                out.add(n.term)
+            if isinstance(n, A.Describe):
+                out.update(t for t in n.terms if not _is_var(t))
+            if isinstance(n, A.Service):
+                raise NotImplementedError(
+                    "EncodedSparqlEngine: SERVICE federates lexical stores — "
+                    "endpoint stores have their own dictionaries (decode-early "
+                    "fallback handles this internally)"
+                )
 
-    def _values_terms_present(self, node, ids: dict) -> bool:
-        if isinstance(node, A.Values):
-            if any(
-                v is not None and v not in ids for row in node.rows for v in row
-            ):
-                return False
-        for sub in A.subnodes(node):
-            if not self._values_terms_present(sub, ids):
-                return False
-        return True
+    @staticmethod
+    def _values_terms_present(node, ids: dict) -> bool:
+        return not any(
+            v is not None and v not in ids
+            for n in A.walk(node)
+            if isinstance(n, A.Values)
+            for row in n.rows
+            for v in row
+        )
 
     def _rewrite(self, node, ids: dict):
         def rid(t):
@@ -529,34 +466,18 @@ class EncodedSparqlEngine:
         output variable never collides with one of these stays a purely
         lexical column — safe to carry through the encoded plan."""
         out: set = set()
-
-        def pat(p) -> None:
-            for a in ("s", "p", "o"):
-                v = getattr(p, a, None)
-                if isinstance(v, str) and v.startswith("?"):
-                    out.add(v[1:])
-            for sub in getattr(p, "patterns", ()) or ():
-                pat(sub)
-            for br in getattr(p, "branches", ()) or ():
-                for sub in br:
-                    pat(sub)
-
-        stack = [node]
-        while stack:
-            n = stack.pop()
-            if n is None:
-                continue
+        for n in A.walk(node):
             if isinstance(n, A.BGP):
-                for p in n.patterns:
-                    pat(p)
-                continue
+                out.update(
+                    t[1:]
+                    for p in n.patterns
+                    for t in A.pattern_terms(p)
+                    if _is_var(t)
+                )
             if isinstance(n, A.Values):
                 out |= set(n.varnames)
-            if isinstance(n, A.Graph):
-                t = n.term
-                if isinstance(t, str) and t.startswith("?"):
-                    out.add(t[1:])
-            stack.extend(A.subnodes(n))
+            if isinstance(n, A.Graph) and _is_var(n.term):
+                out.add(n.term[1:])
         return out
 
     @staticmethod
@@ -567,16 +488,11 @@ class EncodedSparqlEngine:
         MIN/MAX-over-ids outputs are genuine ids, but including them here
         only makes the static gate conservative, never wrong)."""
         out: set = set()
-        stack = [node]
-        while stack:
-            n = stack.pop()
-            if n is None:
-                continue
+        for n in A.walk(node):
             if isinstance(n, A.Bind):
                 out.add(n.var)
             if isinstance(n, A.Group):
                 out.update(name for name, _a in n.aggs)
-            stack.extend(A.subnodes(n))
         return out
 
     def _check_structural(self, node, id_vars: set | None = None) -> None:
@@ -681,7 +597,7 @@ class EncodedSparqlEngine:
         if isinstance(root, (A.Modify, A.InsertData, A.DeleteData, A.GraphManage)):
             # UPDATE mutates the store: the encoded engine's store is an
             # immutable relation and _rewrite never visits Modify.where
-            # (review r5) — fail with intent instead of a raw eval
+            # — fail with intent instead of a raw eval
             # TypeError (or, worse, a future encoded path matching nothing
             # because WHERE constants were never rewritten to ids)
             raise NotImplementedError(
@@ -765,20 +681,15 @@ class EncodedSparqlEngine:
             decoded = self._decode(
                 bound, [c for c in bound.columns if c not in tr.bind_cols]
             )
-            lex = self._empty_lex()
             for w in reversed(wrappers):  # innermost (OrderBy) first
-                decoded = _eval_with_precomputed(
-                    lex, _shallow_with_child(w, _Precomputed(decoded))
-                )
+                decoded = self._reapply(w, decoded)
             if len(root.template) > 1 and any(
                 isinstance(w, A.Slice) for w in wrappers
             ):
                 # same re-execution hazard as Translator._construct: a
                 # LIMIT re-runs per template part — pin the solution set
                 decoded = decoded.localCheckpoint(eager=False)
-            return _eval_with_precomputed(
-                lex, A.Construct(root.template, _Precomputed(decoded))
-            )
+            return self._reapply(root, decoded)
 
         structural, wrappers = self._split(root)
         # Check the WHOLE structural subtree, not just binary roots.
@@ -793,7 +704,6 @@ class EncodedSparqlEngine:
         structural = self._rewrite(structural, ids)
         tr = self._translator()
         bound = tr.eval(structural)
-        lex = self._empty_lex()
 
         # Decode as LATE as possible: wrappers that are ID-safe run over the
         # encoded longs first, so the decode join touches the smallest
@@ -801,25 +711,22 @@ class EncodedSparqlEngine:
         # instead of raw bindings). ID-safe because the dictionary is a
         # bijection (DISTINCT, COUNT, plain projection) and rank-ordered
         # (decode(min(id)) == min(term) for MIN/MAX).
-        def _apply_enc(df, w):
-            return _eval_with_precomputed(lex, _shallow_with_child(w, _Precomputed(df)))
-
         node_df, decoded_cols = bound, None
         while wrappers:
             w = wrappers[-1]
             if isinstance(w, A.Distinct) or (
                 isinstance(w, A.Project) and not w.exprs
             ):
-                node_df = _apply_enc(node_df, wrappers.pop())
+                node_df = self._reapply(wrappers.pop(), node_df)
                 continue
             # MIN/MAX over ids is only order-preserving when the
             # dictionary is rank-ordered AND holds no numeric typed
             # literals (rank = lexical order; MIN/MAX compare typed
-            # numerics by VALUE since r6, matching ORDER BY) — otherwise
+            # numerics by VALUE, matching ORDER BY) — otherwise
             # the peel is restricted to COUNT and decodes before MIN/MAX.
             # The dictionary probe runs ONLY for a peel-shaped Group with
             # min/max aggregates — any other wrapper reaching this check
-            # must not pay a data-sized dict scan (review r6 round 2).
+            # must not pay a data-sized dict scan.
             if (
                 isinstance(w, A.Group)
                 and all(k in node_df.columns for k in w.keys)
@@ -833,15 +740,14 @@ class EncodedSparqlEngine:
                     or (self.dict_rank_ordered and self._dict_value_order_safe())
                 )
             ):
-                node_df = _apply_enc(node_df, wrappers.pop())
+                node_df = self._reapply(wrappers.pop(), node_df)
                 # counts stay plain longs; only keys and min/max are IDs.
-                # May legitimately be [] (keyless COUNT — review r6: the
-                # old `w.keys` guard skipped the peel on the most common
-                # aggregate shape, decoding the whole store under a row
-                # count); the decode below distinguishes [] from None.
-                # min/max over a nested-BIND column computed a lexical
-                # VALUE, not an id — decoding its alias would null it
-                # (review r7).
+                # May legitimately be [] (keyless COUNT, the most common
+                # aggregate shape: skipping its peel would decode the
+                # whole store under a row count); the decode below
+                # distinguishes [] from None. min/max over a nested-BIND
+                # column computed a lexical VALUE, not an id — decoding
+                # its alias would null it.
                 decoded_cols = list(w.keys) + [
                     v
                     for v, a in w.aggs
@@ -862,8 +768,7 @@ class EncodedSparqlEngine:
 
         # re-apply remaining value-level nodes over the lexical bindings
         for w in reversed(wrappers):
-            w_shallow = _shallow_with_child(w, _Precomputed(node_df))
-            node_df = _eval_with_precomputed(lex, w_shallow)
+            node_df = self._reapply(w, node_df)
         return node_df
 
     def _translator(self) -> "_EncodedTranslator":
@@ -879,19 +784,28 @@ class EncodedSparqlEngine:
             ),
         )
 
+    def _reapply(self, wrapper, df: DataFrame) -> DataFrame:
+        """Evaluate one peeled wrapper node over already-computed
+        bindings ``df``, through the engine's lexical translator."""
+        return self._empty_lex().eval(
+            _shallow_with_child(wrapper, A.Precomputed(df))
+        )
+
     def _empty_lex(self) -> Translator:
-        """A FRESH lexical Translator over an empty store — used to
+        """The engine's lexical Translator over an empty store — used to
         re-apply peeled value-level wrappers and CONSTRUCT templates over
-        already-decoded bindings (the store relation is never touched).
-        The empty DataFrame is built once per engine (createDataFrame is
-        ~35 Py4J calls) and is immutable, so concurrent queries share it;
-        the Translator is not shared, because _eval_with_precomputed
-        patches its eval for the duration of one call."""
-        if self._empty_store is None:
-            self._empty_store = self.triples.sparkSession.createDataFrame(
-                [], "s string, p string, o string"
+        already-decoded bindings (Precomputed leaves; the store relation
+        is never touched). Built once per engine (createDataFrame is ~35
+        Py4J calls) and shared by concurrent queries: evaluation keeps no
+        per-query state on the translator. Two first calls racing may
+        each build one; either is correct and one is kept."""
+        if self._lex is None:
+            self._lex = Translator(
+                self.triples.sparkSession.createDataFrame(
+                    [], "s string, p string, o string"
+                )
             )
-        return Translator(self._empty_store)
+        return self._lex
 
     def _dict_value_order_safe(self) -> bool:
         """True when NO dictionary term is a numeric typed literal —
@@ -948,31 +862,9 @@ class EncodedSparqlEngine:
         )
 
 
-class _Precomputed:
-    """Algebra leaf wrapping an already-computed DataFrame."""
-
-    def __init__(self, df: DataFrame):
-        self.df = df
-
-
 def _shallow_with_child(node, child):
     import copy
 
     n = copy.copy(node)
     n.child = child
     return n
-
-
-def _eval_with_precomputed(tr: Translator, node) -> DataFrame:
-    orig_eval = tr.eval
-
-    def eval_hook(n):
-        if isinstance(n, _Precomputed):
-            return n.df
-        return orig_eval(n)
-
-    tr.eval = eval_hook  # type: ignore[method-assign]
-    try:
-        return tr.eval(node)
-    finally:
-        tr.eval = orig_eval  # type: ignore[method-assign]

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from d_sparq_spark.localdata import local_df
+from d_sparq_spark.operators.rdf_patterns import _stats_dict, planning_stats
 
 from d_sparq_spark.plans.parser import parse_sparql
 from d_sparq_spark.plans.translate import Translator
@@ -47,24 +48,12 @@ class SparqlEngine:
         self.triples = triples
         # a precomputed stats dict skips the per-engine aggregation — the
         # query harness constructs one engine per call over the SAME cached
-        # store, so it memoizes the collect once per session (r8)
+        # store, so it memoizes the collect once per session
         if stats is None and collect_stats:
             # A7+A11 ordering wants count AND distinct-subject/object
-            # cardinality per predicate (rdf_patterns.order_by_selectivity's
-            # join-cardinality model). approx_count_distinct keeps this the
-            # SAME single scan the count-only collection was — the HLL
-            # sketches ride the existing groupBy — and the optimizer only
-            # needs the order of magnitude (exact ndv would triple the cost)
-            stats = {
-                r["p"]: (r["cnt"], r["ndv_s"], r["ndv_o"])
-                for r in triples.groupBy("p")
-                .agg(
-                    F.count(F.lit(1)).alias("cnt"),
-                    F.approx_count_distinct("s").alias("ndv_s"),
-                    F.approx_count_distinct("o").alias("ndv_o"),
-                )
-                .collect()
-            }
+            # cardinality per predicate: one groupBy scan with HLL ndv
+            # sketches (rdf_patterns.planning_stats)
+            stats = _stats_dict(planning_stats(triples))
         self._translator = Translator(triples, stats, services=services, catalog=catalog)
 
     def query(self, sparql: str) -> DataFrame:
@@ -103,7 +92,7 @@ class SparqlEngine:
         on = ["s", "p", "o"] + (["g"] if is_quad else [])
         # schema in the FIXED (s,p,o[,g]) row order ground_df/instantiate
         # build — t.dtypes order would scramble values on a store whose
-        # columns arrive in another order (review r6)
+        # columns arrive in another order
         dtypes = dict(t.dtypes)
         schema = ", ".join(f"{c} {dtypes[c]}" for c in on)
 
@@ -140,7 +129,7 @@ class SparqlEngine:
 
         # SPARQL 1.1 Update mints template bnodes FRESH for every solution
         # of every EXECUTION: re-running the same update must create new
-        # entities, not silently anti-join into a no-op (review r4). The
+        # entities, not silently anti-join into a no-op. The
         # execution token is drawn ONCE here on the driver and baked into
         # the plan as a literal, so Spark task retries within this call
         # stay deterministic; callers needing bit-identical replans (the
@@ -247,9 +236,9 @@ class SparqlEngine:
                 # INSERT DATA blank nodes mint FRESH nodes per execution
                 # (spec: a DATA bnode denotes a new node, not the label) —
                 # route through the same instantiation as Modify templates
-                # over the unit solution (review r6: the label used to be
-                # inserted verbatim, so re-running the request anti-joined
-                # into a no-op instead of creating a new node).
+                # over the unit solution (a label inserted verbatim would
+                # make a re-run of the request anti-join into a no-op
+                # instead of creating a new node).
                 unit = spark.range(1).select()
                 new = instantiate(tree.triples, unit, tree.quads)
             else:
@@ -278,7 +267,7 @@ class SparqlEngine:
                 # An explicit GRAPH inside the WHERE would escape that
                 # scope per spec — this subset rejects the combination
                 # instead of silently evaluating g-inside-g to empty.
-                if self._contains_graph_node(where):
+                if any(isinstance(n, A.Graph) for n in A.walk(where)):
                     raise SyntaxError(
                         "SPARQL UPDATE: GRAPH inside WHERE does not "
                         "combine with WITH in this subset — drop WITH and "
@@ -307,18 +296,6 @@ class SparqlEngine:
                 out = out.unionByName(ins.join(out, on, "left_anti"))
             return out
         raise ValueError("SparqlEngine.update: not an UPDATE request — use query()")
-
-    @staticmethod
-    def _contains_graph_node(node) -> bool:
-        from d_sparq_spark.plans import ast as A
-
-        stack = [node]
-        while stack:
-            n = stack.pop()
-            if isinstance(n, A.Graph):
-                return True
-            stack.extend(A.subnodes(n))
-        return False
 
     def _graph_manage(self, node, t: DataFrame, is_quad: bool) -> DataFrame:
         """Graph management ops, functional like update(). On a triple

@@ -60,27 +60,32 @@ class Aggregate:
     separator: str = " "  # GROUP_CONCAT
 
 
-def expr_vars(e, out: set | None = None) -> set:
-    """Variable names referenced by an expression tree — the single
-    walker shared by the parser (DISTINCT+ORDER BY projection check) and
-    the encoded engine (shadow-decode column pruning). New expression
-    node types must be handled HERE, once."""
-    if out is None:
-        out = set()
-    if isinstance(e, Var):
-        out.add(e.name)
-    elif isinstance(e, BinOp):
-        expr_vars(e.left, out)
-        items = e.right if isinstance(e.right, (list, tuple)) else [e.right]
-        for i in items:
-            expr_vars(i, out)
+def expr_nodes(e):
+    """Every node of an expression tree, pre-order: ``e`` itself, then
+    its operands (a BinOp's right side may be an IN list). The single
+    expression walker; new expression node types must be handled HERE,
+    once. An EXISTS group is algebra, not expression: ``walk`` reaches it
+    through the enclosing Filter."""
+    yield e
+    if isinstance(e, BinOp):
+        yield from expr_nodes(e.left)
+        for i in e.right if isinstance(e.right, (list, tuple)) else (e.right,):
+            yield from expr_nodes(i)
     elif isinstance(e, UnOp):
-        expr_vars(e.operand, out)
+        yield from expr_nodes(e.operand)
     elif isinstance(e, FuncCall):
         for a in e.args:
-            expr_vars(a, out)
+            yield from expr_nodes(a)
     elif isinstance(e, Aggregate) and e.arg is not None:
-        expr_vars(e.arg, out)
+        yield from expr_nodes(e.arg)
+
+
+def expr_vars(e, out: set | None = None) -> set:
+    """Variable names referenced by an expression tree (added to ``out``
+    when given)."""
+    if out is None:
+        out = set()
+    out.update(n.name for n in expr_nodes(e) if isinstance(n, Var))
     return out
 
 
@@ -141,6 +146,27 @@ class AltPath:
     s: object
     branches: tuple  # tuple[tuple[TriplePattern|PathPattern|PropSetPattern, ...], ...]
     o: object
+
+
+def pattern_terms(p):
+    """Every term of one BGP pattern, pre-order: the subject, a plain or
+    path pattern's predicate, a predicate set's members (^-members
+    included), the terms of the patterns nested in a composite path
+    (closure inner path, alternative branches), then the object."""
+    yield p.s
+    if isinstance(p, PropSetPattern):
+        yield from p.preds
+        yield from p.inv_preds
+    elif isinstance(p, ClosurePattern):
+        for q in p.patterns:
+            yield from pattern_terms(q)
+    elif isinstance(p, AltPath):
+        for branch in p.branches:
+            for q in branch:
+                yield from pattern_terms(q)
+    else:
+        yield p.p
+    yield p.o
 
 
 @dataclass
@@ -276,6 +302,15 @@ class Graph:
 
 
 @dataclass
+class Precomputed:
+    """Algebra leaf holding an already-computed solution DataFrame: a
+    wrapper node (ORDER BY, GROUP, CONSTRUCT, ...) re-applied over
+    bindings computed elsewhere takes one as its child."""
+
+    df: object
+
+
+@dataclass
 class SelectQuery:
     # HAVING never travels separately: the parser folds it into the tree
     # as a Filter over the Group (spec-form aggregate lifting)
@@ -349,17 +384,28 @@ class GraphManage:
 
 def subnodes(node):
     """Algebra children of a node, by the tree's container conventions:
-    left/right/child attributes, Modify's WHERE group, and the group
-    inside an EXISTS/NOT EXISTS filter expression. The single child
-    enumerator the engine walkers share (review r4: four hand-rolled
-    copies of this loop each had to repeat the EXISTS special case, and
-    all of them silently skipped Modify.where)."""
-    for attr in ("left", "right", "child", "where"):
+    left/right/child attributes, a SelectQuery's root, Modify's WHERE
+    group, and the group inside an EXISTS/NOT EXISTS filter expression.
+    Walk a whole tree with ``walk``; a walker that needs its own scoping
+    or pruning rules loops over this instead of repeating the EXISTS and
+    Modify.where cases."""
+    for attr in ("left", "right", "child", "root", "where"):
         sub = getattr(node, attr, None)
         if sub is not None and not isinstance(sub, (str, list, tuple)):
             yield sub
     if isinstance(node, Filter) and isinstance(node.expr, ExistsExpr):
         yield node.expr.group
+
+
+def walk(node):
+    """Every algebra node under ``node``, itself included, pre-order over
+    ``subnodes`` (EXISTS groups and Modify's WHERE included, left before
+    right). A None root yields nothing."""
+    stack = [] if node is None else [node]
+    while stack:
+        n = stack.pop()
+        yield n
+        stack.extend(reversed(list(subnodes(n))))
 
 
 def scope_vars(node) -> set:

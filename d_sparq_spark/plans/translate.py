@@ -173,6 +173,8 @@ class Translator:
     # ------------- algebra -------------
 
     def eval(self, node) -> DataFrame:
+        if isinstance(node, A.Precomputed):
+            return node.df
         if isinstance(node, A.BGP):
             return self._bgp(node)
         if isinstance(node, A.Join):
@@ -185,11 +187,11 @@ class Translator:
             unit = not left.columns
             if unit:
                 # zero-column left (ground pattern / unit solution): keep
-                # its ROW COUNT through the join — the old special branch
-                # returned right's rows even when the ground pattern
-                # matched NOTHING, and lost multiplicity otherwise
-                # (review r6). A marker column makes the general
-                # left-outer path handle 0, 1, and N rows uniformly.
+                # its ROW COUNT through the join (right's rows alone would
+                # survive a ground pattern that matched NOTHING, and lose
+                # multiplicity otherwise). A marker column makes the
+                # general left-outer path handle 0, 1, and N rows
+                # uniformly.
                 left = left.withColumn("__unit", F.lit(1))
             if node.cond is None:
                 out = self._join_compat(
@@ -206,12 +208,12 @@ class Translator:
             gv = self.graph_var
             # the hidden GRAPH ?g column is an implementation detail, not
             # a user variable: it must NOT satisfy MINUS's domain-overlap
-            # rule (review r6 — with g counted, a right pattern matching
+            # rule (with g counted, a right pattern matching
             # anything in the same graph removed left rows the spec
             # keeps), but it MUST still correlate the two sides (per-graph
             # evaluation), so it joins as an always-equal key.
             #
-            # Exception (advice r6): when ?g occurs EXPLICITLY in the
+            # Exception: when ?g occurs EXPLICITLY in the
             # right pattern's own syntax, the spec scopes that occurrence
             # to the MINUS right — within each graph it ranges FREELY
             # over matching terms (the {?g -> graph} binding joins in
@@ -290,8 +292,8 @@ class Translator:
             # equality on BOTH sides: no UNDEF in the VALUES rows AND every
             # shared variable certainly bound in the child — a child var
             # OPTIONAL left NULL is compatible with any VALUES binding and
-            # an equi-join would drop that solution (review r5; the same
-            # rule _join_compat applies via certain_vars)
+            # an equi-join would drop that solution (the same rule
+            # _join_compat applies via certain_vars)
             child_certain = A.certain_vars(node.child)
             if not has_undef and all(v in child_certain for v in shared):
                 return join_bindings(child, vdf)
@@ -300,7 +302,7 @@ class Translator:
             # silently drop the row); VALUES is query-literal-sized, so
             # the conditioned broadcast join costs nothing at any scale.
             # Reconcile dtypes first: an all-UNDEF column types as string
-            # while the child side may carry bigint ids (review r5).
+            # while the child side may carry bigint ids.
             child, vdf = self._reconcile_shared_types(child, vdf, shared)
             rv = vdf
             for v in shared:
@@ -518,83 +520,55 @@ class Translator:
         inner pattern over that graph's slice (partition-prunable when the
         store is written partitionBy('g')). Variable graph: g is carried
         as one more BINDING COLUMN through every pattern scan — a single
-        plan, no per-graph union, no driver-side graph enumeration (the
-        r1 scale fix: a store with 10k named graphs is one join plan, not
-        a 10k-branch union). Property paths ride the same route: closure
-        fixpoints take g as a group column (paths.py), so reachability is
-        per-graph inside one shared loop. The per-graph driver loop
-        remains only for ?g-capturing wrappers (computed alias / GROUP
-        key / BIND / VALUES naming ?g) and for ?g bound inside an
-        OPTIONAL's right side (eager scan equality would be an illegal
-        outer-join filter pushdown — r9 golden); the graph list there is
-        metadata-scale, and sliced spawns carry quad_store so nested
-        GRAPH inside the loop re-activates over the full dataset
-        (see _graph_column_ok)."""
+        plan, no per-graph union, no driver-side graph enumeration (a
+        store with 10k named graphs is one join plan, not a 10k-branch
+        union). Property paths ride the same route: closure fixpoints
+        take g as a group column (paths.py), so reachability is per-graph
+        inside one shared loop. A pattern-free group is evaluated once
+        and extended to every graph. The per-graph driver loop remains
+        only for ?g-capturing wrappers (computed alias / GROUP key / BIND
+        / VALUES naming ?g) and for ?g bound inside an OPTIONAL's right
+        side (eager scan equality would be an illegal outer-join filter
+        pushdown); the graph list there is metadata-scale, and sliced
+        spawns carry quad_store so nested GRAPH inside the loop
+        re-activates over the full dataset (see _graph_column_ok)."""
         if "g" in self.triples.columns:
             quads = self.triples
         elif self.quad_store is not None:
             # this translator evaluates a per-graph SLICE (g dropped); a
             # nested GRAPH re-activates over the FULL dataset, per spec
-            # (r9: the per-graph loop used to make nested GRAPH raise)
             quads = self.quad_store
         else:
             raise ValueError("SPARQL GRAPH requires a quad store (g column)")
         term = node.term
-        if isinstance(term, str) and term.startswith("?"):
-            route = self._graph_column_ok(node.child, term[1:])
-            if route:
-                name = term[1:]
-                sub = self._spawn(quads, self.stats, graph_var=name,
-                                  quad_store=quads)
-                out = sub.eval(node.child)
-                if name not in out.columns:
-                    # every store touch sat under a NESTED GRAPH/SERVICE
-                    # (r8): those solutions are independent of the
-                    # enclosing active graph, so extend with one row per
-                    # named graph — the same device as the pattern-free
-                    # route, still one plan
-                    gdf = quads.select(F.col("g").alias(name)).distinct()
-                    out = out.crossJoin(gdf)
-                elif route == "guarded":
-                    # nested nodes present: a nested child may have BOUND
-                    # the graph variable itself (BIND/VALUES/subselect —
-                    # an ordinary column, possibly naming no graph), or a
-                    # UNION branch without patterns may have left it NULL.
-                    # Apply the named-graph compatibility rule (review
-                    # r8): bound must name an existing graph, unbound
-                    # expands to one row per graph. Skipped on the
-                    # "plain" route, where g only ever comes from quad
-                    # scans and is a real graph by construction.
-                    gdf = quads.select(F.col("g").alias(name)).distinct()
-                    nn = out.filter(F.col(name).isNotNull()).join(
-                        gdf, name, "left_semi"
-                    )
-                    nu = out.filter(F.col(name).isNull()).drop(name).crossJoin(gdf)
-                    out = nn.unionByName(nu)
+        if not (isinstance(term, str) and term.startswith("?")):
+            sub = self._spawn(
+                quads.filter(F.col("g") == F.lit(term)).drop("g"), self.stats,
+                quad_store=quads,
+            )
+            return sub.eval(node.child)
+        name = term[1:]
+        route = self._graph_column_ok(node.child, name)
+        if route:
+            sub = self._spawn(quads, self.stats, graph_var=name,
+                              quad_store=quads)
+            out = sub.eval(node.child)
+            if route == "plain" and name in out.columns:
+                # g only ever comes from quad scans: a real graph by
+                # construction, no compatibility extension needed
                 return out
-            name = term[1:]
-            if self._pattern_free(node.child, name):
-                # pattern-free group (VALUES-only / FILTER over literals /
-                # empty group): its solutions are graph-INDEPENDENT, so
-                # eval once and join with the distinct-graph relation as a
-                # plain column — no driver collect, no per-graph plans
-                # (r7, VERDICT r6 #4). A solution that already binds ?g
-                # (VALUES naming it) joins per the compatibility rule:
-                # bound -> must name an existing graph, unbound -> one
-                # row per graph.
-                inner = self._spawn(quads, self.stats).eval(node.child)
-                gdf = quads.select(F.col("g").alias(name)).distinct()
-                if name in inner.columns:
-                    nn = inner.filter(F.col(name).isNotNull()).join(
-                        gdf, name, "left_semi"
-                    )
-                    nu = (
-                        inner.filter(F.col(name).isNull())
-                        .drop(name)
-                        .crossJoin(gdf)
-                    )
-                    return nn.unionByName(nu)
-                return inner.crossJoin(gdf)
+            # "guarded": a nested child may have BOUND the graph variable
+            # itself (BIND/VALUES/subselect — an ordinary column, possibly
+            # naming no graph), or a UNION branch without patterns may
+            # have left it NULL; and when every store touch sat under a
+            # nested GRAPH/SERVICE, the solutions are independent of the
+            # enclosing active graph and ?g has no column at all
+        elif self._pattern_free(node.child, name):
+            # pattern-free group (VALUES-only / FILTER over literals /
+            # empty group): its solutions are graph-INDEPENDENT, so eval
+            # once — no driver collect, no per-graph plans
+            out = self._spawn(quads, self.stats).eval(node.child)
+        else:
             global GRAPH_FALLBACK_LOOPS
             GRAPH_FALLBACK_LOOPS += 1
             g_type = dict(quads.dtypes)["g"]  # keep lit dtype == store dtype
@@ -608,14 +582,13 @@ class Translator:
                     quad_store=quads,
                 )
                 part = sub.eval(node.child)
-                name = term[1:]
                 glit = F.lit(gv).cast(g_type)
                 if name in part.columns:
                     # the inner pattern reuses the graph variable:
                     # compatibility semantics — keep solutions whose
                     # binding is unbound or equals this graph, then fill
-                    # (withColumn used to OVERWRITE the inner binding and
-                    # fabricate matches, review r6)
+                    # (withColumn would OVERWRITE the inner binding and
+                    # fabricate matches)
                     part = part.filter(
                         F.col(name).isNull() | (F.col(name) == glit)
                     ).withColumn(name, F.coalesce(F.col(name), glit))
@@ -625,11 +598,15 @@ class Translator:
             return reduce(
                 lambda a, b: a.unionByName(b, allowMissingColumns=True), parts
             )
-        sub = self._spawn(
-            quads.filter(F.col("g") == F.lit(term)).drop("g"), self.stats,
-            quad_store=quads,
-        )
-        return sub.eval(node.child)
+        # the named-graph compatibility extension, still one plan: a
+        # bound ?g must name an existing graph, an unbound one expands to
+        # one row per graph
+        gdf = quads.select(F.col("g").alias(name)).distinct()
+        if name not in out.columns:
+            return out.crossJoin(gdf)
+        nn = out.filter(F.col(name).isNotNull()).join(gdf, name, "left_semi")
+        nu = out.filter(F.col(name).isNull()).drop(name).crossJoin(gdf)
+        return nn.unionByName(nu)
 
     @staticmethod
     def _pattern_free(node, gname: str) -> bool:
@@ -639,30 +616,9 @@ class Translator:
         group's solutions are identical for every graph, so one
         evaluation cross-joined with the distinct-graph relation
         replaces the per-graph driver loop."""
-
-        def has_exists(e) -> bool:
-            if isinstance(e, A.ExistsExpr):
-                return True
-            if isinstance(e, A.BinOp):
-                items = e.right if isinstance(e.right, (list, tuple)) else [e.right]
-                return has_exists(e.left) or any(has_exists(i) for i in items)
-            if isinstance(e, A.UnOp):
-                return has_exists(e.operand)
-            if isinstance(e, A.FuncCall):
-                return any(has_exists(a) for a in e.args)
-            if isinstance(e, A.Aggregate):
-                return e.arg is not None and has_exists(e.arg)
-            return False
-
-        stack = [node]
-        while stack:
-            n = stack.pop()
-            if n is None:
-                continue
-            if isinstance(n, A.BGP):
-                if n.patterns:
-                    return False
-                continue
+        for n in A.walk(node):
+            if isinstance(n, A.BGP) and n.patterns:
+                return False
             if isinstance(n, (A.Graph, A.Service)):
                 return False
             exprs: list = []
@@ -677,9 +633,11 @@ class Translator:
             if isinstance(n, A.OrderBy):
                 exprs.extend(e for e, _ in n.keys)
             for e in exprs:
-                if has_exists(e) or gname in A.expr_vars(e):
-                    return False
-            stack.extend(A.subnodes(n))
+                for x in A.expr_nodes(e):
+                    if isinstance(x, A.ExistsExpr) or (
+                        isinstance(x, A.Var) and x.name == gname
+                    ):
+                        return False
         return True
 
     @staticmethod
@@ -704,7 +662,7 @@ class Translator:
         left-joins the distinct-graph list back in so empty graphs still
         yield their COUNT()=0 solution.
 
-        NESTED GRAPH/SERVICE (r8, VERDICT r7 #7): a nested GRAPH ?h with
+        NESTED GRAPH/SERVICE: a nested GRAPH ?h with
         patterns is NOT a fallback reason — its child is evaluated by its
         own spawned translator (graph_var=h), binding BOTH graph variables
         from quad columns in one plan; a nested GRAPH ?g (shadowing) binds
@@ -714,9 +672,8 @@ class Translator:
         touch sits under a nested node the enclosing ?g never gets a
         column — that is fine exactly when nothing reads ?g during child
         evaluation (_graph extends with one row per named graph after);
-        otherwise fall back. Before r8 ANY nested GRAPH took the per-graph
-        driver loop, which drops the g column and made the nested shape
-        unanswerable outright."""
+        otherwise fall back. (The per-graph driver loop drops the g column,
+        which would make the nested shape unanswerable outright.)"""
         stack, saw_pattern = [node], False
         saw_nested, reads_g = False, False
         while stack:
@@ -730,7 +687,7 @@ class Translator:
                 # an outer-join filter pushdown — it turns "a compatible
                 # right match exists but the outer graph join drops the
                 # merged solution" into "no right match, left row kept
-                # NULL-extended" (extra rows; golden r9, pre-existing).
+                # NULL-extended" (extra rows).
                 # Inner/EXISTS/MINUS positions stay eager-safe: inner joins
                 # commute with the filter, EXISTS uses substitution
                 # semantics, MINUS only removes compatible (g-equal) rows.
@@ -767,9 +724,8 @@ class Translator:
             if isinstance(n, A.Project):
                 # a SELECT list that NAMES ?g projects the hidden quad
                 # column itself (the active graph — _apply_project keeps
-                # it), so it stays on the single-plan route (r9, VERDICT
-                # r8 #6; this used to take the per-graph driver loop).
-                # Only a COMPUTED alias (expr AS ?g) is an arbitrary
+                # it), so it stays on the single-plan route. Only a
+                # COMPUTED alias (expr AS ?g) is an arbitrary
                 # value and must fall back.
                 if any(name == gname for name, _ in n.exprs):
                     return False
@@ -787,12 +743,7 @@ class Translator:
                     return False  # pattern-free leaf: g would stay unbound
                 if gname in n.varnames:
                     return False
-            if isinstance(n, A.Filter) and isinstance(n.expr, A.ExistsExpr):
-                stack.append(n.expr.group)
-            for attr in ("left", "right", "child"):
-                sub = getattr(n, attr, None)
-                if sub is not None and not isinstance(sub, (str, list, tuple)):
-                    stack.append(sub)
+            stack.extend(A.subnodes(n))
         if saw_pattern:
             # "guarded" when nested nodes exist: a nested child can bind
             # or NULL the graph variable, so _graph must post-apply the
@@ -814,43 +765,16 @@ class Translator:
         branch there); Bind/Values bindings are rejected globally by the
         caller's own checks."""
         tv = "?" + gname
-
-        def pat_mentions(p) -> bool:
-            for a in ("s", "p", "o"):
-                if getattr(p, a, None) == tv:
-                    return True
-            for sub in getattr(p, "patterns", ()) or ():
-                if pat_mentions(sub):
-                    return True
-            for br in getattr(p, "branches", ()) or ():
-                for sub in br:
-                    if pat_mentions(sub):
-                        return True
-            return False
-
-        stack = [node]
-        while stack:
-            n = stack.pop()
-            if n is None:
-                continue
-            if isinstance(n, A.BGP):
-                if any(pat_mentions(p) for p in n.patterns):
-                    return True
-                continue
-            if isinstance(n, A.Graph) and n.term == tv:
-                return True
-            stack.extend(A.subnodes(n))
-        return False
+        return any(
+            (isinstance(n, A.BGP)
+             and any(tv in A.pattern_terms(p) for p in n.patterns))
+            or (isinstance(n, A.Graph) and n.term == tv)
+            for n in A.walk(node)
+        )
 
     @staticmethod
     def _contains_graph(node) -> bool:
-        stack = [node]
-        while stack:
-            n = stack.pop()
-            if isinstance(n, (A.Graph, A.Service)):
-                return True
-            stack.extend(A.subnodes(n))  # includes EXISTS groups
-        return False
+        return any(isinstance(n, (A.Graph, A.Service)) for n in A.walk(node))
 
     def _construct(self, node: A.Construct) -> DataFrame:
         """CONSTRUCT: instantiate each template pattern against the
@@ -891,16 +815,10 @@ class Translator:
         # Walk the FULL algebra tree, not just the `child` spine: a LIMIT
         # inside a subquery under a Join/LeftJoin (e.g. CONSTRUCT ... WHERE
         # { {SELECT ... LIMIT 5} ?s ?p ?o }) carries the same
-        # nondeterministic re-execution hazard the pin exists for
-        # (advice r6). Conservative over-detection only costs a lazy
-        # localCheckpoint on a query that has an explicit LIMIT somewhere.
-        stack = [node]
-        while stack:
-            n = stack.pop()
-            if isinstance(n, A.Slice):
-                return True
-            stack.extend(A.subnodes(n))
-        return False
+        # nondeterministic re-execution hazard the pin exists for.
+        # Conservative over-detection only costs a lazy localCheckpoint
+        # on a query that has an explicit LIMIT somewhere.
+        return any(isinstance(n, A.Slice) for n in A.walk(node))
 
     # ------------- BGP: star decomposition + greedy star chaining -------------
 
@@ -1159,17 +1077,12 @@ class Translator:
             pairs = transitive_closure(edges, group_col=gv)
             zero_nodes = None
         if op == "*":
-            nodes = (
-                edges.select(*keys, F.col("src").alias("n"))
-                .unionByName(edges.select(*keys, F.col("dst").alias("n")))
-                .distinct()
-            )
+            zero = self._zero_pairs(edges)
             if zero_nodes is not None:  # only seed nodes can appear as src
-                on = ["n"] + [k for k in keys if k in zero_nodes.columns]
-                nodes = nodes.join(zero_nodes, on, "left_semi")
-            zero = nodes.select(
-                *keys, F.col("n").alias("src"), F.col("n").alias("dst")
-            )
+                on = ["src"] + [k for k in keys if k in zero_nodes.columns]
+                zero = zero.join(
+                    zero_nodes.withColumnRenamed("n", "src"), on, "left_semi"
+                )
             pairs = pairs.unionByName(zero).distinct()
         return pairs
 

@@ -291,15 +291,14 @@ def planning_stats_cached(spark: SparkSession, sf_dir: str) -> dict:
     cached derived triples, memoized per (session, sf_dir): the harness
     constructs one engine per query call over the SAME store, and the
     stats aggregation (count + HLL ndv) is identical every time — collect
-    once, hand the dict to every engine (r8)."""
+    once, hand the dict to every engine."""
     key = _cache_key(spark, sf_dir, "stats")
     if key not in _STATS_CACHE:
-        from d_sparq_spark.operators.rdf_patterns import planning_stats
+        from d_sparq_spark.operators.rdf_patterns import _stats_dict, planning_stats
 
-        _STATS_CACHE[key] = {
-            r["p"]: (r["cnt"], r["ndv_s"], r["ndv_o"])
-            for r in planning_stats(derive_triples_cached(spark, sf_dir)).collect()
-        }
+        _STATS_CACHE[key] = _stats_dict(
+            planning_stats(derive_triples_cached(spark, sf_dir))
+        )
     return _STATS_CACHE[key]
 
 
@@ -308,13 +307,10 @@ def encoded_planning_stats_cached(spark: SparkSession, sf_dir: str) -> dict:
     dictionary ids, not terms)."""
     key = _cache_key(spark, sf_dir, "enc_stats")
     if key not in _STATS_CACHE:
-        from d_sparq_spark.operators.rdf_patterns import planning_stats
+        from d_sparq_spark.operators.rdf_patterns import _stats_dict, planning_stats
 
         enc, _d = encoded_store_cached(spark, sf_dir)
-        _STATS_CACHE[key] = {
-            r["p"]: (r["cnt"], r["ndv_s"], r["ndv_o"])
-            for r in planning_stats(enc).collect()
-        }
+        _STATS_CACHE[key] = _stats_dict(planning_stats(enc))
     return _STATS_CACHE[key]
 
 

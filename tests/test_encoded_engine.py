@@ -70,6 +70,11 @@ QUERIES += [
     # nested OPTIONAL chain
     "SELECT ?n ?c ?a WHERE { ?x ex:name ?n "
     "OPTIONAL { ?x ex:city ?c OPTIONAL { ?x ex:age ?a } } }",
+    # ex:city occurs only inside an alternative path in an EXISTS group
+    # under OPTIONAL: the constant-to-id lookup must still reach it
+    # (answer: Alice keeps p:bob, whose city is London)
+    "SELECT ?n ?y WHERE { ?x ex:name ?n OPTIONAL { ?x ex:knows ?y "
+    "FILTER EXISTS { ?y (ex:city|ex:knows/ex:city) ?c } } }",
 ]
 
 
@@ -718,3 +723,48 @@ def test_group_by_without_aggregates_is_distinct_keys(spark):
     q = "SELECT ?o WHERE { ?s <p:x> ?o } GROUP BY ?o"
     for eng in _mini_engines(spark, rows):
         assert sorted(tuple(r) for r in eng.query(q).collect()) == [("1",), ("2",)]
+
+
+def test_shared_lexical_translator_concurrent_queries(engines):
+    """One EncodedSparqlEngine, two threads: a SELECT whose ORDER BY /
+    LIMIT and a CONSTRUCT whose ORDER BY / LIMIT are peeled and
+    re-applied over decoded bindings through the engine's one lexical
+    translator (_empty_lex). Each query runs 3 times; every answer must
+    equal its serial answer."""
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    lexical, serial = engines
+    select = "SELECT ?n WHERE { ?x ex:name ?n } ORDER BY DESC(?n) LIMIT 3"
+    construct = (
+        "CONSTRUCT { ?x ex:label ?n } WHERE { ?x ex:name ?n } "
+        "ORDER BY ?n LIMIT 3"
+    )
+
+    def answer(eng, q):
+        df = eng.query(q)
+        out = [tuple(r) for r in df.collect()]
+        return out if q is select else sorted(out)
+
+    expected = {q: answer(serial, q) for q in (select, construct)}
+    assert expected[select] == [("Eve",), ("Dave",), ("Carol",)]
+    assert len(expected[construct]) == 3
+    for q in (select, construct):
+        assert expected[q] == answer(lexical, q)
+
+    shared = EncodedSparqlEngine(serial.triples, serial.dict, stats=serial._stats)
+
+    def run(q):
+        return [answer(shared, q) for _ in range(3)]
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)  # interleave the threads' Python steps
+    try:
+        with ThreadPoolExecutor(max_workers=2) as pool:
+            futures = {q: pool.submit(run, q) for q in (select, construct)}
+            got = {q: f.result(timeout=600) for q, f in futures.items()}
+    finally:
+        sys.setswitchinterval(interval)
+    for q in (select, construct):
+        assert got[q] == [expected[q]] * 3, q
+    assert shared._empty_lex() is shared._empty_lex()

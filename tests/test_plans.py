@@ -394,3 +394,60 @@ def test_graph_var_join_stays_hash_join(spark):
     assert "BroadcastNestedLoopJoin" not in plan, plan[:2000]
     assert "CartesianProduct" not in plan
     assert df.count() > 0
+
+
+def test_ast_walk_and_pattern_terms_reach_every_nested_part():
+    """plans/ast.py's shared walks: ``walk`` reaches the EXISTS group,
+    both sides of every binary node, the GRAPH group and the subquery;
+    ``pattern_terms`` returns the constants nested in a closure's inner
+    path, in an alternative branch and in a negated ^-member."""
+    from d_sparq_spark.plans import ast as A
+    from d_sparq_spark.plans.parser import parse_sparql
+
+    tree = parse_sparql(
+        "SELECT ?x ?n WHERE { ?x ex:name ?n "
+        "OPTIONAL { ?x ex:age ?a } "
+        "{ ?x ex:city ?c } UNION { ?x ex:zip ?c } "
+        'MINUS { ?x ex:banned "yes" } '
+        "FILTER EXISTS { ?x ex:knows ?y } "
+        "GRAPH ?g { ?x ex:tag ?t } "
+        "{ SELECT ?x WHERE { ?x ex:score ?s } LIMIT 5 } }"
+    )
+    nodes = list(A.walk(tree))
+    seen = {id(n) for n in nodes}
+    assert len(seen) == len(nodes)  # each node visited once
+    kinds = {type(n) for n in nodes}
+    assert {A.Join, A.LeftJoin, A.Union, A.Minus, A.Graph, A.Slice} <= kinds
+    binary = [n for n in nodes if isinstance(n, (A.Join, A.LeftJoin, A.Union, A.Minus))]
+    assert len(binary) >= 5
+    for n in binary:
+        assert id(n.left) in seen and id(n.right) in seen
+    (exists,) = [
+        n for n in nodes
+        if isinstance(n, A.Filter) and isinstance(n.expr, A.ExistsExpr)
+    ]
+    assert id(exists.expr.group) in seen
+    preds = {
+        tp.p for n in nodes if isinstance(n, A.BGP) for tp in n.patterns
+    }
+    assert {
+        "ex:name", "ex:age", "ex:city", "ex:zip", "ex:banned",
+        "ex:knows", "ex:tag", "ex:score",
+    } <= preds
+
+    paths = parse_sparql(
+        "SELECT * WHERE { ?s (ex:a/ex:b)+ ?o . ?s (ex:c|ex:d/ex:e) ?z . "
+        "?s !(ex:f|^ex:h) ?w }"
+    )
+    pats = {
+        type(p): p
+        for n in A.walk(paths) if isinstance(n, A.BGP) for p in n.patterns
+    }
+
+    def consts(p):
+        return {t for t in A.pattern_terms(p) if not t.startswith("?")}
+
+    assert consts(pats[A.ClosurePattern]) == {"ex:a", "ex:b"}
+    assert consts(pats[A.AltPath]) == {"ex:c", "ex:d", "ex:e"}
+    assert consts(pats[A.PropSetPattern]) == {"ex:f", "ex:h"}
+    assert pats[A.PropSetPattern].inv_preds == ("ex:h",)
