@@ -8,7 +8,8 @@ exchanges, faster hashing), and only the final bindings are decoded.
 Execution plan per query:
 1. parse (shared parser),
 2. collect the query's constant terms (bounded by QUERY size, not data)
-   and look up their IDs with one filtered dict scan,
+   and look up their IDs (operators/dictionary.lookup_ids: a driver read
+   of the dictionary files of a local store, else one filtered scan),
 3. rewrite pattern/path constants to IDs; a constant absent from the
    dictionary means zero matches — replaced by an impossible ID,
 4. evaluate the structural algebra (BGP/joins/OPTIONAL/UNION/MINUS/paths)
@@ -31,6 +32,12 @@ from dataclasses import replace
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from d_sparq_spark.operators.dictionary import (
+    decode_columns,
+    decode_triples,
+    lookup_ids,
+    numeric_typed_literal,
+)
 from d_sparq_spark.operators.rdf_patterns import (
     TriplePattern,
     _is_var,
@@ -251,8 +258,6 @@ class _EncodedTranslator(Translator):
         store, never unreferenced columns; broadcast only when the
         engine's size gate allows. Delegates to decode_columns' shadow
         mode."""
-        from d_sparq_spark.operators.dictionary import decode_columns
-
         return decode_columns(
             df,
             self.dictionary,
@@ -310,6 +315,7 @@ class EncodedSparqlEngine:
         stats: dict | None = None,
         dict_n_terms: int | None = None,
         dict_plain: bool | None = None,
+        dict_files: list[str] | None = None,
     ):
         """triples_enc: (s,p,o) LONG columns; dictionary: (id, term[, kind]).
         dict_rank_ordered declares whether ids are LEXICOGRAPHIC-RANK-
@@ -328,7 +334,11 @@ class EncodedSparqlEngine:
         planner substitutions work identically to the lexical engine.
         services maps SERVICE endpoint names to LEXICAL triples DataFrames;
         federated queries take the decode-early fallback (endpoint stores
-        have their own dictionaries, so ID joins can't cross engines)."""
+        have their own dictionaries, so ID joins can't cross engines).
+        dict_files: the local parquet files ``dictionary`` was read from,
+        when the query constants' term -> id lookup may read them on the
+        driver (no Spark job); None looks them up with a Spark job.
+        open_store picks this once per engine (lookup_ids)."""
         if catalog is not None and "g" in triples_enc.columns:
             raise ValueError(
                 "StoreCatalog routing is triple-level: a property table "
@@ -339,6 +349,7 @@ class EncodedSparqlEngine:
         self.triples = triples_enc
         self.dict_rank_ordered = dict_rank_ordered
         self.dict = dictionary.select("id", "term")
+        self._dict_files = dict_files
         # load-time dictionary metadata: the broadcast-size gate and the
         # typed-literal plainness probe are engine-CONSTRUCTION costs
         # re-paid per query because the query harness builds a fresh
@@ -611,12 +622,7 @@ class EncodedSparqlEngine:
             self._collect_constants(root, consts)
         except NotImplementedError:  # SERVICE: federate over the decoded store
             return self._lexical_fallback(tree)
-        ids = {}
-        if consts:
-            ids = {
-                r["term"]: r["id"]
-                for r in self.dict.filter(F.col("term").isin(*consts)).collect()
-            }
+        ids = lookup_ids(self.dict, consts, self._dict_files)
         if not self._values_terms_present(root, ids):
             # a VALUES term absent from the dictionary has no ID, but the
             # row must still exist (it can survive OPTIONAL/projection and
@@ -815,8 +821,6 @@ class EncodedSparqlEngine:
         (a store manifest flag could amortize it across sessions; the
         scan is linear and column-pruned to `term`)."""
         if self._dict_plain is None:
-            from d_sparq_spark.operators.dictionary import numeric_typed_literal
-
             self._dict_plain = not self.dict.filter(
                 numeric_typed_literal("term")
             ).take(1)
@@ -841,8 +845,6 @@ class EncodedSparqlEngine:
         the original lexical tree over it. Nested value FILTERs no longer
         land here — _EncodedTranslator decodes only their referenced
         columns in place. Stats/catalog are ID-keyed and don't apply."""
-        from d_sparq_spark.operators.dictionary import decode_triples
-
         store = decode_triples(
             self.triples, self.dict, broadcast_dict=self._dict_fits_broadcast()
         )
@@ -853,8 +855,6 @@ class EncodedSparqlEngine:
         # (prefixed dict columns so user variables named 'term'/'id' can't
         # collide); only bigint columns are id-typed — aggregates/counts
         # pass through untouched
-        from d_sparq_spark.operators.dictionary import decode_columns
-
         dtypes = dict(df.dtypes)
         id_cols = [c for c in cols if dtypes.get(c) == "bigint"]
         return decode_columns(

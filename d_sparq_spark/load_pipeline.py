@@ -35,12 +35,15 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from d_sparq_spark.encoded_engine import EncodedSparqlEngine
+from d_sparq_spark.gates import gate
 from d_sparq_spark.localdata import local_df
 from d_sparq_spark.operators.dictionary import (
+    _DRIVER_RANK_MAX_ROWS,
     build_dictionary,
     distinct_terms,
     encode_triples,
     extend_dictionary,
+    lookup_ids,
     numeric_typed_literal,
 )
 from d_sparq_spark.operators.rdf_patterns import predicate_stats
@@ -986,6 +989,7 @@ def open_store(
     return EncodedSparqlEngine(
         enc,
         dictionary,
+        dict_files=_driver_dict_files(spark, store_path, dictionary, meta),
         catalog=catalog,
         dict_rank_ordered=meta["rank_ordered"],
         # manifest-recorded dictionary metadata: the broadcast gate and
@@ -1011,6 +1015,39 @@ def _read_dict(spark: SparkSession, store_path: str) -> DataFrame:
     job."""
     return spark.read.schema("id long, term string, kind string").parquet(
         os.path.join(store_path, "dict")
+    )
+
+
+def _driver_dict_files(
+    spark: SparkSession, store_path: str, dictionary: DataFrame,
+    meta: dict | None = None,
+) -> list | None:
+    """The route of every term -> id lookup on a store (lookup_ids): the
+    local parquet files of ``dictionary``'s own listing when the lookup
+    may read them on the driver, else None (a Spark job). The driver
+    reads a local store whose manifest-recorded ``n_terms`` is within the
+    driver rank gate — the dictionary size the load path already holds on
+    the driver. Listing the read's files fires no job, and pinning the
+    lookup to that listing means a write after the read cannot hand out
+    ids that the read, and so the decode, does not hold."""
+    if "://" in store_path:
+        return None
+    n_terms = (meta or _read_meta(spark, store_path))["n_terms"]
+    if n_terms is None or n_terms > gate(_DRIVER_RANK_MAX_ROWS):
+        return None
+    from urllib.parse import unquote, urlparse
+
+    return [unquote(urlparse(f).path) for f in dictionary.inputFiles()]
+
+
+def _store_ids(spark: SparkSession, store_path: str, terms: list) -> dict:
+    """term -> id for a metadata-scale term list (ontology vocabulary,
+    the sameAs predicate) against the dictionary as it is NOW — listed at
+    call time, so a dictionary extension earlier in the same write is
+    seen. Terms absent from the dictionary are absent from the result."""
+    dictionary = _read_dict(spark, store_path)
+    return lookup_ids(
+        dictionary, terms, _driver_dict_files(spark, store_path, dictionary)
     )
 
 
@@ -1121,18 +1158,6 @@ def _read_reasoning_manifest(spark: SparkSession, store_path: str) -> tuple:
     return ontology, sameas_pred, mode
 
 
-def _lookup_terms(spark: SparkSession, store_path: str, terms: list) -> dict:
-    """term -> id for a METADATA-SCALE term list (ontology vocabulary):
-    broadcast semi-join against the dictionary, collect only the hits.
-    Terms absent from the dictionary are absent from the result."""
-    full = _read_dict(spark, store_path)
-    tdf = local_df(spark, [(t,) for t in sorted(set(terms))], "term string")
-    return {
-        r["term"]: r["id"]
-        for r in full.join(F.broadcast(tdf), "term", "semi").collect()
-    }
-
-
 def _ensure_terms(
     spark: SparkSession, store_path: str, terms: list, lookup_extra: tuple
 ) -> dict:
@@ -1144,7 +1169,7 @@ def _ensure_terms(
     stay a bijection).
 
     ``lookup_extra`` terms ride the FINAL lookup only (a separate probe
-    would be a whole extra dict-scan job) — they are never added to the
+    would be a second dictionary lookup) — they are never added to the
     dictionary, and absent ones are simply absent from the result."""
     meta = _read_meta(spark, store_path)
     _extend_store_dict(
@@ -1152,7 +1177,7 @@ def _ensure_terms(
         _open_dict(spark, store_path, meta["dict_buckets"]),
         local_df(spark, [(t,) for t in sorted(set(terms))], "term string"),
     )
-    return _lookup_terms(spark, store_path, list(terms) + list(lookup_extra))
+    return _store_ids(spark, store_path, list(terms) + list(lookup_extra))
 
 
 def _ontology_vocab(ontology: list) -> list:
@@ -1169,10 +1194,10 @@ def _ontology_ids(
     """term -> id for the ontology vocabulary + rdf:type, all of which
     materialize_reasoning ensured exist; a miss means the store was
     tampered with — raise rather than silently drop a rule.
-    ``lookup_extra``: best-effort extra lookups riding the same dict-scan
-    job (absent ones are absent from the result, no error)."""
+    ``lookup_extra``: best-effort extra lookups riding the same
+    dictionary lookup (absent ones are absent from the result, no error)."""
     needed = _ontology_vocab(ontology)
-    ids = _lookup_terms(spark, store_path, needed + list(lookup_extra))
+    ids = _store_ids(spark, store_path, needed + list(lookup_extra))
     missing = [t for t in needed if t not in ids]
     if missing:
         raise ValueError(
@@ -1258,7 +1283,7 @@ def smushed_triples(spark: SparkSession, store_path: str) -> DataFrame:
     from d_sparq_spark.operators.reasoning import apply_sameas_map
 
     _, sameas_pred, _ = _read_reasoning_manifest(spark, store_path)
-    sid = _lookup_terms(spark, store_path, [sameas_pred]).get(sameas_pred)
+    sid = _store_ids(spark, store_path, [sameas_pred]).get(sameas_pred)
     t = store_triples(spark, store_path).select("s", "p", "o")
     rest = t.filter(F.col("p") != F.lit(sid)) if sid is not None else t
     return apply_sameas_map(rest, sameas_map(spark, store_path))
@@ -1335,7 +1360,7 @@ def materialize_reasoning(
     sid_known = False
     if ontology:
         # the sameAs predicate rides the vocabulary lookup: a separate
-        # probe would be a whole extra dict-scan job per materialize
+        # probe would be a second dictionary lookup per materialize
         ids = _ensure_terms(
             spark, store_path, _ontology_vocab(ontology),
             lookup_extra=(sameas_pred,),
@@ -1356,7 +1381,7 @@ def materialize_reasoning(
     write_vp(layer, os.path.join(store_path, "entailed"))
 
     if not sid_known:
-        sid = _lookup_terms(spark, store_path, [sameas_pred]).get(sameas_pred)
+        sid = _store_ids(spark, store_path, [sameas_pred]).get(sameas_pred)
     empty_map = spark.createDataFrame([], "node long, comp long")
     smap = empty_map
     if sid is not None:
@@ -1461,7 +1486,7 @@ def _maintain_reasoning(
     sid = None
     sid_known = False
     if ontology:
-        # the sameAs predicate rides the same dict-scan job
+        # the sameAs predicate rides the same dictionary lookup
         ids = _ontology_ids(
             spark, store_path, ontology, lookup_extra=(sameas_pred,)
         )
@@ -1500,7 +1525,7 @@ def _maintain_reasoning(
         spark, store_path, sorted(set(touched) | set(dpreds)), reasoned=True
     )
     if not sid_known:
-        sid = _lookup_terms(spark, store_path, [sameas_pred]).get(sameas_pred)
+        sid = _store_ids(spark, store_path, [sameas_pred]).get(sameas_pred)
     if sid is None:
         return
     delta_sa = (
@@ -1625,7 +1650,7 @@ def _maintain_reasoning_delete(
         spark, store_path, sorted(set(touched) | set(dpreds)), reasoned=True
     )
 
-    sid = _lookup_terms(spark, store_path, [sameas_pred]).get(sameas_pred)
+    sid = _store_ids(spark, store_path, [sameas_pred]).get(sameas_pred)
     if sid is None:
         return
     del_sa = (

@@ -214,6 +214,38 @@ def extend_dictionary(
     )
 
 
+def lookup_ids(
+    dictionary: DataFrame, terms, files: list[str] | None = None
+) -> dict:
+    """term -> id for a query- or metadata-sized set of ``terms`` (a
+    query's constants, an ontology vocabulary); terms absent from the
+    dictionary are absent from the result. The one term -> id lookup.
+
+    ``files``: the dictionary's local parquet files, read on the driver
+    with pyarrow — no Spark job. A store's bucket files are sorted by
+    term, so row-group statistics prune the read. The caller passes the
+    file list of the same listing ``dictionary`` was read from, so both
+    routes see one snapshot. ``None``: one Spark filter job over
+    ``dictionary``."""
+    terms = sorted(set(terms))
+    if not terms:
+        return {}
+    if files is not None:
+        import pyarrow.compute as pc
+        import pyarrow.dataset as ds
+
+        tbl = ds.dataset(files, format="parquet").to_table(
+            columns=["id", "term"], filter=pc.field("term").isin(terms)
+        )
+        return dict(zip(tbl.column("term").to_pylist(), tbl.column("id").to_pylist()))
+    return {
+        r["term"]: r["id"]
+        for r in dictionary.filter(F.col("term").isin(terms))
+        .select("id", "term")
+        .collect()
+    }
+
+
 def _positions(df: DataFrame) -> list[str]:
     """Term-carrying columns: s/p/o, plus g for quad stores (B17)."""
     return [c for c in ("s", "p", "o", "g") if c in df.columns]

@@ -17,6 +17,7 @@ from d_sparq_spark.operators.dictionary import (
     build_dictionary,
     decode_triples,
     encode_triples,
+    lookup_ids,
 )
 from d_sparq_spark.operators.rdf_patterns import (
     TriplePattern,
@@ -162,13 +163,11 @@ def q_star_join_enc(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = build_dictionary(triples).cache()
     enc = encode_triples(triples, d, broadcast_dict=True)
 
-    consts = {"ex:mktsegment": None, "foaf:name": None, "ex:acctbal": None, "BUILDING": None}
-    for row in d.filter(F.col("term").isin(*consts)).collect():
-        consts[row["term"]] = row["id"]
+    ids = lookup_ids(d, ["ex:mktsegment", "foaf:name", "ex:acctbal", "BUILDING"])
     patterns = [
-        TriplePattern("?c", consts["foaf:name"], "?name"),
-        TriplePattern("?c", consts["ex:acctbal"], "?bal"),
-        TriplePattern("?c", consts["ex:mktsegment"], consts["BUILDING"]),
+        TriplePattern("?c", ids.get("foaf:name"), "?name"),
+        TriplePattern("?c", ids.get("ex:acctbal"), "?bal"),
+        TriplePattern("?c", ids.get("ex:mktsegment"), ids.get("BUILDING")),
     ]
     bound = star_join(enc, patterns)
     dd = F.broadcast(d.select("id", "term"))

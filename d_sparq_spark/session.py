@@ -46,6 +46,12 @@ def build_session(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # No DataFrame call-site capture: with it on, every
+        # pyspark.sql.functions / Column call pays extra Py4J round
+        # trips (active session, conf, origin set/clear). The cost:
+        # DataFrame errors no longer name the Python line that built the
+        # failing expression.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

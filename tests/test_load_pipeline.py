@@ -5,7 +5,7 @@ vertically-partitioned layout."""
 from pyspark.sql import functions as F
 
 from d_sparq_spark.engine import SparqlEngine
-from d_sparq_spark.load_pipeline import bulk_load, open_store, store_triples
+from d_sparq_spark.load_pipeline import append_load, bulk_load, open_store, store_triples
 from d_sparq_spark.sources.derived_rdf import derive_triples
 from d_sparq_spark.sources.ntriples import format_ntriples
 
@@ -595,3 +595,101 @@ def test_write_vp_requires_exactly_spo(spark, tmp_path):
     df = spark.createDataFrame([(1, 2, 3, 4)], "s long, p long, o long, g long")
     with pytest.raises(ValueError, match="s, p, o"):
         write_vp(df, str(tmp_path / "vp"))
+
+
+_XSD_INT = "http://www.w3.org/2001/XMLSchema#integer"
+
+
+def _two_write_store(spark, tmp_path):
+    """A store whose dict/ holds files of two writes (bulk_load + append),
+    with language-tagged, typed, non-ASCII and quoted literals."""
+    import os
+
+    base = _nt(tmp_path / "base.nt", [
+        '<s:a> <p:name> "café"@fr',
+        f'<s:a> <p:age> "42"^^<{_XSD_INT}>',
+        '<s:b> <p:name> "naïve 東京"',
+        '<s:b> <p:say> "say \\"hi\\" it\'s"',
+        '<s:b> <p:knows> <s:a>',
+    ])
+    delta = _nt(tmp_path / "delta.nt", ['<s:c> <p:name> "zoë"', "<s:c> <p:knows> <s:b>"])
+    store = os.path.join(str(tmp_path), "store_lookup")
+    bulk_load(spark, base, store)
+    append_load(spark, delta, store)
+    return store
+
+
+def test_lookup_ids_driver_and_spark_routes_agree(
+    spark, tmp_path, jobs_fired, monkeypatch
+):
+    """open_store hands a local, gate-sized store's dictionary files to
+    the engine: the constants' term -> id lookup reads them on the
+    driver, so building the plan fires no Spark job; with the driver
+    gates off (D_SPARQ_DRIVER_GATE_SCALE=0 before open_store) the same
+    lookup is one Spark job. Both routes give the same ids and answers,
+    across files of two writes and awkward literals."""
+    import os
+
+    from d_sparq_spark.operators.dictionary import lookup_ids
+
+    store = _two_write_store(spark, tmp_path)
+    driver = open_store(spark, store)
+    monkeypatch.setenv("D_SPARQ_DRIVER_GATE_SCALE", "0")
+    distributed = open_store(spark, store)
+    monkeypatch.delenv("D_SPARQ_DRIVER_GATE_SCALE")
+    assert distributed._dict_files is None and driver._dict_files
+    writes = {
+        os.path.basename(f).split("-", 2)[2].rsplit("_", 1)[0]
+        for f in driver._dict_files
+    }
+    assert len(writes) == 2, driver._dict_files
+
+    consts = [
+        "s:a", "zoë", "absent:term", '"café"@fr', f'"42"^^{_XSD_INT}',
+        "naïve 東京", "say \"hi\" it's", '"café"@en',
+    ]
+    by_driver, n = jobs_fired(lambda: lookup_ids(driver.dict, consts, driver._dict_files))
+    assert n == 0
+    by_spark = lookup_ids(distributed.dict, consts)
+    assert by_driver == by_spark
+    assert set(by_driver) == set(consts) - {"absent:term", '"café"@en'}
+
+    q = (
+        "SELECT ?s ?p WHERE { "
+        "{ ?s ?p <s:a> } UNION { ?s ?p \"zoë\" } UNION { ?s ?p \"café\"@fr } "
+        f"UNION {{ ?s ?p \"42\"^^<{_XSD_INT}> }} UNION {{ ?s ?p \"naïve 東京\" }} "
+        "UNION { ?s ?p \"say \\\"hi\\\" it's\" } UNION { ?s ?p <absent:term> } }"
+    )
+    got, n_driver = jobs_fired(lambda: driver.query(q))
+    want, n_spark = jobs_fired(lambda: distributed.query(q))
+    assert (n_driver, n_spark) == (0, 1)
+    rows = sorted(tuple(r) for r in got.collect())
+    assert rows == sorted(tuple(r) for r in want.collect())
+    assert len(rows) == 6, rows
+
+
+def test_engine_lookup_pinned_to_its_open_snapshot(spark, tmp_path, monkeypatch):
+    """An engine's driver lookup reads the dictionary files listed when
+    the store was opened: a term appended afterwards is not in that
+    engine's dictionary, so its VALUES query takes the lexical fallback
+    and answers exactly as the engine's Spark route does. A reopened
+    engine finds the term."""
+    from d_sparq_spark.operators.dictionary import lookup_ids
+
+    store = _two_write_store(spark, tmp_path)
+    engine = open_store(spark, store)
+    monkeypatch.setenv("D_SPARQ_DRIVER_GATE_SCALE", "0")
+    distributed = open_store(spark, store)
+    monkeypatch.delenv("D_SPARQ_DRIVER_GATE_SCALE")
+    append_load(spark, _nt(tmp_path / "late.nt", ['<s:t> <p:name> "tango"']), store)
+
+    q = "SELECT ?s ?p ?o WHERE { VALUES ?s { <s:t> } ?s ?p ?o }"
+    assert lookup_ids(engine.dict, ["s:t"], engine._dict_files) == {}
+    got = sorted(tuple(r) for r in engine.query(q).collect())
+    assert got == sorted(tuple(r) for r in distributed.query(q).collect())
+    assert got == []
+    reopened = open_store(spark, store)
+    assert "s:t" in lookup_ids(reopened.dict, ["s:t"], reopened._dict_files)
+    assert [tuple(r) for r in reopened.query(q).collect()] == [
+        ("s:t", "p:name", "tango")
+    ]
