@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 
 from d_sparq_spark.encoded_engine import EncodedSparqlEngine
 from d_sparq_spark.gates import gate
-from d_sparq_spark.localdata import local_df
+from d_sparq_spark.localdata import arrow_df, local_df
 from d_sparq_spark.operators.dictionary import (
     _DRIVER_RANK_MAX_ROWS,
     build_dictionary,
@@ -44,6 +44,7 @@ from d_sparq_spark.operators.dictionary import (
     encode_triples,
     extend_dictionary,
     lookup_ids,
+    new_term_rows,
     numeric_typed_literal,
 )
 from d_sparq_spark.operators.rdf_patterns import predicate_stats
@@ -216,25 +217,24 @@ def bulk_load(
     # parse+encode lineage — otherwise stats, the triple count, and each
     # ExtVP reduction would re-scan the raw N-Triples text end to end
     enc = store_triples(spark, store_path)
-    stats = predicate_stats(enc)
-    stats.write.mode("overwrite").parquet(os.path.join(store_path, "stats"))
+    stats = _collect_stats(enc)
+    _write_stats(spark, store_path, stats)
 
     if "ptable" in materialize:
         # no functional predicate -> nothing to materialize; the optional
         # layout is skipped, never a failed load after dict/by_p were
         # already written
-        _save_property_table(enc, store_path, candidates=None)
+        _save_property_table(
+            enc, store_path, candidates=None, functional=_functional(stats)
+        )
     if "extvp" in materialize:
         from d_sparq_spark.operators.extvp import materialize_extvp
 
         materialize_extvp(enc, store_path)
 
-    # the triple count comes from the JUST-WRITTEN stats parquet — summing
-    # the live `stats` lineage would re-run the whole predicate_stats
-    # aggregation (two exact countDistincts over the store) a second time
     return {
         "n_terms": int(n_terms),
-        "n_triples": _count_store_triples(spark, store_path),
+        "n_triples": int(sum(r["cnt"] for r in stats)),
     }
 
 
@@ -302,32 +302,75 @@ def _write_meta(
     # local stores (r11, guide §5): a one-row manifest does not need a
     # Spark job (~0.4 s of task launch + commit protocol per write, paid
     # up to 3x per load) — write the same parquet layout driver-side.
-    # Crash ordering mirrors the Spark committer's: the new file lands
-    # under a dot-name (invisible to Spark and pyarrow dir readers), old
-    # visible files are removed, then one atomic rename publishes it — a
-    # crash leaves either the old manifest or a data-less meta/ that
-    # _read_meta fails LOUDLY on (never fail-open defaults).
     import pyarrow as pa
+
+    _write_local_parquet(
+        os.path.join(store_path, "meta"),
+        pa.table(
+            {
+                "rank_ordered": pa.array([rank_ordered], pa.bool_()),
+                "n_terms": pa.array([n_terms], pa.int64()),
+                "max_id": pa.array([max_id], pa.int64()),
+                "dict_buckets": pa.array([dict_buckets], pa.int32()),
+                "dict_plain": pa.array([dict_plain], pa.bool_()),
+            }
+        ),
+    )
+
+
+def _write_local_parquet(out_dir: str, table) -> None:
+    """Replace a local metadata directory (meta/, stats/) with ``table``
+    as one parquet file, written on the driver. Crash ordering mirrors the
+    Spark committer's: the new file lands under a dot-name (invisible to
+    Spark and pyarrow dir readers), old visible files are removed, then
+    one atomic rename publishes it — a crash leaves either the old
+    contents or a data-less directory, as an interrupted Spark overwrite
+    can (_read_meta fails CLOSED on one: never fail-open defaults)."""
     import pyarrow.parquet as pq
 
-    meta_dir = os.path.join(store_path, "meta")
-    os.makedirs(meta_dir, exist_ok=True)
-    table = pa.table(
-        {
-            "rank_ordered": pa.array([rank_ordered], pa.bool_()),
-            "n_terms": pa.array([n_terms], pa.int64()),
-            "max_id": pa.array([max_id], pa.int64()),
-            "dict_buckets": pa.array([dict_buckets], pa.int32()),
-            "dict_plain": pa.array([dict_plain], pa.bool_()),
-        }
-    )
-    tmp = os.path.join(meta_dir, ".part-00000.parquet.tmp")
+    os.makedirs(out_dir, exist_ok=True)
+    tmp = os.path.join(out_dir, ".part-00000.parquet.tmp")
     pq.write_table(table, tmp)
-    for f in os.listdir(meta_dir):
+    for f in os.listdir(out_dir):
         if not f.startswith((".", "_")) and f != "part-00000.parquet":
-            os.remove(os.path.join(meta_dir, f))
-    os.replace(tmp, os.path.join(meta_dir, "part-00000.parquet"))
-    open(os.path.join(meta_dir, "_SUCCESS"), "w").close()
+            os.remove(os.path.join(out_dir, f))
+    os.replace(tmp, os.path.join(out_dir, "part-00000.parquet"))
+    open(os.path.join(out_dir, "_SUCCESS"), "w").close()
+
+
+_STATS_COLS = ("p", "cnt", "ndv_s", "ndv_o")
+
+
+def _write_stats(spark: SparkSession, store_path: str, rows: list) -> None:
+    """Replace stats/ with ``rows`` (dicts of predicate_stats' columns, all
+    int64 — the schema _read_stats_rows and Spark readers see). Stats are
+    metadata-scale (one row per predicate), so a local store writes them
+    on the driver; a URI store keeps the Spark write."""
+    path = os.path.join(store_path, "stats")
+    if "://" in store_path:
+        local_df(
+            spark, [tuple(r[c] for c in _STATS_COLS) for r in rows],
+            "p long, cnt long, ndv_s long, ndv_o long",
+        ).write.mode("overwrite").parquet(path)
+        return
+    import pyarrow as pa
+
+    _write_local_parquet(
+        path,
+        pa.table({c: pa.array([r[c] for r in rows], pa.int64()) for c in _STATS_COLS}),
+    )
+
+
+def _collect_stats(triples: DataFrame) -> list:
+    """predicate_stats of ``triples`` as driver-side row dicts."""
+    return [r.asDict() for r in predicate_stats(triples).collect()]
+
+
+def _functional(stats_rows: list) -> list:
+    """The functional predicates (no subject with two values) by the
+    stats rows: predicate_stats' ndv_s is an EXACT distinct count, so
+    cnt == ndv_s is the property table's data check without a data pass."""
+    return [r["p"] for r in stats_rows if r["cnt"] == r["ndv_s"]]
 
 
 # The manifest of a store loaded before meta/ existed: those stores were
@@ -405,11 +448,49 @@ def _extend_store_dict(
     spark: SparkSession, store_path: str, meta: dict, store_dict: DataFrame,
     terms: DataFrame,
 ) -> tuple:
-    """Add the ``terms`` the dictionary lacks, reserve-then-write — the one
-    dictionary extension (append_load's delta terms, _ensure_terms'
-    ontology vocabulary). ``store_dict`` is the _open_dict result and
-    ``meta`` the manifest read before it. New ids land above the id
-    watermark, so no max(id) scan runs on a store with counters.
+    """Add the ``terms`` (a one-column term relation) the dictionary
+    lacks, in Spark — the dictionary extension of the Spark write route
+    (append_load's delta terms) and of _ensure_terms (an ontology's
+    vocabulary). ``store_dict`` is the _open_dict result and ``meta`` the
+    manifest read before it. New ids land above the id watermark, so no
+    max(id) scan runs on a store with counters; a legacy manifest pays
+    the scans once and records the counters. Returns _add_dict_rows'
+    (dictionary including the new rows, n_terms, n_new_terms)."""
+    counters = dict(meta)
+    if counters["max_id"] is None:
+        counters["max_id"] = int(
+            store_dict.agg(F.max("id").alias("m")).collect()[0]["m"] or 0
+        )
+    if counters["n_terms"] is None:
+        counters["n_terms"] = store_dict.count()
+    # localCheckpoint before the self-referencing append: the new rows
+    # anti-join against dict/ and are then written INTO dict/ — truncate
+    # the lineage so the write cannot observe its own output files.
+    rows = extend_dictionary(
+        store_dict, terms, base_id=counters["max_id"]
+    ).localCheckpoint()
+    n_new, typed = _count_and_typed(rows)
+    if not n_new and meta["max_id"] is None:
+        # legacy store, no new terms: still record the counters (and the
+        # existing rank order) so the next write skips the scans
+        _write_meta(
+            spark, store_path, rank_ordered=meta["rank_ordered"],
+            n_terms=int(counters["n_terms"]), max_id=counters["max_id"],
+            dict_buckets=meta["dict_buckets"], dict_plain=meta["dict_plain"],
+        )
+    return _add_dict_rows(spark, store_path, counters, store_dict, rows, n_new, typed)
+
+
+def _add_dict_rows(
+    spark: SparkSession, store_path: str, meta: dict, store_dict: DataFrame,
+    rows: DataFrame, n_new: int, typed: bool,
+) -> tuple:
+    """Append ``rows`` — ``n_new`` new dictionary rows (id, term, kind)
+    with ids ``meta["max_id"]+1 ..``; ``typed`` says whether one is a
+    numeric typed literal — to the store dictionary, reserve-then-write.
+    The one commit of a dictionary extension, whoever found the new terms
+    (_extend_store_dict in Spark, _driver_delta on the driver). ``meta``
+    carries the id watermark and term count.
 
     meta/ flips rank_ordered=false AND advances the watermark BEFORE the
     dict/ append: flipping the flag late could leave an append-ordered
@@ -420,62 +501,42 @@ def _extend_store_dict(
     the id space gains a gap; the dictionary stays a bijection.
 
     Returns (dictionary including the new rows, n_terms, n_new_terms)."""
+    n_terms = int(meta["n_terms"]) + n_new
+    if not n_new:
+        return store_dict, n_terms, 0
     buckets = meta["dict_buckets"]
-    watermark = meta["max_id"]
-    n_terms_old = meta["n_terms"]
-    if watermark is None:  # legacy manifest: pay the scans once; the meta
-        # write below records the counters for every later write
-        watermark = int(
-            store_dict.agg(F.max("id").alias("m")).collect()[0]["m"] or 0
-        )
-    if n_terms_old is None:
-        n_terms_old = store_dict.count()
-    # localCheckpoint before the self-referencing append: the new rows
-    # anti-join against dict/ and are then written INTO dict/ — truncate
-    # the lineage so the write cannot observe its own output files.
-    delta = extend_dictionary(store_dict, terms, base_id=watermark).localCheckpoint()
     # dict_plain stays exact: plain iff it was plain AND no new term is a
     # numeric typed literal; unknown (legacy) stays unknown, engines then
     # probe lazily
-    n_new, typed = _count_and_typed(delta)
     dict_plain = meta["dict_plain"]
-    if dict_plain is not None and n_new:
+    if dict_plain is not None:
         dict_plain = bool(dict_plain) and not typed
-    n_terms = int(n_terms_old) + n_new
-    if n_new:
-        _write_meta(
-            spark, store_path, rank_ordered=False,
-            n_terms=n_terms, max_id=int(watermark) + n_new,
-            dict_buckets=buckets, dict_plain=dict_plain,
-        )
-        if buckets:
-            _write_dict_bucketed(delta, store_path, buckets, mode="append")
-            # saveAsTable(append) writes through the catalog and drops its
-            # file listing, so a fresh name lookup sees the appended files
-            store_dict = spark.table(_dict_table_name(store_path))
-        else:
-            delta.write.mode("append").parquet(os.path.join(store_path, "dict"))
-            store_dict = _read_dict(spark, store_path)
-    elif meta["max_id"] is None:
-        # legacy store, no new terms: still record the counters (and the
-        # existing rank order) so the next write skips the scans
-        _write_meta(
-            spark, store_path, rank_ordered=meta["rank_ordered"],
-            n_terms=n_terms, max_id=int(watermark), dict_buckets=buckets,
-            dict_plain=dict_plain,
-        )
+    _write_meta(
+        spark, store_path, rank_ordered=False,
+        n_terms=n_terms, max_id=int(meta["max_id"]) + n_new,
+        dict_buckets=buckets, dict_plain=dict_plain,
+    )
+    if buckets:
+        _write_dict_bucketed(rows, store_path, buckets, mode="append")
+        # saveAsTable(append) writes through the catalog and drops its
+        # file listing, so a fresh name lookup sees the appended files
+        store_dict = spark.table(_dict_table_name(store_path))
+    else:
+        rows.write.mode("append").parquet(os.path.join(store_path, "dict"))
+        store_dict = _read_dict(spark, store_path)
     return store_dict, n_terms, n_new
 
 
 def _encode_delta(
-    spark: SparkSession, store_path: str, nt_path: str, extend: bool
+    spark: SparkSession, store_path: str, meta: dict, store_dict: DataFrame,
+    nt_path: str, extend: bool,
 ) -> tuple:
-    """Parse a delta N-Triples file and encode it against the store
-    dictionary — the front half append_load (``extend=True``) and
-    delete_load share. With ``extend`` the delta's new terms are first
-    added (_extend_store_dict); without it a triple naming a term absent
-    from the dictionary cannot be stored and drops out of the inner-join
-    encode.
+    """The Spark write route's front half (append_load ``extend=True``,
+    delete_load): parse a delta N-Triples file and encode it against the
+    store dictionary (``store_dict``, opened under ``meta``). With
+    ``extend`` the delta's new terms are first added (_extend_store_dict);
+    without it a triple naming a term absent from the dictionary cannot
+    be stored and drops out of the inner-join encode.
 
     The encode joins a dictionary slice REDUCED to the delta's own terms
     by a semi-join, so they broadcast at most 3|delta| distinct terms
@@ -488,8 +549,6 @@ def _encode_delta(
     # and the encode — without the pin the N-Triples text is re-read and
     # re-regexed per consumer
     triples = parse_ntriples(spark.read.text(nt_path)).localCheckpoint(eager=False)
-    meta = _read_meta(spark, store_path)
-    store_dict = _open_dict(spark, store_path, meta["dict_buckets"])
     # one union+distinct over the delta, shared by the extension and the
     # slice reduction
     delta_terms = distinct_terms(triples).localCheckpoint(eager=False)
@@ -508,69 +567,212 @@ def _encode_delta(
     return enc, counters
 
 
+_SPO = ["s", "p", "o"]
+
+# Byte bound of the delta the driver write route takes (the files a text
+# read of it scans, summed from a listing: no job). Measured with
+# append_load on a ptable store, local[2], 4 vCPUs, deltas of
+# fresh-subject / fresh-literal triples (~56 bytes a line): the driver
+# route won by 3-6 s from 1k to 300k triples (16 MB; 16.3 s against
+# 19.6 s at 150k, 8 MB) and lost by 10 s at 660k (37 MB), where Spark's
+# handling of its large local relations (new dictionary rows, the
+# encoded delta) outgrows the jobs it saves. The bound keeps it on the
+# measured winning side, and bounds the driver's share of the write (its
+# Python term list and lookups) by file size.
+_DRIVER_DELTA_MAX_BYTES = 8 << 20
+
+
+def _input_bytes(spark: SparkSession, text: DataFrame) -> int:
+    """Total size of the files the file-source read ``text`` scans, from
+    the listing the read already made (Hadoop FileSystem, any scheme)."""
+    jvm = spark._jvm
+    conf = spark._jsc.hadoopConfiguration()
+    total = 0
+    for f in text.inputFiles():
+        path = jvm.org.apache.hadoop.fs.Path(f)
+        total += path.getFileSystem(conf).getFileStatus(path).getLen()
+    return total
+
+
+def _preds(tbl) -> list:
+    """The distinct predicate ids of an encoded pyarrow delta."""
+    import pyarrow.compute as pc
+
+    return pc.unique(tbl.column("p")).to_pylist()
+
+
+def _driver_delta(
+    spark: SparkSession, store_path: str, meta: dict, store_dict: DataFrame,
+    nt_path: str, extend: bool, plan_sink: list | None = None,
+):
+    """The driver write route of append_load (``extend``) and delete_load,
+    and the one place that picks it. It applies to a local store whose
+    dictionary the driver may read (_driver_dict_files: manifest
+    ``n_terms`` within the driver rank gate), whose manifest carries its
+    counters, and whose delta files total at most
+    gate(_DRIVER_DELTA_MAX_BYTES); otherwise this returns None and the
+    write runs the Spark route (_encode_delta) unchanged. Both conditions
+    are decided without a job (the manifest, file listings); then ONE job
+    collects the parsed delta.
+
+    On the driver: the delta's distinct terms are looked up in the
+    dictionary files (lookup_ids, no job); with ``extend`` the absent
+    ones get ids above the watermark in sorted order (the ids append_ids
+    would give), committed by _add_dict_rows' reserve-then-write; the
+    delta is encoded with index_in/take (a triple naming an absent term
+    drops out, as from the Spark route's inner joins) and deduplicated.
+    ONE Spark job then finds which delta rows the store already holds: a
+    semi-join of the broadcast, uploaded delta against the by_p slice of
+    its predicates.
+
+    Returns (encoded deduped delta [pyarrow], its upload [DataFrame],
+    touched predicate ids, delta rows already stored [pyarrow], counters
+    as _encode_delta's)."""
+    files = _driver_dict_files(spark, store_path, store_dict, meta)
+    if files is None or meta["max_id"] is None:
+        return None
+    text = spark.read.text(nt_path)
+    if _input_bytes(spark, text) > gate(_DRIVER_DELTA_MAX_BYTES):
+        return None
+    parsed = parse_ntriples(text).toArrow()
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    # one string type for the term set and index_in's value set, whatever
+    # string type the session's Arrow conversion hands back
+    cols = {c: parsed.column(c).cast(pa.large_string()) for c in _SPO}
+    terms = pc.unique(
+        pa.chunked_array([ch for c in cols.values() for ch in c.chunks], pa.large_string())
+    ).drop_null().to_pylist()
+    ids = lookup_ids(store_dict, terms, files)
+    counters: dict = {}
+    if extend:
+        fresh = sorted(t for t in terms if t not in ids)
+        base = int(meta["max_id"])
+        rows = new_term_rows(spark, fresh, base)
+        # the numeric-typed probe only matters while the dictionary is
+        # still recorded plain
+        typed = bool(fresh and meta["dict_plain"]) and _count_and_typed(rows)[1]
+        _, n_terms, n_new = _add_dict_rows(
+            spark, store_path, meta, store_dict, rows, len(fresh), typed
+        )
+        # new_term_rows' ids, in the same (sorted) order
+        ids.update((t, base + 1 + i) for i, t in enumerate(fresh))
+        counters = {"n_terms": n_terms, "n_new_terms": n_new}
+    keys = pa.array(list(ids), pa.large_string())
+    vals = pa.array(list(ids.values()), pa.int64())
+    enc = (
+        pa.table({c: pc.take(vals, pc.index_in(cols[c], value_set=keys)) for c in _SPO})
+        .drop_null()
+        .group_by(_SPO)
+        .aggregate([])
+        .select(_SPO)
+    )
+    touched = _preds(enc)
+    delta = arrow_df(
+        spark, {c: enc.column(c) for c in _SPO}, "s long, p long, o long"
+    )
+    present = enc.slice(0, 0)
+    if touched:
+        stored = (
+            store_triples(spark, store_path)
+            .filter(F.col("p").isin(touched))
+            .join(F.broadcast(delta), _SPO, "semi")
+            .select(*_SPO)
+        )
+        if plan_sink is not None:
+            plan_sink.append(stored._jdf.queryExecution().executedPlan().toString())
+        present = stored.toArrow().cast(enc.schema)
+    return enc, delta, touched, present, counters
+
+
 def append_load(spark: SparkSession, nt_path: str, store_path: str) -> dict:
     """Incremental load: parse a DELTA N-Triples file into an EXISTING
     store without re-ranking the dictionary or rewriting the stored
     triples. Work is O(|delta|) plus partition-pruned refreshes of only
     the predicates the delta changed:
 
-    - _encode_delta(extend=True) gives new terms ids above the manifest's
-      id watermark, reserve-then-write (_extend_store_dict), and encodes
-      the delta against a dictionary slice of its own terms;
-    - the new rows are APPENDED to by_p/ (new predicates create new
-      directories, existing ones gain files);
+    - new terms get ids above the manifest's id watermark, reserve-then-
+      write (_add_dict_rows), and the delta is encoded against the
+      dictionary;
+    - the delta rows the store lacks are APPENDED to by_p/ (new
+      predicates create new directories, existing ones gain files);
     - _refresh_after_vp_write merges stats/ and refreshes the base
       ptable/extvp layouts for the changed predicates only;
     - a committed reasoning layer is maintained in O(Δ)
       (_maintain_reasoning).
+
+    Route: a small delta on a small local store runs on the driver
+    (_driver_delta: one job collects the parse, the dictionary lookup,
+    encode and diff run on the driver, one semi-join finds the stored
+    rows); anything else — a URI store, a dictionary above the driver
+    rank gate, delta files above _DRIVER_DELTA_MAX_BYTES,
+    D_SPARQ_DRIVER_GATE_SCALE=0 — runs the Spark route
+    (_encode_delta, a dictionary-slice encode and an anti-join against
+    the store slice). Both give the same store, ids included.
 
     The manifest now says rank_ordered=false; open_store passes the flag
     to the engine so the MIN/MAX id peel degrades to decode-before-agg
     instead of silently returning wrong terms.
 
     Not concurrent-writer-safe (same as bulk_load): one loader at a time.
-    Re-delivered or overlapping deltas are NO-OPS: the encoded delta
-    dedups and anti-joins the pre-append store slice before the by_p
-    append (an RDF graph is a set of triples), so a retry after an
-    un-acked success appends nothing. A crash mid-append can still leave
-    orphan part-files from the interrupted WRITE itself — production
-    would stage to a temp dir and commit by rename."""
-    enc, counters = _encode_delta(spark, store_path, nt_path, extend=True)
-    # persist: the encoded delta feeds the dedup anti-join, the by_p
-    # write, AND the touched-predicate list below — without it the 3-way
-    # dict encode re-runs per consumer
-    enc = enc.persist()
-    touched = [r["p"] for r in enc.select("p").distinct().collect()]
-    # an RDF graph is a SET of triples: a re-delivered delta (retry after
-    # an un-acked success) or one restating stored triples must be a
-    # no-op, not a duplicate-row append — duplicates double counts and
-    # demote genuinely functional predicates out of the property-table
-    # layout. Dedup within the delta, then anti-join the PRE-APPEND store
-    # slice, partition-pruned to the touched predicates (O(touched
-    # slice), the same bound the stats merge documents).
-    pre_slice = store_triples(spark, store_path).filter(F.col("p").isin(touched))
-    maintain_reasoning = _has_reasoning(store_path)
-    delta_set = enc.dropDuplicates(["s", "p", "o"])
-    if maintain_reasoning:
-        # pin the deduped delta itself: the reasoning maintenance at the
-        # end re-derives from it AFTER enc is unpersisted and by_p has
-        # been appended to (eager checkpoint, so unpersist below is safe)
-        delta_set = delta_set.localCheckpoint()
-    new_rows = (
-        delta_set
-        .join(pre_slice, ["s", "p", "o"], "left_anti")
-        .localCheckpoint()  # pin: written INTO the directory it reads
-    )
-    enc.unpersist()
+    Re-delivered or overlapping deltas are NO-OPS: the encoded delta is
+    deduped and the rows the PRE-APPEND store slice already holds are
+    dropped before the by_p append (an RDF graph is a set of triples), so
+    a retry after an un-acked success appends nothing. A crash mid-append
+    can still leave orphan part-files from the interrupted WRITE itself —
+    production would stage to a temp dir and commit by rename."""
     from d_sparq_spark.sources.triple_store import write_vp
 
-    write_vp(new_rows, store_path, mode="append")
-    # the predicate list that actually CHANGED: from the post-dedup rows,
-    # not the raw delta — a fully-redundant re-delivered delta appends
-    # nothing, so stats/layouts must not be recomputed for it (the
-    # pre-dedup `touched` above is only the anti-join prune)
-    touched_new = [r["p"] for r in new_rows.select("p").distinct().collect()]
+    meta = _read_meta(spark, store_path)
+    store_dict = _open_dict(spark, store_path, meta["dict_buckets"])
+    maintain_reasoning = _has_reasoning(store_path)
+    small = _driver_delta(spark, store_path, meta, store_dict, nt_path, extend=True)
+    if small is not None:
+        enc, delta_set, touched, present, counters = small
+        new = enc.join(present, _SPO, join_type="left anti")
+        touched_new = _preds(new)
+        new_rows = arrow_df(
+            spark, {c: new.column(c) for c in _SPO}, "s long, p long, o long"
+        )
+    else:
+        enc, counters = _encode_delta(
+            spark, store_path, meta, store_dict, nt_path, extend=True
+        )
+        # persist: the encoded delta feeds the dedup anti-join, the by_p
+        # write, AND the touched-predicate list below — without it the
+        # 3-way dict encode re-runs per consumer
+        enc = enc.persist()
+        touched = [r["p"] for r in enc.select("p").distinct().collect()]
+        # an RDF graph is a SET of triples: a re-delivered delta (retry
+        # after an un-acked success) or one restating stored triples must
+        # be a no-op, not a duplicate-row append — duplicates double
+        # counts and demote genuinely functional predicates out of the
+        # property-table layout. Dedup within the delta, then anti-join
+        # the PRE-APPEND store slice, partition-pruned to the touched
+        # predicates (O(touched slice), the same bound the stats merge
+        # documents).
+        pre_slice = store_triples(spark, store_path).filter(F.col("p").isin(touched))
+        delta_set = enc.dropDuplicates(_SPO)
+        if maintain_reasoning:
+            # pin the deduped delta itself: the reasoning maintenance at
+            # the end re-derives from it AFTER enc is unpersisted and by_p
+            # has been appended to (eager checkpoint, so unpersist below
+            # is safe)
+            delta_set = delta_set.localCheckpoint()
+        new_rows = (
+            delta_set
+            .join(pre_slice, _SPO, "left_anti")
+            .localCheckpoint()  # pin: written INTO the directory it reads
+        )
+        enc.unpersist()
+        # the predicate list that actually CHANGES: from the post-dedup
+        # rows, not the raw delta — a fully-redundant re-delivered delta
+        # appends nothing, so stats/layouts must not be recomputed for it
+        # (the pre-dedup `touched` above is only the anti-join prune)
+        touched_new = [r["p"] for r in new_rows.select("p").distinct().collect()]
     if touched_new:
+        write_vp(new_rows, store_path, mode="append")
         _refresh_after_vp_write(spark, store_path, touched_new)
     if maintain_reasoning:
         # AFTER the by_p append: maintenance derives from the full deduped
@@ -590,29 +792,29 @@ def _refresh_after_vp_write(
     changed the ``changed`` predicates — the shared tail of append_load
     and delete_load.
 
-    Stats merge FIRST, O(changed), not O(store): a predicate the write
-    never changed keeps its old row verbatim; only the changed predicates
-    recompute, over a partition-pruned read of exactly those by_p/p=<id>
-    directories. The layout refresh then REUSES the fresh per-predicate
-    counts instead of re-aggregating the store. The changed list is
-    metadata-scale (distinct predicates are bounded in any RDF store) — a
-    driver-side list is the A7 contract. The kept rows come from a
-    DRIVER-side stats read: metadata-scale, and a local relation needs no
-    eager checkpoint to be safe against the overwrite of the directory it
-    came from."""
-    changed_set = set(changed)
-    kept_rows = [
-        (r["p"], r["cnt"], r["ndv_s"], r["ndv_o"])
-        for r in _read_stats_rows(spark, store_path)
-        if r["p"] not in changed_set
+    Stats merge FIRST, O(changed ∪ PT), not O(store): the changed
+    predicates and the base property table's predicates recompute, over
+    a partition-pruned read of exactly those by_p/p=<id> directories (the
+    ones the ptable refresh rebuilds from anyway); every other predicate
+    keeps its old row verbatim. The PT predicates recompute because the
+    refresh takes their functionality from these rows (_functional): a
+    row left stale by a crash between a by_p write and this merge would
+    otherwise keep a predicate that gained a second value per subject
+    pivoted, dropping bindings, at every later refresh. The predicate
+    lists and the stats rows are metadata-scale (distinct predicates are
+    bounded in any RDF store — the A7 contract), so the merge happens on
+    the driver: kept rows from a driver-side read, recomputed rows
+    collected, the result written by _write_stats. The layout refresh
+    then reads the merged counts back instead of re-aggregating the
+    store."""
+    recompute = set(changed) | set(_ptable_manifest_preds(store_path) or ())
+    rows = [
+        r for r in _read_stats_rows(spark, store_path) if r["p"] not in recompute
     ]
-    kept = local_df(spark, kept_rows, "p long, cnt long, ndv_s long, ndv_o long")
-    recomputed = predicate_stats(
-        store_triples(spark, store_path).filter(F.col("p").isin(changed))
+    rows += _collect_stats(
+        store_triples(spark, store_path).filter(F.col("p").isin(sorted(recompute)))
     )
-    kept.unionByName(recomputed).write.mode("overwrite").parquet(
-        os.path.join(store_path, "stats")
-    )
+    _write_stats(spark, store_path, rows)
     # materialized layouts are DERIVED from the triple set — a write would
     # leave them stale and the catalog would route qualifying stars to
     # artifacts missing (or still serving) the changed rows
@@ -632,7 +834,10 @@ def _refresh_layouts(
       so the rebuild scans only those by_p directories. That is exact
       both ways: new rows can only DEMOTE a predicate out of
       functionality, deleted rows can only PROMOTE a changed one in, and
-      an unchanged non-PT predicate cannot change.
+      an unchanged non-PT predicate cannot change. The base layout takes
+      functionality from the merged stats/ (_functional); the closure's
+      is checked over the data, since stats/ does not count the entailed
+      layer.
     - ExtVP: only SS/OS pairs involving a changed predicate can differ;
       untouched pairs keep their files and manifest entries
       (refresh_extvp). Sizes and the predicate universe come from the
@@ -646,15 +851,19 @@ def _refresh_layouts(
     has_extvp = os.path.exists(os.path.join(root, "extvp", "manifest.json"))
     if old_pt is None and not has_extvp:
         return
+    stats = _read_stats_rows(spark, store_path)
     rel = (
         reasoned_triples(spark, store_path)
         if reasoned
         else store_triples(spark, store_path)
     )
     if old_pt is not None:
-        _refresh_ptable_layout(rel, root, sorted(set(old_pt) | set(changed)))
+        _refresh_ptable_layout(
+            rel, root, sorted(set(old_pt) | set(changed)),
+            functional=None if reasoned else _functional(stats),
+        )
     if has_extvp:
-        sizes = {r["p"]: r["cnt"] for r in _read_stats_rows(spark, store_path)}
+        sizes = {r["p"]: r["cnt"] for r in stats}
         if reasoned:
             for r in (
                 entailed_triples(spark, store_path)
@@ -712,36 +921,42 @@ def _ptable_manifest_preds(layout_root: str):
         return _json.load(f)
 
 
-def _save_property_table(rel: DataFrame, layout_root: str, candidates) -> bool:
+def _save_property_table(
+    rel: DataFrame, layout_root: str, candidates, functional=None
+) -> bool:
     """Build the property table of ``rel`` over its functional predicates
     among ``candidates`` (None = all) and persist it under
     ``layout_root``; False when no candidate is functional (nothing
-    written). add_property_table caches the pivot for in-session
-    catalogs; a persisted layout is read back from parquet, so the cached
-    copy is released once written instead of staying registered in the
-    session's cache manager."""
+    written). ``functional``: the functional predicates when the store's
+    stats already say (None = check the data). The pivot is not cached: a
+    persisted layout is read back from parquet, so its one write is its
+    only consumer."""
     from d_sparq_spark.plans.catalog import StoreCatalog
 
-    cat = StoreCatalog().add_property_table(rel, predicates=candidates)
+    cat = StoreCatalog().add_property_table(
+        rel, predicates=candidates, functional=functional, cache=False
+    )
     if cat.ptable is None:
         return False
     cat.save_property_table(layout_root)
-    cat.ptable.unpersist()
     return True
 
 
-def _refresh_ptable_layout(rel: DataFrame, layout_root: str, candidates) -> None:
+def _refresh_ptable_layout(
+    rel: DataFrame, layout_root: str, candidates, functional=None
+) -> None:
     """THE ptable refresh primitive (base and closure layouts): rebuild
     the property table of ``rel`` restricted to ``candidates`` (None = all
     predicates, the initial materialization), persist under
-    ``layout_root``. When no candidate is functional the DATA is removed
+    ``layout_root``; ``functional`` as in _save_property_table. When no
+    candidate is functional the DATA is removed
     but an empty manifest stays — the layout remains 'desired', so later
     refreshes keep probing and a deletion that restores functionality
     resurrects the route."""
     import json as _json
     import shutil
 
-    if not _save_property_table(rel, layout_root, candidates):
+    if not _save_property_table(rel, layout_root, candidates, functional):
         shutil.rmtree(
             os.path.join(layout_root, "ptable", "data"), ignore_errors=True
         )
@@ -766,10 +981,13 @@ def delete_load(
     touched / premise / derivable predicate directories — O(touched
     slice), never a store rescan.
 
-    Work: _encode_delta(extend=False) encodes the delta against a
-    dictionary slice bounded by its own terms; only the touched by_p
-    partitions are rewritten, via dynamic partition overwrite
-    (_rewrite_vp_partitions; emptied predicates lose their directory);
+    Work: the delta is encoded against the dictionary (terms it lacks
+    drop their triples) on the route append_load documents — on the
+    driver for a small delta on a small local store (_driver_delta),
+    else by _encode_delta's dictionary-slice encode; only the touched
+    by_p partitions are rewritten, via dynamic partition overwrite
+    (_rewrite_vp_partitions; emptied predicates lose their directory),
+    from a Spark plan that anti-joins the delta;
     _refresh_after_vp_write then merges stats/ and refreshes ptable/extvp
     as for an append (deletion can PROMOTE a predicate into
     functionality, which the refresh's candidate set covers). Dictionary
@@ -782,23 +1000,41 @@ def delete_load(
     but lost them. ``plan_sink``, when given, receives every
     instance-scale plan the operation executes so tests can assert the
     O(touched-slice) shape on the REAL plans."""
-    enc, _ = _encode_delta(spark, store_path, nt_path, extend=False)
-    enc = enc.dropDuplicates(["s", "p", "o"]).localCheckpoint()
-    touched = [r["p"] for r in enc.select("p").distinct().collect()]
-    n_deleted = 0
-    touched_del: list = []
-    if touched:
-        pre_slice = store_triples(spark, store_path).filter(F.col("p").isin(touched))
-        # rows actually present — pinned BEFORE the rewrite invalidates
-        # the files they were read from
-        deleted = enc.join(pre_slice, ["s", "p", "o"], "semi").localCheckpoint()
-        n_deleted = deleted.count()
-        touched_del = [r["p"] for r in deleted.select("p").distinct().collect()]
+    meta = _read_meta(spark, store_path)
+    store_dict = _open_dict(spark, store_path, meta["dict_buckets"])
+    small = _driver_delta(
+        spark, store_path, meta, store_dict, nt_path, extend=False,
+        plan_sink=plan_sink,
+    )
+    if small is not None:
+        _, enc, touched, deleted, _ = small
+        n_deleted = deleted.num_rows
+        touched_del = _preds(deleted)
+        # the delta is driver-sized here: broadcast it into the rewrite
+        delta_side = F.broadcast(enc)
+    else:
+        enc, _ = _encode_delta(
+            spark, store_path, meta, store_dict, nt_path, extend=False
+        )
+        enc = enc.dropDuplicates(_SPO).localCheckpoint()
+        touched = [r["p"] for r in enc.select("p").distinct().collect()]
+        n_deleted = 0
+        touched_del: list = []
+        if touched:
+            pre_slice = store_triples(spark, store_path).filter(
+                F.col("p").isin(touched)
+            )
+            # rows actually present — pinned BEFORE the rewrite
+            # invalidates the files they were read from
+            deleted = enc.join(pre_slice, _SPO, "semi").localCheckpoint()
+            n_deleted = deleted.count()
+            touched_del = [r["p"] for r in deleted.select("p").distinct().collect()]
+        delta_side = enc
     if touched_del:
         remaining = (
             store_triples(spark, store_path)
             .filter(F.col("p").isin(touched_del))
-            .join(enc, ["s", "p", "o"], "left_anti")
+            .join(delta_side, _SPO, "left_anti")
         )
         if plan_sink is not None:
             plan_sink.append(

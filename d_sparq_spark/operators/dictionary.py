@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from d_sparq_spark.localdata import local_df
+from d_sparq_spark.localdata import arrow_df, local_df
 
 _IRI_RE = r"^[A-Za-z][A-Za-z0-9+.-]*:"
 
@@ -209,9 +209,27 @@ def extend_dictionary(
     existing dictionary lacks — build_dictionary's incremental sibling
     (same kind classification). ``base_id`` as in append_ids."""
     delta = append_ids(dictionary, terms, base_id=base_id)
-    return delta.withColumn(
-        "kind", F.when(F.col("term").rlike(_IRI_RE), "iri").otherwise("literal")
-    )
+    return delta.withColumn("kind", term_kind())
+
+
+def new_term_rows(spark, terms: list, base_id: int) -> DataFrame:
+    """Dictionary rows (id, term, kind) for driver-held ``terms`` that the
+    dictionary lacks: ids ``base_id+1 ..`` in sorted order — the ids
+    append_ids gives the same terms (its driver rank sorts in code-point
+    order, which is Spark's UTF-8 byte order), so the extension is
+    bit-identical whichever side ran it. Uploaded as one local relation."""
+    import numpy as np
+    import pyarrow as pa
+
+    terms = sorted(terms)
+    return arrow_df(
+        spark,
+        {
+            "id": np.arange(base_id + 1, base_id + 1 + len(terms), dtype=np.int64),
+            "term": pa.array(terms, pa.string()),
+        },
+        "id long, term string",
+    ).withColumn("kind", term_kind())
 
 
 def lookup_ids(
@@ -256,10 +274,14 @@ def build_dictionary(triples: DataFrame) -> DataFrame:
     cols = _positions(triples)
     # single pass, same rationale as distinct_terms (assign_ids dedups)
     terms = triples.select(F.explode(F.array(*cols)).alias("term"))
-    with_ids = assign_ids(terms)
-    return with_ids.withColumn(
-        "kind", F.when(F.col("term").rlike(_IRI_RE), "iri").otherwise("literal")
-    )
+    return assign_ids(terms).withColumn("kind", term_kind())
+
+
+def term_kind(col: str = "term"):
+    """The dictionary's ``kind`` column: "iri" for a prefixed-IRI term,
+    "literal" otherwise — one classification for every dictionary writer
+    (build_dictionary, extend_dictionary, new_term_rows)."""
+    return F.when(F.col(col).rlike(_IRI_RE), "iri").otherwise("literal")
 
 
 def encode_triples(

@@ -56,27 +56,43 @@ class StoreCatalog:
 
     # ------------- builders -------------
 
-    def add_property_table(self, triples: DataFrame, predicates: list | None = None) -> "StoreCatalog":
-        """Materialize (and cache) the property table over the store's
+    def add_property_table(
+        self,
+        triples: DataFrame,
+        predicates: list | None = None,
+        functional: list | None = None,
+        cache: bool = True,
+    ) -> "StoreCatalog":
+        """Materialize (and by default cache) the property table over the store's
         functional predicates — predicates where no subject has two values,
         checked from the data, because the pivot keeps one value per (s,p)
         and routing a multi-valued predicate through it would drop
         bindings. ``predicates`` narrows the candidate set (hot predicates
-        only, the practical choice at 100 TB)."""
-        cand = triples
-        if predicates is not None:
-            # narrow BEFORE the aggregation: the functionality check only
-            # needs the candidates' triples, not a full-store pass
-            cand = triples.filter(F.col("p").isin(list(predicates)))
-        func = (
-            cand.groupBy("p")
-            .agg((F.count(F.lit(1)) == F.count_distinct("s")).alias("functional"))
-            .filter("functional")
-        )
-        functional = {r["p"] for r in func.select("p").collect()}
+        only, the practical choice at 100 TB). ``functional``: the
+        functional predicates when the caller knows them exactly (a
+        loaded store's stats: count == exact distinct subjects), which
+        skips the data check. ``cache=False`` leaves the pivot uncached,
+        for a caller that only persists it (one write computes it)."""
+        if functional is not None:
+            functional = set(functional)
+            if predicates is not None:
+                functional &= set(predicates)
+        else:
+            cand = triples
+            if predicates is not None:
+                # narrow BEFORE the aggregation: the functionality check
+                # only needs the candidates' triples, not a full-store pass
+                cand = triples.filter(F.col("p").isin(list(predicates)))
+            func = (
+                cand.groupBy("p")
+                .agg((F.count(F.lit(1)) == F.count_distinct("s")).alias("functional"))
+                .filter("functional")
+            )
+            functional = {r["p"] for r in func.select("p").collect()}
         if functional:
             preds = sorted(functional, key=str)
-            self.ptable = property_table(triples, preds).cache()
+            pt = property_table(triples, preds)
+            self.ptable = pt.cache() if cache else pt
             self.pt_preds = frozenset(preds)
         return self
 

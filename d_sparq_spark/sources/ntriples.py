@@ -107,24 +107,31 @@ def _format_term(c: Column) -> Column:
 
 def _parse_term(c: Column) -> Column:
     inner = F.substring(c, F.lit(2), F.length(c) - 2)
-    lex_t = F.regexp_extract(c, _OBJ_TYPED_RE, 1)
+    typed = c.rlike(_OBJ_TYPED_RE)
+    lang = c.rlike(_OBJ_LANG_RE)
     dt = F.regexp_extract(c, _OBJ_TYPED_RE, 2)
-    lex_l = F.regexp_extract(c, _OBJ_LANG_RE, 1)
-    tag = F.regexp_extract(c, _OBJ_LANG_RE, 2)
+    # the quoted lexical part of every literal form, unescaped ONCE: the
+    # unescape is an 11-step regexp_replace chain, and a copy per branch
+    # would multiply the expression every parse builds
+    lex = _unescape_literal(
+        F.when(typed, F.regexp_extract(c, _OBJ_TYPED_RE, 1))
+        .when(lang, F.regexp_extract(c, _OBJ_LANG_RE, 1))
+        .otherwise(inner)
+    )
     return (
         F.when(c.startswith("<"), inner)
         .when(
-            c.rlike(_OBJ_TYPED_RE),
+            typed,
             # RDF 1.1: "x"^^xsd:string is the same term as plain "x"
-            F.when(dt == F.lit("xsd:string"), _unescape_literal(lex_t)).otherwise(
-                F.concat(F.lit('"'), _unescape_literal(lex_t), F.lit('"^^'), dt)
+            F.when(dt == F.lit("xsd:string"), lex).otherwise(
+                F.concat(F.lit('"'), lex, F.lit('"^^'), dt)
             ),
         )
         .when(
-            c.rlike(_OBJ_LANG_RE),
-            F.concat(F.lit('"'), _unescape_literal(lex_l), F.lit('"@'), tag),
+            lang,
+            F.concat(F.lit('"'), lex, F.lit('"@'), F.regexp_extract(c, _OBJ_LANG_RE, 2)),
         )
-        .when(c.startswith('"'), _unescape_literal(inner))
+        .when(c.startswith('"'), lex)
         .otherwise(c)  # blank node label kept verbatim
     )
 

@@ -72,11 +72,9 @@ def _reduced_union(spark, base_nt, delta_nt):
     return spark.createDataFrame(keep, "s string, p string, o string")
 
 
-@pytest.fixture(scope="module")
-def deleted_store(spark, tmp_path_factory):
-    """One shared lifecycle: bulk(BASE+EXTRA) -> materialize(ONT) ->
-    append(DELTA) -> delete(DELETE), with the plan sink captured."""
-    tmp = tmp_path_factory.mktemp("dels")
+def _delete_lifecycle(spark, tmp):
+    """bulk(BASE+EXTRA) -> materialize(ONT) -> append(DELTA) ->
+    delete(DELETE), with the plan sink captured."""
     base = _nt(tmp / "base.nt", BASE + EXTRA)
     delta = _nt(tmp / "delta.nt", DELTA)
     dele = _nt(tmp / "del.nt", DELETE)
@@ -91,6 +89,34 @@ def deleted_store(spark, tmp_path_factory):
     finally:
         spark.conf.unset("spark.sql.maxMetadataStringLength")
     return store, base, delta, dele, info, sink, tmp
+
+
+@pytest.fixture(scope="module")
+def deleted_store(spark, tmp_path_factory):
+    """One shared lifecycle (_delete_lifecycle) on the default route: a
+    small local store, so the writes run on the driver."""
+    return _delete_lifecycle(spark, tmp_path_factory.mktemp("dels"))
+
+
+@pytest.fixture(scope="module")
+def spark_route_deleted_store(spark, tmp_path_factory):
+    """The same lifecycle with the driver gates off, so the writes run
+    the Spark route — the route of URI stores and large deltas."""
+    import d_sparq_spark.load_pipeline as lp
+
+    calls = []
+    real = lp._encode_delta
+
+    def spy(*a, **k):
+        calls.append(1)
+        return real(*a, **k)
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setenv("D_SPARQ_DRIVER_GATE_SCALE", "0")
+        mp.setattr(lp, "_encode_delta", spy)
+        out = _delete_lifecycle(spark, tmp_path_factory.mktemp("dels_spark"))
+    assert len(calls) == 2  # the append and the delete
+    return out
 
 
 def test_delete_equals_rebuild_both_layers(spark, deleted_store, tmp_path):
@@ -199,6 +225,13 @@ def test_delete_plans_stay_partition_pruned(spark, deleted_store):
                 r"p#\d+L? (IN \(|= )", pf[1].split("]", 1)[0]
             ), seg[:800]
     assert seen_by_p > 0
+
+
+def test_spark_route_delete_plans_stay_partition_pruned(
+    spark, spark_route_deleted_store
+):
+    """The partition-filter check above, on the Spark route's plans."""
+    test_delete_plans_stay_partition_pruned(spark, spark_route_deleted_store)
 
 
 def test_delete_redelivery_idempotent_and_self_healing(spark, deleted_store):
