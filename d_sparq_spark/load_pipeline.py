@@ -35,10 +35,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from d_sparq_spark.encoded_engine import EncodedSparqlEngine
-from d_sparq_spark.gates import gate
+from d_sparq_spark.gates import DRIVER_DELTA_MAX_BYTES, DRIVER_RANK_MAX_ROWS, gate
 from d_sparq_spark.localdata import arrow_df, local_df
 from d_sparq_spark.operators.dictionary import (
-    _DRIVER_RANK_MAX_ROWS,
     build_dictionary,
     distinct_terms,
     encode_triples,
@@ -569,18 +568,6 @@ def _encode_delta(
 
 _SPO = ["s", "p", "o"]
 
-# Byte bound of the delta the driver write route takes (the files a text
-# read of it scans, summed from a listing: no job). Measured with
-# append_load on a ptable store, local[2], 4 vCPUs, deltas of
-# fresh-subject / fresh-literal triples (~56 bytes a line): the driver
-# route won by 3-6 s from 1k to 300k triples (16 MB; 16.3 s against
-# 19.6 s at 150k, 8 MB) and lost by 10 s at 660k (37 MB), where Spark's
-# handling of its large local relations (new dictionary rows, the
-# encoded delta) outgrows the jobs it saves. The bound keeps it on the
-# measured winning side, and bounds the driver's share of the write (its
-# Python term list and lookups) by file size.
-_DRIVER_DELTA_MAX_BYTES = 8 << 20
-
 
 def _input_bytes(spark: SparkSession, text: DataFrame) -> int:
     """Total size of the files the file-source read ``text`` scans, from
@@ -610,7 +597,7 @@ def _driver_delta(
     dictionary the driver may read (_driver_dict_files: manifest
     ``n_terms`` within the driver rank gate), whose manifest carries its
     counters, and whose delta files total at most
-    gate(_DRIVER_DELTA_MAX_BYTES); otherwise this returns None and the
+    gate(DRIVER_DELTA_MAX_BYTES); otherwise this returns None and the
     write runs the Spark route (_encode_delta) unchanged. Both conditions
     are decided without a job (the manifest, file listings); then ONE job
     collects the parsed delta.
@@ -632,7 +619,7 @@ def _driver_delta(
     if files is None or meta["max_id"] is None:
         return None
     text = spark.read.text(nt_path)
-    if _input_bytes(spark, text) > gate(_DRIVER_DELTA_MAX_BYTES):
+    if _input_bytes(spark, text) > gate(DRIVER_DELTA_MAX_BYTES):
         return None
     parsed = parse_ntriples(text).toArrow()
     import pyarrow as pa
@@ -698,7 +685,7 @@ def append_load(spark: SparkSession, nt_path: str, store_path: str) -> dict:
     - the delta rows the store lacks are APPENDED to by_p/ (new
       predicates create new directories, existing ones gain files);
     - _refresh_after_vp_write merges stats/ and refreshes the base
-      ptable/extvp layouts for the changed predicates only;
+      ptable/extvp layouts for the delta's predicates only;
     - a committed reasoning layer is maintained in O(Δ)
       (_maintain_reasoning).
 
@@ -706,7 +693,7 @@ def append_load(spark: SparkSession, nt_path: str, store_path: str) -> dict:
     (_driver_delta: one job collects the parse, the dictionary lookup,
     encode and diff run on the driver, one semi-join finds the stored
     rows); anything else — a URI store, a dictionary above the driver
-    rank gate, delta files above _DRIVER_DELTA_MAX_BYTES,
+    rank gate, delta files above DRIVER_DELTA_MAX_BYTES,
     D_SPARQ_DRIVER_GATE_SCALE=0 — runs the Spark route
     (_encode_delta, a dictionary-slice encode and an anti-join against
     the store slice). Both give the same store, ids included.
@@ -719,7 +706,9 @@ def append_load(spark: SparkSession, nt_path: str, store_path: str) -> dict:
     Re-delivered or overlapping deltas are NO-OPS: the encoded delta is
     deduped and the rows the PRE-APPEND store slice already holds are
     dropped before the by_p append (an RDF graph is a set of triples), so
-    a retry after an un-acked success appends nothing. A crash mid-append
+    a retry after an un-acked success appends nothing — but re-runs the
+    stats/layout refreshes and the reasoning maintenance from the full
+    delta, repairing a crash that appended to by_p but lost them. A crash mid-append
     can still leave orphan part-files from the interrupted WRITE itself —
     production would stage to a temp dir and commit by rename."""
     from d_sparq_spark.sources.triple_store import write_vp
@@ -731,7 +720,7 @@ def append_load(spark: SparkSession, nt_path: str, store_path: str) -> dict:
     if small is not None:
         enc, delta_set, touched, present, counters = small
         new = enc.join(present, _SPO, join_type="left anti")
-        touched_new = _preds(new)
+        grows = new.num_rows > 0
         new_rows = arrow_df(
             spark, {c: new.column(c) for c in _SPO}, "s long, p long, o long"
         )
@@ -766,14 +755,18 @@ def append_load(spark: SparkSession, nt_path: str, store_path: str) -> dict:
             .localCheckpoint()  # pin: written INTO the directory it reads
         )
         enc.unpersist()
-        # the predicate list that actually CHANGES: from the post-dedup
-        # rows, not the raw delta — a fully-redundant re-delivered delta
-        # appends nothing, so stats/layouts must not be recomputed for it
-        # (the pre-dedup `touched` above is only the anti-join prune)
-        touched_new = [r["p"] for r in new_rows.select("p").distinct().collect()]
-    if touched_new:
+        # a fully-redundant re-delivered delta appends nothing
+        grows = not new_rows.isEmpty()
+    if grows:
         write_vp(new_rows, store_path, mode="append")
-        _refresh_after_vp_write(spark, store_path, touched_new)
+    if touched:
+        # refreshes gated on TOUCHED, not on the rows appended (delete_load's
+        # rule): a re-delivered append after a crash that landed its by_p
+        # rows but lost these refreshes appends nothing — the refreshes must
+        # still run, from the full delta's predicate set, to repair stale
+        # stats/ and ptable/extvp artifacts. Idempotent: recomputation over
+        # an already-consistent store is a no-op.
+        _refresh_after_vp_write(spark, store_path, touched)
     if maintain_reasoning:
         # AFTER the by_p append: maintenance derives from the full deduped
         # delta, not new_rows — a re-delivered delta then SELF-HEALS a
@@ -1269,7 +1262,7 @@ def _driver_dict_files(
     if "://" in store_path:
         return None
     n_terms = (meta or _read_meta(spark, store_path))["n_terms"]
-    if n_terms is None or n_terms > gate(_DRIVER_RANK_MAX_ROWS):
+    if n_terms is None or n_terms > gate(DRIVER_RANK_MAX_ROWS):
         return None
     from urllib.parse import unquote, urlparse
 

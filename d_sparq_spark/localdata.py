@@ -37,8 +37,9 @@ def arrow_df(spark: SparkSession, columns: dict, schema) -> DataFrame:
     pandas block manager and converts per slice on FIRST materialization —
     measured 7.2 s for a 6.6M-row int64 pair set vs 1.0 s through a
     pyarrow Table (zero-copy from int64 numpy). Works with the Arrow conf
-    off too (input-format support, not the toPandas path); any runtime
-    without Table support falls back to the pandas route."""
+    off too (input-format support, not the toPandas path). Spark casts
+    the Table to ``schema``: int64 columns load into any integral type,
+    large_string or object string columns into string."""
     import pyarrow as pa
 
     table = pa.table(
@@ -64,8 +65,6 @@ def arrow_df(spark: SparkSession, columns: dict, schema) -> DataFrame:
         spark.conf.set(conf_key, str(chunk))
         try:
             return spark.createDataFrame(table, schema=schema)
-        except Exception:
-            return spark.createDataFrame(table.to_pandas(), schema=schema)
         finally:
             if old is None:
                 spark.conf.unset(conf_key)

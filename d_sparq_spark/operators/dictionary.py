@@ -26,23 +26,35 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from d_sparq_spark.gates import DRIVER_RANK_MAX_ROWS, driver_route
 from d_sparq_spark.localdata import arrow_df, local_df
 
 _IRI_RE = r"^[A-Za-z][A-Za-z0-9+.-]*:"
 
-# Gate for the DRIVER rank fast path: a term stream at or below the gate
-# (RAW rows, probed with a short-circuiting limit so the big case never
-# collects) is collected once and ranked with a C-speed hash-dedup + sort
-# — the distributed scheme pays a range-partition sampling pass, a full
-# exchange, and a per-partition window for what is, at bench/metadata
-# scale, tens of thousands of strings (measured: the dictionary build was
-# the single largest phase of bulk_load). Python string comparison is
-# code-point order, which equals Spark's unsigned UTF-8 byte comparison
-# (a UTF-8 order-preservation property, the same fact graph._driver_cc
-# relies on), and NULL ranks first exactly like the window's default
-# NULLS FIRST — ids are bit-identical by construction. Above the gate the
-# distributed rank runs unchanged (the 100 TB path).
-_DRIVER_RANK_MAX_ROWS = 2_000_000
+
+def _driver_rank(tbl, col: str) -> dict:
+    """assign_ids' driver kernel over the collected raw term stream
+    ``tbl``, returning the (id, term) columns: a C-speed hash-dedup, then
+    a sort of the distincts only — the
+    distributed scheme pays a range-partition sampling pass, a full
+    exchange and a per-partition window for what is, at bench/metadata
+    scale, tens of thousands of strings. Python string comparison is
+    code-point order, which equals Spark's unsigned UTF-8 byte comparison
+    (a UTF-8 order-preservation property, the same fact graph._driver_cc
+    relies on), integers compare numerically on both sides, and NULL
+    ranks first exactly like the window's default NULLS FIRST — ids are
+    bit-identical by construction."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    vals = tbl.column(col)
+    uniq = sorted(pc.unique(vals.drop_null()).to_pylist())
+    terms = [None] * (vals.null_count > 0) + uniq
+    return {
+        "id": np.arange(1, len(terms) + 1, dtype=np.int64),
+        "term": pa.array(terms, vals.type),
+    }
 
 
 def assign_ids(terms: DataFrame, col: str = "term", num_partitions: int | None = None) -> DataFrame:
@@ -58,38 +70,20 @@ def assign_ids(terms: DataFrame, col: str = "term", num_partitions: int | None =
     set instead of two.
 
     An explicit ``num_partitions`` requests the distributed scheme
-    (partitioning-invariance tests pin it); the default path may take the
-    gated driver rank above when the stream is metadata-scale."""
+    (partitioning-invariance tests pin it); otherwise a metadata-scale
+    stream takes the driver route (``_driver_rank``)."""
     src = terms.select(col)
     spark = src.sparkSession
-    if num_partitions is None and dict(src.dtypes)[col] == "string":
-        from d_sparq_spark.gates import gate as _g
-
-        gate = _g(_DRIVER_RANK_MAX_ROWS)
-        # limit(gate+1) short-circuits: at scale this collects at most
-        # gate+1 rows and falls through; below it we hold ALL rows
-        tbl = src.limit(gate + 1).toArrow()
-        if tbl.num_rows <= gate:
-            import numpy as np
-            import pyarrow as pa
-            import pyarrow.compute as pc
-
-            from d_sparq_spark.localdata import arrow_df
-
-            vals = tbl.column(col)
-            has_null = vals.null_count > 0
-            # hash-dedup first (C speed), THEN sort only the distincts
-            uniq = sorted(pc.unique(vals.drop_null()).to_pylist())
-            n_ids = len(uniq) + (1 if has_null else 0)
-            term_col = pa.array(([None] if has_null else []) + uniq, pa.string())
-            return arrow_df(
-                spark,
-                {
-                    "id": np.arange(1, n_ids + 1, dtype=np.int64),
-                    "term": term_col,
-                },
-                "id long, term string",
-            )
+    if num_partitions is None:
+        out = driver_route(
+            DRIVER_RANK_MAX_ROWS,
+            lambda tbl: _driver_rank(tbl, col),
+            src,
+            nulls=True,
+            schema=f"id long, term {dict(src.dtypes)[col]}",
+        )
+        if out is not None:
+            return out
     n = num_partitions or max(spark.sparkContext.defaultParallelism, 2)
 
     # no sortWithinPartitions here: the counts job is order-insensitive

@@ -28,18 +28,20 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from d_sparq_spark.gates import gate as _gate
+from d_sparq_spark.gates import DRIVER_MAX_EDGES, INTEGRAL_TYPES, driver_route
 
 
-def _driver_cc(nodes_arr, u, v):
-    """Vectorized hash-min + pointer-jumping CC over a collected edge
-    list (numpy arrays; int64 or object/str). Returns (vals, comp) where
-    ``vals`` is the sorted node universe and ``comp[i]`` the minimum
-    member of vals[i]'s component — the same unique fixpoint the
-    distributed loop converges to, so results are bit-identical."""
+def _driver_cc(nodes, edges):
+    """Vectorized hash-min + pointer-jumping CC over the collected
+    ``nodes`` (node) and ``edges`` (u, v), int or string ids. Returns
+    columns node (the sorted node universe) and comp (each node's
+    component minimum) — the same unique fixpoint the distributed loop
+    converges to, so results are bit-identical."""
     import numpy as np
 
-    vals = np.unique(np.concatenate([nodes_arr, u, v]))
+    u = edges.column("u").to_numpy()
+    v = edges.column("v").to_numpy()
+    vals = np.unique(np.concatenate([nodes.column("node").to_numpy(), u, v]))
     # np.unique sorts, so code order == value order and the min CODE per
     # component decodes to the min VALUE (for strings: numpy/python
     # compare by code point, which equals Spark's UTF-8 byte order)
@@ -60,25 +62,13 @@ def _driver_cc(nodes_arr, u, v):
                 break
             comp = j
         if len(tgt) == 0:
-            return vals, vals[comp]
+            return {"node": vals, "comp": vals[comp]}
         nm = np.minimum.reduceat(comp[e2s], starts)
         cur = comp[tgt]
         upd = np.minimum(cur, nm)
         if np.array_equal(upd, cur):
-            return vals, vals[comp]
+            return {"node": vals, "comp": vals[comp]}
         comp[tgt] = upd
-
-
-# Driver fast-path gate for connected_components / pagerank (the
-# _driver_sssp precedent): an edge set at or below the gate is collected
-# once and iterated in vectorized numpy — zero per-round Spark jobs. The
-# distributed loops measured a ~0.4-0.8 s/round floor of job scheduling +
-# checkpointing even on metadata-scale graphs (q_pagerank: 10 rounds over
-# a 15k-edge graph = 4.4 s of almost pure round overhead). Above the gate,
-# or for nulls / non-orderable id types, the distributed path is unchanged
-# — the 100 TB shape is untouched.
-_DRIVER_GRAPH_MAX_EDGES = 4_000_000
-_DRIVER_ID_TYPES = ("tinyint", "smallint", "int", "bigint", "string")
 
 
 def connected_components(
@@ -92,43 +82,22 @@ def connected_components(
     # them: the upstream edge generator (e.g. the MinHash-LSH candidate
     # pipeline) would otherwise re-execute per consumer — the old sym
     # union even ran it twice inside ONE job (two union branches, no
-    # exchange reuse). The count materializes the checkpoint and gates
-    # the driver fast path.
+    # exchange reuse). The count materializes the checkpoint and sizes
+    # the driver route; the nodes side can be far bigger than the edge
+    # set (every doc is a node, few are near-dups), so it is probed, not
+    # counted.
     e = edges.select("u", "v").distinct().localCheckpoint(eager=False)
-    n_edges = e.count()
-    types = dict(e.dtypes)
-    spark = e.sparkSession
-    gate = _gate(_DRIVER_GRAPH_MAX_EDGES)
-    node_type = dict(nodes.select("node").dtypes)["node"]
-    if (
-        types.get("u") == types.get("v")
-        and types.get("u") in _DRIVER_ID_TYPES
-        and node_type == types.get("u")
-    ):
-        if n_edges <= gate:
-            # the nodes side can be far bigger than the edge set (every
-            # doc is a node, few are near-dups) — probe it with a bounded
-            # collect instead of a count, and fall through when it blows
-            nd = nodes.select("node").distinct().limit(gate + 1).toArrow()
-            if nd.num_rows <= gate:
-                ep = e.toArrow()
-                if not any(c.null_count for c in [*nd.columns, *ep.columns]):
-                    import pandas as pd
-
-                    vals, comp = _driver_cc(
-                        nd.column("node").to_numpy(),
-                        ep.column("u").to_numpy(),
-                        ep.column("v").to_numpy(),
-                    )
-                    from pyspark.sql import types as T
-
-                    dt = nodes.schema["node"].dataType
-                    schema = T.StructType(
-                        [T.StructField("node", dt), T.StructField("comp", dt)]
-                    )
-                    return spark.createDataFrame(
-                        pd.DataFrame({"node": vals, "comp": comp}), schema=schema
-                    )
+    dt = dict(e.dtypes)["u"]
+    out = driver_route(
+        DRIVER_MAX_EDGES,
+        _driver_cc,
+        nodes.select("node").distinct(),
+        (e, e.count()),
+        ids=("node", "u", "v"),
+        schema=f"node {dt}, comp {dt}",
+    )
+    if out is not None:
+        return out
     sym = (
         e.select(F.col("u").alias("node"), F.col("v").alias("nbr"))
         .unionByName(e.select(F.col("v").alias("node"), F.col("u").alias("nbr")))
@@ -192,19 +161,22 @@ def connected_components(
     raise RuntimeError(f"connected_components: no fixpoint within {max_iter} rounds")
 
 
-def _driver_pagerank(src, dst, n_iter: int, damping_pct: int):
-    """Vectorized integer PageRank over a collected edge list. Exactly the
-    distributed loop's arithmetic: per round, every edge contributes
-    r[src] div deg[src] to its dst (int64 floor division — operands are
-    non-negative, so numpy // == SQL div), in-sums via one sorted
-    add.reduceat, then r = base + in_sum * damping div 100 with absent
-    in-edges as 0. Returns (vals, rank_ppt) over the sorted node set."""
+def _driver_pagerank(edges, n_iter: int, damping_pct: int):
+    """Vectorized integer PageRank over the collected ``edges`` (src,
+    dst). Exactly the distributed loop's arithmetic: per round, every
+    edge contributes r[src] div deg[src] to its dst (int64 floor division
+    — operands are non-negative, so numpy // == SQL div), in-sums via one
+    sorted add.reduceat, then r = base + in_sum * damping div 100 with
+    absent in-edges as 0. Returns columns node (the sorted node set) and
+    rank_ppt."""
     import numpy as np
 
+    src = edges.column("src").to_numpy()
+    dst = edges.column("dst").to_numpy()
     vals = np.unique(np.concatenate([src, dst]))
     n = len(vals)
     if n == 0:
-        return vals, np.zeros(0, dtype=np.int64)
+        return {"node": vals, "rank_ppt": np.zeros(0, dtype=np.int64)}
     SCALE = 10**12
     base = SCALE * (100 - damping_pct) // 100 // n
     si = np.searchsorted(vals, src)
@@ -223,7 +195,7 @@ def _driver_pagerank(src, dst, n_iter: int, damping_pct: int):
         nr = np.full(n, base, dtype=np.int64)
         nr[ud] += in_sum * damping_pct // 100
         r = nr
-    return vals, r
+    return {"node": vals, "rank_ppt": r}
 
 
 def pagerank(
@@ -244,43 +216,24 @@ def pagerank(
     ranks then sum to <= SCALE. rank_ppt fits int64 for any graph
     (per-node rank <= SCALE = 1e12).
 
-    r11: below the driver gate the edge list is collected once and the
-    n_iter rounds run as vectorized numpy (gather + sorted add.reduceat —
-    identical int64 arithmetic, so results are bit-identical to the
-    distributed rounds); the distributed path above the gate is
-    unchanged, and now iterates over a checkpointed projection so the
-    upstream edge generator executes once, not once per consumer."""
+    On the driver route (gates.driver_route) the edge list is collected
+    once and the n_iter rounds run as vectorized numpy (gather + sorted
+    add.reduceat — identical int64 arithmetic, so results are
+    bit-identical to the distributed rounds); the distributed path
+    iterates over a checkpointed projection so the upstream edge
+    generator executes once, not once per consumer."""
     SCALE = 10**12
     proj = edges.select("src", "dst").localCheckpoint(eager=False)
-    n_edges = proj.count()
-    types = dict(proj.dtypes)
-    spark = proj.sparkSession
-    if (
-        types.get("src") == types.get("dst")
-        and types.get("src") in _DRIVER_ID_TYPES
-        and n_edges <= _gate(_DRIVER_GRAPH_MAX_EDGES)
-    ):
-        tbl = proj.toArrow()
-        if not any(c.null_count for c in tbl.columns):
-            import pandas as pd
-
-            vals, r = _driver_pagerank(
-                tbl.column("src").to_numpy(),
-                tbl.column("dst").to_numpy(),
-                n_iter,
-                damping_pct,
-            )
-            from pyspark.sql import types as T
-
-            schema = T.StructType(
-                [
-                    T.StructField("node", edges.schema["src"].dataType),
-                    T.StructField("rank_ppt", T.LongType()),
-                ]
-            )
-            return spark.createDataFrame(
-                pd.DataFrame({"node": vals, "rank_ppt": r}), schema=schema
-            )
+    dt = dict(proj.dtypes)["src"]
+    out = driver_route(
+        DRIVER_MAX_EDGES,
+        lambda tbl: _driver_pagerank(tbl, n_iter, damping_pct),
+        (proj, proj.count()),
+        ids=("src", "dst"),
+        schema=f"node {dt}, rank_ppt bigint",
+    )
+    if out is not None:
+        return out
     edges = proj
     nodes = (
         edges.select(F.col("src").alias("node"))
@@ -520,35 +473,23 @@ def triangle_counts_per_node(edges: DataFrame) -> DataFrame:
     return contribs.groupBy("node").agg(F.sum("w").alias("n_triangles"))
 
 
-# Driver fast-path gate for SSSP: an edge set at or below this many rows
-# is collected once and relaxed with vectorized numpy — zero per-round
-# Spark jobs. The distributed loop measured a ~0.6 s/round floor (job
-# scheduling + AQE replanning + checkpoint) even with a 16-node frontier,
-# so a 14-round 20k-node graph paid ~9 s of pure round overhead. The
-# driver arrays cost ~24 bytes/edge (96 MB at the gate); above the gate,
-# or for non-integral ids/weights, the distributed frontier loop below is
-# the path.
-_DRIVER_SSSP_MAX_EDGES = 4_000_000
-
-
-def _driver_sssp(pdf, source, n_rounds: int, until_converged: bool):
-    """Vectorized synchronous Bellman-Ford over a collected edge list.
-    ``pdf``: pandas DataFrame (src, dst, w), integral dtypes. Returns a
-    (node, dist) pandas DataFrame of reached nodes, or raises on
-    non-convergence (same contract as the distributed loop). Each round
+def _driver_sssp(edges, source, n_rounds: int, until_converged: bool):
+    """Vectorized synchronous Bellman-Ford over the collected ``edges``
+    (src, dst, w), integral types. Returns columns node and dist of the
+    reached nodes, or raises on non-convergence (same contract as the
+    distributed loop). Each round
     gathers d[src] + w and scatters per-dst minima via one sorted
     reduceat — O(E) buffered numpy per round, identical round semantics
     to the distributed relaxation (synchronous: this round's candidates
     all read last round's labels)."""
     import numpy as np
-    import pandas as pd
 
-    src = pdf["src"].to_numpy(dtype=np.int64)
-    dst = pdf["dst"].to_numpy(dtype=np.int64)
-    w = pdf["w"].to_numpy(dtype=np.int64)
+    src, dst, w = (
+        edges.column(c).to_numpy().astype(np.int64) for c in ("src", "dst", "w")
+    )
     nodes = np.unique(np.concatenate([src, dst]))
     if len(nodes) == 0:
-        return pd.DataFrame({"node": nodes, "dist": nodes})
+        return {"node": nodes, "dist": nodes}
     INF = np.int64(2**62)
     d = np.full(len(nodes), INF, dtype=np.int64)
     pos = np.searchsorted(nodes, np.int64(source))
@@ -578,10 +519,7 @@ def _driver_sssp(pdf, source, n_rounds: int, until_converged: bool):
             "style runaways, not to truncate silently)"
         )
     reached = d != INF
-    return pd.DataFrame({"node": nodes[reached], "dist": d[reached]})
-
-
-_INTEGRAL_TYPES = ("tinyint", "smallint", "int", "bigint")
+    return {"node": nodes[reached], "dist": d[reached]}
 
 
 def sssp_bellman_ford(
@@ -618,25 +556,18 @@ def sssp_bellman_ford(
     ignores it) and are filtered at the end, so no sentinel-infinity
     arithmetic."""
     del ckpt_every  # superseded: the per-round merge checkpoint truncates lineage
-    types = dict(edges_w.dtypes)
-    if all(types.get(c) in _INTEGRAL_TYPES for c in ("src", "dst", "w")):
-        spark = edges_w.sparkSession
-        proj = edges_w.select("src", "dst", "w")
-        n_edges = proj.count()
-        tbl = proj.toArrow() if n_edges <= _gate(_DRIVER_SSSP_MAX_EDGES) else None
-        # a NULL id or weight declines to the distributed loop (its joins
-        # never match NULL); the kernel's int64 view would read it as -2^63
-        if tbl is not None and not any(c.null_count for c in tbl.columns):
-            out = _driver_sssp(tbl.to_pandas(), source, n_rounds, until_converged)
-            from pyspark.sql import types as T
-
-            schema = T.StructType(
-                [
-                    T.StructField("node", edges_w.schema["src"].dataType),
-                    T.StructField("dist", T.LongType()),
-                ]
-            )
-            return spark.createDataFrame(out, schema=schema)
+    proj = edges_w.select("src", "dst", "w")
+    dt = dict(proj.dtypes)["src"]
+    out = driver_route(
+        DRIVER_MAX_EDGES,
+        lambda tbl: _driver_sssp(tbl, source, n_rounds, until_converged),
+        proj,
+        ids=("src", "dst"),
+        types=INTEGRAL_TYPES,
+        schema=f"node {dt}, dist bigint",
+    )
+    if out is not None:
+        return out
     nodes = (
         edges_w.select(F.col("src").alias("node"))
         .unionByName(edges_w.select(F.col("dst").alias("node")))

@@ -5,13 +5,11 @@ the reference never had and SURVEY flags as HARD).
   intermediate variable (handled in the translator; nothing to do here),
 - transitive closure p+ : iterative expansion to fixpoint.
 
-``transitive_closure`` has two routes and one gate. An edge set whose raw
-row count is within ``_VEC_CLOSURE_MAX_BASE`` (scaled by gates.gate) is
-collected once and closed by the DRIVER KERNEL: dense int codes from
-arrow ``dictionary_encode``, numpy semi-naive doubling, dictionary
-decode, one arrow upload. A larger edge set — or a kernel decline (a
-NULL anywhere, a blown pair/work budget, an ``ArrowInvalid``) — runs the
-DISTRIBUTED LOOP, the 100 TB path:
+``transitive_closure`` has two routes. An edge set that gates.driver_route
+admits (see its route table) is collected once and closed by the DRIVER
+KERNEL: dense int codes from arrow ``dictionary_encode``, numpy
+semi-naive doubling, dictionary decode, one arrow upload. Otherwise the
+DISTRIBUTED LOOP runs, the 100 TB path:
 
 - the driver loop only iterates (bounded by graph diameter, NOT data
   size); each iteration is one distributed join frontier x edges,
@@ -30,26 +28,17 @@ count, derivations and the fixpoint certificate are identical.
 
 from __future__ import annotations
 
-from functools import reduce
+from functools import partial, reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from d_sparq_spark.gates import gate as _gate
+from d_sparq_spark.gates import DRIVER_MAX_EDGES, driver_route
 
-# Diagnostics from the LAST seeded_closure stride build on this driver —
-# written when the 8x|E| growth cap discards a composed hop relation.
-# Test/bench introspection only (not thread-safe, not part of the API).
-LAST_WALK_INFO: dict = {}
-
-# The driver-kernel gate and budgets, shared by transitive_closure and
-# seeded_closure. Per-round Spark jobs measured ~0.8 s of pure scheduling
-# + AQE replanning + checkpointing at a 1.18M-edge base, while the whole
-# 6.6M-pair closure vectorizes in ~3 s single-core. An edge set at or
-# below the gate is collected once; the output cap (~8 numpy int64 arrays
-# alive at the cap ≈ 1.3 GB) and the per-round candidate budget each
-# abandon back to the distributed route — never a wrong answer or an OOM.
-_VEC_CLOSURE_MAX_BASE = 4_000_000
+# The driver kernels' budgets (scaled with the gates): the output cap (~8
+# numpy int64 arrays alive at the cap ≈ 1.3 GB) and the per-round
+# candidate budget each abandon back to the distributed route — never a
+# wrong answer or an OOM.
 _VEC_CLOSURE_MAX_PAIRS = 20_000_000
 _VEC_CLOSURE_MAX_WORK = 100_000_000
 
@@ -60,8 +49,6 @@ _VEC_CLOSURE_MAX_WORK = 100_000_000
 # is a BIG-graph effect (BASELINE.md q_closure_big_int twin).
 _ENCODE_MIN_EDGES = 50_000
 
-_INTEGRAL_TYPES = ("tinyint", "smallint", "int", "bigint")
-
 
 def transitive_closure(
     edges: DataFrame, max_iter: int = 48, group_col: str | None = None
@@ -70,11 +57,10 @@ def transitive_closure(
     length >= 1. Columns must be named src/dst.
 
     Routes: the raw edge set is pinned once (localCheckpoint + count).
-    Within ``_VEC_CLOSURE_MAX_BASE`` rows the driver kernel
-    (``_driver_closure``) closes it; otherwise, or when the kernel
-    declines, the edges are deduplicated, string ids at or above
-    ``_ENCODE_MIN_EDGES`` edges are hash-encoded, and the distributed
-    loop (``_closure_fixpoint``) runs.
+    When gates.driver_route admits it the driver kernel
+    (``_driver_closure``) closes it; otherwise the edges are
+    deduplicated, string ids at or above ``_ENCODE_MIN_EDGES`` edges are
+    hash-encoded, and the distributed loop (``_closure_fixpoint``) runs.
 
     Path DOUBLING, not single-step expansion: round k covers all paths of
     length <= 2^k, so a diameter-d graph converges in ceil(log2 d) + 1
@@ -120,10 +106,16 @@ def transitive_closure(
     # dedup exchange is only paid when it declines, and every later pass
     # reads the checkpoint instead of re-running the upstream scan/filter
     raw = edges.select(*keys, "src", "dst").localCheckpoint(eager=False)
-    if raw.count() <= _gate(_VEC_CLOSURE_MAX_BASE):
-        out = _driver_closure(raw, keys, max_iter)
-        if out is not None:
-            return out
+    out = driver_route(
+        DRIVER_MAX_EDGES,
+        partial(_driver_closure, keys, max_iter),
+        (raw, raw.count()),
+        ids=("src", "dst"),
+        budgets=(_VEC_CLOSURE_MAX_PAIRS, _VEC_CLOSURE_MAX_WORK),
+        schema=raw.schema,
+    )
+    if out is not None:
+        return out
     edges = raw.distinct().localCheckpoint(eager=False)
     types = dict(edges.dtypes)
     if (
@@ -187,50 +179,39 @@ def _factorize(*cols):
     return np.split(codes, np.cumsum([len(c) for c in cols[:-1]])), denc.dictionary
 
 
-def _driver_closure(raw: DataFrame, keys: list[str], max_iter: int):
-    """The driver kernel of transitive_closure: ``raw`` (*keys, src, dst),
-    pinned and within the base gate, is collected once with toArrow,
-    factorized, closed by ``_vector_closure`` and uploaded with arrow_df.
-    A group column is packed into the node code (g * V + node), so pairs
-    compose only within their group. Returns None — the caller runs the
-    distributed loop — for id types other than same-typed strings or
-    integers, a NULL in any column (the loop's joins never match NULL, so
-    the kernel must not compose through one), a blown budget, or an
-    ``ArrowInvalid`` (string offsets past 2 GB in combine_chunks /
-    dictionary_encode / take)."""
+def _driver_closure(keys, max_iter, tbl, pair_cap, work_cap):
+    """The driver kernel of transitive_closure: the collected edges ``tbl``
+    (*keys, src, dst) are factorized and closed by ``_vector_closure``;
+    returns the closure's columns. A group column is packed into the node
+    code (g * V + node), so pairs compose only within their group. None
+    when a budget blows."""
     import pyarrow as pa
 
-    from d_sparq_spark.localdata import arrow_df
+    (src, dst), nodes = _factorize(tbl.column("src"), tbl.column("dst"))
+    V = max(len(nodes), 1)
+    if keys:
+        (g,), groups = _factorize(tbl.column(keys[0]))
+        src, dst = g * V + src, g * V + dst
+    out = _vector_closure(src, dst, max_iter, pair_cap, work_cap)
+    if out is None:
+        return None
+    cols = {keys[0]: groups.take(pa.array(out[0] // V))} if keys else {}
+    cols["src"] = nodes.take(pa.array(out[0] % V))
+    cols["dst"] = nodes.take(pa.array(out[1] % V))
+    return cols
 
-    types = dict(raw.dtypes)
-    if types["src"] != types["dst"] or any(
-        t != "string" and t not in _INTEGRAL_TYPES for t in types.values()
-    ):
-        return None
-    try:
-        tbl = raw.toArrow()
-        if any(c.null_count for c in tbl.columns):
-            return None
-        (src, dst), nodes = _factorize(tbl.column("src"), tbl.column("dst"))
-        V = max(len(nodes), 1)
-        if keys:
-            (g,), groups = _factorize(tbl.column(keys[0]))
-            src, dst = g * V + src, g * V + dst
-        out = _vector_closure(
-            src,
-            dst,
-            max_iter,
-            _gate(_VEC_CLOSURE_MAX_PAIRS),
-            _gate(_VEC_CLOSURE_MAX_WORK),
-        )
-        if out is None:
-            return None
-        cols = {keys[0]: groups.take(pa.array(out[0] // V))} if keys else {}
-        cols["src"] = nodes.take(pa.array(out[0] % V))
-        cols["dst"] = nodes.take(pa.array(out[1] % V))
-        return arrow_df(raw.sparkSession, cols, raw.schema)
-    except pa.ArrowInvalid:
-        return None
+
+def _merge_sorted(a, b):
+    """Linear merge of two sorted, disjoint int64 arrays (np.union1d would
+    re-sort)."""
+    import numpy as np
+
+    merged = np.empty(len(a) + len(b), dtype=np.int64)
+    mask = np.zeros(len(merged), dtype=bool)
+    mask[np.searchsorted(a, b) + np.arange(len(b))] = True
+    merged[mask] = b
+    merged[~mask] = a
+    return merged
 
 
 def _vector_closure(src, dst, max_iter: int, pair_cap: int, work_cap: int):
@@ -329,15 +310,7 @@ def _vector_closure(src, dst, max_iter: int, pair_cap: int, work_cap: int):
             return None
         part_keys.append(new_key)
         part_ds.append(new_d)
-        # linear merge of two sorted disjoint arrays (union1d would re-sort)
-        ins = np.searchsorted(known, new_key)
-        merged = np.empty(len(known) + len(new_key), dtype=np.int64)
-        at = ins + np.arange(len(new_key))
-        mask = np.zeros(len(merged), dtype=bool)
-        mask[at] = True
-        merged[mask] = new_key
-        merged[~mask] = known
-        known = merged
+        known = _merge_sorted(known, new_key)
     else:
         raise RuntimeError(
             f"transitive_closure: no fixpoint within {max_iter} doubling rounds"
@@ -400,19 +373,38 @@ def _vector_seeded(e_src, e_dst, seed_vals, pair_cap: int, work_cap: int):
             break
         if len(reached) + len(keys) > pair_cap:
             return None
-        # linear merge of two sorted disjoint arrays (the _vector_closure
-        # known-set device)
-        ins = np.searchsorted(reached, keys)
-        merged = np.empty(len(reached) + len(keys), dtype=np.int64)
-        at = ins + np.arange(len(keys))
-        mask = np.zeros(len(merged), dtype=bool)
-        mask[at] = True
-        merged[mask] = keys
-        merged[~mask] = reached
-        reached = merged
+        reached = _merge_sorted(reached, keys)
         frontier = keys
     sv_present = sv[present]
     return sv_present[reached // V], vals[reached % V]
+
+
+def _driver_seeded(seeds, edges, pair_cap, work_cap):
+    """The driver kernel of seeded_closure: the collected ``seeds`` (n) and
+    ``edges`` (_esrc, _edst), walked by ``_vector_seeded``; returns the
+    (src, dst) columns. String ids are factorized and the BFS runs on the
+    dense int64 codes; seed values map into the same dictionary with
+    index_in (absent seeds drop — they can reach nothing). None when a
+    budget blows."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    sp = seeds.column("n")
+    uniq = None
+    if pa.types.is_integer(sp.type):
+        e_src = edges.column("_esrc").to_numpy()
+        e_dst = edges.column("_edst").to_numpy()
+        seed_vals = sp.to_numpy()
+    else:
+        (e_src, e_dst), uniq = _factorize(edges.column("_esrc"), edges.column("_edst"))
+        sidx = pc.index_in(sp.cast(uniq.type), value_set=uniq)
+        seed_vals = sidx.filter(pc.is_valid(sidx)).to_numpy().astype("int64")
+    out = _vector_seeded(e_src, e_dst, seed_vals, pair_cap, work_cap)
+    if out is None:
+        return None
+    if uniq is not None:
+        out = [uniq.take(pa.array(v)) for v in out]
+    return {"src": out[0], "dst": out[1]}
 
 
 def _closure_fixpoint(edges: DataFrame, max_iter: int, keys: list[str]) -> DataFrame:
@@ -482,6 +474,43 @@ def _closure_fixpoint(edges: DataFrame, max_iter: int, keys: list[str]) -> DataF
     raise RuntimeError(
         f"transitive_closure: no fixpoint within {max_iter} doubling rounds"
     )
+
+
+def _stride_hops(edges: DataFrame, keys: list[str], base_n: int, stride: int):
+    """seeded_closure's hop relation: the (deduped, pinned) ``edges`` pairs
+    at distance 1..stride, by doubling: (1..d) o (1..d) ∪ (1..d) = 1..2d.
+    Built once, checkpointed per level. A growth guard stops deepening
+    when the pair count blows past 8x the edge count (hub-heavy graphs:
+    every 2-hop path through a hub is a pair) — the strided relation must
+    stay edge-set-sized, not closure-sized. Returns (hop, cap_engaged)."""
+    hop, depth = edges, 1
+    n_prev = base_n
+    while depth < stride:
+        composed = (
+            hop.alias("l")
+            .join(
+                hop.alias("r"),
+                [F.col("l._edst") == F.col("r._esrc")]
+                + [F.col(f"l._ek_{k}") == F.col(f"r._ek_{k}") for k in keys],
+            )
+            .select(
+                *[F.col(f"l._ek_{k}").alias(f"_ek_{k}") for k in keys],
+                F.col("l._esrc").alias("_esrc"),
+                F.col("r._edst").alias("_edst"),
+            )
+        )
+        nxt = hop.unionByName(composed).distinct().localCheckpoint()
+        n2 = nxt.count()
+        if n2 > 8 * base_n:
+            # guard BEFORE adopting: the composed relation that blew past
+            # the cap must be discarded, or every subsequent frontier join
+            # pays for a closure-sized hop relation (the cap's whole point)
+            return hop, True
+        hop, depth = nxt, depth * 2
+        if n2 == n_prev:
+            break  # hop relation at fixpoint: deeper composition is a no-op
+        n_prev = n2
+    return hop, False
 
 
 def seeded_closure(
@@ -568,76 +597,22 @@ def seeded_closure(
     else:
         seeds = seeds.select(F.col(seeds.columns[0]).alias("n")).distinct()
         seed_cond = [F.col("n") == F.col("_esrc")]
-    # driver fast path: an ungrouped edge set within the kernel gate is
-    # collected once and the whole walk runs as a vectorized multi-source
-    # BFS — removing the ~0.5 s/round job floor AND the per-round
-    # broadcast ships. Seeds are collected BOUNDED (limit gate+1); nulls,
-    # oversized seed sets, a blown pair/work budget or an ArrowInvalid
-    # (string offsets past 2 GB) fall through to the distributed walk.
+    # driver route (ungrouped): the whole walk runs as a vectorized
+    # multi-source BFS — no ~0.5 s/round job floor, no per-round
+    # broadcast ships
     if not keys:
-        gate = _gate(_VEC_CLOSURE_MAX_BASE)
-        etypes = dict(edges.dtypes)
-        same_type = (
-            etypes["_esrc"] == etypes["_edst"]
-            and dict(seeds.dtypes)["n"] == etypes["_esrc"]
-            and (
-                etypes["_esrc"] == "string"
-                or etypes["_esrc"] in _INTEGRAL_TYPES
-            )
+        dt = dict(edges.dtypes)["_esrc"]
+        out = driver_route(
+            DRIVER_MAX_EDGES,
+            _driver_seeded,
+            seeds,
+            (edges, base_n),
+            ids=("n", "_esrc", "_edst"),
+            budgets=(_VEC_CLOSURE_MAX_PAIRS, _VEC_CLOSURE_MAX_WORK),
+            schema=f"src {dt}, dst {dt}",
         )
-        if same_type and base_n <= gate:
-            sp = seeds.limit(gate + 1).toArrow().column("n")
-            if len(sp) <= gate and sp.null_count == 0:
-                import pyarrow as pa
-                import pyarrow.compute as pc
-
-                from d_sparq_spark.localdata import arrow_df
-
-                # strings are factorized HERE and the BFS runs on the
-                # dense int64 codes; seed values map into the same
-                # dictionary with index_in (absent seeds drop — they can
-                # reach nothing)
-                try:
-                    tbl = edges.select("_esrc", "_edst").toArrow()
-                    if (
-                        tbl.column("_esrc").null_count == 0
-                        and tbl.column("_edst").null_count == 0
-                    ):
-                        uniq_pa = None
-                        if etypes["_esrc"] == "string":
-                            (e_src_v, e_dst_v), uniq_pa = _factorize(
-                                tbl.column("_esrc"), tbl.column("_edst")
-                            )
-                            sidx = pc.index_in(
-                                sp.cast(uniq_pa.type), value_set=uniq_pa
-                            )
-                            seed_vals = (
-                                sidx.filter(pc.is_valid(sidx))
-                                .to_numpy()
-                                .astype("int64")
-                            )
-                        else:
-                            e_src_v = tbl.column("_esrc").to_numpy()
-                            e_dst_v = tbl.column("_edst").to_numpy()
-                            seed_vals = sp.to_numpy()
-                        out = _vector_seeded(
-                            e_src_v,
-                            e_dst_v,
-                            seed_vals,
-                            _gate(_VEC_CLOSURE_MAX_PAIRS),
-                            _gate(_VEC_CLOSURE_MAX_WORK),
-                        )
-                        if out is not None:
-                            if uniq_pa is not None:
-                                out = [uniq_pa.take(pa.array(v)) for v in out]
-                            dt = edges.schema["_esrc"].dataType.simpleString()
-                            return arrow_df(
-                                edges.sparkSession,
-                                {"src": out[0], "dst": out[1]},
-                                f"src {dt}, dst {dt}",
-                            )
-                except pa.ArrowInvalid:
-                    pass  # decline to the distributed walk
+        if out is not None:
+            return out
     if not deduped:
         # driver path declined: the distributed walk wants DISTINCT edges
         # (duplicates multiply every per-round join before the frontier
@@ -735,40 +710,7 @@ def seeded_closure(
         )
         if frontier is None:
             return reduce(DataFrame.unionByName, parts)
-    # hop := pairs at distance 1..stride, by doubling: (1..d) o (1..d) ∪
-    # (1..d) = 1..2d. Built once, checkpointed per level. A growth guard
-    # stops deepening when the pair count blows past 8x the edge count
-    # (hub-heavy graphs: every 2-hop path through a hub is a pair) — the
-    # strided relation must stay edge-set-sized, not closure-sized.
-    hop, depth = edges, 1
-    n_prev = base_n
-    LAST_WALK_INFO.clear()
-    while depth < stride:
-        composed = (
-            hop.alias("l")
-            .join(
-                hop.alias("r"),
-                [F.col("l._edst") == F.col("r._esrc")]
-                + [F.col(f"l._ek_{k}") == F.col(f"r._ek_{k}") for k in keys],
-            )
-            .select(
-                *[F.col(f"l._ek_{k}").alias(f"_ek_{k}") for k in keys],
-                F.col("l._esrc").alias("_esrc"),
-                F.col("r._edst").alias("_edst"),
-            )
-        )
-        nxt = hop.unionByName(composed).distinct().localCheckpoint()
-        n2 = nxt.count()
-        if n2 > 8 * base_n:
-            # guard BEFORE adopting: the composed relation that blew past
-            # the cap must be discarded, or every subsequent frontier join
-            # pays for a closure-sized hop relation (the cap's whole point)
-            LAST_WALK_INFO.update(cap_engaged=True, cap_n=n2, base_n=base_n)
-            break
-        hop, depth = nxt, depth * 2
-        if n2 == n_prev:
-            break  # hop relation at fixpoint: deeper composition is a no-op
-        n_prev = n2
+    hop, _ = _stride_hops(edges, keys, base_n, stride)
     frontier, parts = expand(frontier, parts, hop, bfs_rounds)
     if frontier is None:
         return reduce(DataFrame.unionByName, parts)

@@ -21,6 +21,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from d_sparq_spark.gates import DRIVER_KMEANS_MAX_CELLS, driver_route
+from d_sparq_spark.localdata import arrow_df
+
 
 def dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -516,9 +519,35 @@ def _driver_kmeans_exact_int(ids, V, k: int, n_iter: int):
     return cids[best], dist, cents
 
 
-# collected size gate: n_rows * dim int64 cells (the (n, k, dim) distance
-# buffer is the peak: n * k * dim * 8 bytes per assign)
-_DRIVER_KMEANS_MAX_CELLS = 40_000_000
+def _driver_kmeans_upload(spark, tbl, dim, k, n_iter, id_dt, with_centroids):
+    """kmeans_exact_int's driver route over the collected quantized points
+    ``tbl`` (vec_id, v): None (decline) when a vector is not ``dim`` long
+    or holds a NULL element, else _driver_kmeans_exact_int's result
+    uploaded as kmeans_exact_int returns it."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    vecs = tbl.column("v").combine_chunks()
+    flat = vecs.flatten()
+    if flat.null_count or pc.any(pc.not_equal(vecs.value_lengths(), dim)).as_py():
+        return None
+    ids = tbl.column("vec_id").to_numpy()
+    V = flat.to_numpy().reshape(len(ids), dim).astype(np.int64)
+    cl, dist, cents = _driver_kmeans_exact_int(ids, V, k, n_iter)
+    out = arrow_df(
+        spark,
+        {"vec_id": ids, "cluster": cl, "dist": dist},
+        f"vec_id {id_dt}, cluster {id_dt}, dist bigint",
+    )
+    if not with_centroids:
+        return out
+    cids = np.sort(ids, kind="stable")[:k]
+    return out, arrow_df(
+        spark,
+        {"cid": cids, "c": pa.array(list(cents), pa.list_(pa.int64()))},
+        f"cid {id_dt}, c array<bigint>",
+    )
 
 
 def kmeans_exact_int(
@@ -554,68 +583,25 @@ def kmeans_exact_int(
             F.col(vec_col), lambda x: F.round(x.cast("double") * scale).cast("long")
         ).alias("v"),
     )
-    # r11 driver fast path: the distributed loop pays (n_iter + 1) scans +
+    # driver route: the distributed loop pays (n_iter + 1) scans +
     # broadcast builds + a k*dim-row shuffle per round — pure round
-    # overhead when the point set is metadata-scale. Below the cells gate
-    # the QUANTIZED points are collected once (quantization stays in
-    # Spark, so no driver rounding-mode question) and Lloyd's runs in
-    # int64 numpy with identical arithmetic (see _driver_kmeans_exact_int).
-    spark = embeddings.sparkSession
-    from d_sparq_spark.gates import gate as _g
-
-    cap = _g(_DRIVER_KMEANS_MAX_CELLS)
+    # overhead when the point set is metadata-scale. The QUANTIZED points
+    # are collected (quantization stays in Spark, so no driver
+    # rounding-mode question) and Lloyd's runs in int64 numpy with
+    # identical arithmetic (see _driver_kmeans_exact_int).
     n_pts = embeddings.count()
     dim = _infer_dim(embeddings, vec_col)
-    if dim and n_pts * dim * max(k, 1) <= cap:
-        import numpy as np
-
-        pdf = pts.toArrow().to_pandas()
-        lens = pdf["v"].map(len).to_numpy() if len(pdf) else np.zeros(0)
-        eligible = (
-            len(pdf) > 0
-            and (lens == dim).all()
-            and not pdf["vec_id"].isnull().any()
+    if dim:
+        id_dt = dict(embeddings.dtypes)[id_col]
+        out = driver_route(
+            DRIVER_KMEANS_MAX_CELLS,
+            lambda tbl: _driver_kmeans_upload(
+                embeddings.sparkSession, tbl, dim, k, n_iter, id_dt, with_centroids
+            ),
+            (pts, n_pts * dim * max(k, 1)),
+            types=None,
         )
-        if eligible:
-            V = np.stack(pdf["v"].to_numpy())
-            eligible = V.dtype.kind in "iu"  # nulls inside a vector -> f/O
-        if eligible:
-            ids = pdf["vec_id"].to_numpy()
-            V = V.astype(np.int64)
-            cl, dist, cents_np = _driver_kmeans_exact_int(ids, V, k, n_iter)
-            import pandas as pd
-
-            from pyspark.sql import types as T
-
-            id_dt = embeddings.schema[id_col].dataType
-            out = spark.createDataFrame(
-                pd.DataFrame({"vec_id": ids, "cluster": cl, "dist": dist}),
-                schema=T.StructType(
-                    [
-                        T.StructField("vec_id", id_dt),
-                        T.StructField("cluster", id_dt),
-                        T.StructField("dist", T.LongType()),
-                    ]
-                ),
-            )
-            if with_centroids:
-                from d_sparq_spark.localdata import local_df
-
-                order = np.argsort(ids, kind="stable")
-                cents_df = local_df(
-                    spark,
-                    [
-                        (cid, [int(x) for x in c])
-                        for cid, c in zip(ids[order][:k].tolist(), cents_np)
-                    ],
-                    T.StructType(
-                        [
-                            T.StructField("cid", id_dt),
-                            T.StructField("c", T.ArrayType(T.LongType())),
-                        ]
-                    ),
-                )
-                return out, cents_df
+        if out is not None:
             return out
     # seeds: the k LOWEST-id vectors (TakeOrdered — k is metadata-scale),
     # robust to id spaces that don't start at 0; cluster ids are the seed

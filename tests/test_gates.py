@@ -48,20 +48,25 @@ def test_scale_zero_forces_distributed_pagerank(spark, monkeypatch):
 
 def test_scale_up_routes_into_vec_closure(spark, monkeypatch):
     """Raising the scale is the other override direction: an edge set just
-    above the closure kernel's gate runs the distributed loop at scale 1
-    and rides the driver kernel (a local relation) at scale 2 — same
-    pairs either way."""
+    above the closure kernel's gate runs the distributed loop, and rides
+    the driver kernel (a local relation) at twice the scale — same pairs
+    either way."""
+    from d_sparq_spark import gates
     from d_sparq_spark.operators import paths
 
     edges = spark.createDataFrame(
         [(f"n{i}", f"n{i + 1}") for i in range(60)], "src string, dst string"
     )
-    monkeypatch.setattr(paths, "_VEC_CLOSURE_MAX_BASE", 50)
-    monkeypatch.delenv("D_SPARQ_DRIVER_GATE_SCALE", raising=False)
+    scale = 50 / gates.DRIVER_MAX_EDGES  # the gate at 50 edges
+    # the scale shrinks the kernel's budgets too: lift them so only the
+    # size cap decides the route
+    monkeypatch.setattr(paths, "_VEC_CLOSURE_MAX_PAIRS", 10**12)
+    monkeypatch.setattr(paths, "_VEC_CLOSURE_MAX_WORK", 10**12)
+    monkeypatch.setenv("D_SPARQ_DRIVER_GATE_SCALE", repr(scale))
     dist = paths.transitive_closure(edges)
     assert "LocalTableScan" not in _plan(dist)
-    # scale 2: the gate 50 -> 100 >= 60 edges engages the driver kernel
-    monkeypatch.setenv("D_SPARQ_DRIVER_GATE_SCALE", "2")
+    # twice the scale: the gate 50 -> 100 >= 60 edges engages the driver kernel
+    monkeypatch.setenv("D_SPARQ_DRIVER_GATE_SCALE", repr(2 * scale))
     vec = paths.transitive_closure(edges)
     assert "LocalTableScan" in _plan(vec)
     assert sorted(map(tuple, dist.collect())) == sorted(map(tuple, vec.collect()))

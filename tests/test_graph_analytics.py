@@ -173,7 +173,7 @@ def test_sssp_driver_and_distributed_paths_agree(spark, monkeypatch):
 
     driver_fixed = run(n_rounds=5)
     driver_conv = run(n_rounds=64, until_converged=True)
-    monkeypatch.setattr(G, "_DRIVER_SSSP_MAX_EDGES", 0)
+    monkeypatch.setenv("D_SPARQ_DRIVER_GATE_SCALE", "0")
     assert run(n_rounds=5) == driver_fixed
     assert run(n_rounds=64, until_converged=True) == driver_conv
 
@@ -221,7 +221,7 @@ def test_cc_driver_and_distributed_paths_agree(spark, monkeypatch):
          "node string", "u string, v string"),
     ]:
         fast = run(nodes, edges, ns, es)
-        monkeypatch.setattr(G, "_DRIVER_GRAPH_MAX_EDGES", -1)
+        monkeypatch.setenv("D_SPARQ_DRIVER_GATE_SCALE", "0")
         slow = run(nodes, edges, ns, es)
         monkeypatch.undo()
         assert fast == slow
@@ -250,7 +250,7 @@ def test_pagerank_driver_and_distributed_paths_agree(spark, monkeypatch):
          "src string, dst string"),
     ]:
         fast = run(rows, es)
-        monkeypatch.setattr(G, "_DRIVER_GRAPH_MAX_EDGES", -1)
+        monkeypatch.setenv("D_SPARQ_DRIVER_GATE_SCALE", "0")
         slow = run(rows, es)
         monkeypatch.undo()
         assert fast == slow

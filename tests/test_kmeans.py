@@ -156,7 +156,7 @@ def test_kmeans_driver_and_distributed_paths_agree(spark, monkeypatch):
         )
 
     fast_a, fast_c = run()
-    monkeypatch.setattr(S, "_DRIVER_KMEANS_MAX_CELLS", -1)
+    monkeypatch.setenv("D_SPARQ_DRIVER_GATE_SCALE", "0")
     slow_a, slow_c = run()
     assert fast_a == slow_a
     assert fast_c == slow_c

@@ -118,7 +118,7 @@ def test_assign_ids_driver_and_distributed_paths_agree(spark, monkeypatch):
     default graph ranks FIRST, the window's NULLS FIRST), duplicates,
     and non-ASCII terms (Python code-point order == Spark's unsigned
     UTF-8 byte order)."""
-    from d_sparq_spark.operators import dictionary as D
+    from d_sparq_spark import gates
     from d_sparq_spark.operators.dictionary import assign_ids
 
     rows = [(t,) for t in
@@ -132,7 +132,9 @@ def test_assign_ids_driver_and_distributed_paths_agree(spark, monkeypatch):
             for r in assign_ids(terms, num_partitions=3).collect()}
     assert fast == slow
     # and the declined-gate escape hatch still returns the same ids
-    monkeypatch.setattr(D, "_DRIVER_RANK_MAX_ROWS", 2)
+    monkeypatch.setenv(
+        "D_SPARQ_DRIVER_GATE_SCALE", repr(2 / gates.DRIVER_RANK_MAX_ROWS)
+    )
     declined = {(r["id"], r["term"]) for r in assign_ids(terms).collect()}
     assert declined == slow
 

@@ -27,7 +27,7 @@ from d_sparq_spark.load_pipeline import (
     sameas_map,
     store_triples,
 )
-from d_sparq_spark.operators.dictionary import _DRIVER_RANK_MAX_ROWS
+from d_sparq_spark.gates import DRIVER_DELTA_MAX_BYTES, DRIVER_RANK_MAX_ROWS
 from tests.test_reasoning_store import BASE as R_BASE
 from tests.test_reasoning_store import DELTA as R_DELTA
 from tests.test_reasoning_store import ONT
@@ -183,8 +183,8 @@ def test_delta_above_the_gate_declines_to_the_spark_route(spark, tmp_path, monke
     lines += [f"<s:n{i}> <p:name> \"n{i}\"" for i in range(n_terms)]
     path = _nt(tmp_path / "big.nt", lines)
     # the gate admits the dictionary, not the delta's bytes
-    scale = (n_terms + 2) / _DRIVER_RANK_MAX_ROWS
-    assert os.path.getsize(path) > lp._DRIVER_DELTA_MAX_BYTES * scale
+    scale = (n_terms + 2) / DRIVER_RANK_MAX_ROWS
+    assert os.path.getsize(path) > DRIVER_DELTA_MAX_BYTES * scale
     calls = _route_spy(monkeypatch)
     want = _write("append", spark, path, drv, monkeypatch)
     assert calls == []
@@ -251,6 +251,52 @@ def test_stale_stats_row_cannot_keep_a_predicate_pivoted(
         ).collect()
     )
     assert got == [("Ann", "1"), ("Anna", "1"), ("Bob", "2")]
+
+
+def _stats_and_extvp(spark, store):
+    """stats/ rows, and every ExtVP manifest entry with its reduction's
+    rows."""
+    from d_sparq_spark.operators.extvp import read_reduction
+
+    with open(os.path.join(store, "extvp", "manifest.json")) as f:
+        entries = sorted((e["kind"], e["p1"], e["p2"], e["ratio"]) for e in json.load(f))
+    return {
+        "stats": sorted(tuple(r.values()) for r in _read_stats_rows(spark, store)),
+        "extvp": [
+            (e, sorted(map(tuple, read_reduction(spark, store, *e[:3]).collect())))
+            for e in entries
+        ],
+    }
+
+
+@pytest.mark.parametrize("scale", [None, "0"], ids=["driver", "spark"])
+def test_redelivered_append_heals_stats_and_extvp(spark, tmp_path, monkeypatch, scale):
+    """An append that crashes between its by_p write and the stats/layout
+    refresh, then is re-delivered, leaves stats/ and extvp/ as a fresh
+    bulk load of the same triples would: the re-delivery appends nothing
+    but still refreshes the delta's predicates. p:knows is multi-valued,
+    so not in the property table; the delta names only stored terms, so
+    the ids match the fresh load's."""
+    store = str(tmp_path / "store")
+    load = {"materialize": ("ptable", "extvp")}
+    bulk_load(spark, _nt(tmp_path / "base.nt", BASE), store, **load)
+    delta_lines = ['<s:c> <p:knows> <s:a>']
+    delta = _nt(tmp_path / "delta.nt", delta_lines)
+    refresh = lp._refresh_after_vp_write
+
+    def crash(*a, **k):
+        raise RuntimeError("crash before the stats merge")
+
+    monkeypatch.setattr(lp, "_refresh_after_vp_write", crash)
+    with pytest.raises(RuntimeError, match="crash"):
+        _write("append", spark, delta, store, monkeypatch, scale)
+    monkeypatch.setattr(lp, "_refresh_after_vp_write", refresh)
+    fresh = str(tmp_path / "fresh")
+    bulk_load(spark, _nt(tmp_path / "all.nt", BASE + delta_lines), fresh, **load)
+    want = _stats_and_extvp(spark, fresh)
+    assert _stats_and_extvp(spark, store) != want  # the crash left them stale
+    _write("append", spark, delta, store, monkeypatch, scale)
+    assert _stats_and_extvp(spark, store) == want
 
 
 @pytest.mark.parametrize(

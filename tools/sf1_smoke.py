@@ -85,11 +85,23 @@ def main() -> None:
     hub_seeds = spark.range(160).select(
         (F.col("id") * BLOCKH + 1).cast("string").alias("n")
     )
-    t0 = time.perf_counter()
-    n_hub = seeded_closure(hub, hub_seeds).count()
-    out["closure_hub_seeded_sf1"] = round(time.perf_counter() - t0, 2)
+    engaged = []
+    real_stride_hops = P._stride_hops
+
+    def stride_hops(*a, **kw):
+        hop, cap_engaged = real_stride_hops(*a, **kw)
+        engaged.append(cap_engaged)
+        return hop, cap_engaged
+
+    P._stride_hops = stride_hops
+    try:
+        t0 = time.perf_counter()
+        n_hub = seeded_closure(hub, hub_seeds).count()
+        out["closure_hub_seeded_sf1"] = round(time.perf_counter() - t0, 2)
+    finally:
+        P._stride_hops = real_stride_hops
     assert n_hub > 0
-    assert P.LAST_WALK_INFO.get("cap_engaged") is True  # same plan shape as sf0.1
+    assert engaged == [True]  # same plan shape as sf0.1
 
     # 4+5: triangle + sssp on 10 disjoint shifted copies of the co-purchase graph
     base = _copurchase_edges(spark, sf_dir).localCheckpoint()
