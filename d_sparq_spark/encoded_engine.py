@@ -32,6 +32,8 @@ from dataclasses import replace
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from d_sparq_spark.gates import DICT_BROADCAST_MAX_TERMS
+from d_sparq_spark.localdata import arrow_df
 from d_sparq_spark.operators.dictionary import (
     decode_columns,
     decode_triples,
@@ -358,7 +360,7 @@ class EncodedSparqlEngine:
         # and both probe jobs disappear. None = compute lazily on first
         # use.
         self._dict_small: bool | None = (
-            None if dict_n_terms is None else dict_n_terms <= 10_000_000
+            None if dict_n_terms is None else dict_n_terms <= DICT_BROADCAST_MAX_TERMS
         )
         self._dict_plain: bool | None = dict_plain
         # engine-lifetime pin cache shared by every per-query translator
@@ -801,15 +803,13 @@ class EncodedSparqlEngine:
         """The engine's lexical Translator over an empty store — used to
         re-apply peeled value-level wrappers and CONSTRUCT templates over
         already-decoded bindings (Precomputed leaves; the store relation
-        is never touched). Built once per engine (createDataFrame is ~35
-        Py4J calls) and shared by concurrent queries: evaluation keeps no
+        is never touched). Built once per engine (an upload is ~35 Py4J
+        calls) and shared by concurrent queries: evaluation keeps no
         per-query state on the translator. Two first calls racing may
         each build one; either is correct and one is kept."""
         if self._lex is None:
             self._lex = Translator(
-                self.triples.sparkSession.createDataFrame(
-                    [], "s string, p string, o string"
-                )
+                arrow_df(self.triples.sparkSession, {}, "s string, p string, o string")
             )
         return self._lex
 
@@ -829,11 +829,11 @@ class EncodedSparqlEngine:
     def _dict_fits_broadcast(self) -> bool:
         """Dictionary-broadcast size gate, computed ONCE per engine on
         first decode (the dictionary is data-sized — an unconditional
-        hint OOMs the driver at scale; review r4). 10M terms mirrors
-        bulk_load's encode gate; the one-time count is trivial next to
-        any decode that needs it."""
+        hint OOMs the driver at scale). The cap is the loaders' encode
+        gate too; the one-time count is trivial next to any decode that
+        needs it."""
         if self._dict_small is None:
-            self._dict_small = self.dict.count() <= 10_000_000
+            self._dict_small = self.dict.count() <= DICT_BROADCAST_MAX_TERMS
         return self._dict_small
 
     def _lexical_fallback(self, tree) -> DataFrame:

@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from d_sparq_spark.localdata import local_df
+from d_sparq_spark.localdata import arrow_df
 from d_sparq_spark.operators.rdf_patterns import _stats_dict, planning_stats
 
 from d_sparq_spark.plans.parser import parse_sparql
@@ -117,7 +117,7 @@ class SparqlEngine:
                         "graphs — this store has no g column"
                     )
                 rows = rows + [(tp.s, tp.p, tp.o, g) for g, tp in quads]
-            return local_df(spark, rows, schema).dropDuplicates()
+            return arrow_df(spark, dict(zip(on, zip(*rows))), schema).dropDuplicates()
 
         def _bnode_labels(template) -> list[str]:
             seen: list[str] = []
@@ -226,7 +226,7 @@ class SparqlEngine:
             ]
             # unbound variables (e.g. from OPTIONAL) instantiate nothing, per spec
             if not parts:
-                return spark.createDataFrame([], schema)
+                return arrow_df(spark, {}, schema)
             return reduce(lambda a, b: a.unionByName(b), parts).na.drop().dropDuplicates()
 
         if isinstance(tree, A.InsertData):

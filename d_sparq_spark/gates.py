@@ -9,22 +9,24 @@ which owns the whole admission rule; on None the caller runs its
 distributed plan unchanged (the 100 TB path). Route table (g = the cap
 scaled by ``gate``):
 
-===========================  =======================  ================  =========
-operator                     cap                      probe             declines
-===========================  =======================  ================  =========
-paths.transitive_closure     DRIVER_MAX_EDGES raw     caller's count    T C N B A
+===========================  =========================  ================  =========
+operator                     cap                        probe             declines
+===========================  =========================  ================  =========
+paths.transitive_closure     DRIVER_MAX_EDGES raw       caller's count    T C N B A
                              edge rows
-paths.seeded_closure         DRIVER_MAX_EDGES raw     caller's count;   T C N B A
-(ungrouped)                  edge rows and seeds      seeds limit(g+1)
-graph.connected_components   DRIVER_MAX_EDGES         caller's count;   T C N A
-                             distinct edges, nodes    nodes limit(g+1)
-graph.pagerank               DRIVER_MAX_EDGES edges   caller's count    T C N A
-graph.sssp_bellman_ford      DRIVER_MAX_EDGES edges   limit(g+1)        T C N A
-similarity.kmeans_exact_int  DRIVER_KMEANS_MAX_CELLS  caller's count    C N V A
-                             (rows x dim x k)         x dim x k
-dictionary.assign_ids        DRIVER_RANK_MAX_ROWS     limit(g+1)        T C A
+paths.seeded_closure         DRIVER_MAX_EDGES raw       caller's count;   T C N B A
+(ungrouped)                  edge rows and seeds        seeds limit(g+1)
+graph.connected_components   DRIVER_MAX_EDGES           caller's count;   T C N A
+                             distinct edges, nodes      nodes limit(g+1)
+graph.pagerank               DRIVER_MAX_EDGES edges     caller's count    T C N A
+graph.sssp_bellman_ford      DRIVER_MAX_EDGES edges     limit(g+1)        T C N A
+similarity.kmeans_exact_int  DRIVER_KMEANS_MAX_CELLS    caller's count    C N V A
+                             (rows x dim x k)           x dim x k
+dictionary.assign_ids        DRIVER_RANK_MAX_ROWS       limit(g+1)        T C A
                              raw term rows
-===========================  =======================  ================  =========
+dictionary broadcast hint    DICT_BROADCAST_MAX_TERMS   manifest n_terms  none
+(encode, decode; unscaled)   dictionary terms           or count()
+===========================  =========================  ================  =========
 
 Declines: T the id type (every column an id type — sssp: integral — and
 the id columns of one type), C over g rows (k-means: cells), N a NULL in
@@ -81,6 +83,11 @@ DRIVER_RANK_MAX_ROWS = 2_000_000
 # measured winning side, and bounds the driver's share of the write (its
 # Python term list and lookups) by file size.
 DRIVER_DELTA_MAX_BYTES = 8 << 20
+# Dictionary terms up to which the loaders' encode joins and the encoded
+# engine's decode joins hint a broadcast of the dictionary (above it AQE
+# picks the join). Not a driver route: ``gate`` does not scale it, so the
+# gates-off plans keep their broadcasts.
+DICT_BROADCAST_MAX_TERMS = 10_000_000
 
 INTEGRAL_TYPES = ("tinyint", "smallint", "int", "bigint")
 ID_TYPES = INTEGRAL_TYPES + ("string",)

@@ -35,8 +35,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from d_sparq_spark.encoded_engine import EncodedSparqlEngine
-from d_sparq_spark.gates import DRIVER_DELTA_MAX_BYTES, DRIVER_RANK_MAX_ROWS, gate
-from d_sparq_spark.localdata import arrow_df, local_df
+from d_sparq_spark.gates import (
+    DICT_BROADCAST_MAX_TERMS,
+    DRIVER_DELTA_MAX_BYTES,
+    DRIVER_RANK_MAX_ROWS,
+    gate,
+)
+from d_sparq_spark.localdata import arrow_df
 from d_sparq_spark.operators.dictionary import (
     build_dictionary,
     distinct_terms,
@@ -206,12 +211,17 @@ def bulk_load(
         n_terms=int(n_terms), max_id=int(n_terms), dict_buckets=int(dict_buckets),
         dict_plain=dict_plain,
     )
-    enc = encode_triples(triples, dict_table, broadcast_dict=n_terms <= 10_000_000)
+    enc = encode_triples(
+        triples, dict_table, broadcast_dict=n_terms <= DICT_BROADCAST_MAX_TERMS
+    )
     # vertical partitioning: one directory per predicate id (the VP layout
-    # contract lives with its reader in sources/triple_store)
+    # contract lives with its reader in sources/triple_store). An RDF
+    # graph is a set: a dump may repeat a line, and a repeated triple
+    # would inflate stats/ (cnt > ndv_s drops a functional predicate from
+    # the property table) and every answer — dedup on the encoded longs.
     from d_sparq_spark.sources.triple_store import write_vp
 
-    write_vp(enc, store_path)
+    write_vp(enc.distinct(), store_path)
     # every downstream step reads the just-written COLUMNAR store, not the
     # parse+encode lineage — otherwise stats, the triple count, and each
     # ExtVP reduction would re-scan the raw N-Triples text end to end
@@ -286,24 +296,10 @@ def _write_meta(
       that could not assert it), engines then probe lazily as before.
       Must only ever be True when exact (False/NULL merely cost the
       peel, True wrongly asserted would return wrong MIN/MAX terms)."""
-    if "://" in store_path:
-        # URI stores: keep the Spark write (any-filesystem contract).
-        # Single-slice local DF, no coalesce(1) (r11): the coalesced
-        # one-row write chained defaultParallelism Python-worker
-        # round-trips into one task — 5-8 s per write at 32 cores.
-        local_df(
-            spark,
-            [(rank_ordered, n_terms, max_id, dict_buckets, dict_plain)],
-            "rank_ordered boolean, n_terms long, max_id long, "
-            "dict_buckets int, dict_plain boolean",
-        ).write.mode("overwrite").parquet(os.path.join(store_path, "meta"))
-        return
-    # local stores (r11, guide §5): a one-row manifest does not need a
-    # Spark job (~0.4 s of task launch + commit protocol per write, paid
-    # up to 3x per load) — write the same parquet layout driver-side.
     import pyarrow as pa
 
-    _write_local_parquet(
+    _write_table(
+        spark,
         os.path.join(store_path, "meta"),
         pa.table(
             {
@@ -317,19 +313,36 @@ def _write_meta(
     )
 
 
+def _write_table(spark: SparkSession, out_dir: str, table) -> None:
+    """Replace a metadata directory (meta/, stats/) with the pyarrow
+    ``table``: a URI store keeps the Spark write (any-filesystem
+    contract); a local store writes the same parquet layout on the
+    driver, without the Spark job (~0.4 s of task launch and commit
+    protocol per write, paid up to 3x per load)."""
+    if "://" in out_dir:
+        arrow_df(spark, table).write.mode("overwrite").parquet(out_dir)
+    else:
+        _write_local_parquet(out_dir, table)
+
+
 def _write_local_parquet(out_dir: str, table) -> None:
-    """Replace a local metadata directory (meta/, stats/) with ``table``
-    as one parquet file, written on the driver. Crash ordering mirrors the
-    Spark committer's: the new file lands under a dot-name (invisible to
-    Spark and pyarrow dir readers), old visible files are removed, then
-    one atomic rename publishes it — a crash leaves either the old
-    contents or a data-less directory, as an interrupted Spark overwrite
-    can (_read_meta fails CLOSED on one: never fail-open defaults)."""
+    """Replace a local metadata directory (meta/, stats/, the reasoning
+    manifest) with ``table`` as one parquet file, written on the driver.
+    Crash ordering mirrors the Spark committer's: the new file lands
+    under a dot-name (invisible to Spark and pyarrow dir readers), the
+    _SUCCESS marker and old visible files are removed, one atomic rename
+    publishes the file, and the marker is written last — a crash leaves
+    either the old contents or a directory without a marker (and maybe
+    without data), as an interrupted Spark overwrite can (_read_meta
+    fails CLOSED on a data-less one: never fail-open defaults)."""
     import pyarrow.parquet as pq
 
     os.makedirs(out_dir, exist_ok=True)
     tmp = os.path.join(out_dir, ".part-00000.parquet.tmp")
     pq.write_table(table, tmp)
+    marker = os.path.join(out_dir, "_SUCCESS")
+    if os.path.exists(marker):
+        os.remove(marker)
     for f in os.listdir(out_dir):
         if not f.startswith((".", "_")) and f != "part-00000.parquet":
             os.remove(os.path.join(out_dir, f))
@@ -345,17 +358,11 @@ def _write_stats(spark: SparkSession, store_path: str, rows: list) -> None:
     int64 — the schema _read_stats_rows and Spark readers see). Stats are
     metadata-scale (one row per predicate), so a local store writes them
     on the driver; a URI store keeps the Spark write."""
-    path = os.path.join(store_path, "stats")
-    if "://" in store_path:
-        local_df(
-            spark, [tuple(r[c] for c in _STATS_COLS) for r in rows],
-            "p long, cnt long, ndv_s long, ndv_o long",
-        ).write.mode("overwrite").parquet(path)
-        return
     import pyarrow as pa
 
-    _write_local_parquet(
-        path,
+    _write_table(
+        spark,
+        os.path.join(store_path, "stats"),
         pa.table({c: pa.array([r[c] for r in rows], pa.int64()) for c in _STATS_COLS}),
     )
 
@@ -561,7 +568,7 @@ def _encode_delta(
     enc = encode_triples(
         triples,
         store_dict.join(delta_terms, "term", "semi"),
-        broadcast_dict=n_delta_terms <= 10_000_000,
+        broadcast_dict=n_delta_terms <= DICT_BROADCAST_MAX_TERMS,
     )
     return enc, counters
 
@@ -1338,36 +1345,18 @@ def _write_reasoning_manifest(
     # delta rounds (meta-schema ontology) — maintenance must iterate the
     # same way the layer was materialized or an append under-derives.
     rows.append(("mode", mode, "", ""))
-    # driver-side parquet write (r11, guide §5): the manifest is
-    # metadata-scale, and materialize_reasoning already rejects URI
-    # stores, so no Spark job is needed. The _SUCCESS commit marker that
-    # _has_reasoning probes is written LAST — a crash anywhere before it
-    # leaves a store appends treat as reasoning-free, exactly the Spark
-    # committer's ordering (delete old marker, write data, mark).
+    # driver-side parquet write: the manifest is metadata-scale, and
+    # materialize_reasoning rejects URI stores. The _SUCCESS commit
+    # marker that _has_reasoning probes is written last.
     import pyarrow as pa
-    import pyarrow.parquet as pq
 
-    mdir = os.path.join(store_path, "reasoning", "manifest")
-    os.makedirs(mdir, exist_ok=True)
-    marker = os.path.join(mdir, "_SUCCESS")
-    if os.path.exists(marker):
-        os.remove(marker)
-    for f in os.listdir(mdir):
-        if not f.startswith((".", "_")):
-            os.remove(os.path.join(mdir, f))
-    cols = list(zip(*rows))
-    pq.write_table(
+    _write_local_parquet(
+        os.path.join(store_path, "reasoning", "manifest"),
         pa.table(
-            {
-                "kind": pa.array(cols[0], pa.string()),
-                "s": pa.array(cols[1], pa.string()),
-                "p": pa.array(cols[2], pa.string()),
-                "o": pa.array(cols[3], pa.string()),
-            }
+            {c: pa.array(col, pa.string())
+             for c, col in zip(("kind", "s", "p", "o"), zip(*rows))}
         ),
-        os.path.join(mdir, "part-00000.parquet"),
     )
-    open(marker, "w").close()
 
 
 def _read_reasoning_manifest(spark: SparkSession, store_path: str) -> tuple:
@@ -1404,7 +1393,7 @@ def _ensure_terms(
     _extend_store_dict(
         spark, store_path, meta,
         _open_dict(spark, store_path, meta["dict_buckets"]),
-        local_df(spark, [(t,) for t in sorted(set(terms))], "term string"),
+        arrow_df(spark, {"term": sorted(set(terms))}, "term string"),
     )
     return _store_ids(spark, store_path, list(terms) + list(lookup_extra))
 
@@ -1460,7 +1449,7 @@ def entailed_triples(spark: SparkSession, store_path: str) -> DataFrame:
     except AnalysisException as e:
         msg = str(e)
         if "PATH_NOT_FOUND" in msg or "Path does not exist" in msg:
-            return spark.createDataFrame([], "s long, p long, o long")
+            return arrow_df(spark, {}, "s long, p long, o long")
         raise
 
 
@@ -1571,13 +1560,18 @@ def materialize_reasoning(
         # mode: a malformed ontology (non-3-tuples etc.) raises
         # its own error here instead of being silently routed onward.
         mode = "iterative"
+    import shutil as _shutil
+
+    # un-commit first, as bulk_load does: reasoning/ holds the marker
+    # appends probe, and the layers below are rewritten in place — a
+    # crash mid-way must leave a store appends treat as reasoning-free,
+    # not the old manifest committed over a partial entailed/ layer
+    _shutil.rmtree(os.path.join(store_path, "reasoning"), ignore_errors=True)
     # re-materialization over an existing store: layouts a
     # PREVIOUS materialize_reasoning built but this call does not request
     # would go stale against the new ontology's closure — and open_store
     # would silently route through them. Drop them up front; requested
     # ones are rebuilt below.
-    import shutil as _shutil
-
     for lay in ("ptable", "extvp"):
         if lay not in materialize:
             _shutil.rmtree(
@@ -1611,7 +1605,7 @@ def materialize_reasoning(
 
     if not sid_known:
         sid = _store_ids(spark, store_path, [sameas_pred]).get(sameas_pred)
-    empty_map = spark.createDataFrame([], "node long, comp long")
+    empty_map = arrow_df(spark, {}, "node long, comp long")
     smap = empty_map
     if sid is not None:
         edges = (

@@ -27,7 +27,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from d_sparq_spark.gates import DRIVER_RANK_MAX_ROWS, driver_route
-from d_sparq_spark.localdata import arrow_df, local_df
+from d_sparq_spark.localdata import arrow_df
 
 _IRI_RE = r"^[A-Za-z][A-Za-z0-9+.-]*:"
 
@@ -123,7 +123,8 @@ def assign_ids(terms: DataFrame, col: str = "term", num_partitions: int | None =
         acc += counts[pid]
     spark = src.sparkSession
     offset_df = F.broadcast(
-        local_df(spark, [(pid, off) for pid, off in offsets.items()], "_pid INT, _off LONG")
+        arrow_df(spark, {"_pid": list(offsets), "_off": list(offsets.values())},
+                 "_pid INT, _off LONG")
     )
 
     w = Window.partitionBy("_pid").orderBy(col)  # parallel per range-partition

@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from d_sparq_spark.localdata import local_df
+from d_sparq_spark.localdata import arrow_df
 
 SUBCLASS = "rdfs:subClassOf"
 SUBPROP = "rdfs:subPropertyOf"
@@ -171,7 +171,7 @@ def rdfs_derive(triples: DataFrame, ontology: list, type_term=TYPE) -> DataFrame
             isinstance(x, int) for pr in pairs for x in pr
         ) else "string"
         return F.broadcast(
-            local_df(spark, pairs, f"{a} {kind}, {b} {kind}")
+            arrow_df(spark, dict(zip((a, b), zip(*pairs))), f"{a} {kind}, {b} {kind}")
         )
 
     # r12 (VERDICT r11 #6, guide §2.4): a rho-df rule is a LOOKUP of a

@@ -26,12 +26,7 @@ from d_sparq_spark.operators.rdf_patterns import (
 )
 from d_sparq_spark.plans import ast as A
 from d_sparq_spark.functions.numeric import DEC
-from d_sparq_spark.localdata import local_df
-
-# Diagnostics: number of times GRAPH ?g fell back to the per-graph driver
-# loop (nested GRAPH/SERVICE, g-shadowing). Test introspection only —
-# goldens assert the pattern-free route does NOT bump it (r7).
-GRAPH_FALLBACK_LOOPS = 0
+from d_sparq_spark.localdata import arrow_df
 
 _XSD_CASTS = {
     "xsd:double": "double",
@@ -269,15 +264,20 @@ class Translator:
             # dictionary IDs (Python ints) — a hard-coded string schema
             # would stringify them and the decode step (bigint-only) would
             # leak raw IDs into results
-            def _vtype(i: int) -> str:
-                vals = [row[i] for row in node.rows if row[i] is not None]
+            cols = {v: [row[i] for row in node.rows] for i, v in enumerate(node.varnames)}
+
+            def _vtype(col: list) -> str:
+                vals = [x for x in col if x is not None]
                 return "bigint" if vals and all(isinstance(x, int) for x in vals) else "string"
 
-            vdf = local_df(
-                self.spark,
-                node.rows,
-                ", ".join(f"{v} {_vtype(i)}" for i, v in enumerate(node.varnames)),
-            )
+            if cols:
+                vdf = arrow_df(
+                    self.spark, cols, ", ".join(f"{v} {_vtype(c)}" for v, c in cols.items())
+                )
+            else:
+                # no variables: still one empty solution per row, so a
+                # placeholder column carries the row count
+                vdf = arrow_df(self.spark, {"_": [None] * len(node.rows)}, "_ string").drop("_")
             if node.child is None:
                 return vdf
             child = self.eval(node.child)
@@ -340,7 +340,7 @@ class Translator:
             return child.limit(node.limit) if node.limit is not None else child
         if isinstance(node, A.Ask):
             exists = bool(self.eval(node.child).limit(1).take(1))
-            return local_df(self.spark, [(exists,)], "ask boolean")
+            return arrow_df(self.spark, {"ask": [exists]}, "ask boolean")
         if isinstance(node, A.SelectQuery):
             return self.eval(node.root)
         if isinstance(node, A.Construct):
@@ -480,7 +480,7 @@ class Translator:
         if consts:
             s_type = dict(self.triples.dtypes)["s"]
             c_type = "bigint" if all(isinstance(c, int) for c in consts) else "string"
-            cdf = local_df(self.spark, [(c,) for c in consts], f"n {c_type}").select(
+            cdf = arrow_df(self.spark, {"n": consts}, f"n {c_type}").select(
                 F.col("n").cast(s_type).alias("n")
             )
             subjects = cdf if subjects is None else subjects.unionByName(cdf)
@@ -569,35 +569,7 @@ class Translator:
             # once — no driver collect, no per-graph plans
             out = self._spawn(quads, self.stats).eval(node.child)
         else:
-            global GRAPH_FALLBACK_LOOPS
-            GRAPH_FALLBACK_LOOPS += 1
-            g_type = dict(quads.dtypes)["g"]  # keep lit dtype == store dtype
-            gvals = sorted(
-                r["g"] for r in quads.select("g").distinct().collect()
-            )
-            parts = []
-            for gv in gvals:
-                sub = self._spawn(
-                    quads.filter(F.col("g") == gv).drop("g"), self.stats,
-                    quad_store=quads,
-                )
-                part = sub.eval(node.child)
-                glit = F.lit(gv).cast(g_type)
-                if name in part.columns:
-                    # the inner pattern reuses the graph variable:
-                    # compatibility semantics — keep solutions whose
-                    # binding is unbound or equals this graph, then fill
-                    # (withColumn would OVERWRITE the inner binding and
-                    # fabricate matches)
-                    part = part.filter(
-                        F.col(name).isNull() | (F.col(name) == glit)
-                    ).withColumn(name, F.coalesce(F.col(name), glit))
-                else:
-                    part = part.withColumn(name, glit)
-                parts.append(part)
-            return reduce(
-                lambda a, b: a.unionByName(b, allowMissingColumns=True), parts
-            )
+            return self._graph_loop(node.child, quads, name)
         # the named-graph compatibility extension, still one plan: a
         # bound ?g must name an existing graph, an unbound one expands to
         # one row per graph
@@ -607,6 +579,37 @@ class Translator:
         nn = out.filter(F.col(name).isNotNull()).join(gdf, name, "left_semi")
         nu = out.filter(F.col(name).isNull()).drop(name).crossJoin(gdf)
         return nn.unionByName(nu)
+
+    def _graph_loop(self, child, quads: DataFrame, name: str) -> DataFrame:
+        """GRAPH ?name { child } as one plan per named graph, unioned: the
+        driver collects the distinct graphs and evaluates ``child`` over
+        each graph's slice. _graph takes this route only for the shapes
+        its single plan cannot carry (see there)."""
+        g_type = dict(quads.dtypes)["g"]  # keep lit dtype == store dtype
+        gvals = sorted(r["g"] for r in quads.select("g").distinct().collect())
+        parts = []
+        for gv in gvals:
+            sub = self._spawn(
+                quads.filter(F.col("g") == gv).drop("g"), self.stats,
+                quad_store=quads,
+            )
+            part = sub.eval(child)
+            glit = F.lit(gv).cast(g_type)
+            if name in part.columns:
+                # the inner pattern reuses the graph variable:
+                # compatibility semantics — keep solutions whose
+                # binding is unbound or equals this graph, then fill
+                # (withColumn would OVERWRITE the inner binding and
+                # fabricate matches)
+                part = part.filter(
+                    F.col(name).isNull() | (F.col(name) == glit)
+                ).withColumn(name, F.coalesce(F.col(name), glit))
+            else:
+                part = part.withColumn(name, glit)
+            parts.append(part)
+        return reduce(
+            lambda a, b: a.unionByName(b, allowMissingColumns=True), parts
+        )
 
     @staticmethod
     def _pattern_free(node, gname: str) -> bool:
@@ -1042,7 +1045,7 @@ class Translator:
                 return bound.select(F.col(term[1:]).alias("n")).distinct()
             return None
         dt = dict(self.triples.dtypes)["s"]  # lexical: string; encoded: bigint
-        return local_df(self.spark, [(term,)], f"n {dt}")
+        return arrow_df(self.spark, {"n": [term]}, f"n {dt}")
 
     def _closure_pairs(
         self, edges: DataFrame, op: str, s, o, bound: DataFrame | None

@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from d_sparq_spark.localdata import local_df
+from d_sparq_spark.localdata import arrow_df
 
 from d_sparq_spark.functions import text as T
 from d_sparq_spark.registry import register
@@ -390,7 +390,7 @@ def q_vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
             "rn", F.row_number().over(Window.orderBy(F.col("c").desc(), "t"))
         )
     )
-    ks = local_df(spark, [(100,), (500,), (1000,), (5000,)], "k int")
+    ks = arrow_df(spark, {"k": [100, 500, 1000, 5000]}, "k int")
     return (
         F.broadcast(ks)
         .crossJoin(top)

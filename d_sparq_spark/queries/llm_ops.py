@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from d_sparq_spark.functions import text as T
+from d_sparq_spark.localdata import arrow_df
 from d_sparq_spark.operators import dedup as D
 from d_sparq_spark.operators import graph as G
 from d_sparq_spark.operators import multimodal as M
@@ -359,7 +360,7 @@ def q_stream_near_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     shutil.rmtree(work, ignore_errors=True)  # fresh, deterministic replay
     lo, hi = docs.agg(F.min("doc_id"), F.max("doc_id")).first()
     if lo is None:  # empty documents table: the oracle is empty too
-        return spark.createDataFrame([], ND.PAIRS_SCHEMA)
+        return arrow_df(spark, {}, ND.PAIRS_SCHEMA)
     step = (hi - lo) // 3 + 1
     for k in range(3):
         docs.filter(

@@ -11,7 +11,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from d_sparq_spark.localdata import local_df
+from d_sparq_spark.localdata import arrow_df
 
 from d_sparq_spark.operators.dictionary import (
     build_dictionary,
@@ -580,8 +580,9 @@ def _deleted_slice(spark: SparkSession, sf_dir: str) -> DataFrame:
             ks.alias("s"), F.lit("ex:mktsegment").alias("p"),
             F.col("c_mktsegment").alias("o")))
         # one never-stored row: must be a silent no-op
-        .unionByName(local_df(
-            spark, [("x:ghost", "ex:nation", "n:0")], "s string, p string, o string"))
+        .unionByName(arrow_df(
+            spark, {"s": ["x:ghost"], "p": ["ex:nation"], "o": ["n:0"]},
+            "s string, p string, o string"))
     )
 
 

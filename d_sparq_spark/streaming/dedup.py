@@ -40,6 +40,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from d_sparq_spark.localdata import arrow_df
+
 CORPUS_SCHEMA = "dg string, origin string, batch_id long"
 VERDICT_SCHEMA = "doc_id long, dg string, verdict string"
 
@@ -106,7 +108,7 @@ def read_corpus(
     except AnalysisException:
         pass  # no seed layer (pipeline without a backfill)
     if not dfs:
-        return spark.createDataFrame([], CORPUS_SCHEMA)
+        return arrow_df(spark, {}, CORPUS_SCHEMA)
     out = dfs[0] if len(dfs) == 1 else dfs[0].unionByName(dfs[1])
     if before_batch is not None:
         out = out.filter(F.col("batch_id") < F.lit(before_batch))

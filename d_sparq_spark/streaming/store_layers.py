@@ -32,6 +32,8 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from d_sparq_spark.localdata import arrow_df
+
 
 def _local(path: str) -> str:
     """Strip a file: scheme; the layered store is a filesystem directory
@@ -157,6 +159,6 @@ def _read_layer(
     state the first attempt saw."""
     dirs = _live_layer_dirs(path)
     if not dirs:
-        return spark.createDataFrame([], schema)
+        return arrow_df(spark, {}, schema)
     df = spark.read.schema(schema).parquet(*dirs)
     return df.filter(F.col("batch_id") < F.lit(before_batch))

@@ -81,3 +81,20 @@ def jobs_fired(spark):
         return out, len(tracker.getJobIdsForGroup(group))
 
     return run
+
+
+@pytest.fixture
+def graph_loops(monkeypatch):
+    """A list that gains one entry per call of the per-graph driver loop
+    (``Translator._graph_loop``, both engines) while the test runs."""
+    from d_sparq_spark.plans.translate import Translator
+
+    calls = []
+    real = Translator._graph_loop
+
+    def spy(self, *a, **kw):
+        calls.append(1)
+        return real(self, *a, **kw)
+
+    monkeypatch.setattr(Translator, "_graph_loop", spy)
+    return calls

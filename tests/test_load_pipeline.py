@@ -695,3 +695,54 @@ def test_engine_lookup_pinned_to_its_open_snapshot(spark, tmp_path, monkeypatch)
     assert [tuple(r) for r in reopened.query(q).collect()] == [
         ("s:t", "p:name", "tango")
     ]
+
+
+def test_seeded_walk_query_construction_jobs(spark, tmp_path, jobs_fired):
+    """Building an encoded `<const> ex:next+ ?y` plan runs the seeded
+    walk's driver route: the constant's seed is a local relation
+    (arrow_df), so the route's collects of it fire no job, and the
+    construction fires 4 (5 when the seed was an RDD-backed relation)."""
+    import os
+
+    store = os.path.join(str(tmp_path), "chain")
+    bulk_load(spark, _nt(tmp_path / "chain.nt", [
+        f"<s:n{i}> <ex:next> <s:n{i + 1}>" for i in range(8)
+    ]), store)
+    engine = open_store(spark, store)
+    q = "SELECT ?y WHERE { <s:n0> <ex:next>+ ?y }"
+    got, n = jobs_fired(lambda: engine.query(q))
+    assert n <= 4, n
+    assert sorted(r["y"] for r in got.collect()) == sorted(
+        f"s:n{i}" for i in range(1, 9)
+    )
+
+
+def test_bulk_load_dedups_repeated_lines(spark, tmp_path):
+    """An RDF graph is a set: a dump that repeats lines loads into the
+    same dict/, stats/, property-table manifest and answers as the dump
+    without the repeats."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    lines = ['<s:a> <p:name> "A"', '<s:b> <p:name> "B"', "<s:a> <p:knows> <s:b>"]
+    stores = []
+    for name, dump in (("plain", lines), ("repeated", lines + lines[:2] + lines[:1])):
+        store = os.path.join(str(tmp_path), name)
+        bulk_load(spark, _nt(tmp_path / f"{name}.nt", dump), store,
+                  materialize=("ptable",))
+        stores.append(store)
+
+    def snapshot(store):
+        table = lambda d: sorted(
+            pq.read_table(os.path.join(store, d)).to_pylist(), key=str
+        )
+        with open(os.path.join(store, "ptable", "manifest.json")) as f:
+            manifest = f.read()
+        q = "SELECT ?s ?n WHERE { ?s <p:name> ?n }"
+        answers = sorted(map(tuple, open_store(spark, store).query(q).collect()))
+        return table("dict"), table("stats"), manifest, answers
+
+    plain, repeated = map(snapshot, stores)
+    assert repeated == plain
+    assert plain[3] == [("s:a", "A"), ("s:b", "B")]

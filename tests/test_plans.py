@@ -451,3 +451,38 @@ def test_ast_walk_and_pattern_terms_reach_every_nested_part():
     assert consts(pats[A.AltPath]) == {"ex:c", "ex:d", "ex:e"}
     assert consts(pats[A.PropSetPattern]) == {"ex:f", "ex:h"}
     assert pats[A.PropSetPattern].inv_preds == ("ex:h",)
+
+
+def test_query_constants_are_local_relations(spark):
+    """VALUES rows, an ASK result, DESCRIBE constants and a closure's
+    constant seed are built on the driver as Arrow LocalRelations
+    (localdata.arrow_df), on both engines: no RDD-backed LogicalRDD,
+    whose every scan runs a Python worker."""
+    from d_sparq_spark.encoded_engine import EncodedSparqlEngine
+    from d_sparq_spark.engine import SparqlEngine
+    from d_sparq_spark.localdata import arrow_df
+    from d_sparq_spark.operators.dictionary import build_dictionary, encode_triples
+    from d_sparq_spark.plans.translate import Translator
+
+    def local(df):
+        plan = df._jdf.queryExecution().analyzed().toString()
+        return "LocalRelation" in plan and "LogicalRDD" not in plan
+
+    t = arrow_df(
+        spark,
+        {"s": ["s:a", "s:b"], "p": ["ex:next", "ex:next"], "o": ["s:b", "s:c"]},
+        "s string, p string, o string",
+    )
+    d = build_dictionary(t)
+    enc = encode_triples(t, d)
+    for e in (SparqlEngine(t, collect_stats=False),
+              EncodedSparqlEngine(enc, d, collect_stats=False)):
+        for q in ("SELECT ?x ?y WHERE { VALUES ?x { <s:a> <s:b> } ?x <ex:next> ?y }",
+                  "ASK { <s:a> <ex:next> ?y }",
+                  "DESCRIBE <s:a>"):
+            assert local(e.query(q)), q
+        # a VALUES without variables keeps one empty solution per row
+        unit = e.query("SELECT * WHERE { VALUES () { () () } }")
+        assert local(unit) and unit.count() == 2
+    assert local(Translator(t)._seed_df("s:a", None))
+    assert local(Translator(enc)._seed_df(1, None))

@@ -557,3 +557,31 @@ def test_rematerialize_without_layouts_drops_stale_ones(spark, tmp_path):
     # the old-ontology PT held affiliatedWith rows; the new closure has
     # none — the un-routed engine (no stale layout) answers empty
     assert open_store(spark, store, reasoning=True).query(q).count() == 0
+
+
+def test_crashed_rematerialization_leaves_store_uncommitted(
+    spark, tmp_path, monkeypatch
+):
+    """A re-run of materialize_reasoning un-commits the layer before it
+    rewrites entailed/ and sameas/: a crash after entailed/ was rewritten
+    leaves a store appends treat as reasoning-free, not the old manifest
+    committed over a partial layer. A clean re-run commits it again."""
+    import pytest
+
+    from d_sparq_spark.operators import graph
+
+    store = str(tmp_path / "s")
+    bulk_load(spark, _nt(tmp_path / "b.nt", BASE), store)
+    materialize_reasoning(spark, store, ONT)
+    assert _has_reasoning(store)
+
+    def crash(*a, **kw):
+        raise RuntimeError("simulated crash")
+
+    monkeypatch.setattr(graph, "connected_components", crash)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        materialize_reasoning(spark, store, ONT)
+    assert not _has_reasoning(store)
+    monkeypatch.undo()
+    materialize_reasoning(spark, store, ONT)
+    assert _has_reasoning(store)

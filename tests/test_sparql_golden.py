@@ -1795,13 +1795,11 @@ def test_contains_slice_detects_limit_under_join():
     assert not Translator._contains_slice(plain.child)
 
 
-def test_graph_var_pattern_free_group_single_plan(spark):
+def test_graph_var_pattern_free_group_single_plan(spark, graph_loops):
     """r7 (VERDICT r6 #4): a pattern-free group under GRAPH ?g binds ?g
     from the store's distinct-g relation as a plain column join — ONE
-    plan, no per-graph driver loop (asserted via the fallback counter),
+    plan, no per-graph driver loop (asserted by a spy on the loop),
     on both engines."""
-    from d_sparq_spark.plans import translate as TR
-
     quads = spark.createDataFrame(
         [("s:a", "p:x", "1", "g:a"), ("s:b", "p:x", "2", "g:b"),
          ("s:c", "p:y", "3", "g:c")],
@@ -1815,7 +1813,7 @@ def test_graph_var_pattern_free_group_single_plan(spark):
     engines.append(
         EncodedSparqlEngine(encode_triples(quads, d), d, collect_stats=False)
     )
-    before = TR.GRAPH_FALLBACK_LOOPS
+    before = len(graph_loops)
     for e in engines:
         # empty group: one solution per named graph
         out = e.query("SELECT ?g WHERE { GRAPH ?g {} }")
@@ -1835,17 +1833,15 @@ def test_graph_var_pattern_free_group_single_plan(spark):
         assert got == [
             ("g:a", "p"), ("g:a", "r"), ("g:b", "r"), ("g:c", "r")
         ]
-    assert TR.GRAPH_FALLBACK_LOOPS == before  # no driver loop engaged
+    assert len(graph_loops) == before  # no driver loop engaged
 
 
-def test_nested_graph_single_plan_both_engines(spark):
+def test_nested_graph_single_plan_both_engines(spark, graph_loops):
     """r8 (VERDICT r7 #7): a nested GRAPH ?h under GRAPH ?g with a
     pattern-bearing child binds BOTH graph variables from quad columns in
-    ONE plan — no per-graph driver loop (fallback counter pinned), on both
+    ONE plan — no per-graph driver loop (a spy on the loop pins it), on both
     engines. Before r8 every nested shape fell to the loop, which drops
     the g column and made nested GRAPH raise outright."""
-    from d_sparq_spark.plans import translate as TR
-
     quads = spark.createDataFrame(
         [("s:a", "p:x", "o:1", "g:a"), ("s:b", "p:x", "o:2", "g:b"),
          ("o:1", "p:y", "o:3", "g:b"), ("s:a", "p:z", "o:4", "g:a")],
@@ -1859,7 +1855,7 @@ def test_nested_graph_single_plan_both_engines(spark):
     engines.append(
         EncodedSparqlEngine(encode_triples(quads, d), d, collect_stats=False)
     )
-    before = TR.GRAPH_FALLBACK_LOOPS
+    before = len(graph_loops)
     for e in engines:
         # sibling pattern + nested GRAPH ?h: join across graphs on ?o
         out = e.query(
@@ -1919,18 +1915,16 @@ def test_nested_graph_single_plan_both_engines(spark):
         assert sorted(tuple(r) for r in out8.collect()) == [
             ("g:a", "o:1"), ("g:a", "s:a"), ("g:b", "o:1")
         ]
-    assert TR.GRAPH_FALLBACK_LOOPS == before  # no driver loop engaged
+    assert len(graph_loops) == before  # no driver loop engaged
 
 
-def test_graph_projecting_subquery_single_plan(spark):
+def test_graph_projecting_subquery_single_plan(spark, graph_loops):
     """r9 (VERDICT r8 #6): a subselect under GRAPH ?g whose SELECT list
     names ?g explicitly projects the hidden quad column (the active
-    graph) and stays on the SINGLE-PLAN route — fallback counter pinned
-    flat on both engines. A COMPUTED alias (expr AS ?g) is an arbitrary
-    value and must keep the per-graph loop (counter increments), still
+    graph) and stays on the SINGLE-PLAN route — the loop spy stays
+    empty on both engines. A COMPUTED alias (expr AS ?g) is an arbitrary
+    value and must keep the per-graph loop (the spy sees it), still
     answer-correct under the compatibility rule."""
-    from d_sparq_spark.plans import translate as TR
-
     quads = spark.createDataFrame(
         [("s:a", "p:x", "o:1", "g:a"), ("s:b", "p:x", "o:2", "g:b"),
          ("o:1", "p:y", "o:3", "g:b"), ("s:a", "p:z", "o:4", "g:a")],
@@ -1944,7 +1938,7 @@ def test_graph_projecting_subquery_single_plan(spark):
     engines.append(
         EncodedSparqlEngine(encode_triples(quads, d), d, collect_stats=False)
     )
-    before = TR.GRAPH_FALLBACK_LOOPS
+    before = len(graph_loops)
     for e in engines:
         # plain projecting subselect: ?g is the active graph
         out = e.query(
@@ -1971,18 +1965,18 @@ def test_graph_projecting_subquery_single_plan(spark):
         assert sorted(tuple(r) for r in out3.collect()) == [
             ("g:a", "s:a"), ("g:b", "o:1"),
         ]
-    assert TR.GRAPH_FALLBACK_LOOPS == before  # no driver loop engaged
+    assert len(graph_loops) == before  # no driver loop engaged
 
     # computed alias (expr AS ?g): stays on the per-graph loop; a value
     # naming no graph yields nothing under the compatibility rule
     for e in engines:
-        loops0 = TR.GRAPH_FALLBACK_LOOPS
+        loops0 = len(graph_loops)
         out4 = e.query(
             "SELECT ?g WHERE { GRAPH ?g { "
             "{ SELECT (STR(?o) AS ?g) WHERE { ?s <p:y> ?o } } } }"
         )
         assert out4.count() == 0
-        assert TR.GRAPH_FALLBACK_LOOPS > loops0
+        assert len(graph_loops) > loops0
 
 
 def test_graph_term_var_optional_right_spec(spark):
